@@ -132,13 +132,9 @@ object ScaleProbe {
     * (documents + the %7 dup injection, same construction as
     * SparkEntry.injectedDocs) through minhashNearDupPairsMd5 at k=16
     * (4 md5s/shingle) and k=12 (3 md5s/shingle) — a cold pass then a
-    * warm pass of 3 runs each, same bands/caps as SparkEntry. NOTE each
-    * call persists its OWN shingle frame (persist identity is per
-    * DataFrame object), so nothing is cache-shared between runs: every
-    * run pays the same shingle rebuild, which is k-independent — the
-    * warm-pass delta therefore isolates digest + aggregate + verify
-    * work. Compare the warm passes; the cold pass absorbs first-touch
-    * parquet/codegen costs. Usage: runMain graft.ScaleProbe minhashk <sfDir>
+    * warm pass of 3 runs each, same bands/caps as SparkEntry. Compare
+    * the warm passes; the cold pass absorbs first-touch parquet/codegen
+    * costs. Usage: runMain graft.ScaleProbe minhashk <sfDir>
     */
   private def minhashK(spark: SparkSession, sfDir: String): Unit = {
     import graft.operators.Dedup
@@ -240,57 +236,6 @@ object ScaleProbe {
       .mkString("{", ",", "}")
     println(s"""{"metric":"against_probe","n_docs":$nDocs,"index_rows":$idxRows,"build_sec":$buildSec,"batches":$qs}""")
     corpus.unpersist()
-  }
-
-  /** Interleaved A/B of the banded-signature build: one explode over the
-    * aggregated minima frame (shipped) vs the per-band union it
-    * replaced. Both arms run the FULL minhash_pairs pipeline from the
-    * same persisted injected corpus; interleaving makes host-level CPU
-    * steal hit both in expectation. Usage:
-    * runMain graft.ScaleProbe banding <sfDir> [iters]
-    */
-  private def banding(spark: SparkSession, sfDir: String, iters: Int): Unit = {
-    import org.apache.spark.sql.DataFrame
-    val u = SparkEntry.injectedDocs(spark, sfDir)
-    // both arms read the SAME persisted shingle frame, so only the
-    // aggregate->band-rows->cap stage differs between them
-    val sh = u.select(col("doc_id").as("jid"),
-        explode(graft.functions.TextFunctions.wordShingles(col("text"), 3)).as("sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    val k = 12; val bands = 2; val rows = k / bands
-    def sigFrame: DataFrame = {
-      val withMd5 = sh.select(
-        col("jid") +: col("sh") +:
-          (0 until k / 4).map(s => md5(concat(lit(s"$s:"), col("sh"))).as(s"m$s")): _*)
-      val mins = (0 until k).map { i =>
-        min(substring(col(s"m${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"h$i")
-      }
-      withMd5.groupBy(col("jid")).agg(mins.head, mins.tail: _*)
-    }
-    def bandExpr(b: Int) =
-      concat((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*)
-    // shipped form: one aggregate, band rows exploded out of it
-    def explodeBanded: DataFrame = sigFrame.select(col("jid"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"), bandExpr(b).as("bsig"))): _*)).as("bb"))
-      .select(col("jid"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-    // round-6 form: one aggregate PER BAND, unioned
-    def unionBanded: DataFrame = (0 until bands).map { b =>
-      sigFrame.select(col("jid"), lit(b).as("band"), bandExpr(b).as("bsig"))
-    }.reduce(_ unionByName _)
-    def cap(df: DataFrame): DataFrame = df
-      .withColumn("_bn", count(lit(1)).over(Window.partitionBy(col("band"), col("bsig"))))
-      .filter(col("_bn") <= 64).drop("_bn")
-    val results = (1 to iters).flatMap { it =>
-      Seq(time(s"explode_i$it")(cap(explodeBanded)),
-        time(s"union_i$it")(cap(unionBanded)))
-    }
-    val qs = results.map { case (n, v, r) => s""""$n":{"sec":$v,"rows":$r}""" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"banding_probe","results":$qs}""")
-    sh.unpersist()
   }
 
   def main(args: Array[String]): Unit = {
@@ -481,21 +426,6 @@ object ScaleProbe {
           col("lang") === "en", 256)
         .orderBy("_b").collect()
         .foreach(r => println(s"DSIRTBL ${r.get(0)} ${r.get(1)} ${r.get(2)} ${r.get(3)}"))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("banding")) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-        Runtime.getRuntime.availableProcessors().toString)
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      banding(spark, args.drop(1).headOption.getOrElse("/root/testdata/sf0.1"),
-        args.drop(2).headOption.map(_.toInt).getOrElse(4))
       spark.stop()
       return
     }
@@ -760,11 +690,6 @@ object ScaleProbe {
         println(f"  $label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
         r
       }
-      import graft.functions.TextFunctions
-      val sh = docs.select(col("doc_id").as("jid"),
-          explode(TextFunctions.wordShingles(col("text"), 3)).as("sh"))
-        .distinct().persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      timed("shingle distinct")(println(s"    rows=${sh.count()}"))
       val full = graft.operators.Dedup.minhashNearDupPairsMd5(
         docs, "doc_id", "text", k = 12, bands = 2, shingleK = 3,
         threshold = 0.8, maxBucket = Some(64))

@@ -578,7 +578,8 @@ object SparkEntry {
     // exact-Jaccard verification keeps precision unchanged. 4x4 banding
     // drowned in ~0.3-Jaccard candidates on this shared-vocabulary
     // corpus; 2x6 stays steep enough that verify input grew only ~1%.
-    // ONE persisted shingle frame feeds signature, banding and verify.
+    // Signatures come from the per-document md5-slice kernel
+    // (TextFunctions.md5SliceMins); the capped band frame is the one pin.
     // maxBucket=64 is the ACTIVE skew guard: a band bucket of m docs is
     // m^2/2 candidate pairs, so buckets above 64 members are dropped
     // before the self-join (members keep their OTHER band — standard LSH

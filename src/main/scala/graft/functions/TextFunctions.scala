@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Text-analysis scalar functions for the training-data pipeline surface
@@ -482,6 +482,129 @@ object TextFunctions {
 
   def wordShingles(c: Column, k: Int): Column =
     ColumnOps.toColumn(WordShingles(_, k))(c)
+
+  /** md5-slice MinHash kernel: the k slice minima of one document in ONE
+    * pass over its word shingles. Slice i of a shingle is the unsigned
+    * 32-bit big-endian value of bytes [4(i%4), 4(i%4)+4) of
+    * md5("<i/4>:" ++ utf8(shingle)), i.e. the 8-hex-char substring
+    * (i%4)*8+1..+8 of the builtin `md5(concat(lit("<i/4>:"), sh))` —
+    * min over fixed-width lowercase hex equals min over these values,
+    * and the min over a document's shingles does not depend on whether
+    * they are distinct, so no explode/distinct/aggregate is needed.
+    * Values stay numeric (array<bigint>) so repeated ids and groups merge
+    * with a plain `min` hash aggregate; [[md5SliceBands]] renders the
+    * winners as hex. Empty for documents with fewer than `shingleK`
+    * tokens (they have no signature and belong to no bucket); shingling
+    * is [[wordShingleStringsOf]], shared with every other shingle user.
+    */
+  def md5SliceMinsOf(text: String, k: Int, shingleK: Int): Array[Long] = {
+    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
+    val shingles = wordShingleStringsOf(text, shingleK)
+    if (shingles.isEmpty) return Array.emptyLongArray
+    val md = md5Digest.get()
+    val nSeeds = k / 4
+    val prefixes = Array.tabulate(nSeeds)(s =>
+      s"$s:".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+    val maxPrefix = prefixes.map(_.length).max
+    val mins = Array.fill(k)(Long.MaxValue)
+    val d = new Array[Byte](16)
+    var buf = new Array[Byte](64)
+    var i = 0
+    while (i < shingles.length) {
+      val sh = shingles(i).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      if (maxPrefix + sh.length > buf.length)
+        buf = new Array[Byte](2 * (maxPrefix + sh.length))
+      // shingle bytes once at a fixed offset; each seed's prefix is
+      // written right-aligned in front of them
+      System.arraycopy(sh, 0, buf, maxPrefix, sh.length)
+      var s = 0
+      while (s < nSeeds) {
+        val p = prefixes(s)
+        val off = maxPrefix - p.length
+        System.arraycopy(p, 0, buf, off, p.length)
+        md.update(buf, off, p.length + sh.length)
+        md.digest(d, 0, 16)
+        var j = 0
+        while (j < 4) {
+          val v = ((d(4 * j) & 0xffL) << 24) | ((d(4 * j + 1) & 0xffL) << 16) |
+            ((d(4 * j + 2) & 0xffL) << 8) | (d(4 * j + 3) & 0xffL)
+          val idx = 4 * s + j
+          if (v < mins(idx)) mins(idx) = v
+          j += 1
+        }
+        s += 1
+      }
+      i += 1
+    }
+    mins
+  }
+
+  private val hexChars = "0123456789abcdef".toCharArray
+
+  /** The LSH band strings of k slice minima: band b is the concatenation
+    * of minima [b*k/bands, (b+1)*k/bands) as 8-char lowercase hex, so
+    * `bands == k` yields the k minima themselves. Empty for an empty
+    * signature. */
+  def md5SliceBandsOf(mins: Array[Long], bands: Int): Array[String] = {
+    if (mins.isEmpty) return Array.empty
+    require(mins.length % bands == 0, s"bands ($bands) must divide k (${mins.length})")
+    val rows = mins.length / bands
+    val chars = new Array[Char](8 * rows)
+    Array.tabulate(bands) { b =>
+      var r = 0
+      while (r < rows) {
+        val v = mins(b * rows + r)
+        var c = 0
+        while (c < 8) {
+          chars(8 * r + c) = hexChars(((v >>> (28 - 4 * c)) & 0xf).toInt)
+          c += 1
+        }
+        r += 1
+      }
+      new String(chars)
+    }
+  }
+
+  /** Static kernels for [[Md5SliceMins]] and [[Md5SliceBands]]. */
+  def md5SliceMinsData(v: UTF8String, k: Int, shingleK: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(md5SliceMinsOf(v.toString, k, shingleK))
+
+  def md5SliceBandsData(mins: ArrayData, bands: Int): GenericArrayData =
+    new GenericArrayData(
+      md5SliceBandsOf(mins.toLongArray, bands).map(UTF8String.fromString(_): Any))
+
+  case class Md5SliceMins(child: Expression, k: Int, shingleK: Int)
+      extends UnaryExpression {
+    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullSafeEval(v: Any): Any =
+      md5SliceMinsData(v.asInstanceOf[UTF8String], k, shingleK)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev,
+        c => s"graft.functions.TextFunctions.md5SliceMinsData($c, $k, $shingleK)")
+    override protected def withNewChildInternal(c: Expression): Md5SliceMins =
+      copy(child = c)
+  }
+
+  case class Md5SliceBands(child: Expression, bands: Int) extends UnaryExpression {
+    override def dataType: DataType = ArrayType(
+      org.apache.spark.sql.types.StringType, containsNull = false)
+    override def nullSafeEval(v: Any): Any =
+      md5SliceBandsData(v.asInstanceOf[ArrayData], bands)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev,
+        c => s"graft.functions.TextFunctions.md5SliceBandsData($c, $bands)")
+    override protected def withNewChildInternal(c: Expression): Md5SliceBands =
+      copy(child = c)
+  }
+
+  /** array<bigint> of a text column's k md5-slice minima. */
+  def md5SliceMins(text: Column, k: Int, shingleK: Int): Column =
+    ColumnOps.toColumn(Md5SliceMins(_, k, shingleK))(text)
+
+  /** array<string> band strings of an array<bigint> minima column. */
+  def md5SliceBands(mins: Column, bands: Int): Column =
+    ColumnOps.toColumn(Md5SliceBands(_, bands))(mins)
 
   /** Builtin-composed variant (SQL-shaped reference semantics; equality
     * with the expression is tested). Guarded: Spark's `sequence(1, 0)`

@@ -12,8 +12,8 @@ import graft.functions.TextFunctions
   * Scale shapes:
   *  - exact: one hash-groupBy on the content key (or its md5/xxhash64 to
   *    avoid shuffling long texts);
-  *  - MinHash LSH: explode shingles once, aggregate k mins per doc
-  *    (map-side combine), band the signatures, and self-join on
+  *  - MinHash LSH: k mins per doc from one map-side kernel pass over
+  *    its shingles, band the signatures, and self-join on
   *    (band, band-hash) — candidate pairs only, never the O(n^2) cross
   *    product;
   *  - SimHash: one custom Aggregator pass per doc, then bucket by
@@ -157,6 +157,21 @@ object Dedup {
     selfJoinBuckets(banded, idCol, Seq("band", "bh"), maxBucket)
   }
 
+  /** Drops the rows of buckets (rows sharing `keys`) holding more than
+    * `maxBucket` members. Bucket size comes from a window count, not
+    * groupBy+semi-join: one shuffle on the bucket key instead of two. A
+    * mega-bucket funnels its m rows through one window task — linear in
+    * m, which is the whole point of the cap (the join it prevents is
+    * quadratic).
+    */
+  private def capBuckets(banded: DataFrame, keys: Seq[String],
+      maxBucket: Option[Int]): DataFrame = maxBucket match {
+    case Some(cap) => banded
+      .withColumn("_n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("_n") <= cap).drop("_n")
+    case None => banded
+  }
+
   /** Bucket self-join with an optional skew guard: buckets holding more
     * than `maxBucket` members are DROPPED before the join (a bucket of m
     * docs costs m^2/2 pairs — one pathological band hash shared by 10^6
@@ -168,19 +183,7 @@ object Dedup {
     */
   def selfJoinBuckets(banded: DataFrame, idCol: String,
       keys: Seq[String], maxBucket: Option[Int]): DataFrame = {
-    val capped = maxBucket match {
-      case Some(cap) =>
-        // bucket size via a window count, not groupBy+semi-join: one
-        // shuffle on the bucket key instead of two, and the self-join
-        // below joins on the SAME key, so the window's exchange is
-        // reusable. A mega-bucket funnels its m rows through one window
-        // task — linear in m, which is the whole point of the cap (the
-        // join it prevents is quadratic).
-        val w = Window.partitionBy(keys.map(col): _*)
-        banded.withColumn("_n", count(lit(1)).over(w))
-          .filter(col("_n") <= cap).drop("_n")
-      case None => banded
-    }
+    val capped = capBuckets(banded, keys, maxBucket)
     val cond = keys.map(k => col(s"a.$k") === col(s"b.$k"))
       .reduce(_ && _) && col(s"a.$idCol") < col(s"b.$idCol")
     capped.as("a").join(capped.as("b"), cond)
@@ -447,42 +450,71 @@ object Dedup {
     val mins = (0 until k).map(i => min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
     val sigs = sh.groupBy(col("jid").as(idCol)).agg(mins.head, mins.tail: _*)
     val cands = minhashCandidates(sigs, idCol, k, bands)
-    verifyJaccardOnCandidates(cands, sh, threshold)
-  }
-
-  /** Shared exact-Jaccard verification over candidate pairs against a
-    * (jid, sh) shingle frame — the one implementation behind both MinHash
-    * pipelines. Same doc-keyed set-array shape as [[ngramJaccardPairs]]'
-    * verify: ONE groupBy folds the shingle frame into per-doc arrays
-    * (reusing the jid shuffle the signature aggregate already paid —
-    * exchange-reusable), candidates pull their two arrays through plain
-    * doc-keyed equi-joins, and the intersection is map-side
-    * array_intersect CPU. The previous shape (explode candidates against
-    * the shingle frame twice + a window df-prune) shuffled the
-    * CORPUS-sized shingle frame three more times — measured 2.96 -> 2.57 s
-    * warm (5.5 -> 4.5 cold) on the declared minhash_pairs pipeline at
-    * sf0.1; the local saving is modest because sf0.1 shuffles are small,
-    * but at 100 TB those were the three largest exchanges of the whole
-    * plan. Arrays are
-    * bounded by document shingle count and ride doc-keyed joins only.
-    * Inner joins are correct here because every candidate doc has
-    * shingles by construction (its signature exists).
-    */
-  private def verifyJaccardOnCandidates(cands: DataFrame, sh: DataFrame,
-      threshold: Double): DataFrame = {
     val sets = sh.groupBy("jid")
       .agg(collect_list(col("sh")).as("_set"), count(lit(1)).as("sz"))
+    verifyJaccardOnCandidates(cands, sets, sets, threshold)
+  }
+
+  /** Shared exact-Jaccard verification over candidate pairs — the one
+    * implementation behind every MinHash pipeline. `setsA`/`setsB` are
+    * (jid, _set, sz) frames of per-key distinct shingle sets for the
+    * `id_a`/`id_b` sides; candidates pull their two sets through plain
+    * doc-keyed equi-joins and the intersection is map-side
+    * array_intersect CPU, so no corpus-sized shingle frame is ever
+    * shuffled against the candidates. Do not count on exchange reuse
+    * across the two sides: on the earlier shingle-frame plan Spark 4.1.2
+    * reused no exchange at all (each side re-ran its signature
+    * aggregate, band window and set aggregate), so work both sides
+    * share is pinned or is cheap per-document work. Inner joins are
+    * correct because every candidate key has shingles (its signature
+    * exists).
+    */
+  private def verifyJaccardOnCandidates(cands: DataFrame, setsA: DataFrame,
+      setsB: DataFrame, threshold: Double): DataFrame =
     cands
-      .join(sets.select(col("jid").as("id_a"), col("_set").as("_sa"),
+      .join(setsA.select(col("jid").as("id_a"), col("_set").as("_sa"),
         col("sz").as("sz_a")), Seq("id_a"))
-      .join(sets.select(col("jid").as("id_b"), col("_set").as("_sb"),
+      .join(setsB.select(col("jid").as("id_b"), col("_set").as("_sb"),
         col("sz").as("sz_b")), Seq("id_b"))
       .withColumn("inter", size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
+
+  /** (jid, _set, sz): each id's distinct word-shingle set and its size,
+    * built per document from the text, map-side. Rows sharing an id
+    * merge in one groupBy, so the set is the union over the id's texts.
+    */
+  private def shingleSets(df: DataFrame, idCol: String, textCol: String,
+      shingleK: Int): DataFrame =
+    df.select(col(idCol).as("jid"),
+        array_distinct(TextFunctions.wordShingles(col(textCol), shingleK)).as("_s"))
+      .groupBy("jid").agg(array_distinct(flatten(collect_list(col("_s")))).as("_set"))
+      .withColumn("sz", size(col("_set")).cast("long"))
+
+  /** (jid, mins): the k md5-slice minima per key
+    * ([[TextFunctions.md5SliceMins]]) — the signature behind every md5
+    * MinHash variant. The kernel runs per input row, map-side; the one
+    * groupBy merges rows sharing a key (a repeated id, or a group's
+    * documents) into the min over the union of their shingles. Its
+    * buffers are longs, so it plans as a hash aggregate whose partial
+    * pass ships one k-long row per key. Keys without a shingle have no
+    * signature.
+    */
+  private def md5SliceSigs(df: DataFrame, key: Column, textCol: String,
+      k: Int, shingleK: Int): DataFrame = {
+    val mins = (0 until k).map(i => min(col("_m")(i)))
+    df.select(key.as("jid"),
+        TextFunctions.md5SliceMins(col(textCol), k, shingleK).as("_m"))
+      .filter(size(col("_m")) > 0)
+      .groupBy("jid").agg(array(mins: _*).as("mins"))
   }
+
+  /** (jid, band, bsig): one row per key and band of a signature frame. */
+  private def md5Banded(sigs: DataFrame, bands: Int): DataFrame =
+    sigs.select(col("jid"),
+      posexplode(TextFunctions.md5SliceBands(col("mins"), bands)).as(Seq("band", "bsig")))
 
   /** Engine-portable MinHash near-dup pipeline: the k min-hashes are
     * 8-hex-char slices of `md5(seed:shingle)` (k/4 md5 calls per shingle,
@@ -490,38 +522,42 @@ object Dedup {
     * 32-bit values), and a band's LSH key is the concatenation of its row
     * minima. Bit-for-bit reproducible by any engine with `md5()` — the
     * oracle-checked variant of [[minhashNearDupPairs]] (which keeps
-    * xxhash64 keys for cheaper in-cluster shuffles). Same plan: ONE
-    * persisted shingle frame feeds signatures, banding, and the exact-
-    * Jaccard verification; candidates come from a bucketed band self-join
-    * (with the [[selfJoinBuckets]] skew cap available), never O(n^2).
+    * xxhash64 keys for cheaper in-cluster shuffles).
+    *
+    * Plan: the signature kernel runs per document, map-side (no shingle
+    * explode, distinct or sort aggregate); the capped (jid, band, bsig)
+    * frame — two short rows per document — is the only pin, read by
+    * both sides of the bucketed band self-join (with the
+    * [[selfJoinBuckets]] skew cap available), never O(n^2). Candidates
+    * are verified against per-document shingle sets rebuilt from the
+    * text.
     */
   def minhashNearDupPairsMd5(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 16, bands: Int = 2, shingleK: Int = 3,
       threshold: Double = 0.8, maxBucket: Option[Int] = None): DataFrame = {
-    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    val sh = docs
-      .select(col(idCol).as("jid"),
-        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("sh"))
-      .distinct()
+    val keys = Seq("band", "bsig")
+    val banded = capBuckets(
+        md5Banded(md5SliceSigs(docs, col(idCol), textCol, k, shingleK), bands),
+        keys, maxBucket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = md5BandedSigs(sh, k, bands)
-    val cands = selfJoinBuckets(banded, "jid", Seq("band", "bsig"), maxBucket)
+    val cands = selfJoinBuckets(banded, "jid", keys, None)
+    val sets = shingleSets(docs, idCol, textCol, shingleK)
     // result persisted (r13 optimization, the ngramJaccardPairs
     // discipline): duplicate-density-bounded pair set; consumers
     // (blocking_quality's four 1-row grading aggregates, the session's
     // family reuse) re-read instead of re-running the band join +
     // verify per reference
-    verifyJaccardOnCandidates(cands, sh, threshold)
+    verifyJaccardOnCandidates(cands, sets, sets, threshold)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** Corpus-level MinHash similarity matrix: ONE signature per GROUP
-    * (k md5-slice minima over the group's distinct shingle set) and the
+    * (k md5-slice minima over the group's shingle set) and the
     * pairwise agreement fraction — the unbiased MinHash estimate of
     * shingle-set Jaccard between groups [Broder 1997]. The sketch view
     * of cross-source overlap: after one corpus scan the retained state
-    * is |groups| rows of k 8-char slices, and the pair stage is a
+    * is |groups| rows of k minima, and the pair stage is a
     * broadcast nested-loop over |groups|^2/2 — groups are sources /
     * shards / snapshots, inherently few; corpus SIZE never enters the
     * pair stage. Output: (group_a, group_b, est_jaccard) for all pairs
@@ -530,65 +566,21 @@ object Dedup {
   def groupSimilarityMatrix(docs: DataFrame, groupCol: String,
       textCol: String, k: Int = 16, shingleK: Int = 3,
       maxGroups: Int = 1024): DataFrame = {
-    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
-    val sh = docs
-      .select(col(groupCol).cast("string").as("jid"),
-        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("sh"))
-      .distinct()
     // the limit is the broadcast contract (the langProfiles pattern):
     // groups are sources/shards — inherently few — and the cap makes
     // the promise PROVABLE in the plan; a >maxGroups corpus keeps the
     // first maxGroups in jid order (raise the cap deliberately, the
     // pair stage is O(maxGroups^2))
-    val sigs = md5SliceSigFrame(sh, k).orderBy("jid").limit(maxGroups)
-    val a = sigs.select(col("jid").as("group_a") +:
-      (0 until k).map(i => col(s"h$i").as(s"_a$i")): _*)
-    val b = sigs.select(col("jid").as("group_b") +:
-      (0 until k).map(i => col(s"h$i").as(s"_b$i")): _*)
+    val sigs = md5SliceSigs(docs, col(groupCol).cast("string"), textCol, k, shingleK)
+      .orderBy("jid").limit(maxGroups)
+    val a = sigs.select(col("jid").as("group_a"), col("mins").as("_a"))
+    val b = sigs.select(col("jid").as("group_b"), col("mins").as("_b"))
     val agree = (0 until k)
-      .map(i => when(col(s"_a$i") === col(s"_b$i"), 1).otherwise(0))
+      .map(i => when(col("_a")(i) === col("_b")(i), 1).otherwise(0))
       .reduce(_ + _)
     a.join(broadcast(b), col("group_a") < col("group_b"))
       .select(col("group_a"), col("group_b"),
         (agree.cast("double") / lit(k.toDouble)).as("est_jaccard"))
-  }
-
-  /** The md5-slice band signatures for a (jid, sh) shingle frame: one
-    * (jid, band, bsig) row per document and band. One projection
-    * materializes the k/4 md5s; the k min-aggregates slice them
-    * (recomputing md5 inside each aggregate would do 4x the digest
-    * work). A fused all-slices kernel expression was tried and measured
-    * SLOWER (65 s vs 45-58 s at 210k docs) — the builtin md5 over
-    * UTF8String bytes plus zero-copy substring views already beats a
-    * hand-rolled digest loop; keep the composed form.
-    *
-    * Band rows come from ONE explode over the aggregated signature
-    * frame, not a per-band union: union branches each re-run the final
-    * min-aggregate (exchange reuse shares the shuffle, not the
-    * aggregation above it), so a `bands`-way union does `bands`x the
-    * aggregation work for identical output.
-    */
-  private def md5BandedSigs(sh: DataFrame, k: Int, bands: Int): DataFrame = {
-    val sigs = md5SliceSigFrame(sh, k)
-    val rows = k / bands
-    sigs.select(col("jid"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bsig"))
-      }: _*)).as("bb"))
-      .select(col("jid"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-  }
-
-  /** The (jid, h0..h{k-1}) md5-slice minima frame behind every md5
-    * MinHash variant. */
-  private def md5SliceSigFrame(sh: DataFrame, k: Int): DataFrame = {
-    val withMd5 = sh.select(
-      col("jid") +: col("sh") +:
-        (0 until k / 4).map(s => md5(concat(lit(s"$s:"), col("sh"))).as(s"m$s")): _*)
-    val mins = (0 until k).map { i =>
-      min(substring(col(s"m${i / 4}"), (i % 4) * 8 + 1, 8)).as(s"h$i")
-    }
-    withMd5.groupBy(col("jid")).agg(mins.head, mins.tail: _*)
   }
 
   /** The REUSABLE corpus-side band index for stream-ingestion matching
@@ -608,17 +600,7 @@ object Dedup {
     * on). */
   private def bandedRowsMd5(corpus: DataFrame, idCol: String, textCol: String,
       k: Int, bands: Int, shingleK: Int): DataFrame = {
-    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    val sh = corpus
-      .select(col(idCol).as("jid"),
-        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("sh"))
-      .distinct()
-    val sigs = md5SliceSigFrame(sh, k)
-    val rows = k / bands
-    // ONE explode, not a per-band union — the union's branches would
-    // each re-run the corpus shingle scan and min-aggregate, making the
-    // build `bands` corpus scans instead of the documented one
     // k/bands ride as FIELD METADATA on `sig` — Spark persists field
     // metadata through parquet round-trips, so a consumer
     // (minhashAgainstStream) validates compatibility from the schema
@@ -626,33 +608,26 @@ object Dedup {
     val sigMeta = new org.apache.spark.sql.types.MetadataBuilder()
       .putLong("minhash_k", k.toLong)
       .putLong("minhash_bands", bands.toLong).build()
-    sigs.select(col("jid").as("corpus_id"),
-      array((0 until k).map(i => col(s"h$i")): _*).as("sig"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bsig"))
-      }: _*)).as("bb"))
-      .select(col("corpus_id"), col("bb.band").as("band"),
-        col("bb.bsig").as("bsig"), col("sig").as("sig", sigMeta))
+    md5SliceSigs(corpus, col(idCol), textCol, k, shingleK)
+      .select(col("jid").as("corpus_id"),
+        TextFunctions.md5SliceBands(col("mins"), k).as("sig"),
+        posexplode(TextFunctions.md5SliceBands(col("mins"), bands))
+          .as(Seq("band", "bsig")))
+      .select(col("corpus_id"), col("band"), col("bsig"),
+        col("sig").as("sig", sigMeta))
   }
 
   def minhashBandIndexMd5(corpus: DataFrame, idCol: String, textCol: String,
       k: Int = 12, bands: Int = 2, shingleK: Int = 3,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val banded = bandedRowsMd5(corpus, idCol, textCol, k, bands, shingleK)
+      maxBucket: Option[Int] = None): DataFrame =
     // persisted: the index is BUILT ONCE and joined by every ingestion
-    // micro-batch — unpersisted, the whole corpus shingle/minhash/cap
+    // micro-batch — unpersisted, the whole corpus signature/cap
     // pipeline would re-execute per batch. Same lazily-outliving
     // MEMORY_AND_DISK convention as the other index frames (write it
     // out with parquet for cross-session reuse — spec round-trips it).
-    (maxBucket match {
-      case Some(cap) => banded
-        .withColumn("_bn",
-          count(lit(1)).over(Window.partitionBy(col("band"), col("bsig"))))
-        .filter(col("_bn") <= cap).drop("_bn")
-      case None => banded
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-  }
+    capBuckets(bandedRowsMd5(corpus, idCol, textCol, k, bands, shingleK),
+        Seq("band", "bsig"), maxBucket)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Bucket-occupancy sidecar for INCREMENTAL index maintenance:
     * (band, bsig, _bn) over ALL buckets — including the ones `maxBucket`
@@ -723,134 +698,53 @@ object Dedup {
     * wastefully re-pair the corpus against itself. Same md5-slice
     * signature scheme, engine-portable.
     *
-    * Scale shape: both sides shingle + signature independently (the
-    * corpus side is an INDEX BUILD — persist or write out its banded
-    * signatures once and reuse across ingestion batches); candidates
-    * come from an equi-join of incoming bands to corpus bands, so cost
-    * is |incoming buckets| x occupancy, never |corpus|^2. `maxBucket`
-    * caps the CORPUS bucket size (window count over (band, bsig), the
-    * same guard shape as the self-join variant): a page mirrored 10^6
-    * times in the corpus would otherwise pair with every incoming doc
-    * that lands in its bucket. Verification is exact Jaccard across the
-    * two shingle frames. Output: (corpus_id, incoming_id, jaccard) —
-    * ids may overlap between the frames (they are distinct keyspaces).
+    * Scale shape: both sides compute their signatures per document,
+    * independently (the corpus side is an INDEX BUILD — persist or write
+    * out its banded signatures once and reuse across ingestion batches);
+    * candidates come from an equi-join of incoming bands to corpus bands,
+    * so cost is |incoming buckets| x occupancy, never |corpus|^2.
+    * `maxBucket` caps the CORPUS bucket size (window count over (band,
+    * bsig), the same guard shape as the self-join variant): a page
+    * mirrored 10^6 times in the corpus would otherwise pair with every
+    * incoming doc that lands in its bucket. Verification is exact
+    * Jaccard of the two sides' shingle sets. Output: (corpus_id,
+    * incoming_id, jaccard) — ids may overlap between the frames (they
+    * are distinct keyspaces).
     */
   def minhashNearDupAgainstMd5(corpus: DataFrame, incoming: DataFrame,
       idCol: String, textCol: String, k: Int = 12, bands: Int = 2,
       shingleK: Int = 3, threshold: Double = 0.8,
       maxBucket: Option[Int] = None): DataFrame = {
-    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
     require(k % bands == 0, s"bands ($bands) must divide k ($k)")
-    // per-call persisted frames under the repo's scoped-cache
-    // convention: each shingle frame feeds banding AND the exact-Jaccard
-    // verify within THIS call's plan, and has no use after the result
-    // materializes — callers running suites drop them via
-    // `spark.catalog.clearCache()` per query (Verify/Bench do), and the
-    // LRU store evicts them under pressure otherwise
-    def shingled(df: DataFrame) = df
-      .select(col(idCol).as("jid"),
-        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val shC = shingled(corpus)
-    val shI = shingled(incoming)
-    val bandedC = {
-      val b = md5BandedSigs(shC, k, bands)
-      maxBucket match {
-        case Some(cap) => b
-          .withColumn("_bn",
-            count(lit(1)).over(Window.partitionBy(col("band"), col("bsig"))))
-          .filter(col("_bn") <= cap).drop("_bn")
-        case None => b
-      }
-    }
-    val bandedI = md5BandedSigs(shI, k, bands)
+    def banded(df: DataFrame) =
+      md5Banded(md5SliceSigs(df, col(idCol), textCol, k, shingleK), bands)
+    val bandedC = capBuckets(banded(corpus), Seq("band", "bsig"), maxBucket)
     val cands = bandedC.select(col("jid").as("id_a"), col("band"), col("bsig"))
-      .join(bandedI.select(col("jid").as("id_b"), col("band"), col("bsig")),
+      .join(banded(incoming).select(col("jid").as("id_b"), col("band"), col("bsig")),
         Seq("band", "bsig"))
       .select("id_a", "id_b").distinct()
-    // exact Jaccard across the two shingle frames (no df-prune here: a
-    // corpus-side df-1 shingle can still intersect an incoming doc)
-    val sizesC = shC.groupBy(col("jid").as("id_a")).agg(count(lit(1)).as("sz_a"))
-    val sizesI = shI.groupBy(col("jid").as("id_b")).agg(count(lit(1)).as("sz_b"))
-    val inter = cands
-      .join(shC.select(col("jid").as("id_a"), col("sh")), Seq("id_a"))
-      .join(shI.select(col("jid").as("id_b"), col("sh")), Seq("id_b", "sh"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizesC, Seq("id_a")).join(sizesI, Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    verifyJaccardOnCandidates(cands, shingleSets(corpus, idCol, textCol, shingleK),
+      shingleSets(incoming, idCol, textCol, shingleK), threshold)
   }
 
-  /** Row-local md5-slice MinHash band signatures — the same scheme as
-    * [[minhashNearDupPairsMd5]] (k 8-hex-char slice minima over word
-    * shingles, concatenated per band) computed as a pure function of one
-    * document, no explode/groupBy. This is the STREAMING building block:
-    * a per-row map needs no shuffle and no stateful aggregation, so it
-    * can feed `flatMapGroupsWithState` directly (Structured Streaming
-    * forbids an aggregation before it). Returns empty for docs too short
-    * to shingle (they belong to no bucket, matching the batch pipeline).
+  /** The k md5-slice minima of one document as 8-hex-char strings — the
+    * row-local form of the batch signature (same kernel,
+    * [[TextFunctions.md5SliceMinsOf]]) behind [[minhashBandSigs]] and the
+    * stateful streaming signature matcher. A per-row map needs no
+    * shuffle and no stateful aggregation, so it can feed
+    * `flatMapGroupsWithState` directly (Structured Streaming forbids an
+    * aggregation before it). Empty for docs too short to shingle (they
+    * belong to no bucket, matching the batch pipeline).
     */
-  private val hexChars = "0123456789abcdef".toCharArray
+  def minhashSliceMins(text: String, k: Int = 16, shingleK: Int = 3): Array[String] =
+    TextFunctions.md5SliceBandsOf(TextFunctions.md5SliceMinsOf(text, k, shingleK), k)
 
-  /** The k md5-slice minima for one document — the row-local signature
-    * kernel behind [[minhashBandSigs]] and the stateful streaming
-    * signature matcher. Empty for docs too short to shingle.
-    */
-  def minhashSliceMins(text: String, k: Int = 16, shingleK: Int = 3): Array[String] = {
-    require(k % 4 == 0, s"k ($k) must be a multiple of 4 (4 slices per md5)")
-    // SAME tokenization as the batch expression pipeline — shared kernel,
-    // not a reimplementation (divergent shingling would silently break
-    // the stream<->batch LSH contract)
-    val shingles = TextFunctions.wordShingleStringsOf(text, shingleK)
-    if (shingles.isEmpty) return Array.empty
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hexBuf = new Array[Char](32)
-    def md5Hex(s: String): String = {
-      md.reset()
-      val d = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      // char-table rendering: %02x-per-byte formatting cost more CPU
-      // than the digests themselves on the streaming ingest path
-      var b = 0
-      while (b < 16) {
-        val x = d(b) & 0xff
-        hexBuf(2 * b) = hexChars(x >>> 4)
-        hexBuf(2 * b + 1) = hexChars(x & 0xf)
-        b += 1
-      }
-      new String(hexBuf)
-    }
-    val mins = Array.fill(k)("g") // any hex string sorts below "g"
-    var i = 0
-    while (i < shingles.length) {
-      val shingle = shingles(i)
-      var s = 0
-      while (s < k / 4) {
-        val hex = md5Hex(s + ":" + shingle)
-        var j = 0
-        while (j < 4) {
-          val slice = hex.substring(j * 8, j * 8 + 8)
-          val idx = s * 4 + j
-          if (slice < mins(idx)) mins(idx) = slice
-          j += 1
-        }
-        s += 1
-      }
-      i += 1
-    }
-    mins
-  }
-
+  /** Row-local md5-slice MinHash band signatures — the band strings of
+    * [[minhashNearDupPairsMd5]] for one document. */
   def minhashBandSigs(text: String, k: Int = 16, bands: Int = 2,
       shingleK: Int = 3): Array[String] = {
     require(k % 4 == 0 && k % bands == 0, s"need 4 | k and bands | k (k=$k, bands=$bands)")
-    val mins = minhashSliceMins(text, k, shingleK)
-    if (mins.isEmpty) return Array.empty
-    val rows = k / bands
-    Array.tabulate(bands)(b => mins.slice(b * rows, (b + 1) * rows).mkString)
+    TextFunctions.md5SliceBandsOf(TextFunctions.md5SliceMinsOf(text, k, shingleK), bands)
   }
 
   /** Embedding near-dup at scale: multi-table sign-LSH candidate

@@ -364,11 +364,10 @@ object StreamOps {
     * micro-batch just joins it.
     *
     * Per-row band signatures are EXPRESSION-ONLY (no UDF anywhere on
-    * the ingest hot path, matching [[embeddingAgainstStream]]): one
-    * `transform` materializes the k/4 concatenated md5 digests per
-    * shingle — each digest computed ONCE — and k `array_min`s slice
-    * out the minima, the identical md5-slice scheme the batch index
-    * uses ([[graft.operators.Dedup.minhashBandIndexMd5]]), so stream
+    * the ingest hot path, matching [[embeddingAgainstStream]]): they
+    * come from the per-document md5-slice kernel
+    * ([[graft.functions.TextFunctions.md5SliceMins]]) that the batch
+    * index uses ([[graft.operators.Dedup.minhashBandIndexMd5]]), so stream
     * and batch agree bucket for bucket and the whole per-row stage
     * stays inside whole-stage codegen. The match score is the
     * full-signature agreement fraction (the unbiased MinHash Jaccard
@@ -433,34 +432,17 @@ object StreamOps {
       require(mb == bands, s"corpus index was built with bands=$mb, caller asked " +
         s"bands=$bands — rebuild the index or match its bands")
     } else validateIndexEagerly(index, k, bands, rows)
-    // expression-only ingest path continues below
-    // null/too-short guard: wordShingles is null-safe (null text -> null
-    // array) and empty for unshingleable docs; both are dropped by the
-    // size filter BEFORE the minima (array_min over an empty array would
-    // otherwise smuggle nulls into the signature), the batch pipeline's
-    // posture for unshingleable docs
-    val digs = transform(
-      graft.functions.TextFunctions.wordShingles(col(textCol), shingleK),
-      sh => concat((0 until k / 4).map(s => md5(concat(lit(s"$s:"), sh))): _*))
-    val withMins = docs
-      .withColumn("_digs", digs)
-      .filter(size(col("_digs")) > 0)
-      // _digs is a materialized column here, so the k transforms below
-      // each iterate the SAME computed digest array (CollapseProject
-      // keeps non-cheap multiply-referenced projections separate) —
-      // md5 cost stays k/4 digests per shingle, exactly the batch rate
-      .withColumn("_mins", array((0 until k).map { i =>
-        array_min(transform(col("_digs"),
-          d => substring(d, (i / 4) * 32 + (i % 4) * 8 + 1, 8)))
-      }: _*))
-    val banded = withMins.select(col(idCol).as("doc_id"), col("_mins"),
-      explode(array((0 until bands).map { b =>
-        struct(lit(b).as("band"),
-          concat((b * rows until (b + 1) * rows)
-            .map(i => element_at(col("_mins"), i + 1)): _*).as("bsig"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("_mins"),
-        col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+    // null text and docs too short to shingle have an empty (or null)
+    // signature and are dropped, the batch pipeline's posture for
+    // unshingleable docs
+    val banded = docs
+      .select(col(idCol).as("doc_id"),
+        graft.functions.TextFunctions.md5SliceMins(col(textCol), k, shingleK).as("_m"))
+      .filter(size(col("_m")) > 0)
+      .select(col("doc_id"),
+        graft.functions.TextFunctions.md5SliceBands(col("_m"), k).as("_mins"),
+        posexplode(graft.functions.TextFunctions.md5SliceBands(col("_m"), bands))
+          .as(Seq("band", "bsig")))
     banded.join(index, Seq("band", "bsig"))
       .withColumn("est_jaccard",
         aggregate(zip_with(col("_mins"), col("sig"),

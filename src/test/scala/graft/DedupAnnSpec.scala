@@ -84,6 +84,57 @@ class DedupAnnSpec extends SparkSpec {
     assert(pairs.sorted.toSeq == again.sorted.toSeq)
   }
 
+  test("minhashNearDupPairsMd5: repeated ids merge like the shingle-explode pipeline") {
+    val base = (0 until 10).map(w => s"w$w")
+    val mk = (ws: Seq[String]) => ws.mkString(" ")
+    val dupDocs = Seq(
+      (1L, mk(base)),
+      (2L, mk(base.take(6))),           // id 2 holds two texts whose
+      (2L, mk(base.drop(5))),           // union overlaps doc 1 heavily
+      (3L, mk(base)),                   // exact dup of 1
+      (4L, mk(base.take(5) ++ Seq("x", "y", "z"))),
+      (4L, mk(base.take(5) ++ Seq("x", "y", "z"))), // same text twice
+      (5L, mk(base.map(_ + "q"))),      // disjoint
+      (6L, "a b")                       // too short to shingle
+    ).toDF("doc_id", "text")
+    // the composed reference pipeline: explode + distinct shingles,
+    // builtin md5 slice minima per id, band self-join, exact Jaccard
+    def reference(k: Int, bands: Int, threshold: Double): Set[(Long, Long, Double)] = {
+      val sh = dupDocs.select(col("doc_id").as("jid"),
+        explode(graft.functions.TextFunctions.wordShingles(col("text"), 3)).as("sh")).distinct()
+      val mins = (0 until k).map(i =>
+        min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))), (i % 4) * 8 + 1, 8)).as(s"h$i"))
+      val sigs = sh.groupBy("jid").agg(mins.head, mins.tail: _*)
+      val rows = k / bands
+      val banded = sigs.select(col("jid"), explode(array((0 until bands).map { b =>
+        struct(lit(b).as("band"),
+          concat((b * rows until (b + 1) * rows).map(i => col(s"h$i")): _*).as("bsig"))
+      }: _*)).as("bb")).select(col("jid"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+      val cands = banded.as("a").join(banded.as("b"), col("a.band") === col("b.band") &&
+          col("a.bsig") === col("b.bsig") && col("a.jid") < col("b.jid"))
+        .select(col("a.jid").as("id_a"), col("b.jid").as("id_b")).distinct()
+      val sets = sh.groupBy("jid").agg(collect_list(col("sh")).as("s"), count(lit(1)).as("sz"))
+      cands
+        .join(sets.select(col("jid").as("id_a"), col("s").as("sa"), col("sz").as("za")), Seq("id_a"))
+        .join(sets.select(col("jid").as("id_b"), col("s").as("sb"), col("sz").as("zb")), Seq("id_b"))
+        .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
+        .select(col("id_a"), col("id_b"),
+          (col("i").cast("double") / (col("za") + col("zb") - col("i"))).as("j"))
+        .filter(col("j") >= threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    for ((k, bands, threshold) <- Seq((12, 2, 0.5), (16, 8, 0.3), (12, 6, 0.0))) {
+      val got = Dedup.minhashNearDupPairsMd5(dupDocs, "doc_id", "text",
+          k = k, bands = bands, shingleK = 3, threshold = threshold)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val want = reference(k, bands, threshold)
+      assert(got == want, s"k=$k bands=$bands")
+      assert(want.exists(p => p._1 == 1L && p._2 == 3L && p._3 == 1.0))
+    }
+    // id 2's union of shingles is what pairs with doc 1: 7 shared of 8
+    assert(reference(16, 8, 0.0).exists(p => p._1 == 1L && p._2 == 2L && p._3 == 7.0 / 8))
+  }
+
   test("selfJoinBuckets maxBucket cap drops mega-buckets only") {
     // 5 docs share band-sig "big"; 2 share "small" -> cap 3 keeps only small
     val banded = Seq(

@@ -102,6 +102,60 @@ class FunctionsSpec extends SparkSpec {
     assert(ng.head == "a " && ng.length == 6)
   }
 
+  test("md5SliceMins/md5SliceBands: builtin md5 slice-min reference, interpreted and codegen") {
+    // repartition keeps the projection out of the driver-side
+    // LocalRelation folding, so the default run exercises doGenCode
+    val df = Seq(
+      (0L, "one two three four five six seven"),
+      (1L, null),
+      (2L, "too short"),
+      (3L, ""),
+      (4L, "  größe straße\tüber  maß café naïve 日本語 テキスト 𝄞 end "),
+      (5L, "a b a b a b a b a b") // repeated shingles
+    ).toDF("id", "text").repartition(2)
+    def reference(k: Int, bands: Int): Map[Long, Seq[String]] = {
+      val sh = df.select(col("id"),
+        explode(TextFunctions.wordShingles(col("text"), 3)).as("sh"))
+      val mins = (0 until k).map(i =>
+        min(substring(md5(concat(lit(s"${i / 4}:"), col("sh"))), (i % 4) * 8 + 1, 8)))
+      val rows = k / bands
+      sh.groupBy("id").agg(mins.head, mins.tail: _*).collect().map { r =>
+        r.getLong(0) -> (0 until bands).map(b =>
+          (b * rows until (b + 1) * rows).map(i => r.getString(i + 1)).mkString)
+      }.toMap
+    }
+    def kernel(k: Int, bands: Int): Map[Long, Option[Seq[String]]] =
+      df.select(col("id"), TextFunctions.md5SliceBands(
+          TextFunctions.md5SliceMins(col("text"), k, 3), bands))
+        .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
+    def withConf[T](kv: (String, String)*)(f: => T): T = {
+      val old = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
+      kv.foreach { case (key, v) => spark.conf.set(key, v) }
+      try f finally old.foreach {
+        case (key, Some(v)) => spark.conf.set(key, v)
+        case (key, None) => spark.conf.unset(key)
+      }
+    }
+    for ((k, bands) <- Seq((12, 2), (16, 4), (12, 12))) {
+      val ref = reference(k, bands)
+      assert(ref.keySet == Set(0L, 4L, 5L))
+      val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(kernel(k, bands))
+      val codegen = kernel(k, bands)
+      for (got <- Seq(interpreted, codegen)) {
+        ref.foreach { case (id, bs) => assert(got(id).contains(bs), s"k=$k bands=$bands id=$id") }
+        assert(got(1L).isEmpty, "null text -> null")
+        assert(got(2L).contains(Seq()) && got(3L).contains(Seq()),
+          "fewer than shingleK tokens -> no signature")
+      }
+      assert(interpreted == codegen)
+    }
+    // the row-local wrappers the streaming matchers call are the same kernel
+    val text = "one two three four five six seven"
+    assert(graft.operators.Dedup.minhashBandSigs(text, 16, 4).toSeq == reference(16, 4)(0L))
+    assert(graft.operators.Dedup.minhashSliceMins(text, 12).toSeq == reference(12, 12)(0L))
+  }
+
   test("langId picks stopword-majority language; CJK wins") {
     val df = Seq(
       "the cat and the dog of a house",

@@ -8,6 +8,16 @@ import org.apache.spark.sql.functions._
   */
 class PlanSpec extends SparkSpec {
 
+  /** Bound on the executed `minhash_pairs` exchanges at this suite's
+    * scale, counting a cached subplan once per scan that reads it. Today
+    * it is 9: the output sort, the candidate distinct, the band self-join
+    * broadcast, the verification set groupBy and its broadcast, and the
+    * signature merge and band-cap window under each of the two scans of
+    * the pinned band frame. One more is allowed for an AQE broadcast
+    * choice; the shingle-explode pipeline it replaced ran 15.
+    */
+  private val MinhashPairsMaxExchanges = 10
+
   // ONE QueryExecution per declared query, shared by every suite-wide
   // sweep below — analysis + optimization of ~280 plans dominates this
   // suite's cost, and three sweeps each rebuilding them tripled it
@@ -381,6 +391,38 @@ class PlanSpec extends SparkSpec {
     }
     assert(!df.queryExecution.executedPlan.toString.contains("Join"),
       "Q6 must be a single-scan aggregate")
+  }
+
+  test("minhash_pairs: per-document signature kernel, no sort aggregate, bounded exchanges") {
+    import org.apache.spark.sql.catalyst.expressions.Md5
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.SortAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import graft.functions.TextFunctions.Md5SliceMins
+    // every executed node, descending into AQE stages and into the
+    // plans of the cached relations the query reads
+    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(walk)
+    }
+    spark.catalog.clearCache()
+    val df = SparkEntry.queries("minhash_pairs")(spark, sf)
+    df.collect()
+    val nodes = walk(df.queryExecution.executedPlan)
+    def uses(pred: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
+      nodes.exists(_.expressions.exists(_.find(pred).isDefined))
+    val tree = nodes.map(_.nodeName).mkString(", ")
+    assert(nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), tree)
+    assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]), tree)
+    assert(uses(_.isInstanceOf[Md5SliceMins]), "signatures come from the per-document kernel")
+    assert(!uses(_.isInstanceOf[Md5]), "no md5 projection over exploded shingles")
+    val exchanges = nodes.count(_.isInstanceOf[Exchange])
+    assert(exchanges <= MinhashPairsMaxExchanges, s"$exchanges exchanges: $tree")
+    spark.catalog.clearCache()
   }
 
   test("no broadcast hint wraps an unbounded grouped aggregate") {
