@@ -3,8 +3,6 @@ package graft
 import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicBoolean
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
   *
@@ -89,17 +87,7 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     // Per-query deadline scales with the data size: 120 s is calibrated
     // to sf0.1 (slowest healthy query ~6 s); a fixed 120 s would DNF
@@ -123,9 +111,7 @@ object Bench {
     // it needed to bound: see storage_peak_bytes). The footprint is
     // instead made OBSERVABLE: `storage_peak_bytes` samples cached
     // mem+disk after every query. Verify (the untimed correctness gate)
-    // clears per query and stays flat. SPARK_GRAFT_BENCH_CLEAR_CACHE=1
-    // switches to per-query clearing for A/B'ing the two lifecycles.
-    val clearCache = sys.env.get("SPARK_GRAFT_BENCH_CLEAR_CACHE").contains("1")
+    // clears per query and stays flat.
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
 
     // Queries run on a worker thread so the main thread can enforce the
@@ -247,7 +233,7 @@ object Bench {
       val done = names.flatMap(n => Option(results.get(n)))
       val total = done.filter(_ >= 0).sum
       val suiteSteal = f"${stealCores(suiteTicks0, cpuTicks())}%.2f"
-      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"steal_cores":$st,"suite_steal_cores":$suiteSteal,"iters":$iters,"storage_peak_bytes":$storagePeak,"clear_cache":$clearCache,"run_order":"$runOrder","family_clear":$familyClear,"status":"$status","sf":"$sfDir"}"""
+      val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"steal_cores":$st,"suite_steal_cores":$suiteSteal,"iters":$iters,"storage_peak_bytes":$storagePeak,"run_order":"$runOrder","family_clear":$familyClear,"status":"$status","sf":"$sfDir"}"""
       // The r8 record was lost to tail truncation: 278 per-query entries
       // in one stdout line overflowed the capture and parsed as null.
       // Two-channel emission instead: the FULL record goes to a file
@@ -291,11 +277,10 @@ object Bench {
             steals.put(n, sc)
             storagePeak = math.max(storagePeak, storageBytes)
             System.err.println(f"[bench] $n%-28s $m%8.3f s  (steal $sc%5.2f cores)")
-            if (clearCache) spark.catalog.clearCache()
           } catch {
             // Belt over the runOnce braces: a failure in the storage sample
-            // or cache clear (e.g. a dying SparkContext) must cost one
-            // query, not the suite.
+            // (e.g. a dying SparkContext) must cost one query, not the
+            // suite.
             case e: Throwable =>
               results.put(n, -1.0)
               System.err.println(s"[bench] $n harness failure: ${e.getMessage}")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
@@ -17,24 +16,15 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
     // A/B experiments: SPARK_GRAFT_PROFILE_CONF="k=v;k=v" overlays extra
     // session confs so a hypothesis (AQE off, advisory size, codegen)
     // can be tested without editing the tool.
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      builder.config(k.trim, v.trim)
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val overlay = sys.env.get("SPARK_GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";")).map { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        (k.trim, v.trim)
+      }
+    val spark = GraftSession.local(extraConf = overlay)
 
     case class JobRec(id: Int, desc: String, start: Long, var end: Long = 0L,
       var stages: Int = 0, var tasks: Int = 0, var taskTimeMs: Long = 0L,

@@ -58,8 +58,7 @@ object SparkEntry {
 
   /** The dedup-query corpus: documents plus one injected duplicate of
     * every %7 doc (ids offset by 100000). ONE definition shared by every
-    * dedup/clustering query and the ScaleProbe minhashk probe — the
-    * DuckDB oracles mirror it as the `u` CTE, and a recipe change here
+    * dedup/clustering query — the DuckDB oracles mirror it as the `u` CTE, and a recipe change here
     * must change those CTEs in lockstep or the hash checks fail.
     */
   /** Per-doc mean bigram log-probability under corpus MLE counts —
@@ -553,8 +552,7 @@ object SparkEntry {
     // vectors the term is 0 — all three verify SFs (500/500/2000) are
     // bit-identical to the constant-occupancy config. Fixed-plane
     // configs were measured Θ(n²/2^p) at sf1 (99-271x at 10x rows,
-    // BENCH_NOTES r5/r6) and survive only as spec-only recall probes,
-    // like the O(n^2) all-pairs baseline (Dedup.embeddingNearDup).
+    // BENCH_NOTES r5/r6) and survive only as spec-only recall probes.
     "embedding_near_dup" -> ((s, dir) => {
       Dedup.embeddingNearDupLshAuto(t(s, dir, "embeddings"), "vec_id", "embedding",
           0.3, nTables = 8, targetBucket = 128, shrinkAnchorBits = Some(11))
@@ -572,7 +570,7 @@ object SparkEntry {
     // oracle — DuckDB reruns the identical signature/band/verify
     // pipeline). k=12 in 2 bands x 6 rows: 3 md5 digests per shingle
     // where k=16 cost 4 — measured 26% faster end-to-end at sf0.1
-    // (ScaleProbe minhashk: warm medians 1.99 s vs 2.69 s) AND higher
+    // (BENCH_NOTES k-vs-digest probe: warm medians 1.99 s vs 2.69 s) AND higher
     // recall (1026 vs 1014 verified pairs): the flatter S-curve
     // ((1/2)^(1/6) ~ 0.89 vs 0.92) admits more candidates, and the
     // exact-Jaccard verification keeps precision unchanged. 4x4 banding

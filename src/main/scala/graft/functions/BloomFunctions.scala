@@ -51,7 +51,7 @@ object BloomFunctions {
     * called from interpreted eval and from the generated Java. A
     * composed `exists(wordShingles(text), s -> mightContain(s))` was
     * measured ~60% SLOWER end-to-end than the plain exploded semi-join
-    * it was supposed to beat (ScaleProbe decon, 42k docs): higher-order
+    * it was supposed to beat (bloom-vs-join A/B, 42k docs): higher-order
     * functions evaluate their lambda INTERPRETED per element, plus the
     * array materializes per row. This kernel stays inside whole-stage
     * codegen and allocates nothing beyond the shingle strings.

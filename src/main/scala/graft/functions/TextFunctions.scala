@@ -301,9 +301,8 @@ object TextFunctions {
 
   /** SymSpell deletion-neighborhood signature HASHES (r13 optimization,
     * guide §4 + §2.3): 64-bit xxhash of the string itself plus every
-    * single-character deletion, deduplicated (the array_union semantics
-    * of [[graft.operators.Dedup.deletionSignatures]]). The HOF + md5
-    * form materialized every deletion substring and shuffled 32-char
+    * single-character deletion, deduplicated. The HOF + md5 form
+    * materialized every deletion substring and shuffled 32-char
     * hex keys; this kernel hashes each deletion's UTF-16 chars from a
     * reused buffer (no substring allocation) and the join keys shrink
     * to 8 bytes. The hash VALUE is internal blocking state on BOTH the
@@ -424,12 +423,6 @@ object TextFunctions {
 
   def docGramCounts(c: Column, n: Int): Column =
     ColumnOps.toColumn(DocGramCounts(_, n))(c)
-
-  /** 64-bit polynomial rolling-hash fingerprint (xxhash64-based) — the
-    * scalable non-cryptographic variant; not SQL-portable (rows-only
-    * oracle).
-    */
-  def fingerprint64(c: Column): Column = xxhash64(c)
 
   /** Single-pass word k-shingle expression: split once, emit contiguous
     * k-word windows joined by single spaces. The builtin-composed variant

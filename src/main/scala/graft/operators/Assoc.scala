@@ -25,12 +25,10 @@ object Assoc {
     *
     * `maxBasket` drops baskets larger than the bound BEFORE the pair
     * explosion — the skew guard: a single 10⁶-item basket would emit
-    * 5·10¹¹ pairs. Probed adversarially (ScaleProbe assoc, sf0.1
-    * lineitem + ONE injected 12k-item basket): capped stays at the
+    * 5·10¹¹ pairs. Probed adversarially (sf0.1 lineitem + ONE
+    * injected 12k-item basket, BENCH_NOTES.md): capped stays at the
     * clean-corpus 2.4 s, uncapped takes 234.7 s through the 72M
     * poisoned pairs — the guard is load-bearing, not defensive.
-    * Dropped-basket count is the caller's audit surface via
-    * [[basketSizes]].
     */
   def coOccurrencePairs(df: DataFrame, basketCol: String, itemCol: String,
       minCount: Long = 1L, maxBasket: Int = 256): DataFrame =
@@ -101,13 +99,6 @@ object Assoc {
       .agg(count(lit(1)).as("triple_cnt"))
       .filter(col("triple_cnt") >= minCount)
   }
-
-  /** Per-basket distinct-item sizes — the audit companion to
-    * [[coOccurrencePairs]]'s `maxBasket` drop.
-    */
-  def basketSizes(df: DataFrame, basketCol: String, itemCol: String): DataFrame =
-    df.select(col(basketCol).as("basket"), col(itemCol).as("_it")).distinct()
-      .groupBy("basket").agg(count(lit(1)).as("n_items"))
 
   /** Association rules a -> b over the co-occurrence pairs: BOTH
     * directions of every qualifying pair, with

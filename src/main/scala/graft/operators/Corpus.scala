@@ -279,8 +279,7 @@ object Corpus {
 
   /** The smoothed log-ratio table over the fixed bucket space:
     * (_b, _cr, _ct, _lw) with _lw = round(log p_target - log p_raw, 9)
-    * as exact DECIMAL(20,9). `buckets` rows at any corpus size. Public
-    * for the `ScaleProbe dsirtbl` cross-engine comparison dump. */
+    * as exact DECIMAL(20,9). `buckets` rows at any corpus size. */
   def dsirDistTable(docs: DataFrame, idCol: String, textCol: String,
       targetFlag: org.apache.spark.sql.Column,
       buckets: Int = 256): DataFrame =

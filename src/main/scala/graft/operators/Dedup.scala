@@ -10,8 +10,7 @@ import graft.functions.TextFunctions
   * north star): exact, MinHash+LSH, SimHash, and n-gram-Jaccard near-dup.
   *
   * Scale shapes:
-  *  - exact: one hash-groupBy on the content key (or its md5/xxhash64 to
-  *    avoid shuffling long texts);
+  *  - exact: one hash-groupBy on the content key;
   *  - MinHash LSH: k mins per doc from one map-side kernel pass over
   *    its shingles, band the signatures, and self-join on
   *    (band, band-hash) — candidate pairs only, never the O(n^2) cross
@@ -32,16 +31,6 @@ object Dedup {
         first(xxhash64(col(contentCol))).as("content_hash"))
       .select("keep_id", "n_copies", "content_hash")
 
-  /** Hash-keyed variant for the 100 TB path: groups by xxhash64(content)
-    * ONLY, so the shuffle carries 8-byte keys instead of documents.
-    * Distinct contents colliding on the hash (odds ~ n^2/2^65) merge —
-    * same collision-tolerance contract as [[graft.operators.Relational.uniqueRowIdsHashed]].
-    */
-  def exactGroupsHashed(df: DataFrame, contentCol: String, idCol: String): DataFrame =
-    df.groupBy(xxhash64(col(contentCol)).as("content_hash"))
-      .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
-      .select("keep_id", "n_copies", "content_hash")
-
   /** Edit-distance RECORD LINKAGE for short strings (names, titles,
     * SKUs — the entity-resolution step whole-document shingling is too
     * coarse for): all pairs within Levenshtein distance `maxDist` (= 1,
@@ -50,8 +39,9 @@ object Dedup {
     * deletion, and any two strings within distance 1 provably share a
     * signature (substitution at i -> both delete i; insert/delete ->
     * the shorter string IS a deletion of the longer). Candidates come
-    * from an equi-join on the md5 of the signature (16-byte shuffle,
-    * never the strings), verified by exact `levenshtein`. Output:
+    * from an equi-join on the 8-byte signature hash
+    * ([[TextFunctions.deletionSigHashes]], never the strings), verified
+    * by exact `levenshtein`. Output:
     * (id_a, id_b, dist) with id_a < id_b.
     *
     * Scale shape (100 TB): signatures per row = len+1 (short strings by
@@ -60,17 +50,6 @@ object Dedup {
     * skew cap on hot signatures (e.g. a catalog where thousands share a
     * name — capped buckets contribute no pairs, loudly traded).
     */
-  /** The SymSpell distance-1 signature array of a string column: the
-    * string itself plus every single-character deletion (row-local,
-    * expression-only — shared by the batch pair join and the streaming
-    * ingest path, so the blocking contract cannot drift between them).
-    */
-  def deletionSignatures(s: Column): Column = {
-    val dels = transform(sequence(lit(1), length(s)),
-      i => concat(s.substr(lit(1), i - 1), s.substr(i + 1, length(s))))
-    when(length(s) > 0, array_union(array(s), dels)).otherwise(array(s))
-  }
-
   def fuzzyMatchPairs(df: DataFrame, idCol: String, strCol: String,
       maxDist: Int = 1, maxBucket: Int = 1024): DataFrame = {
     require(maxDist == 1, "fuzzyMatchPairs: deletion-neighborhood blocking guarantees maxDist=1 only")
@@ -127,36 +106,6 @@ object Dedup {
     df.withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1).drop("_rn")
   }
 
-  /** MinHash signature per doc: k independent 64-bit min-hashes over the
-    * distinct word `shingleK`-shingles. One explode + one groupBy with k
-    * `min` aggregates (all map-side combinable).
-    */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, shingleK: Int = 3): DataFrame = {
-    val shingled = df
-      .select(col(idCol), explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("sh"))
-      .distinct()
-    val mins = (0 until k).map(i => min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
-    shingled.groupBy(col(idCol)).agg(mins.head, mins.tail: _*)
-  }
-
-  /** LSH candidate pairs from MinHash signatures: `bands` bands of
-    * `k/bands` rows; docs sharing any band hash become a candidate pair.
-    * Self-join is on the (band, hash) key — shuffle proportional to
-    * bucket sizes, not n^2.
-    */
-  def minhashCandidates(sigs: DataFrame, idCol: String, k: Int = 16, bands: Int = 4,
-      maxBucket: Option[Int] = None): DataFrame = {
-    require(k % bands == 0,
-      s"bands ($bands) must divide k ($k) — a remainder would silently shrink the signature")
-    val rows = k / bands
-    val banded = (0 until bands).map { b =>
-      val hs = (b * rows until (b + 1) * rows).map(i => col(s"h$i"))
-      sigs.select(col(idCol), lit(b).as("band"), xxhash64(hs: _*).as("bh"))
-    }.reduce(_ unionByName _)
-    selfJoinBuckets(banded, idCol, Seq("band", "bh"), maxBucket)
-  }
-
   /** Drops the rows of buckets (rows sharing `keys`) holding more than
     * `maxBucket` members. Bucket size comes from a window count, not
     * groupBy+semi-join: one shuffle on the bucket key instead of two. A
@@ -189,42 +138,6 @@ object Dedup {
     capped.as("a").join(capped.as("b"), cond)
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .distinct()
-  }
-
-  /** Exact n-gram Jaccard for given pairs (verification stage): joins each
-    * side's distinct shingle set, counts intersections, and derives
-    * |A∪B| = |A| + |B| − |A∩B|.
-    */
-  def jaccardForPairs(pairs: DataFrame, docs: DataFrame, idCol: String,
-      textCol: String, shingleK: Int = 3): DataFrame = {
-    // shingles hashed to 64-bit BEFORE the shuffle: distinct/join keys are
-    // 8 bytes instead of multi-word strings (collision odds ~ n^2/2^65).
-    val sh = docs
-      .select(col(idCol).as("jid"),
-        explode(transform(TextFunctions.wordShingles(col(textCol), shingleK),
-          sh => xxhash64(sh))).as("sh"))
-      .distinct()
-    val sizes = sh.groupBy("jid").agg(count(lit(1)).as("sz"))
-    val inter = pairs
-      .join(sh.withColumnRenamed("jid", "id_a_j").withColumnRenamed("sh", "sh_a"),
-        col("id_a") === col("id_a_j"))
-      .join(sh.withColumnRenamed("jid", "id_b_j").withColumnRenamed("sh", "sh_b"),
-        col("id_b") === col("id_b_j") && col("sh_a") === col("sh_b"))
-      .groupBy("id_a", "id_b")
-      .agg(count(lit(1)).as("inter"))
-    // left joins + fills so a doc too short to shingle still answers the
-    // requested pair (empty shingle set -> jaccard 0) instead of the pair
-    // silently vanishing from the output.
-    pairs
-      .join(inter, Seq("id_a", "id_b"), "left")
-      .join(sizes.withColumnRenamed("jid", "id_a").withColumnRenamed("sz", "sz_a"), Seq("id_a"), "left")
-      .join(sizes.withColumnRenamed("jid", "id_b").withColumnRenamed("sz", "sz_b"), Seq("id_b"), "left")
-      .na.fill(0L, Seq("inter", "sz_a", "sz_b"))
-      .withColumn("jaccard",
-        when(col("sz_a") + col("sz_b") - col("inter") > 0,
-          col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .otherwise(lit(0.0)))
-      .select("id_a", "id_b", "jaccard")
   }
 
   /** All-pairs n-gram Jaccard >= threshold, computed WITHOUT a cross
@@ -432,29 +345,6 @@ object Dedup {
       .select("src_id", "dst_id", "containment")
   }
 
-  /** Full MinHash near-dup pipeline with a SHARED shingle frame: the
-    * (id, shingle-hash) table is computed once and persisted, then feeds
-    * signatures, banded LSH candidates, AND the exact-Jaccard verification
-    * — one corpus scan instead of three. This is the entry point a
-    * pipeline should use; the pieces remain public for composition.
-    */
-  def minhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 16, bands: Int = 2, shingleK: Int = 3,
-      threshold: Double = 0.8): DataFrame = {
-    val sh = docs
-      .select(col(idCol).as("jid"),
-        explode(transform(TextFunctions.wordShingles(col(textCol), shingleK),
-          s => xxhash64(s))).as("sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mins = (0 until k).map(i => min(xxhash64(col("sh"), lit(i))).as(s"h$i"))
-    val sigs = sh.groupBy(col("jid").as(idCol)).agg(mins.head, mins.tail: _*)
-    val cands = minhashCandidates(sigs, idCol, k, bands)
-    val sets = sh.groupBy("jid")
-      .agg(collect_list(col("sh")).as("_set"), count(lit(1)).as("sz"))
-    verifyJaccardOnCandidates(cands, sets, sets, threshold)
-  }
-
   /** Shared exact-Jaccard verification over candidate pairs — the one
     * implementation behind every MinHash pipeline. `setsA`/`setsB` are
     * (jid, _set, sz) frames of per-key distinct shingle sets for the
@@ -520,9 +410,7 @@ object Dedup {
     * 8-hex-char slices of `md5(seed:shingle)` (k/4 md5 calls per shingle,
     * 4 slices each; min over fixed-width hex strings == min over the
     * 32-bit values), and a band's LSH key is the concatenation of its row
-    * minima. Bit-for-bit reproducible by any engine with `md5()` — the
-    * oracle-checked variant of [[minhashNearDupPairs]] (which keeps
-    * xxhash64 keys for cheaper in-cluster shuffles).
+    * minima. Bit-for-bit reproducible by any engine with `md5()`.
     *
     * Plan: the signature kernel runs per document, map-side (no shingle
     * explode, distinct or sort aggregate); the capped (jid, band, bsig)
@@ -749,8 +637,6 @@ object Dedup {
 
   /** Embedding near-dup at scale: multi-table sign-LSH candidate
     * generation (never O(n^2)), exact cosine check on candidates only.
-    * The exact all-pairs [[embeddingNearDup]] stays as the oracle
-    * baseline.
     */
   def embeddingNearDupLsh(emb: DataFrame, idCol: String, vecCol: String,
       threshold: Double, nTables: Int = 8, planesPerTable: Int = 4,
@@ -931,21 +817,11 @@ object Dedup {
     override def outputEncoder = org.apache.spark.sql.Encoders.scalaLong
   }
 
-  /** Per-doc SimHash: explode tokens -> hash -> SimHashAgg. */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val simhashUdaf = udaf(new SimHashAgg, org.apache.spark.sql.Encoders.scalaLong)
-    df.select(col(idCol), explode(split(trim(col(textCol)), "\\s+")).as("tok"))
-      .select(col(idCol), xxhash64(col("tok")).as("th"))
-      .groupBy(col(idCol))
-      .agg(simhashUdaf(col("th")).as("simhash"))
-  }
-
   /** Engine-portable SimHash: token hash = first 64 bits of md5 (see
     * [[graft.functions.TextFunctions.md5Bits64]]), result rendered as a
     * 16-char lowercase hex string. Bit-for-bit reproducible by any engine
-    * with an `md5()` builtin — this is the oracle-checked variant; the
-    * xxhash64 [[simhash]] is the cheaper in-cluster path. Same plan shape:
-    * explode + one map-side-combinable Aggregator pass.
+    * with an `md5()` builtin. Plan: explode + one map-side-combinable
+    * Aggregator pass.
     */
   def simhashMd5(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val simhashUdaf = udaf(new SimHashAgg, org.apache.spark.sql.Encoders.scalaLong)
@@ -958,64 +834,41 @@ object Dedup {
 
   /** SimHash near-dup candidates: equal 16-bit prefix blocks (any of 4)
     * — the standard "hamming distance <= 3 implies some block equal"
-    * pigeonhole bucketing. Accepts BOTH signature encodings: the numeric
-    * `simhash` of [[simhash]] (LongType; blocks via shift+mask) and the
-    * 16-hex-char `simhash` of [[simhashMd5]] (StringType; a 16-bit block
-    * is exactly 4 hex chars, so blocks slice the string — no lossy
-    * hex->long parse, which would overflow a signed cast for signatures
-    * >= 2^63). Any other type raises loudly instead of mis-bucketing.
+    * pigeonhole bucketing — over the 16-hex-char `simhash` column of
+    * [[simhashMd5]]. A 16-bit block is exactly 4 hex chars, so blocks
+    * slice the string (no lossy hex->long parse, which would overflow a
+    * signed cast for signatures >= 2^63). Any other column type raises
+    * loudly instead of mis-bucketing.
     */
   def simhashCandidates(sims: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StringType}
-    val validated = sims.schema("simhash").dataType match {
-      case LongType => sims
-      case StringType =>
-        // enforce the simhashMd5 shape row-side, not just the type: a
-        // 32-hex full md5, uppercase hex, or arbitrary string would
-        // otherwise slice into garbage buckets silently (candidates
-        // quietly empty). raise_error costs nothing on conforming rows.
-        // null-safe: rlike(NULL) is NULL (branch falls through to
-        // otherwise), and concat with NULL would make raise_error throw
-        // MESSAGE-LESS — coalesce keeps the diagnostic intact
-        sims.withColumn("simhash",
-          when(col("simhash").isNotNull && col("simhash").rlike("^[0-9a-f]{16}$"),
-            col("simhash"))
-            .otherwise(raise_error(concat(
-              lit("simhash string column must be 16 lowercase hex chars "
-                + "(simhashMd5 output), got: "),
-              coalesce(col("simhash"), lit("NULL"))))))
-      case other => throw new IllegalArgumentException(
-        s"simhash column must be LongType (simhash) or a 16-hex StringType " +
-          s"(simhashMd5), got $other")
-    }
-    val blockOf: Int => Column = sims.schema("simhash").dataType match {
-      case LongType => b =>
-        shiftrightunsigned(col("simhash"), b * 16).bitwiseAND(lit(0xffffL)).cast("string")
-      case _ => b =>
-        // hex renders big-endian: chars [1..4] are bits 63..48 = block 3
-        substring(col("simhash"), (3 - b) * 4 + 1, 4)
-    }
+    import org.apache.spark.sql.types.StringType
+    val dt = sims.schema("simhash").dataType
+    require(dt == StringType,
+      s"simhash column must be a 16-hex StringType (simhashMd5), got $dt")
+    // enforce the simhashMd5 shape row-side, not just the type: a
+    // 32-hex full md5, uppercase hex, or arbitrary string would
+    // otherwise slice into garbage buckets silently (candidates
+    // quietly empty). raise_error costs nothing on conforming rows.
+    // null-safe: rlike(NULL) is NULL (branch falls through to
+    // otherwise), and concat with NULL would make raise_error throw
+    // MESSAGE-LESS — coalesce keeps the diagnostic intact
+    val validated = sims.withColumn("simhash",
+      when(col("simhash").isNotNull && col("simhash").rlike("^[0-9a-f]{16}$"),
+        col("simhash"))
+        .otherwise(raise_error(concat(
+          lit("simhash string column must be 16 lowercase hex chars "
+            + "(simhashMd5 output), got: "),
+          coalesce(col("simhash"), lit("NULL"))))))
+    // hex renders big-endian: chars [1..4] are bits 63..48 = block 3
     val blocks = (0 until 4).map { b =>
-      validated.select(col(idCol), lit(b).as("blk"), blockOf(b).as("bh"))
+      validated.select(col(idCol), lit(b).as("blk"),
+        substring(col("simhash"), (3 - b) * 4 + 1, 4).as("bh"))
     }.reduce(_ unionByName _)
     blocks.as("a").join(blocks.as("b"),
         col("a.blk") === col("b.blk") && col("a.bh") === col("b.bh") &&
         col(s"a.$idCol") < col(s"b.$idCol"))
       .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
       .distinct()
-  }
-
-  /** Embedding near-dup pairs: cosine >= threshold. Brute force within
-    * sign-LSH buckets (see [[graft.operators.Ann]]) — here the exact
-    * verification for candidate pairs.
-    */
-  def embeddingNearDup(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double): DataFrame = {
-    val e = emb.select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-    e.as("a").join(e.as("b"), col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"),
-        graft.functions.VectorFunctions.cosine(col("a.v"), col("b.v")).as("cos"))
-      .filter(col("cos") >= threshold)
   }
 
   /** Connected components over near-dup PAIRS — the step every dedup
@@ -1121,8 +974,6 @@ object Dedup {
       // per-round counts WON — the default stays probeEvery=1.
       if (i % probeEvery == 0 || i == maxIter)
         converged = next.filter(col("cluster_id") =!= col("_old")).count() == 0
-      if (sys.env.contains("SPARK_GRAFT_CC_VERBOSE"))
-        System.err.println(s"[dedupClusters] round $i converged=$converged")
       labels = next.select("id", "cluster_id")
     }
     require(converged, s"dedupClusters did not converge in $maxIter rounds " +

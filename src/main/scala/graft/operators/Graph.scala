@@ -21,12 +21,6 @@ object Graph {
   private[graft] val CacheRetainRounds = 8
 
 
-  /** Node-attribute table (`networkx.py:90`): vertices left-joined with an
-    * attribute frame on id (the reference's `reindex` onto the node list).
-    */
-  def nodeAttrTable(vertices: DataFrame, attrs: DataFrame, idCol: String): DataFrame =
-    vertices.join(attrs, Seq(idCol), "left")
-
   /** Color-group table (`networkx.py:95-111`): group nodes by a color
     * attribute; the reference builds {color -> node list} — here the group
     * plus member count and the (sorted) member sample the renderer needs.
@@ -222,7 +216,7 @@ object Graph {
       // the WHOLE sweep history under every total — the analyzed tree
       // doubled per sweep (2^sweeps nodes; the r13 driver record's 16 s
       // hits_suppliers regression was the readout finalizing that nested
-      // chain on the driver, 14 s measured cold at local[32]). The
+      // chain on the driver, 14 s measured cold on 32 local cores). The
       // 1-row readout also materializes each pinned round eagerly, so
       // the final action sees shallow, already-built caches. The scalar
       // re-enters as a literal: round(x / lit(t)) on the same IEEE

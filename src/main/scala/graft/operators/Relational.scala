@@ -219,24 +219,6 @@ object Relational {
     row.isNullAt(0) || row.getLong(0) == 0L // empty frames align trivially
   }
 
-  /** Assign each distinct combination of `cols` a dense Long id
-    * (`utils.py:811-841` unique_row_ids). Scale shape: distinct first
-    * (shuffle that shrinks the data), rank only the distinct set, then join
-    * the ids back (broadcast when the distinct set is small — the common
-    * case the reference optimizes with factorize).
-    *
-    * The global rank is TWO-PHASE, never a single-partition sort:
-    * range-repartition the distinct set on the sort key (globally
-    * ordered, non-overlapping ranges), row_number within each partition,
-    * then add per-partition offsets (a prefix sum over ONE count per
-    * partition — driver metadata like the sampling strata collects).
-    * Rank values are identical to a global dense_rank for any range
-    * boundary placement: rows are distinct, so local row_number is the
-    * local dense rank, and ordered ranges make offsets exact.
-    * [[uniqueRowIdsHashed]] remains the O(1) alternative when even a
-    * ranked shuffle of the distinct set is unaffordable — its ids are
-    * neither dense nor rank-ordered (documented divergence).
-    */
   /** Dense 1..n ids over an already-DISTINCT frame in `cols` sort order —
     * the two-phase global rank shared by [[uniqueRowIds]] and
     * `Coo.sliceAt`: range-repartition (ordered, non-overlapping ranges),
@@ -275,6 +257,21 @@ object Relational {
       .drop("_pid", "_lrn", "_off")
   }
 
+  /** Assign each distinct combination of `cols` a dense Long id
+    * (`utils.py:811-841` unique_row_ids). Scale shape: distinct first
+    * (shuffle that shrinks the data), rank only the distinct set, then join
+    * the ids back (broadcast when the distinct set is small — the common
+    * case the reference optimizes with factorize).
+    *
+    * The global rank is TWO-PHASE, never a single-partition sort:
+    * range-repartition the distinct set on the sort key (globally
+    * ordered, non-overlapping ranges), row_number within each partition,
+    * then add per-partition offsets (a prefix sum over ONE count per
+    * partition — driver metadata like the sampling strata collects).
+    * Rank values are identical to a global dense_rank for any range
+    * boundary placement: rows are distinct, so local row_number is the
+    * local dense rank, and ordered ranges make offsets exact.
+    */
   def uniqueRowIds(df: DataFrame, cols: Seq[String]): DataFrame = {
     val ids = twoPhaseDenseIds(df.select(cols.map(col): _*).distinct(), cols)
     // null-SAFE join back: distinct() treats null tuples as a group and
@@ -287,13 +284,6 @@ object Relational {
     df.join(renamed, cond, "left")
       .drop(cols.map(c => s"_r_$c"): _*)
   }
-
-  /** Collision-tolerant O(1) variant: 64-bit xxhash of the row tuple.
-    * Not dense, not rank-ordered; documented divergence for the 100 TB
-    * path where a global rank is unaffordable.
-    */
-  def uniqueRowIdsHashed(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.withColumn("row_id", xxhash64(cols.map(col): _*))
 
   /** IdentitySeries (`utils.py:630-723`): a keyed frame whose value IS the
     * key — a pure projection, zero cost.

@@ -432,14 +432,6 @@ object Multimodal {
 
   private val decodeUdf = udf((b: Array[Byte]) => decodeBytes(b))
 
-  /** Pixel-decoded metadata struct (ImageIO; null for undecodable blobs). */
-  private val decodeImageUdf = udf((b: Array[Byte]) => decodeImage(b))
-
-  def withImageMeta(df: DataFrame, mediaCol: String, as: String = "img_meta"): DataFrame =
-    df.withColumn(as,
-      decodeImageUdf(col(mediaCol)).cast(
-        "struct<format:string,width:int,height:int,n_bands:int>"))
-
   private val resizeUdf = udf((b: Array[Byte], w: Int, h: Int) => resizeImage(b, w, h).orNull)
 
   def withResized(df: DataFrame, mediaCol: String, w: Int, h: Int,

@@ -22,31 +22,21 @@ class DedupAnnSpec extends SparkSpec {
     assert(Dedup.exactDedup(docs, "text", "doc_id").count() == 4)
   }
 
-  test("minhash LSH finds exact and near dups, verified by Jaccard") {
-    val sigs = Dedup.minhashSignatures(docs, "doc_id", "text", 16, 3)
-    assert(sigs.count() == 5)
-    val cands = Dedup.minhashCandidates(sigs, "doc_id", 16, 4)
-    val verified = Dedup.jaccardForPairs(cands, docs, "doc_id", "text", 3)
-      .filter(col("jaccard") >= 0.5).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(verified.contains((0L, 3L))) // exact dup must survive any LSH
-  }
-
   test("ngramJaccardPairs: exact dup pair has jaccard 1.0") {
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
     val exact = pairs.find(r => r.getLong(0) == 0L && r.getLong(1) == 3L).get
     assert(math.abs(exact.getDouble(2) - 1.0) < 1e-12)
   }
 
-  test("simhash: identical docs get identical hashes, near docs small hamming") {
-    val sh = Dedup.simhash(docs, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+  test("simhashMd5: identical docs get identical hashes, near docs small hamming") {
+    val sims = Dedup.simhashMd5(docs, "doc_id", "text")
+    val sh = sims.collect()
+      .map(r => r.getLong(0) -> java.lang.Long.parseUnsignedLong(r.getString(1), 16)).toMap
     assert(sh(0L) == sh(3L))
     val hammingNear = java.lang.Long.bitCount(sh(0L) ^ sh(1L))
     val hammingFar = java.lang.Long.bitCount(sh(0L) ^ sh(2L))
     assert(hammingNear < hammingFar)
-    val cands = Dedup.simhashCandidates(
-      Dedup.simhash(docs, "doc_id", "text"), "doc_id").collect()
+    val cands = Dedup.simhashCandidates(sims, "doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(cands.contains((0L, 3L)))
   }
@@ -224,14 +214,9 @@ class DedupAnnSpec extends SparkSpec {
     bestS.foreach { case (qid, c) => assert(bestM(qid) >= c - 1e-12, s"query $qid lost recall") }
   }
 
-  test("simhashCandidates: accepts both Long and md5-hex signatures, rejects others") {
-    // numeric variant (LongType simhash)
-    val numCands = Dedup.simhashCandidates(
-      Dedup.simhash(docs, "doc_id", "text"), "doc_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(numCands.contains((0L, 3L)))
-    // hex variant (simhashMd5's 16-hex StringType) — previously an API
-    // footgun that silently produced garbage buckets
+  test("simhashCandidates: accepts md5-hex signatures, rejects Long and others") {
+    // simhashMd5's 16-hex StringType — previously an API footgun that
+    // silently produced garbage buckets
     val hexCands = Dedup.simhashCandidates(
       Dedup.simhashMd5(docs, "doc_id", "text"), "doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -251,6 +236,12 @@ class DedupAnnSpec extends SparkSpec {
       Dedup.simhashCandidates(bad, "doc_id")
     }
     assert(e.getMessage.contains("simhash column"))
+    // including a numeric LongType signature
+    val numeric = Seq((0L, 5L), (1L, 5L)).toDF("doc_id", "simhash")
+    val eL = intercept[IllegalArgumentException] {
+      Dedup.simhashCandidates(numeric, "doc_id")
+    }
+    assert(eL.getMessage.contains("simhash column"))
     // and a malformed STRING signature (full 32-hex md5, uppercase, junk)
     // raises at execution instead of silently bucketing garbage
     val mal = Seq((0L, "a" * 32), (1L, "a" * 32)).toDF("doc_id", "simhash")

@@ -32,18 +32,9 @@ export SF_DIR
 STEAL_Q=${STEAL_Q:-0.75}
 STEAL_SUITE=${STEAL_SUITE:-0.8}
 export STEAL_Q STEAL_SUITE
+. "$(dirname "$0")/steal_sample.sh"
 cd /root/repo
 ADDOPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do printf -- "--add-opens java.base/%s=ALL-UNNAMED " "$p"; done)
-
-
-steal_sample() { # 5-second steal-cores + load1 sample
-  local s1 t1 s2 t2
-  read -r s1 t1 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  sleep 5
-  read -r s2 t2 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  awk -v a=$((s2-s1)) -v b=$((t2-t1)) -v l="$(cut -d' ' -f1 /proc/loadavg)" \
-    'BEGIN{printf "%.2f %s\n", (b>0)? a/b*32 : 99, l}'
-}
 
 # Build stamp: resumed clean records are only valid against the SAME
 # binary. Hash the current build once; if clean records exist under
@@ -155,7 +146,7 @@ steal_suite = os.environ.get("STEAL_SUITE", "0.8")
 rec = {"metric": "total", "value": sum(v for v in qs.values() if v >= 0),
        "unit": "sec", "queries": dict(sorted(qs.items())),
        "steal_cores": dict(sorted(st.items())),
-       "iters": 3, "clear_cache": False,
+       "iters": 3,
        "status": f"complete_chunked({len(chunks)} chunks)",
        "sf": os.environ.get("SF_DIR", "/root/testdata/sf0.1"),
        "build_sha": os.environ.get("CUR_SHA", ""),

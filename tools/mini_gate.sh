@@ -2,15 +2,9 @@
 # gated mini-window: wait sustained quiet, then bench the named queries
 set -u
 QUERIES=$1; OUT=$2
+. "$(dirname "$0")/steal_sample.sh"
 cd /root/repo
 ADDOPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do printf -- "--add-opens java.base/%s=ALL-UNNAMED " "$p"; done)
-steal_sample() {
-  local s1 t1 s2 t2
-  read -r s1 t1 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  sleep 5
-  read -r s2 t2 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  awk -v a=$((s2-s1)) -v b=$((t2-t1)) -v l="$(cut -d' ' -f1 /proc/loadavg)" 'BEGIN{printf "%.2f %s\n", (b>0)? a/b*32 : 99, l}'
-}
 for try in 1 2 3 4 5 6 7 8 9 10 11 12; do
   quiet=0
   while [ $quiet -lt 8 ]; do

@@ -13,17 +13,9 @@
 set -u
 PREFIX=${1:-/tmp/qbench}
 MAX=${2:-12}
+. "$(dirname "$0")/steal_sample.sh"
 cd /root/repo
 ADDOPENS=$(for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio java.util java.util.concurrent java.util.concurrent.atomic sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do printf -- "--add-opens java.base/%s=ALL-UNNAMED " "$p"; done)
-
-steal_sample() { # 5-second steal-cores + load1 sample
-  local s1 t1 s2 t2
-  read -r s1 t1 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  sleep 5
-  read -r s2 t2 < <(awk '/^cpu /{print $9, $2+$3+$4+$5+$6+$7+$8+$9}' /proc/stat)
-  awk -v a=$((s2-s1)) -v b=$((t2-t1)) -v l="$(cut -d' ' -f1 /proc/loadavg)" \
-    'BEGIN{printf "%.2f %s\n", (b>0)? a/b*32 : 99, l}'
-}
 
 for i in $(seq 1 "$MAX"); do
   quiet=0
