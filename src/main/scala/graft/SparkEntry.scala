@@ -3587,8 +3587,7 @@ object SparkEntry {
     // z-score): median/MAD are exact percentile_disc elements at
     // integer rank ceil(n/2) — the outliers cannot inflate the spread
     // estimate the way they inflate a stddev z-score; only the final
-    // fixed-order subtract/multiply/divide is float. Two keyed-window
-    // passes on the same group partitioning.
+    // fixed-order subtract/multiply/divide is float. One grouped pass.
     "mad_outliers" -> ((s, dir) =>
       Stats.madOutliers(t(s, dir, "events"),
           "event_type", "value", "event_id", cutoff = 3.5)

@@ -547,6 +547,11 @@ object Events {
     * null like statsmodels'), detrended = y − trend, seasonal index =
     * per-season-position mean of the detrended values (day-ordered
     * float fold — engine-portable), residual = detrended − seasonal.
+    * The position means are a window over (type, position) in day
+    * order: its unbounded frame adds the rows in that order, the same
+    * sequential fold as the oracle's list_sum(... ORDER BY d), and it
+    * rides the trend window's type partitioning — the day grid is
+    * computed once, with no join back.
     * The season position uses integer epoch-day arithmetic, never an
     * engine dow builtin (invariant 38). m must be odd so the centered
     * window is symmetric.
@@ -576,15 +581,12 @@ object Events {
           col("_ws").cast("double") / lit(m.toDouble)))
       .withColumn("_det", col("_cnt").cast("double") - col("_trend"))
       .withColumn("_pos", pmod(col("_d"), lit(m)))
-    val seas = trended.filter(col("_det").isNotNull)
-      .select(col("_t"), col("_pos"), struct(col("_d"), col("_det")).as("_s"))
-      .groupBy(col("_t"), col("_pos"))
-      .agg(count(lit(1)).as("_pn"), collect_list(col("_s")).as("_l"))
-      .select(col("_t"), col("_pos"),
-        (aggregate(transform(sort_array(col("_l")), x => x.getField("_det")),
-          lit(0.0), (acc, x) => acc + x) / col("_pn").cast("double"))
-          .as("_seas"))
-    trended.join(seas, Seq("_t", "_pos"), "left")
+    val ws = Window.partitionBy(col("_t"), col("_pos")).orderBy(col("_d"))
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    trended
+      .withColumn("_pn", count(col("_det")).over(ws))
+      .withColumn("_seas", when(col("_pn") > 0,
+        sum(col("_det")).over(ws) / col("_pn").cast("double")))
       .select(col("_t").as(typeCol),
         to_date(lit("1970-01-01")).cast("date").as("_epoch"),
         col("_d"), col("_cnt").as("cnt"),

@@ -206,41 +206,43 @@ object Stats {
     * |M| > cutoff flagged — immune to the outliers themselves (unlike
     * a mean/stddev z-score, where one 10⁶x spike inflates σ and hides
     * its siblings). Median and MAD are EXACT percentile_disc elements
-    * at integer rank ceil(n/2) (the [[percentileBands]] rank
-    * arithmetic), so the only floats are the final fixed-operand-order
-    * subtract/multiply/divide — engine-portable. Groups with MAD = 0
-    * (a majority-constant column) are excluded: M is undefined there,
-    * the documented Iglewicz-Hoaglin edge.
+    * at integer rank ceil(n/2) of the group's ascending (value, id)
+    * list and ascending |value − median| list (nulls first, n counts
+    * them), so the only floats are the deviations and the final
+    * fixed-operand-order subtract/multiply/divide — engine-portable.
+    * Groups with MAD = 0 (a majority-constant column) are excluded: M
+    * is undefined there, the documented Iglewicz-Hoaglin edge. Rows
+    * with a null group key are dropped.
     *
-    * Scale shape (100 TB): two keyed-window percentile passes over the
-    * SAME group partitioning plus a |groups|-row join back (AQE
-    * broadcast — a grouped aggregate is never hinted). No global
-    * window, no driver math.
+    * Scale shape (100 TB): ONE grouped pass — the input is read once,
+    * map-side partial collects feed one exchange on the group key, and
+    * each group's sorted (value, id) list yields median, MAD and its
+    * flagged rows. No window, join or pin. Each group's pairs are held
+    * by one task — the one-task-per-group placement of a keyed window,
+    * but in memory with no spill — so one group must fit in executor
+    * memory.
     */
   def madOutliers(df: DataFrame, groupCol: String, valueCol: String,
       idCol: String, cutoff: Double = 3.5): DataFrame = {
     require(cutoff > 0, s"madOutliers: need cutoff>0, got $cutoff")
-    // r14: base and dev are each read TWICE (base by the median pass and
-    // the deviation join; dev by the MAD pass and the final readout) —
-    // without the pins the upstream frame (a whole seasonal
-    // decomposition in the ESD query) re-executed per reference (§5)
-    val base = df.select(col(groupCol), col(idCol), col(valueCol).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val med = percentileBands(base, groupCol, valueCol, Seq((1, 2)))
-      .select(col(groupCol), col("value").as("_med"))
-    val dev = base.join(med, Seq(groupCol))
-      .withColumn("_dev", abs(col(valueCol) - col("_med")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mad = percentileBands(dev.select(col(groupCol), col("_dev")),
-        groupCol, "_dev", Seq((1, 2)))
-      .select(col(groupCol), col("value").as("_mad"))
-    dev.join(mad, Seq(groupCol))
-      .filter(col("_mad") > 0.0)
-      .withColumn("mz",
-        (lit(0.6745) * (col(valueCol) - col("_med"))) / col("_mad"))
-      .filter(abs(col("mz")) > cutoff)
-      .select(col(groupCol), col(idCol), col(valueCol),
-        col("_med").as("med"), col("_mad").as("mad"), col("mz"))
+    val rank = shiftright(size(col("_l")) + 1, 1) // ceil(n/2), 1-based
+    df.filter(col(groupCol).isNotNull)
+      .groupBy(col(groupCol))
+      .agg(sort_array(collect_list(struct(col(valueCol).cast("double").as("v"),
+        col(idCol).as("id")))).as("_l"))
+      .withColumn("_med", element_at(col("_l"), rank).getField("v"))
+      .withColumn("_mad", element_at(sort_array(
+        transform(col("_l"), e => abs(e.getField("v") - col("_med")))), rank))
+      // flag inside the list and explode only flagged rows (none when
+      // MAD = 0): a Filter over _med/_mad would be pushed below their
+      // projection and sort the deviations a second time
+      .select(col(groupCol), col("_med"), col("_mad"),
+        explode(when(col("_mad") > 0.0, filter(
+          transform(col("_l"), e => e.withField("mz",
+            (lit(0.6745) * (e.getField("v") - col("_med"))) / col("_mad"))),
+          e => abs(e.getField("mz")) > cutoff))).as("_e"))
+      .select(col(groupCol), col("_e.id").as(idCol), col("_e.v").as(valueCol),
+        col("_med").as("med"), col("_mad").as("mad"), col("_e.mz").as("mz"))
   }
 
   /** Ordered left fold of a double field over a SORTED struct list —

@@ -445,6 +445,49 @@ class EventsSpec extends SparkSpec {
       Some(0.0), None))
   }
 
+  test("classicalDecomposition: window position means equal the sorted-list fold, interpreted and codegen") {
+    import org.apache.spark.sql.expressions.Window
+    // noisy weekly series for two types over 45 days (the first and
+    // last three days have no trend, so their detrended value is null)
+    val rnd = new scala.util.Random(45L)
+    val ev = (for (tp <- Seq("a", "b"); d <- 1 to 45;
+        i <- 0 until (3 + (d % 7) * 2 + rnd.nextInt(9)))
+      yield (tp, Timestamp.valueOf(java.time.LocalDateTime.of(2024, 1, 1, i % 24, 0)
+        .plusDays(d - 1)))).toDF("event_type", "ts")
+    // the grouped form the window replaced: per (type, position) a
+    // day-sorted list folded from 0.0, joined back on (type, position)
+    val daily = ev.groupBy(col("event_type").as("_t"),
+        datediff(col("ts").cast("date"), to_date(lit("1970-01-01"))).as("_d"))
+      .agg(count(lit(1)).as("_cnt"))
+    val w = Window.partitionBy(col("_t")).orderBy(col("_d")).rowsBetween(-3, 3)
+    val trended = daily
+      .withColumn("_trend", when(count(lit(1)).over(w) === 7,
+        sum(col("_cnt")).over(w).cast("double") / lit(7.0)))
+      .withColumn("_det", col("_cnt").cast("double") - col("_trend"))
+      .withColumn("_pos", pmod(col("_d"), lit(7)))
+    val seas = trended.filter(col("_det").isNotNull)
+      .groupBy(col("_t"), col("_pos"))
+      .agg(count(lit(1)).as("_pn"), collect_list(struct(col("_d"), col("_det"))).as("_l"))
+      .select(col("_t"), col("_pos"),
+        (aggregate(transform(sort_array(col("_l")), x => x.getField("_det")),
+          lit(0.0), (acc, x) => acc + x) / col("_pn").cast("double")).as("_seas"))
+    val ref = trended.join(seas, Seq("_t", "_pos"), "left")
+      .select(col("_t"), col("_d"),
+        (round(col("_seas"), 6) + lit(0.0)).as("s"),
+        (round(col("_det") - col("_seas"), 6) + lit(0.0)).as("r"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.get(2), r.get(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    def run() = Events.classicalDecomposition(ev, "event_type", "ts", m = 7)
+      .select(col("event_type"),
+        datediff(col("day"), to_date(lit("1970-01-01"))), col("seasonal"), col("residual"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.get(2), r.get(3)))
+      .sortBy(r => (r._1, r._2)).toSeq
+    assert(ref.length == 90 && ref.count(_._4 == null) == 12)
+    assert(run() == ref)
+    assert(withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(run()) == ref)
+  }
+
   test("logRankTest: hand-walked risk sets, E/V accumulation, censoring") {
     def t(s: String) = Timestamp.valueOf(s)
     // u1 (odd, grp2): purchase at +1.5h; u2 (even, grp1): purchase at

@@ -128,14 +128,6 @@ class FunctionsSpec extends SparkSpec {
       df.select(col("id"), TextFunctions.md5SliceBands(
           TextFunctions.md5SliceMins(col("text"), k, 3), bands))
         .collect().map(r => r.getLong(0) -> Option(r.getSeq[String](1))).toMap
-    def withConf[T](kv: (String, String)*)(f: => T): T = {
-      val old = kv.map { case (key, _) => key -> spark.conf.getOption(key) }
-      kv.foreach { case (key, v) => spark.conf.set(key, v) }
-      try f finally old.foreach {
-        case (key, Some(v)) => spark.conf.set(key, v)
-        case (key, None) => spark.conf.unset(key)
-      }
-    }
     for ((k, bands) <- Seq((12, 2), (16, 4), (12, 12))) {
       val ref = reference(k, bands)
       assert(ref.keySet == Set(0L, 4L, 5L))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 
 /** Physical-plan regression tests: the 100 TB properties (column pruning,
@@ -18,6 +19,16 @@ class PlanSpec extends SparkSpec {
     */
   private val MinhashPairsMaxExchanges = 10
 
+  /** Bounds on the executed exchanges of the two `madOutliers` queries at
+    * this suite's scale. `mad_outliers` runs 2: the group-key collect and
+    * the output sort. `seasonal_esd_anomalies` runs 3: the decomposition's
+    * daily counts and its trend window, whose type partitioning the
+    * seasonal-means window and the outlier collect reuse, and the output
+    * sort.
+    */
+  private val MadOutliersMaxExchanges = 2
+  private val SeasonalEsdMaxExchanges = 3
+
   // ONE QueryExecution per declared query, shared by every suite-wide
   // sweep below — analysis + optimization of ~280 plans dominates this
   // suite's cost, and three sweeps each rebuilding them tripled it
@@ -27,6 +38,20 @@ class PlanSpec extends SparkSpec {
 
   private def planOf(name: String): String =
     allQe(name).executedPlan.toString
+
+  /** Every executed node, descending into AQE stages and into the plans
+    * of the cached relations the query reads.
+    */
+  private def executedNodes(p: SparkPlan): Seq[SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    p match {
+      case a: AdaptiveSparkPlanExec => executedNodes(a.executedPlan)
+      case q: QueryStageExec => executedNodes(q.plan)
+      case m: InMemoryTableScanExec => m +: executedNodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(executedNodes)
+    }
+  }
 
   test("reindex_join: orders scan prunes to 2 columns and broadcasts the agg side") {
     val plan = planOf("reindex_join")
@@ -395,24 +420,14 @@ class PlanSpec extends SparkSpec {
 
   test("minhash_pairs: per-document signature kernel, no sort aggregate, bounded exchanges") {
     import org.apache.spark.sql.catalyst.expressions.Md5
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.SortAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
     import graft.functions.TextFunctions.Md5SliceMins
-    // every executed node, descending into AQE stages and into the
-    // plans of the cached relations the query reads
-    def walk(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-      case m: InMemoryTableScanExec => m +: walk(m.relation.cachedPlan)
-      case other => other +: other.children.flatMap(walk)
-    }
     spark.catalog.clearCache()
     val df = SparkEntry.queries("minhash_pairs")(spark, sf)
     df.collect()
-    val nodes = walk(df.queryExecution.executedPlan)
+    val nodes = executedNodes(df.queryExecution.executedPlan)
     def uses(pred: org.apache.spark.sql.catalyst.expressions.Expression => Boolean) =
       nodes.exists(_.expressions.exists(_.find(pred).isDefined))
     val tree = nodes.map(_.nodeName).mkString(", ")
@@ -423,6 +438,35 @@ class PlanSpec extends SparkSpec {
     val exchanges = nodes.count(_.isInstanceOf[Exchange])
     assert(exchanges <= MinhashPairsMaxExchanges, s"$exchanges exchanges: $tree")
     spark.catalog.clearCache()
+  }
+
+  test("madOutliers queries: one grouped pass, no rank window, pin or nested-loop join") {
+    import org.apache.spark.sql.catalyst.expressions.RowNumber
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    for ((name, maxExchanges) <- Seq("mad_outliers" -> MadOutliersMaxExchanges,
+        "seasonal_esd_anomalies" -> SeasonalEsdMaxExchanges)) {
+      spark.catalog.clearCache()
+      val pinned = spark.sparkContext.getPersistentRDDs.keySet
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val nodes = executedNodes(df.queryExecution.executedPlan)
+      val tree = nodes.map(_.nodeName).mkString(", ")
+      assert(spark.sparkContext.getPersistentRDDs.keySet == pinned, s"$name pins a frame")
+      assert(!nodes.exists(_.isInstanceOf[InMemoryTableScanExec]), s"$name: $tree")
+      assert(!nodes.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]), s"$name: $tree")
+      // ESD keeps only the decomposition's trend and seasonal-means windows
+      assert(!nodes.exists(_.expressions.exists(_.find(_.isInstanceOf[RowNumber]).isDefined)),
+        s"$name ranks with a window: $tree")
+      if (name == "mad_outliers") {
+        assert(!nodes.exists(_.isInstanceOf[WindowExec]), tree)
+        assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]), tree)
+      }
+      val exchanges = nodes.count(_.isInstanceOf[Exchange])
+      assert(exchanges <= maxExchanges, s"$name: $exchanges exchanges: $tree")
+    }
   }
 
   test("no broadcast hint wraps an unbounded grouped aggregate") {

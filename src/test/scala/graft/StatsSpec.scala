@@ -129,6 +129,62 @@ class StatsSpec extends SparkSpec {
     assert(z < 3.5, s"plain z $z should sit under the cutoff (the mask)")
   }
 
+  test("madOutliers: one grouped pass equals the keyed-window rank pipeline, interpreted and codegen") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{abs, count, row_number}
+    // the keyed-window form the grouped pass replaced (and the oracle
+    // SQL keeps): median and MAD picked at rank ceil(n/2) by
+    // row_number over each group, joined back by group key
+    def windowMad(df: DataFrame, cutoff: Double): DataFrame = {
+      def pick(f: DataFrame, v: String, as: String) = f
+        .withColumn("_rn", row_number().over(Window.partitionBy("grp").orderBy(col(v))))
+        .withColumn("_n", count(lit(1)).over(Window.partitionBy("grp")))
+        .filter(col("_rn") * 2 >= col("_n") && (col("_rn") - 1) * 2 < col("_n"))
+        .select(col("grp"), col(v).as(as))
+      val base = df.select(col("grp"), col("id"), col("v").cast("double"))
+      val dev = base.join(pick(base, "v", "_med"), Seq("grp"))
+        .withColumn("_dev", abs(col("v") - col("_med")))
+      dev.join(pick(dev, "_dev", "_mad"), Seq("grp"))
+        .filter(col("_mad") > 0.0)
+        .withColumn("mz", (lit(0.6745) * (col("v") - col("_med"))) / col("_mad"))
+        .filter(abs(col("mz")) > cutoff)
+        .select(col("grp"), col("id"), col("v"), col("_med").as("med"),
+          col("_mad").as("mad"), col("mz"))
+    }
+    val rnd = new scala.util.Random(20261018L)
+    def vals(n: Int): Seq[Option[Double]] = Seq.fill(n) {
+      // half-unit grid -> many ties; ~6% spikes in both directions
+      if (rnd.nextInt(16) == 0) Some((if (rnd.nextBoolean()) 1 else -1) * (40.0 + rnd.nextInt(60)))
+      else Some((rnd.nextInt(41) - 20) / 2.0)
+    }
+    val groups = Seq(
+      "odd" -> (vals(50) :+ None), // 51 rows, one null value
+      "even" -> vals(64),
+      "quad" -> Seq(Some(-3.0), Some(1.0), Some(4.0), Some(40.0)),
+      "single" -> Seq(Some(9.0)),
+      "flat" -> (Seq.fill(7)(Some(2.5)) ++ Seq(Some(-8.0), Some(30.0))), // MAD = 0
+      // a null key never joins back, so its spike is never flagged
+      (null: String) -> Seq(Some(0.0), Some(1.0), Some(1.0), Some(2.0), Some(90.0)))
+    var id = 0L
+    val rows = for ((g, vs) <- groups; v <- vs) yield { id += 1; (g, id, v) }
+    val df = rnd.shuffle(rows).toDF("grp", "id", "v").repartition(3)
+    def run(f: DataFrame => DataFrame) =
+      f(df).collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(3), r.getDouble(4), r.getDouble(5))).sortBy(_._2).toSeq
+    for (cutoff <- Seq(3.5, 1.0)) {
+      val ref = run(windowMad(_, cutoff))
+      assert(ref.map(_._1).toSet == Set("odd", "even", "quad"), ref)
+      val codegen = run(Stats.madOutliers(_, "grp", "v", "id", cutoff))
+      val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(
+        run(Stats.madOutliers(_, "grp", "v", "id", cutoff)))
+      // exact equality of the doubles, not a tolerance
+      assert(codegen == ref, s"cutoff $cutoff")
+      assert(interpreted == ref, s"cutoff $cutoff (NO_CODEGEN)")
+    }
+  }
+
   test("contingencyAnalysis: perfect dependence, independence, degenerate NMI") {
     // perfect 2x2 dependence (a == b): MI = ln 2, chi2 = n, V = 1
     val dep = (0 until 40).map(i => (if (i % 2 == 0) "x" else "y",
