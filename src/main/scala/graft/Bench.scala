@@ -31,61 +31,7 @@ import java.util.concurrent.atomic.AtomicBoolean
   *      thread mid-suite still yields every completed query's median.
   */
 object Bench {
-  /** The canonical cache-sharing FAMILY partition of the suite — the
-    * single source the chunked bench runner (tools/chunk_bench.sh,
-    * FAMILIES list mode below) and the in-process family-ordered run
-    * both derive from, so the two instruments can never drift apart.
-    * Families group queries that legitimately share session-cached
-    * subtrees (the md5-minhash frame consumers, the shingle families,
-    * the ANN codebooks, the events monitors); order within a family is
-    * the cache-aware order the chunk records were taken in.
-    *
-    * Queries declared in SparkEntry but absent here are appended as a
-    * trailing catch-all family (so the partition is always exact by
-    * construction); entries here that no longer exist are dropped with
-    * a stderr warning.
-    */
-  val families: Seq[Seq[String]] = Seq(
-    "minhash_pairs,blocking_quality,fellegi_sunter_weights,fs_score_separation,minhash_against,minhash_against_stream,dedup_canonical,dedup_clusters,decontaminate_fuzzy,cluster_best_quality,split_leakage_safe",
-    "ngram_jaccard_pairs,rouge_overlap_pairs,dup_triangles,dup_clustering_coef,kcore_dup_graph,bfs_hops_dup_graph,bellman_ford_dup,dup_spans,dedup_exact_docs,dedup_savings,dedup_first,dedup_last,dedup_none,dup_rate_by_source,contamination_sources,pipeline_clean_corpus,doc_length_quartiles,containment_pairs,winnow_fingerprints,winnow_overlap_pairs,novelty_docs,decontaminate_docs,corpus_diff,contrastive_triplets,dedup_exact_normalized,fuzzy_part_match,fuzzy_match_stream,cdc_classify_stream,lpa_modularity,graph_assortativity,lpa_communities,line_dedup,line_dedup_stream,line_collapse,source_similarity",
-    "top_ngrams,phrase_hits,vocab_growth,pmi_pairs,source_cap,lang_temperature_sample,quality_classifier,quality_quantile_norm,classifier_auc,classifier_prf,classifier_calibration,isotonic_calibration,calibration_ece,lift_gain_deciles,classifier_brier,hapax_ratio_sources,cohen_kappa_docs,simpson_diversity_sources,lang_chi2_sources,feature_mi_rank,ttr_docs,rake_keywords,textrank_keywords,zipf_slope_tokens",
-    "ann_hnsw_topk,ann_recall_hnsw,chunk_documents,chunk_retrieval,ann_jl_topk,embedding_against,embedding_near_dup,embedding_near_dup_auto,embedding_near_dup_lsh,semantic_dedup,ann_cosine_topk,ann_recall_eval,ann_recall_ivf,ann_recall_pq,ann_ivf_kmeans_topk,ann_ivf_topk,ann_lsh_multiprobe,ann_lsh_topk,ann_pq_adc_topk,ann_ivf_pq_topk,ann_sq_topk,pq_code_dups,pq_subcode_pairs,hybrid_rrf_topk,mmr_topk,centroid_assign,kmeans_assign,text_cluster_assign,cluster_top_terms,kmeans_silhouette,embedding_drift,ann_rq_topk",
-    "trigram_backoff,bigram_logprob,doremi_weights,negative_sample_tokens,bpe_tokens,bpe_tokens_expanded,bpe_tokens_learned,bpe_tokens_pretok,bpe_compression_eval,entropy_docs,fingerprint_docs,gopher_filter,kl_en_de,js_divergence_en_de,source_jsd_matrix,redact_docs,readability_docs,repetition_docs,text_profile,tfidf_top_terms,unigram_logprob,simhash_docs,split_assign,pack_sequences,token_budget_select,ccnet_buckets,dsir_weights,dsir_sample,gumbel_sample_sources,gumbel_sample_stream,hll_set_diff,bm25_topk,bm25_prf_topk,retrieval_eval,inverted_index,heavy_hitter_tokens,quantiles_binned_chars,shard_sizes,cms_token_counts,lang_id_ngram,lang_confusion,hll_vocab_overlap,maxsim_topk",
-    "partition_fingerprints,alignable,key_skew_orders,q3_shipping_priority,column_stats_customer,k_anonymity_audit,l_diversity_audit,t_closeness_audit,concat_aligned,coo_density,coo_todense,corr_qty_price,diag_coo,graph_color_groups,graph_degrees,identity_series,reindex_join,unique_row_ids,upsert_orders,upsert_pruned_orders,cube_revenue,yoy_revenue_growth,priority_chi2_years,rollup_nation_revenue,grouping_sets_revenue,cms_join_size,assoc_rules_parts,item_similarity_parts,mutual_nn_parts,dq_orders,ri_audit,spearman_qty_price,gini_customer_spend,link_pred_suppliers,pareto_parts,target_encode_segment",
-    "pagerank_suppliers,hits_suppliers,q5_nation_revenue,rolling_revenue_7d,acctbal_deciles,rfm_segments,q1_pricing_summary,q10_returned_items,q18_large_orders,q19_disjunctive_revenue,q4_order_priority,q6_forecast_revenue",
-    "group_bar_hist,group_hist_price,hist2d_qty_price,human_readable,pie_log10_orders,two_level_pie,pivot_status,smooth_gaussian,topk_orders,topk_per_segment,vc_quantity_bins,vc_returnflag,weighted_avg,media_frames",
-    "q7_region_volume,q8_market_share,q9_product_profit,q11_important_parts,q12_priority_lag,q13_customer_distribution,q14_promo_revenue,q15_top_supplier,q16_supplier_cnt,q17_small_qty_revenue,q20_red_part_suppliers,q21_waiting_supplier,q22_global_sales,q2_min_cost_supp",
-    "json_events,running_total_user,sessions_user,session_window_stats,rolling_corr_7d,attribution_position,split_overlap,stream_window_counts,time_window_daily,sample_at_most,sample_stratified,sample_weighted_replace,dsir_score_stream,asof_join_events,range_join_events,event_anomalies,mad_outliers,contingency_events,benford_totalprice,retention_cohorts,cohort_ltv,churn_labels,funnel_stages,funnel_times,dau_wau,hll_distinct_events,zorder_events,concurrency_daily,latency_bands,latency_bands_cont,latency_daily_p95,wilson_ci_types,topk_stream,hll_sliding_users,attribution_join,shapley_attribution,markov_removal,diff_in_diff_daily,bootstrap_ci_daily,kmv_sample_users,kmv_distinct_events,ams_f2_events,event_transitions,event_transitions_stream,cusum_error_shift,cusum_stream_shift,kaplan_meier_purchase,nelson_aalen_purchase,log_rank_purchase,log_rank_stratified,ab_test_value,uplift_by_segment,bh_fdr_welch,fisher_exact,sprt_daily,msprt_daily,msprt_value_daily,rake_weights,eb_shrink_rates,holt_daily_counts,croston_sparse_demand,seq_triples_events,winsorized_mean_status,ols_value_trend,mann_whitney_value,acf_daily_events,ks_value_click_error,kruskal_value_types,anova_value_types,ewma_daily_counts,fano_event_types,scd2_user_type,holt_winters_daily,classical_decomposition,seasonal_esd_anomalies,conformal_intervals,conformal_stream_daily,tdigest_value,binned_quantiles_stream,cuped_adjustment,cuped_stream_daily,cuped_stream_weighted,group_sequential_obf,group_sequential_pocock,group_sequential_ld_obf,group_sequential_ld_pocock,group_sequential_ld_hsd,group_sequential_futility,conditional_power,ssr_cp,quantile_regression_daily,theil_sen_daily,dow_anomalies,psi_value_drift,cond_entropy_transitions,forecast_eval_mase"
-  ).map(_.split(",").toSeq)
-
-  /** Declared-query partition derived from [[families]]: stale entries
-    * dropped (stderr warning), undeclared queries appended as one
-    * trailing family — EXACT by construction. */
-  def familyPartition(): Seq[Seq[String]] = {
-    val declared = SparkEntry.queries.keySet
-    val stale = families.flatten.filterNot(declared)
-    if (stale.nonEmpty)
-      System.err.println(s"[bench] dropping stale family entries: ${stale.mkString(",")}")
-    val kept = families.map(_.filter(declared)).filter(_.nonEmpty)
-    val extra = (declared -- families.flatten.toSet).toSeq.sorted
-    if (extra.nonEmpty) kept :+ extra else kept
-  }
-
   def main(args: Array[String]): Unit = {
-    // list mode: print every declared query name and exit — lets the
-    // chunked-bench tooling audit its chunk partition against the real
-    // suite without parsing Scala source
-    if (sys.env.get("SPARK_GRAFT_BENCH_LIST").contains("1")) {
-      SparkEntry.queries.keys.toSeq.sorted.foreach(println)
-      return
-    }
-    // families mode: one comma-joined line per family — the chunked
-    // runner builds its chunk partition from THIS, so the shell copy
-    // can never drift from the binary's
-    if (sys.env.get("SPARK_GRAFT_BENCH_FAMILIES").contains("1")) {
-      familyPartition().foreach(f => println(f.mkString(",")))
-      return
-    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.local()
 
@@ -189,14 +135,14 @@ object Bench {
     // deadline DNF) without paying the full-suite wall clock.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // Run order is FAMILY order (the chunk_bench partition), not
-    // alphabetical: the r12 driver record read 465 s vs 264 s chunked
-    // at 0.13 steal because the alphabetical single-JVM session
-    // interleaves every family — all cached family frames stay live at
-    // once and ~933 executed jobs' shuffle files/broadcasts are only
-    // reclaimed when the rarely-pressured 8 GB heap happens to GC.
+    // Run order is FAMILY order (SparkEntry.registry), not
+    // alphabetical: the r12 driver record read 465 s vs 264 s run one
+    // family per JVM at 0.13 steal because the alphabetical single-JVM
+    // session interleaves every family — all cached family frames stay
+    // live at once and ~933 executed jobs' shuffle files/broadcasts are
+    // only reclaimed when the rarely-pressured 8 GB heap happens to GC.
     // Family order + a clearCache/System.gc() at each family boundary
-    // reproduces the chunk runner's context in one JVM (intra-family
+    // reproduces the one-family-per-JVM context in one JVM (intra-family
     // cache reuse preserved, cross-family junk reclaimed eagerly).
     // SPARK_GRAFT_BENCH_FAMILY_CLEAR=0 disables the boundary clears;
     // SPARK_GRAFT_BENCH_ORDER=alpha restores the pre-r13 alphabetical
@@ -205,8 +151,8 @@ object Bench {
     // order (diagnostic: late-run slowness that tracks RUN position,
     // not name, is host drag, not plans).
     val familyClear = !sys.env.get("SPARK_GRAFT_BENCH_FAMILY_CLEAR").contains("0")
-    val fams0 = familyPartition()
-      .map(_.filter(n => only.forall(_.contains(n))))
+    val fams0 = SparkEntry.registry.families
+      .map(_.queries.map(_.name).filter(n => only.forall(_.contains(n))))
       .filter(_.nonEmpty)
     val runOrder = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORDER", "family")
     val fams = runOrder match {

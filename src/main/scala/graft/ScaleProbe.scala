@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Offline trainers for the frozen literals the declared queries embed,
   * plus the sf replicator. Each trainer prints its literal as Scala
-  * source, pasted verbatim into SparkEntry / PqCodebook / RqCodebook /
+  * source, pasted verbatim into the query files / PqCodebook / RqCodebook /
   * IvfCentroids, whose docs cite the command that produced it.
   *
   * Usage: runMain graft.ScaleProbe <mode> [args]
@@ -133,7 +133,7 @@ object ScaleProbe {
       // ~31-word raw vocab cannot
       "bpetrainx" -> (spark =>
         println(mergesLiteral(graft.functions.TextFunctions.learnBpeMerges(
-          SparkEntry.expandedTokens(spark, sf), "token", int(2, 32))))),
+          graft.queries.Shared.expandedTokens(spark, sf), "token", int(2, 32))))),
       "pqtrain" -> (spark =>
         println(codebookLiteral(graft.operators.Ann.pqTrain(emb(spark), "embedding",
           int(2, 4), int(3, 16))))),

@@ -41,8 +41,6 @@ object TextFunctions {
     ((length(c) - length(replace(c, lit(lit0), lit("")))) /
       lit(lit0.length)).cast("int")
 
-  private def padded(c: Column): Column = concat(lit(" "), lower(c), lit(" "))
-
   /** One-pass multi-pattern occurrence counter: lowercases+pads the text
     * ONCE and counts non-overlapping occurrences of each ` word ` pattern
     * by indexOf stepping — exactly the counts the replace-trick produces,
@@ -89,13 +87,6 @@ object TextFunctions {
   /** Stopword hit count for a padded-space word list (single text scan). */
   def stopwordCount(c: Column, words: Seq[String]): Column =
     aggregate(multiOccurrences(c, words), lit(0), (acc, v) => acc + v)
-
-  /** Replace-trick variant kept as the SQL-portable reference semantics
-    * (the oracle mirrors this form; [[stopwordCount]] computes the same
-    * counts in one pass).
-    */
-  def stopwordCountComposed(c: Column, words: Seq[String]): Column =
-    words.map(w => occurrences(padded(c), s" $w ")).reduce(_ + _)
 
   val EnStops = Seq("the", "and", "of", "a")
   val DeStops = Seq("der", "und", "die", "das")
@@ -598,18 +589,6 @@ object TextFunctions {
   /** array<string> band strings of an array<bigint> minima column. */
   def md5SliceBands(mins: Column, bands: Int): Column =
     ColumnOps.toColumn(Md5SliceBands(_, bands))(mins)
-
-  /** Builtin-composed variant (SQL-shaped reference semantics; equality
-    * with the expression is tested). Guarded: Spark's `sequence(1, 0)`
-    * would count DOWN, so short inputs return an empty array explicitly.
-    */
-  def wordShinglesComposed(c: Column, k: Int): Column = {
-    val words = split(trim(c), "\\s+")
-    val n = size(words)
-    when(n >= k,
-      transform(sequence(lit(1), n - (k - 1)), i => array_join(slice(words, i, lit(k)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
 
   /** Character n-grams of a string column (same short-input guard). */
   def charNgrams(c: Column, n: Int): Column =

@@ -298,15 +298,6 @@ object VectorFunctions {
   def intDot(a: Column, b: Column): Column =
     ColumnOps.toColumn2(IntDot(_, _))(a, b)
 
-  /** Builtin-HOF dot product: `aggregate(zip_with(a,b,*), 0d, +)`. */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def normHof(a: Column): Column = sqrt(dotHof(a, a))
-
-  def cosineHof(a: Column, b: Column): Column =
-    dotHof(a, b) / (normHof(a) * normHof(b))
-
   /** Deterministic random hyperplanes for sign-bit LSH: `nPlanes` x `dim`
     * weights from a seeded RNG (driver-side constant, broadcast as a
     * literal into the plan — no data movement).

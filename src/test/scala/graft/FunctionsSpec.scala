@@ -1,9 +1,30 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.{ByteFunctions, TextFunctions, VectorFunctions}
 
 class FunctionsSpec extends SparkSpec {
+  /** Builtin-composed word shingles, the SQL-shaped reference the fused
+    * `TextFunctions.wordShingles` is compared against. Guarded: Spark's
+    * `sequence(1, 0)` would count DOWN, so short inputs return an empty
+    * array explicitly.
+    */
+  private def wordShinglesComposed(c: Column, k: Int): Column = {
+    val words = split(trim(c), "\\s+")
+    val n = size(words)
+    when(n >= k,
+      transform(sequence(lit(1), n - (k - 1)), i => array_join(slice(words, i, lit(k)), " ")))
+      .otherwise(array().cast("array<string>"))
+  }
+
+  /** Builtin-HOF cosine (`aggregate(zip_with(a,b,*), 0d, +)` dot
+    * products), the reference for `VectorFunctions.cosine`. */
+  private def cosineHof(a: Column, b: Column): Column = {
+    def dot(x: Column, y: Column) =
+      aggregate(zip_with(x, y, (u, v) => u * v), lit(0.0), (acc, v) => acc + v)
+    dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
+  }
 
   test("readability: counts and Flesch formula; empty text null-scored") {
     import spark.implicits._
@@ -96,7 +117,7 @@ class FunctionsSpec extends SparkSpec {
     // fused expression == builtin-composed variant on messy input
     val messy = Seq("  a  b\tc   d ", "x y", "one two three four five").toDF("t")
     val fused = messy.select(TextFunctions.wordShingles(col("t"), 3)).collect().map(_.getSeq[String](0))
-    val comp = messy.select(TextFunctions.wordShinglesComposed(col("t"), 3)).collect().map(_.getSeq[String](0))
+    val comp = messy.select(wordShinglesComposed(col("t"), 3)).collect().map(_.getSeq[String](0))
     assert(fused.toSeq == comp.toSeq)
     val ng = df.select(TextFunctions.charNgrams(col("t"), 2)).head().getSeq[String](0)
     assert(ng.head == "a " && ng.length == 6)
@@ -201,7 +222,7 @@ class FunctionsSpec extends SparkSpec {
       (Array(1.0, 2.0), Array(3.0, 4.0))).toDF("a", "b")
     val both = df.select(
       VectorFunctions.cosine(col("a"), col("b")).as("c1"),
-      VectorFunctions.cosineHof(col("a"), col("b")).as("c2")).collect()
+      cosineHof(col("a"), col("b")).as("c2")).collect()
     assert(math.abs(both(0).getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(both(1).getDouble(0)) < 1e-12)
     both.foreach(r => assert(math.abs(r.getDouble(0) - r.getDouble(1)) < 1e-12))

@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Local pre-validation of SparkEntry oracles: run each oracle_sql.json query
+"""Local pre-validation of the declared oracles: run each oracle_sql.json query
 in DuckDB over the sf tables and compare with the Verify parquet output,
 mimicking the driver's compare (sort columns by name, sort rows, hash values).
 Usage: check_oracle.py <sfdir> <verify_outdir>
@@ -8,12 +8,19 @@ import sys, json, glob, os
 import duckdb
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
-for p in glob.glob(f"{sfdir}/*.parquet"):
-    name = os.path.basename(p)[:-8]
-    # ScaleProbe-replicated tables are Spark-written DIRECTORIES of parts
-    src = f"{p}/*.parquet" if os.path.isdir(p) else p
-    con.execute(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
+
+
+def connect():
+    """A DuckDB connection with one view per sf table."""
+    c = duckdb.connect()
+    for p in glob.glob(f"{sfdir}/*.parquet"):
+        # ScaleProbe-replicated tables are Spark-written DIRECTORIES of parts
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        c.execute(f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM '{src}'")
+    return c
+
+
+con = connect()
 
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
 fail = 0
@@ -33,10 +40,7 @@ for name in sorted(os.listdir(outdir)):
             # 100+-oracle run and spuriously OOM on arbitrary queries —
             # retry once on a FRESH connection before calling it real
             try:
-                con2 = duckdb.connect()
-                for p in glob.glob(f"{sfdir}/*.parquet"):
-                    tname = os.path.basename(p)[:-8]
-                    con2.execute(f"CREATE VIEW {tname} AS SELECT * FROM '{p}'")
+                con2 = connect()
                 exp = con2.execute(oracles[name]).fetchdf()
                 got = con2.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
             except Exception as e2:

@@ -19,9 +19,12 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 
 
 def fresh_con():
+    """A DuckDB connection with one view per sf table."""
     c = duckdb.connect()
     for p in glob.glob(f"{sfdir}/*.parquet"):
-        c.execute(f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM '{p}'")
+        # ScaleProbe-replicated tables are Spark-written DIRECTORIES of parts
+        src = f"{p}/*.parquet" if os.path.isdir(p) else p
+        c.execute(f"CREATE VIEW {os.path.basename(p)[:-8]} AS SELECT * FROM '{src}'")
     return c
 
 
