@@ -240,6 +240,52 @@ object Events {
         round(col("_num").cast("double") / col("_den").cast("double"), 6).as("r"))
   }
 
+  /** The survival observation frame (shared by [[kaplanMeier]],
+    * [[nelsonAalen]] and [[logRankStratified]]): per subject, the clock
+    * starts at its FIRST event; "death" is its first event satisfying
+    * `deathCond`; a subject with no such event is censored at the end
+    * of observation (the global max timestamp, a 1-row broadcast).
+    * `select(t, died)` picks the output columns: `t` (aliased `_t`)
+    * counts the whole `unitMicros` units from the start to the death or
+    * the censoring, `died` is whether the death came, and the extra
+    * `perUser` aggregates can be read too.
+    *
+    * Scale shape (100 TB): one user-key groupBy (first event / first
+    * death) and the 1-row broadcast max.
+    */
+  private def observations(events: DataFrame, userCol: String, tsCol: String,
+      deathCond: Column, unitMicros: Long, perUser: Column*)(
+      select: (Column, Column) => Seq[Column]): DataFrame = {
+    val us = unix_micros(col(tsCol).cast("timestamp"))
+    val subjects = events
+      .groupBy(col(userCol))
+      .agg(min(us).as("_start"), min(when(deathCond, us)).as("_dus") +: perUser: _*)
+    val maxTs = events.agg(max(us).as("_mx"))
+    val t = when(col("_dus").isNotNull,
+        floor((col("_dus") - col("_start")) / unitMicros))
+      .otherwise(floor((col("_mx") - col("_start")) / unitMicros))
+      .cast("long").as("_t")
+    subjects.crossJoin(broadcast(maxTs))
+      .select(select(t, col("_dus").isNotNull): _*)
+  }
+
+  /** The time-ordered bucket list that [[kaplanMeier]] and
+    * [[nelsonAalen]] fold: per `_t` bucket of the [[observations]],
+    * deaths `_d` and censorings `_c`, collected as the sorted list
+    * `_l` of (_t, _d, _c) next to the subject total `_n`. The list is
+    * bounded by the OBSERVATION WINDOW (time units in range — a grid,
+    * not the data).
+    */
+  private def deathBuckets(events: DataFrame, userCol: String, tsCol: String,
+      deathCond: Column, unitMicros: Long): DataFrame =
+    observations(events, userCol, tsCol, deathCond, unitMicros)(
+        (t, died) => Seq(t, died.cast("long").as("_death")))
+      .groupBy(col("_t"))
+      .agg(sum(col("_death")).as("_d"),
+        sum(lit(1L) - col("_death")).as("_c"))
+      .agg(sort_array(collect_list(struct(col("_t"), col("_d"), col("_c")))).as("_l"),
+        (sum(col("_d")) + sum(col("_c"))).as("_n"))
+
   /** Kaplan-Meier survival estimator (Kaplan & Meier 1958) for
     * time-to-event with right censoring: per subject, the clock starts
     * at their FIRST event; "death" is their first event satisfying
@@ -257,38 +303,19 @@ object Events {
     * by exact 1.0 — an identity). Output: (t, n_risk, deaths,
     * survival) for death steps only, survival round(6)-quantized.
     *
-    * Scale shape (100 TB): one user-key groupBy (first event / first
-    * death / censor time), a 1-row broadcast max, one
-    * map-side-combinable bucket roll-up bounded by the OBSERVATION
-    * WINDOW (hours in range — a grid, not the data), and the fold over
-    * that grid.
+    * Scale shape (100 TB): the [[observations]] pass, one
+    * map-side-combinable bucket roll-up ([[deathBuckets]]) bounded by
+    * the OBSERVATION WINDOW (hours in range — a grid, not the data),
+    * and the fold over that grid.
     */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, unitMicros: Long = 3600000000L): DataFrame = {
     require(unitMicros >= 1, s"kaplanMeier: need unitMicros>=1, got $unitMicros")
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val perUser = events
-      .groupBy(col(userCol))
-      .agg(min(us).as("_start"),
-        min(when(deathCond, us)).as("_dus"))
-    val maxTs = events.agg(max(us).as("_mx"))
-    val obs = perUser.crossJoin(broadcast(maxTs))
-      .select(
-        when(col("_dus").isNotNull,
-          floor((col("_dus") - col("_start")) / unitMicros))
-          .otherwise(floor((col("_mx") - col("_start")) / unitMicros))
-          .cast("long").as("_t"),
-        col("_dus").isNotNull.cast("long").as("_death"))
-    val buckets = obs.groupBy(col("_t"))
-      .agg(sum(col("_death")).as("_d"),
-        sum(lit(1L) - col("_death")).as("_c"))
     val zero = struct(
       lit(0L).as("rem"), // filled from the total below
       lit(1.0).as("surv"),
       array().cast("array<struct<t:bigint,nr:bigint,d:bigint,s:double>>").as("path"))
-    buckets
-      .agg(sort_array(collect_list(struct(col("_t"), col("_d"), col("_c")))).as("_l"),
-        (sum(col("_d")) + sum(col("_c"))).as("_n"))
+    deathBuckets(events, userCol, tsCol, deathCond, unitMicros)
       .select(aggregate(col("_l"),
         struct(col("_n").as("rem"), lit(1.0).as("surv"),
           zero.getField("path").as("path")),
@@ -660,6 +687,139 @@ object Events {
         col("_e.decision").as("decision"))
   }
 
+  /** The per-arm sums of one day or look (the body of every A/B
+    * monitor's grouped aggregate): control (`_b` = 0) and treatment
+    * unit counts `_nc`/`_nt` and conversions `_xc`/`_xt` of the 0/1
+    * column `_c`.
+    */
+  private def armCounts: Seq[Column] = Seq(
+    sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
+    sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
+    sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
+    sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
+
+  /** The pooled two-proportion z of treatment minus control,
+    * (p_t − p_c) / √(p̂(1−p̂)(1/n_c + 1/n_t)), in the fixed operand
+    * order the oracles replay (the [[Stats.abTestProportions]] formula);
+    * null while either arm is empty or the pooled rate is degenerate.
+    */
+  private def pooledZ(nc: Column, nt: Column, xc: Column, xt: Column): Column = {
+    val ncD = nc.cast("double"); val ntD = nt.cast("double")
+    val pc = xc.cast("double") / ncD
+    val pt = xt.cast("double") / ntD
+    val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
+    val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
+    when(nc > 0L && nt > 0L && se > lit(0.0), (pt - pc) / se)
+  }
+
+  /** One mSPRT step (shared by [[msprtDaily]] and [[msprtValueDaily]]):
+    * the normal-mixture likelihood ratio Λ of the cumulative arm
+    * difference `delta` with variance `v`, the always-valid p as the
+    * running min of min(1, 1/Λ) from `pPrev`, and the decision at
+    * level `alpha`. A step counts only when `armsOk` and v > 0;
+    * otherwise Λ is null and p carries. Returns (Λ, p, decision).
+    */
+  private def msprtStep(pPrev: Column, armsOk: Column, delta: Column,
+      v: Column, t2: Double, alpha: Double): (Column, Column, Column) = {
+    // nested when, NOT a 3-way && — && does not short-circuit and
+    // v's divisions throw under ANSI while an arm is empty or a
+    // singleton (invariant 68)
+    val valid = when(armsOk, v > lit(0.0)).otherwise(lit(false))
+    val lam = sqrt(v / (v + lit(t2))) *
+      exp(delta * delta * lit(t2) / (lit(2.0) * v * (v + lit(t2))))
+    val pRaw = least(lit(1.0), lit(1.0) / lam)
+    val pmin = when(valid, least(pPrev, pRaw)).otherwise(pPrev)
+    val dec = when(pmin <= lit(alpha), lit("reject"))
+      .otherwise(lit("continue"))
+    (when(valid, lam), pmin, dec)
+  }
+
+  /** The per-look arm-count frame of the group-sequential monitors:
+    * each event's look k = min(⌊(day − first day)/lookDays⌋ + 1, looks)
+    * (the first day is a 1-row broadcast), its [[Stats.md5Parity]] arm
+    * under `seed`, [[armCounts]] per look, and the K-row look grid
+    * left-joined so a look without events reads zeros. Output
+    * (_k, _nc, _nt, _xc, _xt), one row per look.
+    *
+    * Scale shape (100 TB): ONE map-side-combinable grouped aggregate
+    * over (look, arm); everything after rides the K-row grid.
+    */
+  private def lookFrame(events: DataFrame, idCol: String, tsCol: String,
+      convCond: Column, looks: Int, lookDays: Int, seed: String): DataFrame = {
+    val day = col(tsCol).cast("date")
+    val minD = events.agg(min(day).as("_d0"))
+    val perLook = events.crossJoin(broadcast(minD))
+      .select(
+        least(floor(datediff(day, col("_d0")) / lit(lookDays)) + 1,
+          lit(looks.toLong)).cast("int").as("_k"),
+        Stats.md5Parity(col(idCol), seed).as("_b"), convCond.cast("long").as("_c"))
+      .groupBy(col("_k"))
+      .agg(armCounts.head, armCounts.tail: _*)
+    events.sparkSession.range(1, looks + 1)
+      .select(col("id").cast("int").as("_k"))
+      .join(perLook, Seq("_k"), "left")
+      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
+        coalesce(col("_nt"), lit(0L)).as("_nt"),
+        coalesce(col("_xc"), lit(0L)).as("_xc"),
+        coalesce(col("_xt"), lit(0L)).as("_xt"))
+  }
+
+  /** [[lookFrame]] with cumulative counts (_k, nc, nt, xc, xt) over
+    * looks 1..k — a window over the K-row grid, bounded by
+    * construction.
+    */
+  private def cumulativeLooks(events: DataFrame, idCol: String,
+      tsCol: String, convCond: Column, looks: Int, lookDays: Int,
+      seed: String): DataFrame = {
+    val w = Window.orderBy(col("_k"))
+      .rowsBetween(Window.unboundedPreceding, 0)
+    lookFrame(events, idCol, tsCol, convCond, looks, lookDays, seed)
+      .select(col("_k"),
+        sum(col("_nc")).over(w).as("nc"), sum(col("_nt")).over(w).as("nt"),
+        sum(col("_xc")).over(w).as("xc"), sum(col("_xt")).over(w).as("xt"))
+  }
+
+  /** The stop-at-first-crossing fold over a [[lookFrame]]: cumulative
+    * counts stay exact integers in a fold over the K-row list, z is
+    * [[pooledZ]], and `judge(look, z)` gives the boundary fields
+    * (typed `boundFields` in the path struct), the decision and
+    * whether it stops. Rows stop AT the first stopping look — the
+    * sequential contract, like sprtDaily. Output (look, n_c, n_t, x_c,
+    * x_t, z, readout…, decision), z round(6).
+    */
+  private def crossingFold(perLook: DataFrame, boundFields: String,
+      judge: (Column, Column) => (Seq[Column], Column, Column),
+      readout: Seq[Column]): DataFrame = {
+    val pathT = "array<struct<look:int,n_c:bigint,n_t:bigint,x_c:bigint," +
+      s"x_t:bigint,z:double,$boundFields,decision:string>>"
+    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
+      lit(0L).as("xt"), lit(false).as("stop"), array().cast(pathT).as("path"))
+    perLook
+      .agg(sort_array(collect_list(struct(col("_k"), col("_nc"), col("_nt"),
+        col("_xc"), col("_xt")))).as("_l"))
+      .select(aggregate(col("_l"), zero, (acc, e) => {
+        val nc = acc.getField("nc") + e.getField("_nc")
+        val nt = acc.getField("nt") + e.getField("_nt")
+        val xc = acc.getField("xc") + e.getField("_xc")
+        val xt = acc.getField("xt") + e.getField("_xt")
+        val z = pooledZ(nc, nt, xc, xt)
+        val (bounds, dec, stop) = judge(e.getField("_k"), z)
+        val appended = concat(acc.getField("path"),
+          array(struct(Seq(e.getField("_k").as("look"), nc.as("n_c"),
+            nt.as("n_t"), xc.as("x_c"), xt.as("x_t"), z.as("z")) ++ bounds :+
+            dec.as("decision"): _*)))
+        when(acc.getField("stop"), acc).otherwise(
+          struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
+            stop.as("stop"), appended.as("path")))
+      }).getField("path").as("_p"))
+      .select(explode(col("_p")).as("_e"))
+      .select(Seq(col("_e.look").as("look"), col("_e.n_c").as("n_c"),
+        col("_e.n_t").as("n_t"), col("_e.x_c").as("x_c"),
+        col("_e.x_t").as("x_t"),
+        (round(col("_e.z"), 6) + lit(0.0)).as("z")) ++ readout :+
+        col("_e.decision").as("decision"): _*)
+  }
+
   /** Always-valid inference via the mixture SPRT (Johari, Koomen,
     * Pekelis & Walsh '17/'22, "Peeking at A/B tests"; Robbins '70) —
     * the monitor that made continuous dashboard peeking safe and the
@@ -672,13 +832,13 @@ object Events {
     * where δ̂_n is the cumulative two-proportion arm difference and
     * V_n its pooled variance, and p_n = min(p_{n-1}, 1/Λ_n) is an
     * ALWAYS-VALID p-value: P(∃n: p_n ≤ α) ≤ α under H0, at any
-    * stopping rule whatsoever. Arms are the md5-parity assignment of
-    * the sibling monitors; days fold in order with exact cumulative
-    * BIGINT counts (the [[sprtDaily]] fold — no data-sized window),
-    * the double readout fixed-order on both engines (sqrt/exp ride
-    * the Nelson-Aalen precedent; no Φ is needed at all). All days are
-    * emitted — the always-valid guarantee is exactly what makes a
-    * no-stop readout sound.
+    * stopping rule whatsoever ([[msprtStep]]). Arms are the
+    * [[Stats.md5Parity]] assignment of the sibling monitors; days fold in
+    * order with exact cumulative BIGINT counts (the [[sprtDaily]] fold
+    * — no data-sized window), the double readout fixed-order on both
+    * engines (sqrt/exp ride the Nelson-Aalen precedent; no Φ is needed
+    * at all). All days are emitted — the always-valid guarantee is
+    * exactly what makes a no-stop readout sound.
     *
     * Output: (day, n_c, n_t, x_c, x_t, lambda, p_av, decision) with
     * decision ∈ reject/continue at level `alpha`; lambda/p_av carry
@@ -693,17 +853,11 @@ object Events {
       alpha: Double = 0.05): DataFrame = {
     require(tau > 0, s"msprtDaily: need tau > 0, got $tau")
     require(alpha > 0 && alpha < 1, s"msprtDaily: need alpha in (0,1), got $alpha")
-    val t2 = tau * tau
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit("ab:"), col(userCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
     val daily = events
-      .select(day.as("_day"), arm.as("_b"), convCond.cast("long").as("_c"))
+      .select(col(tsCol).cast("date").as("_day"),
+        Stats.md5Parity(col(userCol), "ab").as("_b"), convCond.cast("long").as("_c"))
       .groupBy(col("_day"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-        sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
+      .agg(armCounts.head, armCounts.tail: _*)
     val pathT = "array<struct<day:date,n_c:bigint,n_t:bigint,x_c:bigint," +
       "x_t:bigint,lambda:double,p_av:double,decision:string>>"
     val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
@@ -720,21 +874,11 @@ object Events {
         val delta = xt.cast("double") / ntD - xc.cast("double") / ncD
         val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
         val v = pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD)
-        // nested when, NOT a 3-way && — && does not short-circuit and
-        // v's 1/ncD throws under ANSI while an arm is empty
-        // (invariant 68)
-        val valid = when(nc > 0L && nt > 0L, v > lit(0.0)).otherwise(lit(false))
-        val lam = sqrt(v / (v + lit(t2))) *
-          exp(delta * delta * lit(t2) / (lit(2.0) * v * (v + lit(t2))))
-        val pRaw = least(lit(1.0), lit(1.0) / lam)
-        val pmin = when(valid, least(acc.getField("pmin"), pRaw))
-          .otherwise(acc.getField("pmin"))
-        val lamOut = when(valid, lam)
-        val dec = when(pmin <= lit(alpha), lit("reject"))
-          .otherwise(lit("continue"))
+        val (lam, pmin, dec) = msprtStep(acc.getField("pmin"),
+          nc > 0L && nt > 0L, delta, v, tau * tau, alpha)
         val appended = concat(acc.getField("path"),
           array(struct(e.getField("_day").as("day"), nc.as("n_c"),
-            nt.as("n_t"), xc.as("x_c"), xt.as("x_t"), lamOut.as("lambda"),
+            nt.as("n_t"), xc.as("x_c"), xt.as("x_t"), lam.as("lambda"),
             pmin.as("p_av"), dec.as("decision"))))
         struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
           pmin.as("pmin"), appended.as("path"))
@@ -761,7 +905,7 @@ object Events {
     *   ssd_a = Σv²_a − (Σv_a)²/n_a (computed in doubles, same order
     *   both engines), V = s²_pooled·(1/n_c + 1/n_t),
     *
-    * and Λ, p as in [[msprtDaily]]. τ is on the cents scale.
+    * and Λ, p as in [[msprtStep]]. τ is on the cents scale.
     *
     * Output: (day, n_c, n_t, mean_c, mean_t, lambda, p_av, decision);
     * lambda/p carry while either arm has < 2 units or V = 0.
@@ -771,13 +915,10 @@ object Events {
       alpha: Double = 0.05): DataFrame = {
     require(tau > 0, s"msprtValueDaily: need tau > 0, got $tau")
     require(alpha > 0 && alpha < 1, s"msprtValueDaily: need alpha in (0,1), got $alpha")
-    val t2 = tau * tau
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit("ab:"), col(userCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
     val cents = round(coalesce(valueCol, lit(0.0)) * 100).cast("long")
     val daily = events
-      .select(day.as("_day"), arm.as("_b"), cents.as("_v"))
+      .select(col(tsCol).cast("date").as("_day"),
+        Stats.md5Parity(col(userCol), "ab").as("_b"), cents.as("_v"))
       .groupBy(col("_day"))
       .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
         sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
@@ -808,28 +949,17 @@ object Events {
         val ncD = nc.cast("double"); val ntD = nt.cast("double")
         val scD = sc.cast("double"); val stD = st.cast("double")
         val mc = scD / ncD; val mt = stD / ntD
-        val delta = mt - mc
         val ssc = qc.cast("double") - scD * scD / ncD
         val sst = qt.cast("double") - stD * stD / ntD
         val s2p = (ssc + sst) / (ncD + ntD - lit(2.0))
         val v = s2p * (lit(1.0) / ncD + lit(1.0) / ntD)
-        // nested when, NOT a 3-way && — the conjunction does not
-        // short-circuit and v's divisions throw under ANSI while an
-        // arm is empty/singleton (invariant 68)
-        val valid = when(nc > 1L && nt > 1L, v > lit(0.0)).otherwise(lit(false))
-        val lam = sqrt(v / (v + lit(t2))) *
-          exp(delta * delta * lit(t2) / (lit(2.0) * v * (v + lit(t2))))
-        val pRaw = least(lit(1.0), lit(1.0) / lam)
-        val pmin = when(valid, least(acc.getField("pmin"), pRaw))
-          .otherwise(acc.getField("pmin"))
-        val lamOut = when(valid, lam)
-        val dec = when(pmin <= lit(alpha), lit("reject"))
-          .otherwise(lit("continue"))
+        val (lam, pmin, dec) = msprtStep(acc.getField("pmin"),
+          nc > 1L && nt > 1L, mt - mc, v, tau * tau, alpha)
         val appended = concat(acc.getField("path"),
           array(struct(e.getField("_day").as("day"), nc.as("n_c"),
             nt.as("n_t"),
             when(nc > 0L, mc).as("mean_c"), when(nt > 0L, mt).as("mean_t"),
-            lamOut.as("lambda"), pmin.as("p_av"), dec.as("decision"))))
+            lam.as("lambda"), pmin.as("p_av"), dec.as("decision"))))
         struct(nc.as("nc"), nt.as("nt"), sc.as("sc"), st.as("st"),
           qc.as("qc"), qt.as("qt"), pmin.as("pmin"), appended.as("path"))
       }).getField("path").as("_p"))
@@ -843,20 +973,22 @@ object Events {
         col("_e.decision").as("decision"))
   }
 
-  /** O'Brien-Fleming group-sequential monitor (O'Brien & Fleming '79)
-    * — the K-look interim-analysis complement of [[sprtDaily]]'s
+  /** Group-sequential monitor with per-look efficacy bounds — the
+    * K-look interim-analysis complement of [[sprtDaily]]'s
     * fully-sequential walk, and the boundary shape clinical trials and
     * large A/B platforms actually ship: the experiment is examined at
-    * K equally-spaced looks, and at look k the pooled two-proportion z
-    * between md5-parity arms is compared against u_k = c_K·√(K/k) —
-    * near-unspendable early (u_1 ≈ 4.56 at K=5), ≈ fixed-horizon at
-    * the final look, so the overall size stays α. Look assignment
-    * derives from the corpus' min day (1-row broadcast); cumulative
-    * counts stay exact integers inside a fold over the K-row look
-    * grid (no data-sized window); z rides the [[abTestProportions]]
-    * fixed-order formula and the boundary is written
-    * operation-for-operation on both engines. Rows stop AT the first
-    * |z| > u_k — the sequential contract, like sprtDaily.
+    * K = bounds.length equally-spaced looks ([[lookFrame]]), and at
+    * look k the pooled two-proportion z between md5-parity arms is
+    * compared against `bounds(k-1)`; rows stop AT the first |z| > u_k
+    * ([[crossingFold]]).
+    *
+    * `bounds` is the boundary shape as frozen driver-side literals. The
+    * default is O'Brien-Fleming '79 at K = 5, u_k = c_K·√(K/k) with
+    * c_5(0.05) = 2.04 — near-unspendable early (u_1 ≈ 4.56), ≈
+    * fixed-horizon at the final look. Pocock '77 is a flat c_K
+    * (c_5(0.05) = 2.413 — equal spend at every look: easier early
+    * stops, a pricier final look), and [[groupSequentialLanDeMets]]
+    * passes spending-function bounds.
     *
     * Output: (look, n_c, n_t, x_c, x_t, z, bound, decision) per look
     * up to and including the first crossing; decision ∈ reject /
@@ -867,82 +999,20 @@ object Events {
     * over (look, arm); everything after rides the K-row grid.
     */
   def groupSequentialObf(events: DataFrame, idCol: String, tsCol: String,
-      convCond: Column, looks: Int = 5, lookDays: Int = 6,
-      cK: Double = 2.04, seed: String = "gs",
-      pocock: Boolean = false,
-      bounds: Option[Seq[Double]] = None): DataFrame = {
-    // pocock=true flattens the boundary to the constant c_K (Pocock
-    // '77 — equal spend at every look, the OTHER textbook shape;
-    // c_5(0.05) = 2.413): easier early stops, a pricier final look.
-    // bounds=Some(u_1..u_K) overrides the boundary SHAPE entirely with
-    // per-look literals — the Lan-DeMets spending path
-    // ([[groupSequentialLanDeMets]]).
-    require(looks >= 2 && lookDays >= 1 && cK > 0,
-      s"groupSequentialObf: need looks>=2, lookDays>=1, cK>0, got $looks/$lookDays/$cK")
-    require(bounds.forall(_.length == looks),
-      s"groupSequentialObf: bounds must have one entry per look")
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit(seed + ":"), col(idCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
-    val minD = events.agg(min(day).as("_d0"))
-    val assigned = events.crossJoin(broadcast(minD))
-      .select(
-        least(floor(datediff(day, col("_d0")) / lit(lookDays)) + 1,
-          lit(looks.toLong)).cast("int").as("_k"),
-        arm.as("_b"), convCond.cast("long").as("_c"))
-    val perLook = assigned.groupBy(col("_k"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-        sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
-    val grid = events.sparkSession.range(1, looks + 1)
-      .select(col("id").cast("int").as("_k"))
-    val filled = grid.join(perLook, Seq("_k"), "left")
-      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
-        coalesce(col("_nt"), lit(0L)).as("_nt"),
-        coalesce(col("_xc"), lit(0L)).as("_xc"),
-        coalesce(col("_xt"), lit(0L)).as("_xt"))
-    val pathT = "array<struct<look:int,n_c:bigint,n_t:bigint,x_c:bigint," +
-      "x_t:bigint,z:double,bound:double,decision:string>>"
-    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
-      lit(0L).as("xt"), lit(false).as("stop"), array().cast(pathT).as("path"))
-    filled
-      .agg(sort_array(collect_list(struct(col("_k"), col("_nc"), col("_nt"),
-        col("_xc"), col("_xt")))).as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
-        val nc = acc.getField("nc") + e.getField("_nc")
-        val nt = acc.getField("nt") + e.getField("_nt")
-        val xc = acc.getField("xc") + e.getField("_xc")
-        val xt = acc.getField("xt") + e.getField("_xt")
-        val ncD = nc.cast("double"); val ntD = nt.cast("double")
-        val pc = xc.cast("double") / ncD
-        val pt = xt.cast("double") / ntD
-        val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
-        val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
-        val z = when(nc > 0L && nt > 0L && se > lit(0.0), (pt - pc) / se)
-        val bound = bounds match {
-          case Some(bs) => element_at(lit(bs.toArray), e.getField("_k"))
-          case None if pocock => lit(cK)
-          case None => lit(cK) *
-            sqrt(lit(looks.toDouble) / e.getField("_k").cast("double"))
-        }
+      convCond: Column,
+      bounds: Seq[Double] = (1 to 5).map(k => 2.04 * math.sqrt(5.0 / k)),
+      lookDays: Int = 6, seed: String = "gs"): DataFrame = {
+    val looks = bounds.length
+    require(looks >= 2 && lookDays >= 1,
+      s"groupSequentialObf: need >= 2 bounds, lookDays>=1, got $looks/$lookDays")
+    val bs = bounds.toArray
+    crossingFold(lookFrame(events, idCol, tsCol, convCond, looks, lookDays, seed),
+      "bound:double", (k, z) => {
+        val bound = element_at(lit(bs), k)
         val dec = when(z.isNotNull && abs(z) > bound, lit("reject"))
           .otherwise(lit("continue"))
-        val appended = concat(acc.getField("path"),
-          array(struct(e.getField("_k").as("look"), nc.as("n_c"), nt.as("n_t"),
-            xc.as("x_c"), xt.as("x_t"), z.as("z"), bound.as("bound"),
-            dec.as("decision"))))
-        when(acc.getField("stop"), acc).otherwise(
-          struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
-            (dec === "reject").as("stop"), appended.as("path")))
-      }).getField("path").as("_p"))
-      .select(explode(col("_p")).as("_e"))
-      .select(col("_e.look").as("look"), col("_e.n_c").as("n_c"),
-        col("_e.n_t").as("n_t"), col("_e.x_c").as("x_c"),
-        col("_e.x_t").as("x_t"),
-        (round(col("_e.z"), 6) + lit(0.0)).as("z"),
-        round(col("_e.bound"), 6).as("bound"),
-        col("_e.decision").as("decision"))
+        (Seq(bound.as("bound")), dec, dec === "reject")
+      }, Seq(round(col("_e.bound"), 6).as("bound")))
   }
 
   /** Lan-DeMets alpha-spending group-sequential monitor — the
@@ -950,16 +1020,15 @@ object Events {
     * per-look critical values come from [[AlphaSpending.ldBoundaries]]
     * (OBF-like or Pocock-like spending at overall level `alpha`),
     * computed driver-side as frozen deterministic literals, and the
-    * data path is exactly [[groupSequentialObf]]'s one (look, arm)
-    * aggregate + K-row grid fold with stop-at-first-crossing.
+    * data path is [[groupSequentialObf]]'s one [[lookFrame]] aggregate
+    * + K-row [[crossingFold]] with stop-at-first-crossing.
     */
   def groupSequentialLanDeMets(events: DataFrame, idCol: String,
       tsCol: String, convCond: Column, looks: Int = 5, lookDays: Int = 6,
       alpha: Double = 0.05, spending: String = "obf",
       seed: String = "gs"): DataFrame =
-    groupSequentialObf(events, idCol, tsCol, convCond, looks, lookDays,
-      seed = seed,
-      bounds = Some(AlphaSpending.ldBoundaries(looks, alpha, spending).toSeq))
+    groupSequentialObf(events, idCol, tsCol, convCond,
+      AlphaSpending.ldBoundaries(looks, alpha, spending).toSeq, lookDays, seed)
 
   /** Group-sequential monitor with NON-BINDING FUTILITY — the
     * one-sided completion of [[groupSequentialLanDeMets]]: per look k
@@ -979,8 +1048,8 @@ object Events {
     * Output: (look, n_c, n_t, x_c, x_t, z, upper, lower, decision)
     * with decision ∈ stop_efficacy | stop_futility | continue.
     *
-    * Scale shape (100 TB): identical to groupSequentialObf — one
-    * map-side-combinable (look, arm) aggregate, a K-row grid fold.
+    * Scale shape (100 TB): one [[lookFrame]] aggregate and a K-row
+    * [[crossingFold]].
     */
   def groupSequentialFutility(events: DataFrame, idCol: String,
       tsCol: String, convCond: Column, looks: Int = 5, lookDays: Int = 6,
@@ -991,66 +1060,16 @@ object Events {
       s"groupSequentialFutility: need looks>=2, lookDays>=1, got $looks/$lookDays")
     val (us, ls, _) = AlphaSpending.futilityBoundaries(
       looks, alpha, beta, spendingU, spendingL)
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit(seed + ":"), col(idCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
-    val minD = events.agg(min(day).as("_d0"))
-    val assigned = events.crossJoin(broadcast(minD))
-      .select(
-        least(floor(datediff(day, col("_d0")) / lit(lookDays)) + 1,
-          lit(looks.toLong)).cast("int").as("_k"),
-        arm.as("_b"), convCond.cast("long").as("_c"))
-    val perLook = assigned.groupBy(col("_k"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-        sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
-    val grid = events.sparkSession.range(1, looks + 1)
-      .select(col("id").cast("int").as("_k"))
-    val filled = grid.join(perLook, Seq("_k"), "left")
-      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
-        coalesce(col("_nt"), lit(0L)).as("_nt"),
-        coalesce(col("_xc"), lit(0L)).as("_xc"),
-        coalesce(col("_xt"), lit(0L)).as("_xt"))
-    val pathT = "array<struct<look:int,n_c:bigint,n_t:bigint,x_c:bigint," +
-      "x_t:bigint,z:double,upper:double,lower:double,decision:string>>"
-    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
-      lit(0L).as("xt"), lit(false).as("stop"), array().cast(pathT).as("path"))
-    filled
-      .agg(sort_array(collect_list(struct(col("_k"), col("_nc"), col("_nt"),
-        col("_xc"), col("_xt")))).as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
-        val nc = acc.getField("nc") + e.getField("_nc")
-        val nt = acc.getField("nt") + e.getField("_nt")
-        val xc = acc.getField("xc") + e.getField("_xc")
-        val xt = acc.getField("xt") + e.getField("_xt")
-        val ncD = nc.cast("double"); val ntD = nt.cast("double")
-        val pc = xc.cast("double") / ncD
-        val pt = xt.cast("double") / ntD
-        val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
-        val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
-        val z = when(nc > 0L && nt > 0L && se > lit(0.0), (pt - pc) / se)
-        val up = element_at(lit(us), e.getField("_k"))
-        val lo = element_at(lit(ls), e.getField("_k"))
+    crossingFold(lookFrame(events, idCol, tsCol, convCond, looks, lookDays, seed),
+      "upper:double,lower:double", (k, z) => {
+        val up = element_at(lit(us), k)
+        val lo = element_at(lit(ls), k)
         val dec = when(z.isNotNull && z >= up, lit("stop_efficacy"))
           .when(z.isNotNull && z < lo, lit("stop_futility"))
           .otherwise(lit("continue"))
-        val appended = concat(acc.getField("path"),
-          array(struct(e.getField("_k").as("look"), nc.as("n_c"), nt.as("n_t"),
-            xc.as("x_c"), xt.as("x_t"), z.as("z"), up.as("upper"),
-            lo.as("lower"), dec.as("decision"))))
-        when(acc.getField("stop"), acc).otherwise(
-          struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
-            (dec =!= "continue").as("stop"), appended.as("path")))
-      }).getField("path").as("_p"))
-      .select(explode(col("_p")).as("_e"))
-      .select(col("_e.look").as("look"), col("_e.n_c").as("n_c"),
-        col("_e.n_t").as("n_t"), col("_e.x_c").as("x_c"),
-        col("_e.x_t").as("x_t"),
-        (round(col("_e.z"), 6) + lit(0.0)).as("z"),
-        round(col("_e.upper"), 6).as("upper"),
-        (round(col("_e.lower"), 6) + lit(0.0)).as("lower"),
-        col("_e.decision").as("decision"))
+        (Seq(up.as("upper"), lo.as("lower")), dec, dec =!= "continue")
+      }, Seq(round(col("_e.upper"), 6).as("upper"),
+        (round(col("_e.lower"), 6) + lit(0.0)).as("lower")))
   }
 
   /** Conditional power / B-value monitor (Lan & Wittes '88 B-values;
@@ -1077,9 +1096,9 @@ object Events {
     *
     * Output: (look, n_c, n_t, x_c, x_t, z, b_value, cp_trend, cp_null).
     *
-    * Scale shape (100 TB): the same ONE map-side-combinable (look, arm)
-    * aggregate as every monitor here; the cumulative pass rides the
-    * K-row grid (bounded window by construction).
+    * Scale shape (100 TB): the ONE [[lookFrame]] aggregate of every
+    * monitor here; the [[cumulativeLooks]] pass rides the K-row grid
+    * (bounded window by construction).
     */
   def conditionalPower(events: DataFrame, idCol: String, tsCol: String,
       convCond: Column, looks: Int = 5, lookDays: Int = 6,
@@ -1088,41 +1107,7 @@ object Events {
     require(looks >= 2 && lookDays >= 1,
       s"conditionalPower: need looks>=2, lookDays>=1, got $looks/$lookDays")
     val uK = AlphaSpending.oneSidedBoundaries(looks, alpha, spendingU).last
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit(seed + ":"), col(idCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
-    val minD = events.agg(min(day).as("_d0"))
-    val assigned = events.crossJoin(broadcast(minD))
-      .select(
-        least(floor(datediff(day, col("_d0")) / lit(lookDays)) + 1,
-          lit(looks.toLong)).cast("int").as("_k"),
-        arm.as("_b"), convCond.cast("long").as("_c"))
-    val perLook = assigned.groupBy(col("_k"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-        sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
-    val grid = events.sparkSession.range(1, looks + 1)
-      .select(col("id").cast("int").as("_k"))
-    val filled = grid.join(perLook, Seq("_k"), "left")
-      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
-        coalesce(col("_nt"), lit(0L)).as("_nt"),
-        coalesce(col("_xc"), lit(0L)).as("_xc"),
-        coalesce(col("_xt"), lit(0L)).as("_xt"))
-    // K-row cumulative window — bounded by construction (the grid IS K rows)
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_k"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = filled.select(col("_k"),
-      sum(col("_nc")).over(w).as("nc"), sum(col("_nt")).over(w).as("nt"),
-      sum(col("_xc")).over(w).as("xc"), sum(col("_xt")).over(w).as("xt"))
-    val ncD = col("nc").cast("double"); val ntD = col("nt").cast("double")
-    val pc = col("xc").cast("double") / ncD
-    val pt = col("xt").cast("double") / ntD
-    val pp = (col("xc") + col("xt")).cast("double") /
-      (col("nc") + col("nt")).cast("double")
-    val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
-    val z = when(col("nc") > 0L && col("nt") > 0L && se > lit(0.0),
-      (pt - pc) / se)
+    val z = pooledZ(col("nc"), col("nt"), col("xc"), col("xt"))
     val tk = col("_k").cast("double") / lit(looks.toDouble)
     val b = z * sqrt(tk)
     val rem = lit(1.0) - tk
@@ -1132,7 +1117,8 @@ object Events {
       graft.functions.Normal.cdf((lit(uK) - b - (b / tk) * rem) / sr)
     val atEnd = col("_k") === looks
     val endCp = when(z >= lit(uK), lit(1.0)).otherwise(lit(0.0))
-    cum.select(col("_k").as("look"), col("nc").as("n_c"), col("nt").as("n_t"),
+    cumulativeLooks(events, idCol, tsCol, convCond, looks, lookDays, seed)
+      .select(col("_k").as("look"), col("nc").as("n_c"), col("nt").as("n_t"),
         col("xc").as("x_c"), col("xt").as("x_t"),
         (round(z, 6) + lit(0.0)).as("z"),
         (round(b, 6) + lit(0.0)).as("b_value"),
@@ -1185,7 +1171,7 @@ object Events {
     * are FROZEN driver-side literals (the ldBoundaries discipline).
     *
     * Scale shape (100 TB): identical to [[conditionalPower]] — ONE
-    * map-side-combinable (look, arm) aggregate, a K-row grid window,
+    * [[lookFrame]] aggregate, the [[cumulativeLooks]] K-row window,
     * then per-row arithmetic; the re-estimation itself touches no
     * data.
     */
@@ -1206,40 +1192,6 @@ object Events {
     // in both engines, so its last ulp cannot split hashes
     val zPow = new org.apache.commons.math3.distribution.NormalDistribution(0.0, 1.0)
       .inverseCumulativeProbability(1.0 - beta)
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit(seed + ":"), col(idCol).cast("string"))).bitwiseAND(lit(1L))
-    val day = col(tsCol).cast("date")
-    val minD = events.agg(min(day).as("_d0"))
-    val assigned = events.crossJoin(broadcast(minD))
-      .select(
-        least(floor(datediff(day, col("_d0")) / lit(lookDays)) + 1,
-          lit(looks.toLong)).cast("int").as("_k"),
-        arm.as("_b"), convCond.cast("long").as("_c"))
-    val perLook = assigned.groupBy(col("_k"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-        sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
-    val grid = events.sparkSession.range(1, looks + 1)
-      .select(col("id").cast("int").as("_k"))
-    val filled = grid.join(perLook, Seq("_k"), "left")
-      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
-        coalesce(col("_nt"), lit(0L)).as("_nt"),
-        coalesce(col("_xc"), lit(0L)).as("_xc"),
-        coalesce(col("_xt"), lit(0L)).as("_xt"))
-    val w = org.apache.spark.sql.expressions.Window.orderBy(col("_k"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cum = filled.select(col("_k"),
-      sum(col("_nc")).over(w).as("nc"), sum(col("_nt")).over(w).as("nt"),
-      sum(col("_xc")).over(w).as("xc"), sum(col("_xt")).over(w).as("xt"))
-    val ncD = col("nc").cast("double"); val ntD = col("nt").cast("double")
-    val pc = col("xc").cast("double") / ncD
-    val pt = col("xt").cast("double") / ntD
-    val pp = (col("xc") + col("xt")).cast("double") /
-      (col("nc") + col("nt")).cast("double")
-    val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
-    val z = when(col("nc") > 0L && col("nt") > 0L && se > lit(0.0),
-      (pt - pc) / se)
     // The CHW cascade is STAGED through projections (the pqEncode
     // discipline): z → B/t → θ̂ → CP(trend) → r* → r → CP(r) each
     // materialize as a multi-referenced non-cheap alias, which
@@ -1247,8 +1199,8 @@ object Events {
     // made the ANALYZED plan copy the whole cascade once per
     // reference (two Φ polynomials deep) and plan compilation alone
     // cost ~20 s per build (measured; 13 MiB task binaries).
-    val st1 = cum
-      .withColumn("_z", z)
+    val st1 = cumulativeLooks(events, idCol, tsCol, convCond, looks, lookDays, seed)
+      .withColumn("_z", pooledZ(col("nc"), col("nt"), col("xc"), col("xt")))
       .withColumn("_tk", col("_k").cast("double") / lit(looks.toDouble))
     val st2 = st1
       .withColumn("_b", col("_z") * sqrt(col("_tk")))
@@ -1306,9 +1258,9 @@ object Events {
     * H(t) = Σ_{tᵢ<=t} dᵢ/nᵢ over event-time buckets, plus the
     * Fleming-Harrington survival estimate S̃ = exp(−H) (a better
     * small-sample estimator than KM and the standard input to hazard
-    * plots). Identical scale shape and float discipline as KM: one
-    * per-user min pass, one bucket aggregate, a t-ordered fold over the
-    * |buckets| list with exact BIGINT risk counts — hazard increments
+    * plots). Identical scale shape and float discipline as KM: a
+    * t-ordered fold over the same [[deathBuckets]] list with exact
+    * BIGINT risk counts — hazard increments
     * d/n are IEEE-exact divisions accumulated in t order, exp at the
     * round(6) readout only.
     *
@@ -1318,26 +1270,8 @@ object Events {
   def nelsonAalen(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, unitMicros: Long = 3600000000L): DataFrame = {
     require(unitMicros >= 1, s"nelsonAalen: need unitMicros>=1, got $unitMicros")
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val perUser = events
-      .groupBy(col(userCol))
-      .agg(min(us).as("_start"),
-        min(when(deathCond, us)).as("_dus"))
-    val maxTs = events.agg(max(us).as("_mx"))
-    val obs = perUser.crossJoin(broadcast(maxTs))
-      .select(
-        when(col("_dus").isNotNull,
-          floor((col("_dus") - col("_start")) / unitMicros))
-          .otherwise(floor((col("_mx") - col("_start")) / unitMicros))
-          .cast("long").as("_t"),
-        col("_dus").isNotNull.cast("long").as("_death"))
-    val buckets = obs.groupBy(col("_t"))
-      .agg(sum(col("_death")).as("_d"),
-        sum(lit(1L) - col("_death")).as("_c"))
     val pathT = "array<struct<t:bigint,nr:bigint,d:bigint,h:double>>"
-    buckets
-      .agg(sort_array(collect_list(struct(col("_t"), col("_d"), col("_c")))).as("_l"),
-        (sum(col("_d")) + sum(col("_c"))).as("_n"))
+    deathBuckets(events, userCol, tsCol, deathCond, unitMicros)
       .select(aggregate(col("_l"),
         struct(col("_n").as("rem"), lit(0.0).as("h"),
           array().cast(pathT).as("path")),
@@ -1364,69 +1298,16 @@ object Events {
     * same? Per death-time bucket t, group 1 is expected to carry
     * e1_t = d_t·n1_t/n_t of the d_t deaths under H0, with
     * hypergeometric variance v_t = d_t·p·(1−p)·(n_t−d_t)/(n_t−1),
-    * p = n1_t/n_t; z = (O1 − E1)/√V. At-risk counts are EXACT BIGINTs
-    * from a cumulative window over the time-grid bucket aggregate (no
-    * fold needed — risk sets are prefix sums); E1/V accumulate as
-    * t-ordered float folds (engine-portable); O1 is an exact integer.
+    * p = n1_t/n_t; z = (O1 − E1)/√V. This is the one-stratum case of
+    * [[logRankStratified]], without its `n_strata` column.
     *
     * Output one row: (n1, n2, o1, e1, v, z); z null when V = 0.
-    *
-    * Scale shape (100 TB): the per-user min-pass is the only
-    * corpus-sized exchange (the kaplanMeier shape); the window and
-    * folds ride the OBSERVATION-WINDOW grid, never rows.
     */
   def logRankTest(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, group1: Column,
-      unitMicros: Long = 3600000000L): DataFrame = {
-    require(unitMicros >= 1, s"logRankTest: need unitMicros>=1")
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val perUser = events
-      .groupBy(col(userCol))
-      .agg(min(us).as("_start"), min(when(deathCond, us)).as("_dus"))
-    val maxTs = events.agg(max(us).as("_mx"))
-    val obs = perUser.crossJoin(broadcast(maxTs))
-      .select(
-        when(col("_dus").isNotNull,
-          floor((col("_dus") - col("_start")) / unitMicros))
-          .otherwise(floor((col("_mx") - col("_start")) / unitMicros))
-          .cast("long").as("_t"),
-        col("_dus").isNotNull.as("_death"), group1.as("_g1"))
-    val b = obs.groupBy(col("_t")).agg(
-      sum(when(col("_g1") && col("_death"), 1L).otherwise(0L)).as("_d1"),
-      sum(when(col("_g1") && !col("_death"), 1L).otherwise(0L)).as("_c1"),
-      sum(when(!col("_g1") && col("_death"), 1L).otherwise(0L)).as("_d2"),
-      sum(when(!col("_g1") && !col("_death"), 1L).otherwise(0L)).as("_c2"))
-    val tot = b.agg(sum(col("_d1") + col("_c1")).as("_N1"),
-      sum(col("_d2") + col("_c2")).as("_N2"))
-    val w = Window.orderBy(col("_t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = b.crossJoin(broadcast(tot))
-      .withColumn("_n1", col("_N1") -
-        coalesce(sum(col("_d1") + col("_c1")).over(w), lit(0L)))
-      .withColumn("_n2", col("_N2") -
-        coalesce(sum(col("_d2") + col("_c2")).over(w), lit(0L)))
-      .filter(col("_d1") + col("_d2") > 0L)
-    val dt = (col("_d1") + col("_d2")).cast("double")
-    val nt = (col("_n1") + col("_n2")).cast("double")
-    val p = col("_n1").cast("double") / nt
-    val e1t = dt * p
-    val vt = when(col("_n1") + col("_n2") > 1L,
-      dt * p * (lit(1.0) - p) *
-        ((nt - dt) / (nt - lit(1.0)))).otherwise(lit(0.0))
-    val folded = risk
-      .select(col("_d1"), col("_N1"), col("_N2"),
-        struct(col("_t"), e1t.as("_e"), vt.as("_v")).as("_s"))
-      .agg(max(col("_N1")).as("n1"), max(col("_N2")).as("n2"),
-        sum(col("_d1")).as("o1"), collect_list(col("_s")).as("_l"))
-    def osum(f: String) =
-      aggregate(transform(sort_array(col("_l")), x => x.getField(f)),
-        lit(0.0), (acc, x) => acc + x)
-    folded.select(col("n1"), col("n2"), col("o1"),
-      round(osum("_e"), 6).as("e1"), round(osum("_v"), 6).as("v"),
-      when(osum("_v") > 0.0,
-        round((col("o1").cast("double") - osum("_e")) / sqrt(osum("_v")), 6))
-        .as("z"))
-  }
+      unitMicros: Long = 3600000000L): DataFrame =
+    logRankStratified(events, userCol, tsCol, deathCond, group1, lit(0),
+      unitMicros).drop("n_strata")
 
   /** Markov removal-effect attribution (Anderl et al. '14 — the
     * "data-driven attribution" model): journeys become a first-order
@@ -1537,39 +1418,31 @@ object Events {
     }.toDF("channel", "removal_conv", "effect", "share")
   }
 
-  /** STRATIFIED log-rank test (Mantel-Haenszel form) — [[logRankTest]]
-    * with the comparison run WITHIN strata and the O/E/V contributions
-    * summed across them: the arm comparison stays valid when the
-    * strata (e.g. customer segment) have different baseline hazards
-    * that would confound the pooled test. `stratum` must be constant
-    * per user (taken as min() over the user's rows — deterministic).
-    * Same exactness discipline: per-stratum risk sets as prefix sums
-    * over the time-grid buckets, E/V as (stratum, t)-ordered folds,
-    * O1 exact.
+  /** STRATIFIED log-rank test (Mantel-Haenszel form) — the
+    * [[logRankTest]] comparison run WITHIN strata with the O/E/V
+    * contributions summed across them: the arm comparison stays valid
+    * when the strata (e.g. customer segment) have different baseline
+    * hazards that would confound the pooled test; one constant stratum
+    * is the pooled test. `stratum` must be constant per user (taken as
+    * min() over the user's rows — deterministic). At-risk counts are
+    * EXACT BIGINTs — per-stratum prefix sums over the time-grid bucket
+    * aggregate (no fold needed); E/V accumulate as (stratum, t)-ordered
+    * float folds (engine-portable); O1 is an exact integer.
     *
     * Output one row: (n_strata, n1, n2, o1, e1, v, z); z null at V=0.
     *
-    * Scale shape (100 TB): identical to logRankTest except every
-    * window/groupBy carries the stratum key — all partitioned, no
-    * global window at all.
+    * Scale shape (100 TB): the [[observations]] pass is the only
+    * corpus-sized exchange; every window/groupBy carries the stratum
+    * key — all partitioned, no global window at all — and the folds
+    * ride the OBSERVATION-WINDOW grid, never rows.
     */
   def logRankStratified(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, group1: Column, stratum: Column,
       unitMicros: Long = 3600000000L): DataFrame = {
     require(unitMicros >= 1, s"logRankStratified: need unitMicros>=1")
-    val us = unix_micros(col(tsCol).cast("timestamp"))
-    val perUser = events
-      .groupBy(col(userCol))
-      .agg(min(us).as("_start"), min(when(deathCond, us)).as("_dus"),
-        min(stratum).as("_st"))
-    val maxTs = events.agg(max(us).as("_mx"))
-    val obs = perUser.crossJoin(broadcast(maxTs))
-      .select(col("_st"),
-        when(col("_dus").isNotNull,
-          floor((col("_dus") - col("_start")) / unitMicros))
-          .otherwise(floor((col("_mx") - col("_start")) / unitMicros))
-          .cast("long").as("_t"),
-        col("_dus").isNotNull.as("_death"), group1.as("_g1"))
+    val obs = observations(events, userCol, tsCol, deathCond, unitMicros,
+        min(stratum).as("_st"))(
+      (t, died) => Seq(col("_st"), t, died.as("_death"), group1.as("_g1")))
     val b = obs.groupBy(col("_st"), col("_t")).agg(
       sum(when(col("_g1") && col("_death"), 1L).otherwise(0L)).as("_d1"),
       sum(when(col("_g1") && !col("_death"), 1L).otherwise(0L)).as("_c1"),

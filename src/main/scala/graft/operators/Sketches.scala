@@ -654,8 +654,7 @@ object Sketches {
   def amsF2(df: DataFrame, itemCol: String, d: Int = 5): DataFrame = {
     require(d >= 1 && d % 2 == 1, s"amsF2: need odd d>=1, got $d")
     def sign(j: Int): Column =
-      lit(1L) - lit(2L) * TextFunctions.md5Bits64(
-        concat(lit(s"s$j:"), col(itemCol).cast("string"))).bitwiseAND(lit(1L))
+      lit(1L) - lit(2L) * Stats.md5Parity(col(itemCol), s"s$j")
     df.select(explode(array((0 until d).map(j =>
         struct(lit(j).as("row"), sign(j).as("s"))): _*)).as("rs"))
       .groupBy(col("rs.row").as("row"))

@@ -495,38 +495,50 @@ object Stats {
         .as("r2"))
   }
 
+  /** Bit 0 of the portable md5 hash of `seed:id` — the deterministic
+    * 50/50 split the A/B operators assign arms by (re-runnable on any
+    * engine/cluster — assignment is data, not RNG state) and
+    * [[Sketches.amsF2]] its ±1 signs by. The oracles spell it
+    * `(instr('0123456789abcdef', substr(md5('seed:' || id), 16, 1)) - 1) % 2`.
+    */
+  def md5Parity(id: Column, seed: String): Column =
+    graft.functions.TextFunctions.md5Bits64(
+      concat(lit(seed + ":"), id.cast("string"))).bitwiseAND(lit(1L))
+
   /** Two-proportion z-test over a DETERMINISTIC 50/50 md5 split (the
-    * A/B harness statistic): units are assigned arm by the parity of
-    * the portable md5 hash of `idCol` under `seed` (re-runnable on any
-    * engine/cluster — assignment is data, not RNG state), conversions
-    * counted exactly, and the pooled z = (p_a − p_b) /
-    * sqrt(p̂(1−p̂)(1/n_a + 1/n_b)) computed in fixed operand order
-    * (division/sqrt are IEEE-exact). With no real treatment this is an
-    * A/A calibration readout — |z| should be small. Output one row:
-    * (n_a, n_b, x_a, x_b, p_a, p_b, z), rates and z round(6).
+    * A/B harness statistic): units are assigned arm by [[md5Parity]] of
+    * `idCol` under `seed`, conversions counted exactly, and the pooled
+    * z = (p_a − p_b) / sqrt(p̂(1−p̂)(1/n_a + 1/n_b)) computed in fixed
+    * operand order (division/sqrt are IEEE-exact). With no real
+    * treatment this is an A/A calibration readout — |z| should be
+    * small. Output one row: (n_a, n_b, x_a, x_b, p_a, p_b, z), rates
+    * and z round(6); an empty arm has a null rate and a null z, and z
+    * is null when the pooled rate is 0 or 1.
     *
     * Scale shape (100 TB): ONE map-side-combinable global aggregate —
     * no join, no window, no shuffle beyond the 1-row combine.
     */
   def abTestProportions(df: DataFrame, idCol: String, convCond: Column,
       seed: String = "ab"): DataFrame = {
-    val arm = graft.functions.TextFunctions.md5Bits64(
-      concat(lit(seed + ":"), col(idCol).cast("string"))).bitwiseAND(lit(1L))
     val agg0 = df
-      .select(arm.as("_b"), convCond.cast("long").as("_x"))
+      .select(md5Parity(col(idCol), seed).as("_b"), convCond.cast("long").as("_x"))
       .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("n_a"),
         sum(when(col("_b") === 1L, 1L).otherwise(0L)).as("n_b"),
         sum(when(col("_b") === 0L, col("_x")).otherwise(0L)).as("x_a"),
         sum(when(col("_b") === 1L, col("_x")).otherwise(0L)).as("x_b"))
+    val hasA = col("n_a") > 0L; val hasB = col("n_b") > 0L
     val pa = col("x_a").cast("double") / col("n_a").cast("double")
     val pb = col("x_b").cast("double") / col("n_b").cast("double")
     val pp = (col("x_a") + col("x_b")).cast("double") /
       (col("n_a") + col("n_b")).cast("double")
     val se = sqrt(pp * (lit(1.0) - pp) *
       (lit(1.0) / col("n_a").cast("double") + lit(1.0) / col("n_b").cast("double")))
+    // nested when, NOT a 3-way && — the conjunction does not guard the
+    // divisions, which throw under ANSI while an arm is empty
     agg0.select(col("n_a"), col("n_b"), col("x_a"), col("x_b"),
-      round(pa, 6).as("p_a"), round(pb, 6).as("p_b"),
-      round((pa - pb) / se, 6).as("z"))
+      round(when(hasA, pa), 6).as("p_a"), round(when(hasB, pb), 6).as("p_b"),
+      round(when(hasA, when(hasB, when(se > lit(0.0), (pa - pb) / se))), 6)
+        .as("z"))
   }
 
   /** CUPED variance reduction (Deng et al. WSDM'13 — the standard

@@ -342,6 +342,10 @@ object AnnQueries {
          |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
          |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
     },
+    // EXT IVF recall evaluation: the md5-centroid IVF (nprobe=2/8)
+    // judged against brute cosine — ann_recall_eval's pattern on the
+    // clustered index; together they give the LSH-vs-IVF quality/cost
+    // comparison an index choice needs
     Query("ann_recall_ivf")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
@@ -359,6 +363,8 @@ object AnnQueries {
             .as("recall"))
         .orderBy("query_id")
     }) {
+      // IVF-recall mirror: the ann_ivf_topk CTE chain at k=10 judged
+      // against the brute chain over the shared e table
       s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
          | cents AS (SELECT vec_id AS cid, v AS cvec FROM e ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
          | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
@@ -385,10 +391,6 @@ object AnnQueries {
          |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
          |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
     },
-    // EXT IVF recall evaluation: the md5-centroid IVF (nprobe=2/8)
-    // judged against brute cosine — ann_recall_eval's pattern on the
-    // clustered index; together they give the LSH-vs-IVF quality/cost
-    // comparison an index choice needs
     // EXT PQ recall eval: ADC top-10 under the frozen PqCodebook vs
     // exact brute-force top-10 — quantifies what the 64x compression
     // costs in recall, the third member of the recall-eval family
@@ -409,8 +411,6 @@ object AnnQueries {
             .as("recall"))
         .orderBy("query_id")
     }) {
-      // IVF-recall mirror: the ann_ivf_topk CTE chain at k=10 judged
-      // against the brute chain over the shared e table
       // PQ recall mirror: the frozen-codebook encode/ADC CTEs at k=10
       // against the raw-cosine brute top-10
       import PqSqlBits._

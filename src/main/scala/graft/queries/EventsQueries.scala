@@ -3,7 +3,6 @@ package queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextFunctions
 import graft.operators.{Corpus, Events, Sampling, Sketches, Stats, Windows}
 
 import Shared._
@@ -1331,6 +1330,8 @@ object EventsQueries {
       Events.kaplanMeier(t(s, dir, "events"), "user_id", "ts",
           col("event_type") === "purchase")
         .orderBy("t")) {
+      // recursive-CTE mirror of the KM fold: rn-chained steps carrying
+      // (nr, s); first step's 1.0 * x == x bitwise, so the shapes agree
       """WITH RECURSIVE u AS (SELECT user_id, MIN(epoch_us(ts)) AS start,
         |        MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END) AS dus
         |      FROM events GROUP BY 1),
@@ -1511,9 +1512,7 @@ object EventsQueries {
     // customer segment — the segment-drilldown next to ab_test_value's
     // global proportion z
     Query("uplift_by_segment")((s, dir) => {
-      val arm = TextFunctions.md5Bits64(
-        concat(lit("up:"), col("user_id").cast("string")))
-        .bitwiseAND(lit(1L))
+      val arm = Stats.md5Parity(col("user_id"), "up")
       val ev = t(s, dir, "events").filter(col("event_type") === "purchase")
         .select(col("user_id"), col("value"))
         .join(t(s, dir, "customer")
@@ -1594,9 +1593,6 @@ object EventsQueries {
          |SELECT event_type, n, mean, z, p, rank, q, (q <= 0.05) AS significant
          |FROM qq ORDER BY rank""".stripMargin
     },
-    // EXT k-anonymity audit: quasi-identifier (nation, segment,
-    // balance-bucket) group sizes over customer — the privacy screen a
-    // training-data release runs before shipping structured records
     // EXT Fisher's exact test (Stats.fisherExactGreater): does the
     // md5-split arm see MORE error-affected users than chance — the
     // exact 2x2 answer where chi2/z are approximations. One aggregate;
@@ -1605,14 +1601,11 @@ object EventsQueries {
       val perUser = t(s, dir, "events").groupBy(col("user_id"))
         .agg(max(when(col("event_type") === "error", 1L).otherwise(0L))
           .as("_y"))
-      val arm = graft.functions.TextFunctions.md5Bits64(
-        concat(lit("fx:"), col("user_id").cast("string")))
-        .bitwiseAND(lit(1L))
+      val arm = Stats.md5Parity(col("user_id"), "fx")
       Stats.fisherExactGreater(
         perUser.select(arm.as("_arm"), (col("_y") === 1L).as("_out")),
         col("_arm"), col("_out"))
     }) {
-      // k-anonymity mirror: QI group sizes + the four audit scalars
       // Fisher mirror: same md5-parity arm, ln-factorial range folds,
       // exp anchor, and the term-ratio tail as a recursive CTE stepping
       // k -> k+1 with the identical float factor
@@ -1656,6 +1649,9 @@ object EventsQueries {
       Events.sprtDaily(t(s, dir, "events"), "user_id", "ts",
           col("event_type") === "purchase", p0 = 0.35, p1 = 0.40)
         .orderBy("day")) {
+      // SPRT mirror: same (day, user)-distinct counts, the Scala-computed
+      // log coefficients/boundaries as shared literals, prefix list folds
+      // for the day-ordered LLR, rows cut at the first decision
       val p0 = 0.35; val p1 = 0.40; val alpha = 0.05; val beta = 0.05
       val lc1 = math.log(p1 / p0)
       val lc2 = math.log((1.0 - p1) / (1.0 - p0))
@@ -2295,9 +2291,7 @@ object EventsQueries {
     // smallest nonconformity (integer rank over round(6) score CELLS),
     // then finite-sample coverage measured on the held-out half
     Query("conformal_intervals")((s, dir) => {
-      val arm = graft.functions.TextFunctions.md5Bits64(
-        concat(lit("cf:"), col("event_id").cast("string")))
-        .bitwiseAND(lit(1L))
+      val arm = Stats.md5Parity(col("event_id"), "cf")
       val ev = t(s, dir, "events").filter(col("value").isNotNull)
         .select(col("event_type"), col("value").cast("double").as("_y"),
           arm.as("_arm"))
@@ -2507,9 +2501,7 @@ object EventsQueries {
           sum(when(col("ts").cast("date") >= cut,
             round(coalesce(col("value"), lit(0.0)) * 100).cast("long"))
             .otherwise(0L)).as("y"))
-        .withColumn("arm", graft.functions.TextFunctions.md5Bits64(
-          concat(lit("cu:"), col("user_id").cast("string")))
-          .bitwiseAND(lit(1L)))
+        .withColumn("arm", Stats.md5Parity(col("user_id"), "cu"))
       Stats.cuped(units, "x", "y", "arm")
     }) {
       // CUPED mirror: same per-user roll-up, HUGEINT pooled moments,
@@ -2578,9 +2570,7 @@ object EventsQueries {
         .join(pre, col("user_id") === col("_u"))
         .select(lit("all").as("key"),
           datediff(col("_d"), to_date(lit("1970-01-01"))).cast("long").as("day"),
-          graft.functions.TextFunctions.md5Bits64(
-            concat(lit("cu:"), col("user_id").cast("string")))
-            .bitwiseAND(lit(1L)).as("arm"),
+          Stats.md5Parity(col("user_id"), "cu").as("arm"),
           col("x"), col("y"))
         .as[graft.streaming.CupedPoint]
       graft.streaming.StreamOps.cupedStream(units)
@@ -2665,9 +2655,7 @@ object EventsQueries {
         .join(pre, col("user_id") === col("_u"))
         .select(lit("all").as("key"),
           datediff(col("_d"), to_date(lit("1970-01-01"))).cast("long").as("day"),
-          graft.functions.TextFunctions.md5Bits64(
-            concat(lit("cu:"), col("user_id").cast("string")))
-            .bitwiseAND(lit(1L)).as("arm"),
+          Stats.md5Parity(col("user_id"), "cu").as("arm"),
           col("w"), col("x"), col("y"))
         .as[graft.streaming.CupedWPoint]
       graft.streaming.StreamOps.cupedDeltaStream(
@@ -2740,101 +2728,19 @@ object EventsQueries {
       Events.groupSequentialObf(t(s, dir, "events"), "event_id", "ts",
           col("value") > 100)
         .orderBy("look")) {
-      // recursive-CTE mirror of the KM fold: rn-chained steps carrying
-      // (nr, s); first step's 1.0 * x == x bitwise, so the shapes agree
-      // SPRT mirror: same (day, user)-distinct counts, the Scala-computed
-      // log coefficients/boundaries as shared literals, prefix list folds
-      // for the day-ordered LLR, rows cut at the first decision
-      // OBF mirror: look grid + exact integer cumulative windows (the
-      // grid is K rows — integer cumulations are engine-exact), the same
-      // fixed-order z and c·sqrt(K/k) boundary, stop at first crossing
-      """WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
-        | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
-        |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
-        |        CASE WHEN value > 100 THEN 1 ELSE 0 END AS c
-        |       FROM events, d0),
-        | g AS (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS k),
-        | pl AS (SELECT k,
-        |        CAST(SUM(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-        |        CAST(SUM(CASE WHEN b <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-        |        CAST(SUM(CASE WHEN b = 0 THEN c ELSE 0 END) AS BIGINT) AS xc,
-        |        CAST(SUM(CASE WHEN b <> 0 THEN c ELSE 0 END) AS BIGINT) AS xt
-        |       FROM a GROUP BY 1),
-        | f AS (SELECT g.k, COALESCE(nc, 0) AS nc, COALESCE(nt, 0) AS nt,
-        |        COALESCE(xc, 0) AS xc, COALESCE(xt, 0) AS xt
-        |       FROM g LEFT JOIN pl USING (k)),
-        | cum AS (SELECT k,
-        |        CAST(SUM(nc) OVER w AS BIGINT) AS nc, CAST(SUM(nt) OVER w AS BIGINT) AS nt,
-        |        CAST(SUM(xc) OVER w AS BIGINT) AS xc, CAST(SUM(xt) OVER w AS BIGINT) AS xt
-        |       FROM f WINDOW w AS (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        | zt AS (SELECT k, nc, nt, xc, xt,
-        |        CASE WHEN nc > 0 AND nt > 0 AND
-        |          sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |            * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |            * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE))) > 0e0
-        |          THEN (CAST(xt AS DOUBLE) / CAST(nt AS DOUBLE)
-        |              - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
-        |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-        |        END AS z,
-        |        2.04e0 * sqrt(5e0 / CAST(k AS DOUBLE)) AS bound
-        |       FROM cum),
-        | de AS (SELECT k, nc, nt, xc, xt, z, bound,
-        |        CASE WHEN z IS NOT NULL AND ABS(z) > bound THEN 'reject'
-        |             ELSE 'continue' END AS decision FROM zt),
-        | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision = 'reject')
-        |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
-        |  ROUND(z, 6) + 0e0 AS z, ROUND(bound, 6) AS bound, decision
-        |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
+      // OBF mirror: the c·sqrt(K/k) boundary computed per look (the
+      // operator's default bounds list holds the bit-identical doubles)
+      gsRejectOracleSql("2.04e0 * sqrt(5e0 / CAST(k AS DOUBLE))")
     },
     // EXT Pocock boundary — the OTHER textbook group-sequential shape:
     // a FLAT c_5(0.05)=2.413 at every look (equal alpha spend; easier
     // early stops, a pricier final look than OBF's c·sqrt(K/k))
     Query("group_sequential_pocock")((s, dir) =>
       Events.groupSequentialObf(t(s, dir, "events"), "event_id", "ts",
-          col("value") > 100, cK = 2.413, pocock = true)
+          col("value") > 100, Seq.fill(5)(2.413))
         .orderBy("look")) {
       // Pocock mirror: the same grid/z replay with the flat boundary
-      """WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
-        | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
-        |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
-        |        CASE WHEN value > 100 THEN 1 ELSE 0 END AS c
-        |       FROM events, d0),
-        | g AS (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS k),
-        | pl AS (SELECT k,
-        |        CAST(SUM(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-        |        CAST(SUM(CASE WHEN b <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-        |        CAST(SUM(CASE WHEN b = 0 THEN c ELSE 0 END) AS BIGINT) AS xc,
-        |        CAST(SUM(CASE WHEN b <> 0 THEN c ELSE 0 END) AS BIGINT) AS xt
-        |       FROM a GROUP BY 1),
-        | f AS (SELECT g.k, COALESCE(nc, 0) AS nc, COALESCE(nt, 0) AS nt,
-        |        COALESCE(xc, 0) AS xc, COALESCE(xt, 0) AS xt
-        |       FROM g LEFT JOIN pl USING (k)),
-        | cum AS (SELECT k,
-        |        CAST(SUM(nc) OVER w AS BIGINT) AS nc, CAST(SUM(nt) OVER w AS BIGINT) AS nt,
-        |        CAST(SUM(xc) OVER w AS BIGINT) AS xc, CAST(SUM(xt) OVER w AS BIGINT) AS xt
-        |       FROM f WINDOW w AS (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-        | zt AS (SELECT k, nc, nt, xc, xt,
-        |        CASE WHEN nc > 0 AND nt > 0 AND
-        |          sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |            * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |            * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE))) > 0e0
-        |          THEN (CAST(xt AS DOUBLE) / CAST(nt AS DOUBLE)
-        |              - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
-        |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-        |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-        |        END AS z,
-        |        CAST(2.413e0 AS DOUBLE) AS bound
-        |       FROM cum),
-        | de AS (SELECT k, nc, nt, xc, xt, z, bound,
-        |        CASE WHEN z IS NOT NULL AND ABS(z) > bound THEN 'reject'
-        |             ELSE 'continue' END AS decision FROM zt),
-        | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision = 'reject')
-        |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
-        |  ROUND(z, 6) + 0e0 AS z, ROUND(bound, 6) AS bound, decision
-        |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
+      gsRejectOracleSql("CAST(2.413e0 AS DOUBLE)")
     },
     // EXT Lan-DeMets alpha-spending boundaries (AlphaSpending
     // .ldBoundaries, Lan & DeMets '83): the spending-function
@@ -3093,14 +2999,14 @@ object EventsQueries {
     */
   private val PsiEdges: Seq[Double] = Seq(5, 10, 20, 40, 80, 160, 320)
 
-  /** SQL mirror for the Lan-DeMets monitors: the group_sequential
-    * grid/z replay with the boundary as a frozen CASE over the
-    * driver-computed per-look literals. */
-  private def ldOracleSql(spending: String): String = {
-    val bs = graft.operators.AlphaSpending.ldBoundaries(5, 0.05, spending)
-    val boundCase = bs.zipWithIndex
-      .map { case (u, i) => s"WHEN ${i + 1} THEN CAST($u AS DOUBLE)" }
-      .mkString("CASE k ", " ", " END")
+  /** The CTEs the six group-sequential oracles share, mirroring
+    * Events' look frame and cumulative looks: the look and md5-parity
+    * arm of each event (`a`), the K-row look grid (`g`), per-look arm
+    * counts (`pl`) left-joined onto it (`f`), exact integer cumulative
+    * windows (`cum` — the grid is K rows, so integer cumulations are
+    * engine-exact) and the fixed-order pooled z per look (`zt`), whose
+    * select list ends with `ztCols`. */
+  private def gsCtes(ztCols: String): String =
     s"""WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
        | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
        |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
@@ -3130,16 +3036,31 @@ object EventsQueries {
        |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
        |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
        |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-       |        END AS z,
-       |        $boundCase AS bound
-       |       FROM cum),
-       | de AS (SELECT k, nc, nt, xc, xt, z, bound,
-       |        CASE WHEN z IS NOT NULL AND ABS(z) > bound THEN 'reject'
-       |             ELSE 'continue' END AS decision FROM zt),
-       | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision = 'reject')
-       |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
-       |  ROUND(z, 6) + 0e0 AS z, ROUND(bound, 6) AS bound, decision
-       |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
+       |        END AS z$ztCols
+       |       FROM cum)""".stripMargin
+
+  /** SQL mirror for the two-sided monitors (Events.groupSequentialObf
+    * and its Lan-DeMets callers): [[gsCtes]] with the per-look `bound`
+    * expression, |z| > bound rejects, rows stop at the first crossing. */
+  private def gsRejectOracleSql(bound: String): String =
+    gsCtes(s",\n        $bound AS bound") +
+      """,
+        | de AS (SELECT k, nc, nt, xc, xt, z, bound,
+        |        CASE WHEN z IS NOT NULL AND ABS(z) > bound THEN 'reject'
+        |             ELSE 'continue' END AS decision FROM zt),
+        | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision = 'reject')
+        |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
+        |  ROUND(z, 6) + 0e0 AS z, ROUND(bound, 6) AS bound, decision
+        |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
+
+  /** The Lan-DeMets bound: a frozen CASE over the driver-computed
+    * per-look literals (Double.toString round-trips, DuckDB parses the
+    * decimal digits exactly and CASTs to the same double). */
+  private def ldOracleSql(spending: String): String = {
+    val bs = graft.operators.AlphaSpending.ldBoundaries(5, 0.05, spending)
+    gsRejectOracleSql(bs.zipWithIndex
+      .map { case (u, i) => s"WHEN ${i + 1} THEN CAST($u AS DOUBLE)" }
+      .mkString("CASE k ", " ", " END"))
   }
 
   // futility mirror of ldOracleSql: the same (look, arm) aggregate and
@@ -3154,47 +3075,17 @@ object EventsQueries {
     val loCase = ls.zipWithIndex
       .map { case (l, i) => s"WHEN ${i + 1} THEN CAST($l AS DOUBLE)" }
       .mkString("CASE k ", " ", " END")
-    s"""WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
-       | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
-       |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
-       |        CASE WHEN value > 100 THEN 1 ELSE 0 END AS c
-       |       FROM events, d0),
-       | g AS (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS k),
-       | pl AS (SELECT k,
-       |        CAST(SUM(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-       |        CAST(SUM(CASE WHEN b = 0 THEN c ELSE 0 END) AS BIGINT) AS xc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN c ELSE 0 END) AS BIGINT) AS xt
-       |       FROM a GROUP BY 1),
-       | f AS (SELECT g.k, COALESCE(nc, 0) AS nc, COALESCE(nt, 0) AS nt,
-       |        COALESCE(xc, 0) AS xc, COALESCE(xt, 0) AS xt
-       |       FROM g LEFT JOIN pl USING (k)),
-       | cum AS (SELECT k,
-       |        CAST(SUM(nc) OVER w AS BIGINT) AS nc, CAST(SUM(nt) OVER w AS BIGINT) AS nt,
-       |        CAST(SUM(xc) OVER w AS BIGINT) AS xc, CAST(SUM(xt) OVER w AS BIGINT) AS xt
-       |       FROM f WINDOW w AS (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       | zt AS (SELECT k, nc, nt, xc, xt,
-       |        CASE WHEN nc > 0 AND nt > 0 AND
-       |          sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE))) > 0e0
-       |          THEN (CAST(xt AS DOUBLE) / CAST(nt AS DOUBLE)
-       |              - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
-       |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-       |        END AS z,
-       |        $upCase AS up, $loCase AS lo
-       |       FROM cum),
-       | de AS (SELECT k, nc, nt, xc, xt, z, up, lo,
-       |        CASE WHEN z IS NOT NULL AND z >= up THEN 'stop_efficacy'
-       |             WHEN z IS NOT NULL AND z < lo THEN 'stop_futility'
-       |             ELSE 'continue' END AS decision FROM zt),
-       | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision <> 'continue')
-       |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
-       |  ROUND(z, 6) + 0e0 AS z, ROUND(up, 6) AS upper,
-       |  ROUND(lo, 6) + 0e0 AS lower, decision
-       |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
+    gsCtes(s",\n        $upCase AS up, $loCase AS lo") +
+      """,
+        | de AS (SELECT k, nc, nt, xc, xt, z, up, lo,
+        |        CASE WHEN z IS NOT NULL AND z >= up THEN 'stop_efficacy'
+        |             WHEN z IS NOT NULL AND z < lo THEN 'stop_futility'
+        |             ELSE 'continue' END AS decision FROM zt),
+        | fc AS (SELECT MIN(k) AS mk FROM de WHERE decision <> 'continue')
+        |SELECT de.k AS look, nc AS n_c, nt AS n_t, xc AS x_c, xt AS x_t,
+        |  ROUND(z, 6) + 0e0 AS z, ROUND(up, 6) AS upper,
+        |  ROUND(lo, 6) + 0e0 AS lower, decision
+        |FROM de, fc WHERE de.k <= COALESCE(fc.mk, 5) ORDER BY look""".stripMargin
   }
 
   // conditional-power mirror: the same cumulative (look, arm) replay,
@@ -3203,37 +3094,8 @@ object EventsQueries {
     val uK = graft.operators.AlphaSpending.oneSidedBoundaries(5, 0.025, "obf").last
     val phiTrend = graft.functions.Normal.cdfSql("a_trend")
     val phiNull = graft.functions.Normal.cdfSql("a_null")
-    s"""WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
-       | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
-       |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
-       |        CASE WHEN value > 100 THEN 1 ELSE 0 END AS c
-       |       FROM events, d0),
-       | g AS (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS k),
-       | pl AS (SELECT k,
-       |        CAST(SUM(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-       |        CAST(SUM(CASE WHEN b = 0 THEN c ELSE 0 END) AS BIGINT) AS xc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN c ELSE 0 END) AS BIGINT) AS xt
-       |       FROM a GROUP BY 1),
-       | f AS (SELECT g.k, COALESCE(nc, 0) AS nc, COALESCE(nt, 0) AS nt,
-       |        COALESCE(xc, 0) AS xc, COALESCE(xt, 0) AS xt
-       |       FROM g LEFT JOIN pl USING (k)),
-       | cum AS (SELECT k,
-       |        CAST(SUM(nc) OVER w AS BIGINT) AS nc, CAST(SUM(nt) OVER w AS BIGINT) AS nt,
-       |        CAST(SUM(xc) OVER w AS BIGINT) AS xc, CAST(SUM(xt) OVER w AS BIGINT) AS xt
-       |       FROM f WINDOW w AS (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       | zt AS (SELECT k, nc, nt, xc, xt,
-       |        CASE WHEN nc > 0 AND nt > 0 AND
-       |          sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE))) > 0e0
-       |          THEN (CAST(xt AS DOUBLE) / CAST(nt AS DOUBLE)
-       |              - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
-       |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-       |        END AS z
-       |       FROM cum),
+    gsCtes("") +
+      s""",
        | bb AS (SELECT k, nc, nt, xc, xt, z,
        |        CAST(k AS DOUBLE) / 5e0 AS tk,
        |        z * sqrt(CAST(k AS DOUBLE) / 5e0) AS b FROM zt),
@@ -3263,37 +3125,8 @@ object EventsQueries {
       .inverseCumulativeProbability(1.0 - beta)
     val phiTrend = graft.functions.Normal.cdfSql("a_trend")
     val phiAdj = graft.functions.Normal.cdfSql("a_adj")
-    s"""WITH d0 AS (SELECT MIN(CAST(ts AS DATE)) AS d0 FROM events),
-       | a AS (SELECT LEAST(CAST((CAST(ts AS DATE) - d0) // 6 AS BIGINT) + 1, 5) AS k,
-       |        (instr('0123456789abcdef', substr(md5('gs:' || CAST(event_id AS VARCHAR)), 16, 1)) - 1) % 2 AS b,
-       |        CASE WHEN value > 100 THEN 1 ELSE 0 END AS c
-       |       FROM events, d0),
-       | g AS (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS k),
-       | pl AS (SELECT k,
-       |        CAST(SUM(CASE WHEN b = 0 THEN 1 ELSE 0 END) AS BIGINT) AS nc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-       |        CAST(SUM(CASE WHEN b = 0 THEN c ELSE 0 END) AS BIGINT) AS xc,
-       |        CAST(SUM(CASE WHEN b <> 0 THEN c ELSE 0 END) AS BIGINT) AS xt
-       |       FROM a GROUP BY 1),
-       | f AS (SELECT g.k, COALESCE(nc, 0) AS nc, COALESCE(nt, 0) AS nt,
-       |        COALESCE(xc, 0) AS xc, COALESCE(xt, 0) AS xt
-       |       FROM g LEFT JOIN pl USING (k)),
-       | cum AS (SELECT k,
-       |        CAST(SUM(nc) OVER w AS BIGINT) AS nc, CAST(SUM(nt) OVER w AS BIGINT) AS nt,
-       |        CAST(SUM(xc) OVER w AS BIGINT) AS xc, CAST(SUM(xt) OVER w AS BIGINT) AS xt
-       |       FROM f WINDOW w AS (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       | zt AS (SELECT k, nc, nt, xc, xt,
-       |        CASE WHEN nc > 0 AND nt > 0 AND
-       |          sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |            * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE))) > 0e0
-       |          THEN (CAST(xt AS DOUBLE) / CAST(nt AS DOUBLE)
-       |              - CAST(xc AS DOUBLE) / CAST(nc AS DOUBLE))
-       |            / sqrt((CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 - CAST(xc + xt AS DOUBLE) / CAST(nc + nt AS DOUBLE))
-       |                * (1e0 / CAST(nc AS DOUBLE) + 1e0 / CAST(nt AS DOUBLE)))
-       |        END AS z
-       |       FROM cum),
+    gsCtes("") +
+      s""",
        | bb AS (SELECT k, nc, nt, xc, xt, z,
        |        CAST(k AS DOUBLE) / 5e0 AS tk,
        |        z * sqrt(CAST(k AS DOUBLE) / 5e0) AS b FROM zt),

@@ -116,6 +116,9 @@ object TableQueries {
         "c_custkey" -> "bigint", "c_name" -> "string",
         "c_nationkey" -> "int", "c_mktsegment" -> "string"))
     },
+    // EXT k-anonymity audit: quasi-identifier (nation, segment,
+    // balance-bucket) group sizes over customer — the privacy screen a
+    // training-data release runs before shipping structured records
     Query("k_anonymity_audit")((s, dir) => {
       val qi = t(s, dir, "customer")
         .groupBy(col("c_nationkey"), col("c_mktsegment"),
@@ -129,6 +132,7 @@ object TableQueries {
           round(col("_below").cast("double") / col("n").cast("double"), 6)
             .as("pct_below_5"))
     }) {
+      // k-anonymity mirror: QI group sizes + the four audit scalars
       """WITH qi AS (SELECT c_nationkey, c_mktsegment,
         |        FLOOR(c_acctbal / 1000.0) AS bb, CAST(COUNT(*) AS BIGINT) AS c
         |       FROM customer GROUP BY 1, 2, 3),

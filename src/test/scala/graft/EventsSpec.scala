@@ -1,8 +1,9 @@
 package graft
 
 import java.sql.Timestamp
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.Events
+import graft.operators.{Events, Stats}
 
 class EventsSpec extends SparkSpec {
   import spark.implicits._
@@ -672,7 +673,7 @@ class EventsSpec extends SparkSpec {
       eff.head.getString(7) == "reject")
     // Pocock: the boundary is FLAT at c_K for every look
     val poc = Events.groupSequentialObf(ev, "event_id", "ts", col("conv"),
-      cK = 2.413, pocock = true).orderBy("look").collect()
+      Seq.fill(5)(2.413)).orderBy("look").collect()
     assert(poc.length == 5 && poc.forall(_.getDouble(6) == 2.413))
   }
 
@@ -1019,6 +1020,61 @@ class EventsSpec extends SparkSpec {
     capped.filter(r => r.getString(8) == "promising").foreach { r =>
       val t = r.getInt(0) / 5.0
       assert(r.getDouble(9) <= (1.1 - t) / (1.0 - t) + 1e-9)
+    }
+  }
+
+  test("A/B monitors and survival operators: codegen and interpreted evaluation agree row for row") {
+    def t(s: String) = Timestamp.valueOf(s)
+    // the look monitors' 600-event fixture, with ssrCP's mild
+    // arm-aligned effect on the same ids
+    val looks = (0 until 600)
+      .map(i => (i.toLong, ts(1 + i / 20, i % 24), i % 7 == 0, i % 9))
+      .toDF("event_id", "ts", "conv", "m")
+    val arm1 = Stats.md5Parity(col("event_id"), "gs") === 1L
+    val ssrConv = (arm1 && col("m") < 2) || (!arm1 && col("m") === 0)
+    // the mSPRT fixtures: 37 users over 10 days, a $40 treatment lift
+    val daily = (0 until 400)
+      .map(i => (i.toLong % 37, ts(1 + i / 40, i % 24), i % 5 == 0,
+        (i % 23).toDouble * 3.25))
+      .toDF("user_id", "ts", "conv", "base")
+      .withColumn("value", col("base") +
+        when(Stats.md5Parity(col("user_id"), "ab") === 1L, 40.0).otherwise(0.0))
+    // the stratified log-rank fixture: deaths in both groups, a censoring
+    val surv = Seq(
+      (1L, t("2024-01-01 00:00:00"), "view"),
+      (1L, t("2024-01-01 01:30:00"), "purchase"),
+      (2L, t("2024-01-01 00:00:00"), "view"),
+      (2L, t("2024-01-01 02:30:00"), "purchase"),
+      (3L, t("2024-01-01 00:00:00"), "view"),
+      (4L, t("2024-01-01 00:00:00"), "view"),
+      (4L, t("2024-01-01 03:30:00"), "purchase"))
+      .toDF("user_id", "ts", "event_type")
+    val died = col("event_type") === "purchase"
+    val grp = pmod(col("user_id"), lit(2)) === 0
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "msprtDaily" -> (() => Events.msprtDaily(daily, "user_id", "ts", col("conv"))),
+      "msprtValueDaily" -> (() => Events.msprtValueDaily(daily, "user_id", "ts", col("value"))),
+      "groupSequentialObf" -> (() => Events.groupSequentialObf(looks, "event_id", "ts", col("conv"))),
+      "groupSequentialObf(arm)" -> (() => Events.groupSequentialObf(looks, "event_id", "ts", arm1)),
+      "groupSequentialLanDeMets" -> (() => Events.groupSequentialLanDeMets(looks, "event_id", "ts",
+        col("conv"), spending = "pocock")),
+      "groupSequentialFutility" -> (() => Events.groupSequentialFutility(looks, "event_id", "ts", col("conv"))),
+      "conditionalPower" -> (() => Events.conditionalPower(looks, "event_id", "ts", col("conv"))),
+      "ssrCP" -> (() => Events.ssrCP(looks, "event_id", "ts", ssrConv)),
+      "kaplanMeier" -> (() => Events.kaplanMeier(surv, "user_id", "ts", died)),
+      "nelsonAalen" -> (() => Events.nelsonAalen(surv, "user_id", "ts", died)),
+      "logRankTest" -> (() => Events.logRankTest(surv, "user_id", "ts", died, grp)),
+      "logRankStratified" -> (() => Events.logRankStratified(surv, "user_id", "ts", died, grp,
+        when(col("user_id") <= 2, "a").otherwise("b"))),
+      "abTestProportions" -> (() => Stats.abTestProportions(looks, "event_id", col("conv"))))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    runs.foreach { case (name, run) =>
+      val codegen = rows(run())
+      val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(rows(run()))
+      assert(codegen.nonEmpty, name)
+      // exact equality of the doubles, not a tolerance
+      assert(interpreted == codegen, name)
     }
   }
 }

@@ -221,6 +221,19 @@ class StatsSpec extends SparkSpec {
       ("b", 0.1, 7.0), ("b", 0.25, 7.0), ("b", 0.5, 7.0), ("b", 1.0, 7.0)))
   }
 
+  test("abTestProportions: an empty arm or a degenerate pooled rate gives nulls, not a division error") {
+    // one unit: exactly one arm is populated
+    val one = Stats.abTestProportions(Seq(1L).toDF("id"), "id", lit(true)).head()
+    assert(one.getLong(0) + one.getLong(1) == 1L)
+    val rates = Seq(one.get(4), one.get(5))
+    assert(rates.count(_ == null) == 1 && rates.contains(1.0), rates)
+    assert(one.isNullAt(6))
+    // both arms populated, every unit converts: p̂ = 1, so se = 0
+    val all = Stats.abTestProportions((1L to 20L).toDF("id"), "id", lit(true)).head()
+    assert(all.getLong(0) > 0L && all.getLong(1) > 0L)
+    assert(all.getDouble(4) == 1.0 && all.getDouble(5) == 1.0 && all.isNullAt(6))
+  }
+
   test("abTestProportions: counts partition exactly; arm-aligned effect maxes z") {
     import graft.functions.TextFunctions
     val df = (1L to 1000L).toDF("id")
