@@ -1432,9 +1432,11 @@ object Events {
     * Output one row: (n_strata, n1, n2, o1, e1, v, z); z null at V=0.
     *
     * Scale shape (100 TB): the [[observations]] pass is the only
-    * corpus-sized exchange; every window/groupBy carries the stratum
-    * key — all partitioned, no global window at all — and the folds
-    * ride the OBSERVATION-WINDOW grid, never rows.
+    * corpus-sized exchange, and it runs once: its (stratum, t) bucket
+    * aggregate feeds one stratum-partitioned window (sizes and risk
+    * sets) and one global aggregate (strata, sizes, O and the E/V
+    * lists). No global window at all, and the folds ride the
+    * OBSERVATION-WINDOW grid, never rows.
     */
   def logRankStratified(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, group1: Column, stratum: Column,
@@ -1448,17 +1450,19 @@ object Events {
       sum(when(col("_g1") && !col("_death"), 1L).otherwise(0L)).as("_c1"),
       sum(when(!col("_g1") && col("_death"), 1L).otherwise(0L)).as("_d2"),
       sum(when(!col("_g1") && !col("_death"), 1L).otherwise(0L)).as("_c2"))
-    val tot = b.groupBy(col("_st"))
-      .agg(sum(col("_d1") + col("_c1")).as("_N1"),
-        sum(col("_d2") + col("_c2")).as("_N2"))
-    val w = Window.partitionBy(col("_st")).orderBy(col("_t"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = b.join(tot, Seq("_st"))
-      .withColumn("_n1", col("_N1") -
-        coalesce(sum(col("_d1") + col("_c1")).over(w), lit(0L)))
-      .withColumn("_n2", col("_N2") -
-        coalesce(sum(col("_d2") + col("_c2")).over(w), lit(0L)))
-      .filter(col("_d1") + col("_d2") > 0L)
+    // subjects leaving each group at t; per stratum, ordered by t: the
+    // group sizes and the subjects gone before t (a stratum's first
+    // bucket has none before it: null)
+    val out1 = col("_d1") + col("_c1")
+    val out2 = col("_d2") + col("_c2")
+    val byT = Window.partitionBy(col("_st")).orderBy(col("_t"))
+    val all = byT.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val before = byT.rowsBetween(Window.unboundedPreceding, -1)
+    val risk = b.select(col("*"),
+        sum(out1).over(all).as("_N1"), sum(out2).over(all).as("_N2"),
+        sum(out1).over(before).as("_b1"), sum(out2).over(before).as("_b2"))
+      .withColumn("_n1", col("_N1") - coalesce(col("_b1"), lit(0L)))
+      .withColumn("_n2", col("_N2") - coalesce(col("_b2"), lit(0L)))
     val dt = (col("_d1") + col("_d2")).cast("double")
     val nt = (col("_n1") + col("_n2")).cast("double")
     val p = col("_n1").cast("double") / nt
@@ -1466,16 +1470,20 @@ object Events {
     val vt = when(col("_n1") + col("_n2") > 1L,
       dt * p * (lit(1.0) - p) *
         ((nt - dt) / (nt - lit(1.0)))).otherwise(lit(0.0))
-    val folded = risk
-      .select(col("_d1"), struct(col("_st"), col("_t"),
-        e1t.as("_e"), vt.as("_v")).as("_s"))
-      .agg(sum(col("_d1")).as("o1"), collect_list(col("_s")).as("_l"))
-    val sizes = tot.agg(count(lit(1)).as("n_strata"),
-      sum(col("_N1")).as("n1"), sum(col("_N2")).as("n2"))
+    // one global aggregate over the (stratum, t) grid: the strata and
+    // group sizes over every bucket, the O/E/V terms over the buckets
+    // with a death
+    val death = col("_d1") + col("_d2") > 0L
+    val folded = risk.agg(
+      count(when(col("_b1").isNull, 1)).as("n_strata"),
+      sum(out1).as("n1"), sum(out2).as("n2"),
+      sum(when(death, col("_d1"))).as("o1"),
+      collect_list(when(death, struct(col("_st"), col("_t"),
+        e1t.as("_e"), vt.as("_v")))).as("_l"))
     def osum(f: String) =
       aggregate(transform(sort_array(col("_l")), x => x.getField(f)),
         lit(0.0), (acc, x) => acc + x)
-    folded.crossJoin(broadcast(sizes))
+    folded
       .select(col("n_strata"), col("n1"), col("n2"), col("o1"),
         round(osum("_e"), 6).as("e1"), round(osum("_v"), 6).as("v"),
         when(osum("_v") > 0.0,

@@ -556,6 +556,60 @@ class EventsSpec extends SparkSpec {
     assert(two.getLong(0) == 2L && two.getLong(3) == pooled.getLong(2))
   }
 
+  test("logRankStratified: matches an independent model, a stratum without deaths counted, codegen and interpreted") {
+    // 60 users in strata a/b/c by id % 3; c never purchases; ties of
+    // both arms in one hour bucket; some a/b users censored
+    val stratumOf = Map(0L -> "a", 1L -> "b", 2L -> "c")
+    val ev = (0L until 60L).flatMap { u =>
+      val start = ts(1, (u % 3).toInt)
+      val buy = if (u % 3 != 2 && u % 4 != 3)
+        Seq((u, ts(1 + (u % 5).toInt, ((u * 7) % 24).toInt), "purchase")) else Nil
+      (u, start, "view") +: buy
+    }
+    val died = col("event_type") === "purchase"
+    val grp = pmod(col("user_id"), lit(2)) === 0
+    val st = element_at(typedLit(stratumOf), pmod(col("user_id"), lit(3)))
+    def r6(x: Double) = BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val expected = {
+      def us(t: Timestamp) = t.getTime * 1000L
+      val mx = ev.map(e => us(e._2)).max
+      val obs = ev.groupBy(_._1).toSeq.map { case (u, es) =>
+        val start = es.map(e => us(e._2)).min
+        val death = es.filter(_._3 == "purchase").map(e => us(e._2)).minOption
+        (stratumOf(u % 3), (death.getOrElse(mx) - start) / 3600000000L,
+          death.isDefined, u % 2 == 0)
+      }
+      var o1 = 0L
+      val terms = obs.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (_, os) =>
+        var n1 = os.count(_._4).toLong
+        var n2 = os.size - n1
+        os.groupBy(_._2).toSeq.sortBy(_._1).flatMap { case (_, xs) =>
+          val d1 = xs.count(x => x._4 && x._3); val c1 = xs.count(x => x._4 && !x._3)
+          val d2 = xs.count(x => !x._4 && x._3); val c2 = xs.count(x => !x._4 && !x._3)
+          val term = if (d1 + d2 == 0) None else {
+            val dt = (d1 + d2).toDouble; val nt = (n1 + n2).toDouble
+            val p = n1.toDouble / nt
+            o1 += d1
+            Some((dt * p, if (n1 + n2 > 1) dt * p * (1.0 - p) * ((nt - dt) / (nt - 1.0)) else 0.0))
+          }
+          n1 -= d1 + c1; n2 -= d2 + c2
+          term
+        }
+      }
+      val e = terms.foldLeft(0.0)(_ + _._1); val v = terms.foldLeft(0.0)(_ + _._2)
+      Seq(3L, obs.count(_._4).toLong, obs.count(!_._4).toLong, o1, r6(e), r6(v),
+        r6((o1.toDouble - e) / math.sqrt(v)))
+    }
+    val df = ev.toDF("user_id", "ts", "event_type")
+    def run() = Events.logRankStratified(df, "user_id", "ts", died, grp, st)
+      .collect().head.toSeq
+    val codegen = run()
+    val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(run())
+    assert(codegen == expected)
+    assert(interpreted == expected)
+  }
+
   test("diffInDiff: hand case — treated +6, control +1, did 5; parallel trends gives 0") {
     // days 1,2 pre; days 3,4 post (cutover = day 3)
     def mk(tpe: String, day: Int, n: Int) =

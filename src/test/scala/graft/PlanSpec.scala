@@ -505,4 +505,28 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("log-rank queries read their tables only in the observation pass, with one window") {
+    // per table, one scan for the per-subject aggregate and one for the
+    // observation end; the stratum sizes come from the same bucket frame
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    for ((name, scans) <- Seq("log_rank_purchase" -> 2, "log_rank_stratified" -> 4)) {
+      val nodes = executedNodes(allQe(name).executedPlan)
+      val tree = nodes.map(_.nodeName).mkString(", ")
+      assert(nodes.count(_.isInstanceOf[FileSourceScanExec]) == scans, s"$name: $tree")
+      assert(nodes.count(_.isInstanceOf[WindowExec]) == 1, s"$name: $tree")
+    }
+  }
+
+  test("a second construct of each graftbench query starts no Spark job") {
+    // every table read after the first passes its remembered schema, so
+    // no parquet footer job comes back on a later construct
+    Seq("minhash_pairs", "blocking_quality", "fellegi_sunter_weights",
+      "dedup_exact_docs", "q3_shipping_priority", "pivot_status",
+      "sessions_user", "topk_stream", "mad_outliers").foreach { name =>
+      SparkEntry.queries(name)(spark, sf)
+      assert(jobsStartedBy(SparkEntry.queries(name)(spark, sf)) == 0, name)
+    }
+  }
 }
