@@ -23,30 +23,84 @@ import graft.functions.VectorFunctions
   */
 object Ann {
 
+  /** (id, v): `idCol` as `id`, `vecCol` cast to array<double> as `v` —
+    * every variant's input frame. */
+  private def vectors(df: DataFrame, idCol: String, vecCol: String,
+      id: String, v: String): DataFrame =
+    df.select(col(idCol).as(id), col(vecCol).cast("array<double>").as(v))
+
+  /** The deterministic, engine-portable sample order: smallest
+    * md5("seed:id") first, ties on id (the oracles replay it as
+    * `ORDER BY md5('seed:' || id), id`). */
+  private def md5Order(id: String, seed: String): Seq[Column] =
+    Seq(md5(concat(lit(seed + ":"), col(id).cast("string"))), col(id))
+
+  /** The `n` rows of `df` first in [[md5Order]] — the md5-sampled
+    * centroids of the IVF, residual and k-means variants. */
+  private[operators] def md5Sample(df: DataFrame, id: String, seed: String,
+      n: Int): DataFrame =
+    df.orderBy(md5Order(id, seed): _*).limit(n)
+
+  /** The per-query top-k every variant ends with: `scored`'s rows ranked
+    * within each query_id by `order`, ties on ascending `id`, the first
+    * `k` kept with their 1-based rank in column `rank`. */
+  private def rankWithin(scored: DataFrame, order: Column, id: String,
+      k: Int, rank: String = "_rk"): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(order, col(id).asc)
+    scored.withColumn(rank, row_number().over(w)).filter(col(rank) <= k)
+  }
+
+  /** [[rankWithin]] over (query_id, neighbor_id, score) rows, emitted as
+    * (query_id, neighbor_id, score, rank). */
+  private def topK(scored: DataFrame, order: Column, k: Int): DataFrame =
+    rankWithin(scored, order, "neighbor_id", k).withColumnRenamed("_rk", "rank")
+
+  /** Exact cosine top-k over (query_id, neighbor_id) pairs that carry
+    * both vectors (qv, cv). */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topK(pairs.select(col("query_id"), col("neighbor_id"),
+      VectorFunctions.cosine(col("qv"), col("cv")).as("cos")), col("cos").desc, k)
+
+  /** Exact cosine rerank of bare-id (query_id, neighbor_id) candidates:
+    * the vectors join back only after the candidate dedup (carrying them
+    * through it is the measured 5x mistake — see Dedup.cosineVerify). */
+  private def rerank(cands: DataFrame, qv: DataFrame, cv: DataFrame,
+      k: Int): DataFrame =
+    cosineTopK(cands.join(broadcast(qv), Seq("query_id")).join(cv, Seq("neighbor_id")), k)
+
+  /** ADC top-k over (query_id, neighbor_id) pairs carrying the neighbor's
+    * PQ `codes` and the query's distance table `dt`: (query_id,
+    * neighbor_id, adist, rank) by (adist asc, neighbor_id asc). */
+  private def adcTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val scored = pairs.select(col("query_id"), col("neighbor_id"),
+      VectorFunctions.adcSum(col("codes"), col("dt")).as("_ad"))
+    // round(6) BEFORE ranking — the suite-wide float discipline: the two
+    // engines' fold orders agree to ~1 ulp but not always bitwise, so
+    // both rank (and emit) the identical quantized value, with the
+    // integer neighbor_id tie-break underneath
+    topK(scored.withColumn("adist", round(col("_ad"), 6)).drop("_ad"),
+      col("adist").asc, k)
+  }
+
   /** Exact top-k neighbors for each query vector (excluding self).
     * Output: (query_id, neighbor_id, cos), rank-ordered with (cos desc,
     * neighbor_id asc) tie-break.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("_rk").as("rank"))
+    val c = vectors(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val q = vectors(queries, idCol, vecCol, "query_id", "qv")
+    cosineTopK(c.join(broadcast(q), col("query_id") =!= col("neighbor_id")), k)
   }
 
-  /** Multi-table sign-LSH approximate top-k: `nTables` independent hash
-    * tables of `planesPerTable` hyperplanes each; a corpus vector is a
-    * candidate if it shares the query's bucket in ANY table (standard
-    * OR-of-ANDs amplification — a single wide bucket has vanishing recall
-    * on near-orthogonal data). Exact cosine re-rank over the candidate
-    * union. Cost scales with nTables x bucket occupancy, never n^2.
-    */
-  /** `multiProbe`: the QUERY side also probes, per table, the buckets
+  /** Multi-table sign-LSH approximate top-k: `planes` holds one table of
+    * hyperplanes per hash table; a corpus vector is a candidate if it
+    * shares the query's bucket in ANY table (standard OR-of-ANDs
+    * amplification — a single wide bucket has vanishing recall on
+    * near-orthogonal data). Exact cosine re-rank over the candidate
+    * union. Cost scales with tables x bucket occupancy, never n^2.
+    *
+    * `multiProbe`: the QUERY side also probes, per table, the buckets
     * with its `probeDepth` lowest-margin plane bits flipped (one bit per
     * probe) — recall rises like adding tables but without re-hashing the
     * corpus, the classic multi-probe trade, and monotonically in
@@ -54,64 +108,33 @@ object Ann {
     * corpus keeps one bucket per table.
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int, nTables: Int = 8, planesPerTable: Int = 4,
-      dim: Int = 64, seed: Long = 42L,
-      planes: Option[Array[Array[Array[Double]]]] = None,
+      vecCol: String, k: Int, planes: Array[Array[Array[Double]]],
       multiProbe: Boolean = false, probeDepth: Int = 1): DataFrame = {
-    val tables = planes.getOrElse((0 until nTables)
-      .map(t => VectorFunctions.hyperplanes(planesPerTable, dim, seed + t)).toArray)
     def withBuckets(df: DataFrame, id: String, vec: String) = {
-      val buckets = VectorFunctions.signBuckets(col(vec), tables)
+      val buckets = VectorFunctions.signBuckets(col(vec), planes)
       df.select(col(id), col(vec), posexplode(buckets).as(Seq("tbl", "bucket")))
     }
     // probe layout [t0_main, t0_flip1.., t1_main, ...] -> tbl = pos / (depth+1)
     def withProbeBuckets(df: DataFrame, id: String, vec: String) = {
-      val buckets = VectorFunctions.signBucketsMultiProbe(col(vec), tables, probeDepth)
+      val buckets = VectorFunctions.signBucketsMultiProbe(col(vec), planes, probeDepth)
       df.select(col(id), posexplode(buckets).as(Seq("pos", "bucket")))
         .select(col(id), (col("pos") / (probeDepth + 1)).cast("int").as("tbl"), col("bucket"))
       // no distinct needed: each flip differs from main (one-bit XOR) and
       // from the other flips (different bit); rows in different tables
       // carry different tbl ids
     }
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
+    val cv = vectors(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val qv = vectors(queries, idCol, vecCol, "query_id", "qv")
     val c = withBuckets(cv, "neighbor_id", "cv").drop("cv")
     val q = if (multiProbe) withProbeBuckets(qv, "query_id", "qv")
       else withBuckets(qv, "query_id", "qv").drop("qv")
-    // candidate dedup on BARE id pairs; vectors join back afterwards (the
-    // array-carrying dropDuplicates shuffle is the measured 5x mistake —
-    // see Dedup.embeddingNearDupLsh)
     val cands = c.join(broadcast(q), Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
-    val scored = cands
-      .join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("_rk").as("rank"))
+    rerank(cands, qv, cv, k)
   }
 
-  /** IVF (inverted-file) approximate top-k — the clustering complement to
-    * sign-LSH: partition the corpus into `nCentroids` cells, probe the
-    * `nProbe` cells nearest each query, exact-rerank inside them.
-    *
-    * Centroids are a DETERMINISTIC sample — the `nCentroids` corpus rows
-    * with the smallest md5(seed:id) (a reproducible stand-in for a
-    * k-means codebook; same engine-portable discipline as the md5 LSH
-    * planes, so the whole operator is oracle-checkable). Assignment =
-    * argmax cosine against the broadcast centroid table; ties break on
-    * centroid id.
-    *
-    * Scale shape: centroid table is tiny and broadcast (the only
-    * nested-loop join in the plan); the corpus shuffles once on its
-    * assigned cell id; probe cost is |queries| x nProbe cells, never
-    * n^2. Recall/cost tunes with (nCentroids, nProbe) exactly like an
-    * IVF index.
-    */
   /** Deterministic +-1 Johnson-Lindenstrauss sign matrix: sign(d, j) =
     * parity of the first hex digit of md5("jl:d:j"). Single-sourced: the
     * declared query projects through this matrix and the DuckDB oracle's
@@ -152,16 +175,35 @@ object Ann {
     bruteForceTopK(proj(corpus), proj(queries), idCol, "_pv", k)
   }
 
+  /** The `nCentroids` md5-sampled corpus rows of `cv` (neighbor_id, cv)
+    * as a (cid, cvec) centroid table. */
+  private def md5Centroids(cv: DataFrame, nCentroids: Int, seed: String): DataFrame =
+    md5Sample(cv, "neighbor_id", seed, nCentroids)
+      .select(col("neighbor_id").as("cid"), col("cv").as("cvec"))
+
+  /** IVF (inverted-file) approximate top-k — the clustering complement to
+    * sign-LSH: partition the corpus into `nCentroids` cells, probe the
+    * `nProbe` cells nearest each query, exact-rerank inside them.
+    *
+    * Centroids are a DETERMINISTIC sample — the `nCentroids` corpus rows
+    * with the smallest md5(seed:id) (a reproducible stand-in for a
+    * k-means codebook; same engine-portable discipline as the md5 LSH
+    * planes, so the whole operator is oracle-checkable). Assignment =
+    * argmax cosine against the broadcast centroid table; ties break on
+    * centroid id.
+    *
+    * Scale shape: centroid table is tiny and broadcast (the only
+    * nested-loop join in the plan); the corpus shuffles once on its
+    * assigned cell id; probe cost is |queries| x nProbe cells, never
+    * n^2. Recall/cost tunes with (nCentroids, nProbe) exactly like an
+    * IVF index.
+    */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nCentroids: Int = 8, nProbe: Int = 2,
       seed: String = "42"): DataFrame = {
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val cents = cv
-      .orderBy(md5(concat(lit(seed + ":"), col("neighbor_id").cast("string"))), col("neighbor_id"))
-      .limit(nCentroids)
-      .select(col("neighbor_id").as("cid"), col("cv").as("cvec"))
-    ivfFromCentroids(cv, qv, cents, k, nProbe)
+    val cv = vectors(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val qv = vectors(queries, idCol, vecCol, "query_id", "qv")
+    ivfFromCentroids(cv, qv, md5Centroids(cv, nCentroids, seed), k, nProbe)
   }
 
   /** IVF with a REAL k-means codebook (MLlib, cosine distance) — the
@@ -231,8 +273,8 @@ object Ann {
       idCol: String, vecCol: String, k: Int,
       centroids: Array[Array[Double]], nProbe: Int = 2): DataFrame = {
     require(centroids.nonEmpty, "ivfTopKWithCentroids: empty centroid table")
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
+    val cv = vectors(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val qv = vectors(queries, idCol, vecCol, "query_id", "qv")
     val spark = corpus.sparkSession
     import spark.implicits._
     val cents = centroids.zipWithIndex.toSeq
@@ -241,11 +283,6 @@ object Ann {
     ivfFromCentroids(cv, qv, cents, k, nProbe)
   }
 
-  /** Shared IVF probe/rerank: assign corpus rows to their nearest
-    * centroid, probe each query's `nProbe` nearest cells, exact-rerank
-    * the candidates. `cents` is (cid, cvec) and must be tiny (it is
-    * broadcast into the only nested-loop join of the plan).
-    */
   /** Per-row nearest-centroid cells by cosine (broadcast nested-loop
     * against the tiny `cents`), optionally carrying extra columns
     * through — so a corpus frame's PQ codes ride the same pass instead
@@ -260,6 +297,11 @@ object Ann {
       .drop("_rn", "_ccos")
   }
 
+  /** Shared IVF probe/rerank: assign corpus rows to their nearest
+    * centroid, probe each query's `nProbe` nearest cells, exact-rerank
+    * the candidates. `cents` is (cid, cvec) and must be tiny (it is
+    * broadcast into the only nested-loop join of the plan).
+    */
   private def ivfFromCentroids(cv: DataFrame, qv: DataFrame, cents: DataFrame,
       k: Int, nProbe: Int): DataFrame = {
     val assigned = nearestCells(cv, cents, "neighbor_id", "cv", 1)
@@ -267,14 +309,7 @@ object Ann {
     val cands = probed.join(assigned, Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = cands
-      .join(broadcast(qv), Seq("query_id"))
-      .join(cv, Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosine(col("qv"), col("cv")).as("cos"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"), col("_rk").as("rank"))
+    rerank(cands, qv, cv, k)
   }
 
   // ------------------------------------------------------------------
@@ -284,13 +319,10 @@ object Ann {
   // (m=4 here) — the whole candidate-scoring structure fits in a
   // fraction of the raw corpus, and ADC scoring reads ONLY codes plus a
   // per-query m x k distance table (k*m doubles, broadcast). Vectors
-  // are l2-normalized first, so ascending squared-L2 ADC ranks exactly
+  // are l2-normalized first (VectorFunctions.l2Normalize; all-zero
+  // vectors pass through unchanged and rank last under ADC just as they
+  // score 0 under cosine), so ascending squared-L2 ADC ranks exactly
   // like descending cosine.
-
-  /** L2-normalize an array<double> column; all-zero vectors pass
-    * through unchanged (they rank last under ADC just as they score 0
-    * under cosine). */
-  private def l2norm(v: Column): Column = VectorFunctions.l2Normalize(v)
 
   /** Train a PQ codebook: split the l2-normalized corpus into `m`
     * contiguous subspaces and fit `k` euclidean k-means centroids per
@@ -306,7 +338,7 @@ object Ann {
     require(dim % m == 0, s"m ($m) must divide dim ($dim)")
     val ds = dim / m
     val nv = corpus
-      .select(l2norm(col(vecCol).cast("array<double>")).as("nv"))
+      .select(VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("nv"))
       .filter(aggregate(col("nv"), lit(0.0d), (a, x) => a + x * x) > 0d)
     fitSubspaces(nv, m, ds, k, seed, maxIter)
   }
@@ -328,18 +360,6 @@ object Ann {
     } finally cached.unpersist()
   }
 
-  /** PQ codes for a normalized vector: per subspace, the 1-based index
-    * of the nearest centroid (first-match tie-break — the same rule as
-    * DuckDB's list_position). Expression-only, whole-stage codegen. */
-  private def pqCodes(nv: Column, codebook: Array[Array[Array[Double]]]): Column =
-    VectorFunctions.pqCodes(nv, codebook)
-
-  /** Per-query ADC distance tables: subspace i's table holds the
-    * squared-L2 from the query's subvector to each of subspace i's
-    * centroids. array<array<double>>, m x k. */
-  private def pqDistTables(nv: Column, codebook: Array[Array[Array[Double]]]): Column =
-    VectorFunctions.pqDistTables(nv, codebook)
-
   /** Asymmetric-distance (ADC) top-k with a frozen PQ codebook: encode
     * the corpus to m small-int codes per row, broadcast each query's
     * m x k distance table, and score a pair as the sum of table lookups
@@ -358,23 +378,61 @@ object Ann {
       vecCol: String, codebook: Array[Array[Array[Double]]], k: Int): DataFrame = {
     val enc = corpus
       .select(col(idCol).as("neighbor_id"),
-        l2norm(col(vecCol).cast("array<double>")).as("cv"))
-      .select(col("neighbor_id"), pqCodes(col("cv"), codebook).as("codes"))
+        VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("cv"))
+      .select(col("neighbor_id"), VectorFunctions.pqCodes(col("cv"), codebook).as("codes"))
     val qt = queries
       .select(col(idCol).as("query_id"),
-        l2norm(col(vecCol).cast("array<double>")).as("qv"))
-      .select(col("query_id"), pqDistTables(col("qv"), codebook).as("dt"))
-    val scored = enc.join(broadcast(qt), col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.adcSum(col("codes"), col("dt")).as("_ad"))
-    // round(6) BEFORE ranking — the suite-wide float discipline: the two
-    // engines' fold orders agree to ~1 ulp but not always bitwise, so
-    // both rank (and emit) the identical quantized value, with the
-    // integer neighbor_id tie-break underneath
-    val quant = scored.withColumn("adist", round(col("_ad"), 6)).drop("_ad")
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("neighbor_id").asc)
-    quant.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("_rk").as("rank"))
+        VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("qv"))
+      .select(col("query_id"), VectorFunctions.pqDistTables(col("qv"), codebook).as("dt"))
+    adcTopK(enc.join(broadcast(qt), col("query_id") =!= col("neighbor_id")), k)
+  }
+
+  /** Per-row PQ codes under a frozen codebook — the compressed
+    * representation an index build WRITES at scale (m small ints per
+    * row instead of 4*dim bytes of floats); [[pqCodeGroups]] /
+    * [[pqSubcodePairs]] are groupings/joins over exactly this frame.
+    * Output: (idCol, codes array<int>, 1-based). Expression-only.
+    */
+  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
+      codebook: Array[Array[Array[Double]]]): DataFrame =
+    // TWO projections, not one nested expression: pqCodes references its
+    // input ~2*m*k times, and CollapseProject keeps a non-cheap alias
+    // with multiple references materialized — nesting l2Normalize directly
+    // instead duplicates the whole norm fold at every reference site
+    // (measured 25x slower on the sf0.1 encode)
+    corpus
+      .select(col(idCol), VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("_nv"))
+      .select(col(idCol), VectorFunctions.pqCodes(col("_nv"), codebook).as("codes"))
+
+  /** Compressed-domain duplicate groups: vectors whose PQ codes
+    * COINCIDE in every subspace — the FAISS-style "same quantization
+    * cell in all m codebooks" near-dup criterion, i.e. SemDeDup
+    * semantics evaluated on m-byte codes instead of full vectors.
+    * Output one row per code cell holding >= `minGroup` vectors:
+    * (code_key, keep_id, n_members) with keep_id = min id (the same
+    * keep-lowest contract as [[Dedup.exactGroups]]).
+    *
+    * Scale shape (100 TB): encode is a map-side projection off the
+    * corpus scan; the ONLY shuffle is the groupBy on the m-int code
+    * tuple (partial aggregation collapses each cell to one row per map
+    * partition first, so the exchange carries <= cells x partitions
+    * rows, never the corpus). No joins, no windows — this is the
+    * cheapest whole-corpus near-dup sweep in the library, the
+    * compressed-domain complement to [[Dedup.semanticDedup]].
+    */
+  def pqCodeGroups(corpus: DataFrame, idCol: String, vecCol: String,
+      codebook: Array[Array[Array[Double]]], minGroup: Int = 2): DataFrame = {
+    require(minGroup >= 1, s"pqCodeGroups: need minGroup>=1, got $minGroup")
+    // two-step nv -> codes projection: see pqEncode's CollapseProject note
+    corpus
+      .select(col(idCol).as("_id"),
+        VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("_nv"))
+      .select(col("_id"), VectorFunctions.pqCodes(col("_nv"), codebook).as("_codes"))
+      .groupBy(col("_codes"))
+      .agg(min(col("_id")).as("keep_id"), count(lit(1)).as("n_members"))
+      .filter(col("n_members") >= minGroup)
+      .select(array_join(col("_codes").cast("array<string>"), "-").as("code_key"),
+        col("keep_id"), col("n_members"))
   }
 
   /** IVF-PQ: the composed production ANN architecture (coarse quantizer
@@ -394,88 +452,27 @@ object Ann {
     * [[ivfTopK]]; recall is bounded by nProbe x PQ quantization error,
     * both measured in the spec.
     */
-  /** Compressed-domain duplicate groups: vectors whose PQ codes
-    * COINCIDE in every subspace — the FAISS-style "same quantization
-    * cell in all m codebooks" near-dup criterion, i.e. SemDeDup
-    * semantics evaluated on m-byte codes instead of full vectors.
-    * Output one row per code cell holding >= `minGroup` vectors:
-    * (code_key, keep_id, n_members) with keep_id = min id (the same
-    * keep-lowest contract as [[Dedup.exactGroups]]).
-    *
-    * Scale shape (100 TB): encode is a map-side projection off the
-    * corpus scan; the ONLY shuffle is the groupBy on the m-int code
-    * tuple (partial aggregation collapses each cell to one row per map
-    * partition first, so the exchange carries <= cells x partitions
-    * rows, never the corpus). No joins, no windows — this is the
-    * cheapest whole-corpus near-dup sweep in the library, the
-    * compressed-domain complement to [[Dedup.semanticDedup]].
-    */
-  /** Per-row PQ codes under a frozen codebook — the compressed
-    * representation an index build WRITES at scale (m small ints per
-    * row instead of 4*dim bytes of floats); [[pqCodeGroups]] /
-    * [[pqSubcodePairs]] are groupings/joins over exactly this frame.
-    * Output: (idCol, codes array<int>, 1-based). Expression-only.
-    */
-  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: Array[Array[Array[Double]]]): DataFrame =
-    // TWO projections, not one nested expression: pqCodes references its
-    // input ~2*m*k times, and CollapseProject keeps a non-cheap alias
-    // with multiple references materialized — nesting l2norm directly
-    // instead duplicates the whole norm fold at every reference site
-    // (measured 25x slower on the sf0.1 encode)
-    corpus
-      .select(col(idCol), l2norm(col(vecCol).cast("array<double>")).as("_nv"))
-      .select(col(idCol), pqCodes(col("_nv"), codebook).as("codes"))
-
-  def pqCodeGroups(corpus: DataFrame, idCol: String, vecCol: String,
-      codebook: Array[Array[Array[Double]]], minGroup: Int = 2): DataFrame = {
-    require(minGroup >= 1, s"pqCodeGroups: need minGroup>=1, got $minGroup")
-    // two-step nv -> codes projection: see pqEncode's CollapseProject note
-    corpus
-      .select(col(idCol).as("_id"),
-        l2norm(col(vecCol).cast("array<double>")).as("_nv"))
-      .select(col("_id"), pqCodes(col("_nv"), codebook).as("_codes"))
-      .groupBy(col("_codes"))
-      .agg(min(col("_id")).as("keep_id"), count(lit(1)).as("n_members"))
-      .filter(col("n_members") >= minGroup)
-      .select(array_join(col("_codes").cast("array<string>"), "-").as("code_key"),
-        col("keep_id"), col("n_members"))
-  }
-
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, codebook: Array[Array[Array[Double]]], k: Int,
       nCentroids: Int = 8, nProbe: Int = 2, seed: String = "42"): DataFrame = {
-    val cv = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).cast("array<double>").as("cv"))
-    val qv = queries.select(col(idCol).as("query_id"), col(vecCol).cast("array<double>").as("qv"))
-    val cents = cv
-      .orderBy(md5(concat(lit(seed + ":"), col("neighbor_id").cast("string"))), col("neighbor_id"))
-      .limit(nCentroids)
-      .select(col("neighbor_id").as("cid"), col("cv").as("cvec"))
+    val cv = vectors(corpus, idCol, vecCol, "neighbor_id", "cv")
+    val qv = vectors(queries, idCol, vecCol, "query_id", "qv")
+    val cents = md5Centroids(cv, nCentroids, seed)
     // two-step nv -> codes projection: see pqEncode's CollapseProject note
     val assigned = nearestCells(
-      cv.withColumn("_nv", l2norm(col("cv")))
-        .withColumn("codes", pqCodes(col("_nv"), codebook)).drop("_nv"),
+      cv.withColumn("_nv", VectorFunctions.l2Normalize(col("cv")))
+        .withColumn("codes", VectorFunctions.pqCodes(col("_nv"), codebook)).drop("_nv"),
       cents, "neighbor_id", "cv", 1, keep = Seq(col("codes")))
     val probed = nearestCells(qv, cents, "query_id", "qv", nProbe)
     val qt = qv
-      .select(col("query_id"), l2norm(col("qv")).as("_nv"))
-      .select(col("query_id"), pqDistTables(col("_nv"), codebook).as("dt"))
+      .select(col("query_id"), VectorFunctions.l2Normalize(col("qv")).as("_nv"))
+      .select(col("query_id"), VectorFunctions.pqDistTables(col("_nv"), codebook).as("dt"))
     // no distinct: the assignment is take=1, so a (query, neighbor) pair
     // can arise from exactly one cell — the equi-join is already unique
     val cands = probed.join(assigned, Seq("cid"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id", "codes")
-    val scored = cands.join(broadcast(qt), Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.adcSum(col("codes"), col("dt")).as("_ad"))
-    // round(6) BEFORE ranking — the suite-wide float discipline: the two
-    // engines' fold orders agree to ~1 ulp but not always bitwise, so
-    // both rank (and emit) the identical quantized value, with the
-    // integer neighbor_id tie-break underneath
-    val quant = scored.withColumn("adist", round(col("_ad"), 6)).drop("_ad")
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("neighbor_id").asc)
-    quant.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("_rk").as("rank"))
+    adcTopK(cands.join(broadcast(qt), Seq("query_id")), k)
   }
 
   // ------------------------------------------------------------------
@@ -497,10 +494,8 @@ object Ann {
   private def residualFrame(df: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, seed: String): (DataFrame, DataFrame) = {
     val nvf = df.select(col(idCol).as("_rid"),
-      l2norm(col(vecCol).cast("array<double>")).as("nv"))
-    val cents = nvf
-      .orderBy(md5(concat(lit(seed + ":"), col("_rid").cast("string"))), col("_rid"))
-      .limit(nCentroids)
+      VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("nv"))
+    val cents = md5Sample(nvf, "_rid", seed, nCentroids)
       .select(col("_rid").as("cid"), col("nv").as("cvec"))
     val assigned = nearestCells(nvf, cents, "_rid", "nv", 1, keep = Seq(col("nv")))
     val res = assigned.join(broadcast(cents), Seq("cid"))
@@ -539,25 +534,18 @@ object Ann {
       nCentroids: Int = 8, nProbe: Int = 2, seed: String = "42"): DataFrame = {
     val (cres, cents) = residualFrame(corpus, idCol, vecCol, nCentroids, seed)
     val enc = cres.select(col("_rid").as("neighbor_id"), col("cid"),
-      pqCodes(col("rv"), codebook).as("codes"))
+      VectorFunctions.pqCodes(col("rv"), codebook).as("codes"))
     val qnv = queries.select(col(idCol).as("query_id"),
-      l2norm(col(vecCol).cast("array<double>")).as("qnv"))
+      VectorFunctions.l2Normalize(col(vecCol).cast("array<double>")).as("qnv"))
     val probed = nearestCells(qnv, cents, "query_id", "qnv", nProbe,
       keep = Seq(col("qnv"), col("cvec")))
     val qt = probed
       .select(col("query_id"), col("cid"),
         VectorFunctions.arraySub(col("qnv"), col("cvec")).as("_qr"))
       .select(col("query_id"), col("cid"),
-        pqDistTables(col("_qr"), codebook).as("dt"))
-    val scored = enc.join(broadcast(qt), Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.adcSum(col("codes"), col("dt")).as("_ad"))
-    // round(6) before ranking — suite-wide quantize-before-rank
-    val quant = scored.withColumn("adist", round(col("_ad"), 6)).drop("_ad")
-    val w = Window.partitionBy("query_id").orderBy(col("adist").asc, col("neighbor_id").asc)
-    quant.withColumn("_rk", row_number().over(w)).filter(col("_rk") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("adist"), col("_rk").as("rank"))
+        VectorFunctions.pqDistTables(col("_qr"), codebook).as("dt"))
+    adcTopK(enc.join(broadcast(qt), Seq("cid"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** Compressed-domain near-dup PAIRS via PQ multi-index probing — the
@@ -588,9 +576,9 @@ object Ann {
     require(maxBucket >= 1, s"pqSubcodePairs: need maxBucket>=1, got $maxBucket")
     val m = codebook.length
     // two-step nv -> codes projection: see pqEncode's CollapseProject note
-    val cv = corpus.select(col(idCol).as("_id"), col(vecCol).cast("array<double>").as("_v"))
-      .withColumn("_nv", l2norm(col("_v")))
-      .withColumn("_codes", pqCodes(col("_nv"), codebook))
+    val cv = vectors(corpus, idCol, vecCol, "_id", "_v")
+      .withColumn("_nv", VectorFunctions.l2Normalize(col("_v")))
+      .withColumn("_codes", VectorFunctions.pqCodes(col("_nv"), codebook))
       .drop("_nv")
     // m leave-one-out keys: slot i's code replaced by 0 (codes are
     // 1-based, so 0 can never collide with a real code)
@@ -641,9 +629,7 @@ object Ann {
     val ranked = emb.select(col(labelCol).as("_lab"), col(idCol).as("_id"),
         col(vecCol).cast("array<double>").as("_v"))
       .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("_lab"))
-          .orderBy(md5(concat(lit(seed + ":"), col("_id").cast("string"))),
-            col("_id"))))
+        Window.partitionBy(col("_lab")).orderBy(md5Order("_id", seed): _*)))
       .filter(col("_rn") <= sampleN)
     ranked.groupBy(col("_lab"))
       .agg(sort_array(collect_list(struct(col("_rn"), col("_v")))).as("_sv"),
@@ -697,12 +683,9 @@ object Ann {
       quantize: Int): (DataFrame, DataFrame) = {
     require(k > 0 && iterations >= 1 && iterations <= 20,
       s"kmeansFixed: need k>0, 1<=iterations<=20; got k=$k iterations=$iterations")
-    val cv = emb.select(col(idCol).as("_id"),
-        col(vecCol).cast("array<double>").as("_v"))
+    val cv = vectors(emb, idCol, vecCol, "_id", "_v")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cents = cv
-      .orderBy(md5(concat(lit(seed + ":"), col("_id").cast("string"))), col("_id"))
-      .limit(k)
+    var cents = md5Sample(cv, "_id", seed, k)
       .select(col("_id").as("_cid"), col("_v").as("_cv"))
     var assigned: DataFrame = null
     var it = 0
@@ -848,45 +831,9 @@ object Ann {
         (idot.cast("double") /
           (sqrt(col("qn2").cast("double")) * sqrt(col("cn2").cast("double"))))
           .as("cos_sq"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos_sq").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos_sq"),
-        col("rank").cast("int").as("rank"))
+    rankWithin(scored, col("cos_sq").desc, "neighbor_id", k, rank = "rank")
   }
 
-  /** Embedding-distribution drift between two corpus halves: the
-    * cosine between the two MEAN vectors — the standard
-    * "did my embedding space move" monitor between snapshots /
-    * sources / time windows. Components are quantized to `scale`
-    * integer units (round-away-from-zero — portable), so the per-dim
-    * sums are EXACT order-free BIGINTs; the count factors cancel in
-    * the cosine, so the dot/norms run directly on the scaled integer
-    * sums and only the final sqrt/division are float. The 2⁻¹² default
-    * quantization (~2.4e-4 relative) is far below any drift worth
-    * alarming on. Output one row: (n_a, n_b, cos_means).
-    *
-    * Scale shape (100 TB): one (half, dim) groupBy of the exploded
-    * components — map-side combinable, exchange bounded at 2·dim rows;
-    * everything after runs on that aggregate. The integer dot is exact
-    * while |Σq| stays under ~3e9 per dim (10⁹ vectors at default
-    * scale); beyond that, quantize coarser.
-    */
-  /** Deterministic NSW neighbor graph (the HNSW level-0 layer): each
-    * node keeps its `m` best neighbors by exact cosine among its
-    * sign-LSH bucket peers, then edges are symmetrized. Candidate
-    * generation is the bucketed kind (never all-pairs): a node only
-    * meets the peers of its `nTables` buckets, and buckets above
-    * `maxBucket` members are dropped whole before the self-join (the
-    * minhash skew posture — a 10^6-member hot bucket is a 10^12-pair
-    * stage at crawl scale; its members still meet through their OTHER
-    * tables). Output: (src, dst) directed both ways, <= 2·n·m edges.
-    *
-    * Scale shape (100 TB): one corpus scan to bucket, one equi-join on
-    * (table, bucket) capped by maxBucket, one top-m window partitioned
-    * by src — every shuffle carries ids + one double, never vectors
-    * (vectors join back per bucket side from the base scan).
-    */
   /** Skew-capped sign-LSH bucket membership: (_t, _b, _nid) rows for
     * `cv` = (_nid, _v), with buckets above `maxBucket` members dropped
     * whole (their members still meet through their OTHER tables). */
@@ -941,12 +888,26 @@ object Ann {
       .localCheckpoint()
   }
 
+  /** Deterministic NSW neighbor graph (the HNSW level-0 layer): each
+    * node keeps its `m` best neighbors by exact cosine among its
+    * sign-LSH bucket peers, then edges are symmetrized. Candidate
+    * generation is the bucketed kind (never all-pairs): a node only
+    * meets the peers of its `nTables` buckets, and buckets above
+    * `maxBucket` members are dropped whole before the self-join (the
+    * minhash skew posture — a 10^6-member hot bucket is a 10^12-pair
+    * stage at crawl scale; its members still meet through their OTHER
+    * tables). Output: (src, dst) directed both ways, <= 2·n·m edges.
+    *
+    * Scale shape (100 TB): one corpus scan to bucket, one equi-join on
+    * (table, bucket) capped by maxBucket, one top-m window partitioned
+    * by src — every shuffle carries ids + one double, never vectors
+    * (vectors join back per bucket side from the base scan).
+    */
   def nswAdjacency(corpus: DataFrame, idCol: String, vecCol: String,
       m: Int = 16, planes: Array[Array[Array[Double]]],
       maxBucket: Int = 256): DataFrame = {
     require(m >= 1, s"nswAdjacency: need m>=1, got $m")
-    val cv = corpus.select(col(idCol).as("_nid"),
-      col(vecCol).cast("array<double>").as("_v"))
+    val cv = vectors(corpus, idCol, vecCol, "_nid", "_v")
     nswAdjFromBuckets(cv, signBucketFrame(cv, planes, maxBucket), m)
   }
 
@@ -988,12 +949,10 @@ object Ann {
       maxBucket: Int = 256): DataFrame = {
     require(k >= 1 && ef >= 1 && hops >= 1,
       s"hnswTopK: need k,ef,hops>=1, got $k/$ef/$hops")
-    val cv = corpus.select(col(idCol).as("_nid"),
-      col(vecCol).cast("array<double>").as("_v"))
+    val cv = vectors(corpus, idCol, vecCol, "_nid", "_v")
     val kept = signBucketFrame(cv, planes, maxBucket)
     val adj = nswAdjFromBuckets(cv, kept, m)
-    val qv = queries.select(col(idCol).as("query_id"),
-      col(vecCol).cast("array<double>").as("_qv"))
+    val qv = vectors(queries, idCol, vecCol, "query_id", "_qv")
     // V_0: the query's bucket peers (self excluded), exact-scored
     val qbk = queries.select(col(idCol).as("query_id"),
       posexplode(VectorFunctions.signBuckets(
@@ -1006,39 +965,49 @@ object Ann {
     // window, the next hop's anti-join, AND the final union — checkpoint
     // each (they are <= |q|·ef·m rows) so the beam walks forward instead
     // of re-deriving every earlier hop per reference
-    val v0 = c0
+    def score(cands: DataFrame): DataFrame = cands
       .join(broadcast(qv), Seq("query_id"))
       .join(cv, col("node") === col("_nid"))
       .select(col("query_id"), col("node"),
         VectorFunctions.cosine(col("_qv"), col("_v")).as("cos"))
       .localCheckpoint()
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("node").asc)
+    def best(scored: DataFrame, n: Int): DataFrame =
+      rankWithin(scored, col("cos").desc, "node", n)
+    val v0 = score(c0)
     var visited = v0
-    var frontier = v0.withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= ef).select(col("query_id"), col("node"))
+    var frontier = best(v0, ef).select(col("query_id"), col("node"))
     for (_ <- 1 to hops) {
       val cand = frontier.join(adj, col("node") === col("src"))
         .select(col("query_id"), col("dst").as("node"))
         .distinct()
         .join(visited.select(col("query_id"), col("node")),
           Seq("query_id", "node"), "left_anti")
-      val scored = cand
-        .join(broadcast(qv), Seq("query_id"))
-        .join(cv, col("node") === col("_nid"))
-        .select(col("query_id"), col("node"),
-          VectorFunctions.cosine(col("_qv"), col("_v")).as("cos"))
-        .localCheckpoint()
-      frontier = scored.withColumn("_rk", row_number().over(w))
-        .filter(col("_rk") <= ef).select(col("query_id"), col("node"))
+      val scored = score(cand)
+      frontier = best(scored, ef).select(col("query_id"), col("node"))
       visited = visited.union(scored)
     }
-    visited.filter(col("query_id") =!= col("node"))
-      .withColumn("_rk", row_number().over(w))
-      .filter(col("_rk") <= k)
+    best(visited.filter(col("query_id") =!= col("node")), k)
       .select(col("query_id"), col("node").as("neighbor_id"), col("cos"),
         col("_rk").as("rank"))
   }
 
+  /** Embedding-distribution drift between two corpus halves: the
+    * cosine between the two MEAN vectors — the standard
+    * "did my embedding space move" monitor between snapshots /
+    * sources / time windows. Components are quantized to `scale`
+    * integer units (round-away-from-zero — portable), so the per-dim
+    * sums are EXACT order-free BIGINTs; the count factors cancel in
+    * the cosine, so the dot/norms run directly on the scaled integer
+    * sums and only the final sqrt/division are float. The 2⁻¹² default
+    * quantization (~2.4e-4 relative) is far below any drift worth
+    * alarming on. Output one row: (n_a, n_b, cos_means).
+    *
+    * Scale shape (100 TB): one (half, dim) groupBy of the exploded
+    * components — map-side combinable, exchange bounded at 2·dim rows;
+    * everything after runs on that aggregate. The integer dot is exact
+    * while |Σq| stays under ~3e9 per dim (10⁹ vectors at default
+    * scale); beyond that, quantize coarser.
+    */
   def meanVectorDrift(vecs: DataFrame, vecCol: String, splitCond: Column,
       scale: Int = 4096): DataFrame = {
     require(scale >= 1, s"meanVectorDrift: need scale>=1, got $scale")

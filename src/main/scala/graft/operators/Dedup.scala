@@ -144,8 +144,8 @@ object Dedup {
     * product: explode distinct shingles, self-join on the shingle, count
     * intersections per pair (only pairs sharing >=1 shingle ever
     * materialize), then filter on the derived Jaccard.
-    */
-  /** `maxShingleDf`, when set, selects the PREFIX-FILTERED path
+    *
+    * `maxShingleDf`, when set, selects the PREFIX-FILTERED path
     * (AllPairs/PPJoin — see the inline notes): candidates come from a
     * self-join of each document's (1-t)-fraction rarest shingles, with
     * document frequency capped at `cap` as the skew guard; scores are
@@ -635,49 +635,43 @@ object Dedup {
     TextFunctions.md5SliceBandsOf(TextFunctions.md5SliceMinsOf(text, k, shingleK), bands)
   }
 
-  /** Embedding near-dup at scale: multi-table sign-LSH candidate
-    * generation (never O(n^2)), exact cosine check on candidates only.
-    */
-  def embeddingNearDupLsh(emb: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, nTables: Int = 8, planesPerTable: Int = 4,
-      dim: Int = 64, seed: Long = 42L,
-      planes: Option[Array[Array[Array[Double]]]] = None): DataFrame = {
-    val tables = planes.getOrElse((0 until nTables)
-      .map(t => graft.functions.VectorFunctions.hyperplanes(planesPerTable, dim, seed + t)).toArray)
-    // candidates shuffle as BARE ID PAIRS; the 64-double vectors join back
-    // only after distinct (carrying them through dropDuplicates was a
-    // multi-GB shuffle at 5k vectors — 16s vs 3s for the exact all-pairs).
-    val e = emb.select(col(idCol).as("jid"), col(vecCol).cast("array<double>").as("v"))
+  /** (jid, v) as array<double>, persisted: it feeds both the bucketing
+    * and the exact-cosine verify of one call's plan. */
+  private def persistedVectors(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol).as("jid"), col(vecCol).cast("array<double>").as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = e.select(col("jid"),
-        posexplode(graft.functions.VectorFunctions.signBuckets(col("v"), tables))
-          .as(Seq("tbl", "bucket")))
-    val cands = banded.as("a").join(banded.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-        col("a.jid") < col("b.jid"))
-      .select(col("a.jid").as("id_a"), col("b.jid").as("id_b"))
-      .distinct()
+
+  /** (jid, tbl, bucket): one row per vector of `e` (jid, v) and hash
+    * table of `planes`. */
+  private def signBanded(e: DataFrame, planes: Array[Array[Array[Double]]]): DataFrame =
+    e.select(col("jid"),
+      posexplode(graft.functions.VectorFunctions.signBuckets(col("v"), planes))
+        .as(Seq("tbl", "bucket")))
+
+  /** (id_a, id_b, cos >= `threshold`) for bare id candidates: the (jid,
+    * v) vectors of `ea`/`eb` join back only after the candidate distinct
+    * (carrying them through it was a multi-GB shuffle at 5k vectors —
+    * 16s vs 3s for the exact all-pairs). */
+  private def cosineVerify(cands: DataFrame, ea: DataFrame, eb: DataFrame,
+      threshold: Double): DataFrame =
     cands
-      .join(e.select(col("jid").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(e.select(col("jid").as("id_b"), col("v").as("vb")), Seq("id_b"))
+      .join(ea.select(col("jid").as("id_a"), col("v").as("va")), Seq("id_a"))
+      .join(eb.select(col("jid").as("id_b"), col("v").as("vb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         graft.functions.VectorFunctions.cosine(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= threshold)
+
+  /** Embedding near-dup at scale: multi-table sign-LSH candidate
+    * generation (never O(n^2)) under `planes`, one table of hyperplanes
+    * per hash table, and an exact cosine check on candidates only.
+    */
+  def embeddingNearDupLsh(emb: DataFrame, idCol: String, vecCol: String,
+      threshold: Double, planes: Array[Array[Array[Double]]]): DataFrame = {
+    val e = persistedVectors(emb, idCol, vecCol)
+    val cands = selfJoinBuckets(signBanded(e, planes), "jid", Seq("tbl", "bucket"), None)
+    cosineVerify(cands, e, e, threshold)
   }
 
-  /** [[embeddingNearDupLsh]] with the plane count DERIVED from the
-    * corpus: planesPerTable = log2(ceil(n / targetBucket))
-    * ([[graft.functions.VectorFunctions.planesForOccupancy]]), so mean
-    * bucket occupancy — and with it the bucket self-join's cost per
-    * bucket — stays constant as the corpus grows. The sizing action is
-    * an INDEX-BUILD cost (once per corpus, like fitting IVF centroids),
-    * not per-query work. Fixed-plane configs are Θ(n²/2^p): correct at
-    * one scale, quadratic at 10x (measured — BENCH_NOTES round 5).
-    *
-    * Planes are the deterministic md5 sign planes (as good as Gaussian
-    * for sign-LSH — only the projection's sign matters), so the whole
-    * auto-sized operator stays engine-portable and oracle-checkable.
-    */
   /** Cross-corpus embedding near-dup: INCOMING vectors vs an EXISTING
     * corpus — the embedding-modality twin of
     * [[minhashNearDupAgainstMd5]]. Both sides bucket under the SAME
@@ -691,41 +685,20 @@ object Dedup {
     */
   def embeddingNearDupAgainst(corpus: DataFrame, incoming: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
-      nTables: Int = 8, planesPerTable: Int = 4, dim: Int = 64,
-      seed: Long = 42L, planes: Option[Array[Array[Array[Double]]]] = None,
+      planes: Array[Array[Array[Double]]],
       maxBucket: Option[Int] = None): DataFrame = {
-    val tables = planes.getOrElse((0 until nTables)
-      .map(t => graft.functions.VectorFunctions.hyperplanes(planesPerTable, dim, seed + t)).toArray)
     // per-call persists under the scoped-cache convention (see
-    // minhashNearDupAgainstMd5): each side feeds bucketing AND the
-    // exact-cosine verify in this call's plan only; suite runners clear
-    // per query, the LRU store evicts under pressure otherwise
-    def prep(df: DataFrame) = df
-      .select(col(idCol).as("jid"), col(vecCol).cast("array<double>").as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def banded(e: DataFrame) = e.select(col("jid"),
-      posexplode(graft.functions.VectorFunctions.signBuckets(col("v"), tables))
-        .as(Seq("tbl", "bucket")))
-    val ec = prep(corpus)
-    val ei = prep(incoming)
-    val bandedC = maxBucket match {
-      case Some(cap) => banded(ec)
-        .withColumn("_bn",
-          count(lit(1)).over(Window.partitionBy(col("tbl"), col("bucket"))))
-        .filter(col("_bn") <= cap).drop("_bn")
-      case None => banded(ec)
-    }
+    // minhashNearDupAgainstMd5): suite runners clear per query, the LRU
+    // store evicts under pressure otherwise
+    val ec = persistedVectors(corpus, idCol, vecCol)
+    val ei = persistedVectors(incoming, idCol, vecCol)
+    val bandedC = capBuckets(signBanded(ec, planes), Seq("tbl", "bucket"), maxBucket)
     // bare id pairs through the candidate distinct; vectors join back after
     val cands = bandedC.select(col("jid").as("id_a"), col("tbl"), col("bucket"))
-      .join(banded(ei).select(col("jid").as("id_b"), col("tbl"), col("bucket")),
+      .join(signBanded(ei, planes).select(col("jid").as("id_b"), col("tbl"), col("bucket")),
         Seq("tbl", "bucket"))
       .select("id_a", "id_b").distinct()
-    cands
-      .join(ec.select(col("jid").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(ei.select(col("jid").as("id_b"), col("v").as("vb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.VectorFunctions.cosine(col("va"), col("vb")).as("cos"))
-      .filter(col("cos") >= threshold)
+    cosineVerify(cands, ec, ei, threshold)
   }
 
   /** The REUSABLE corpus-side bucket index for stream-ingestion vector
@@ -745,16 +718,24 @@ object Dedup {
         posexplode(graft.functions.VectorFunctions.signBuckets(col("cvec"), planes))
           .as(Seq("tbl", "bucket")))
       .select("corpus_id", "tbl", "bucket", "cvec")
-    (maxBucket match {
-      case Some(cap) => banded
-        .withColumn("_bn",
-          count(lit(1)).over(Window.partitionBy(col("tbl"), col("bucket"))))
-        .filter(col("_bn") <= cap).drop("_bn")
-      case None => banded
-    }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    capBuckets(banded, Seq("tbl", "bucket"), maxBucket)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
-  /** `shrinkAnchorBits`: when set, bucket OCCUPANCY shrinks as the
+  /** [[embeddingNearDupLsh]] with the plane count DERIVED from the
+    * corpus: planesPerTable = log2(ceil(n / targetBucket))
+    * ([[graft.functions.VectorFunctions.planesForOccupancy]]), so mean
+    * bucket occupancy — and with it the bucket self-join's cost per
+    * bucket — stays constant as the corpus grows. The sizing action is
+    * an INDEX-BUILD cost (once per corpus, like fitting IVF centroids),
+    * not per-query work. Fixed-plane configs are Θ(n²/2^p): correct at
+    * one scale, quadratic at 10x (measured — BENCH_NOTES round 5).
+    *
+    * Planes are the deterministic md5 sign planes (as good as Gaussian
+    * for sign-LSH — only the projection's sign matters), so the whole
+    * auto-sized operator stays engine-portable and oracle-checkable.
+    *
+    * `shrinkAnchorBits`: when set, bucket OCCUPANCY shrinks as the
     * corpus grows past 2^(anchor+1) vectors — one extra plane per two
     * doublings of n beyond the anchor (extra = max(0,
     * (bitLength(n−1) − anchor) / 2), integer-exact and mirrored by the
@@ -784,8 +765,7 @@ object Dedup {
       graft.functions.VectorFunctions.extraPlanesForScale(n, _))
     val p = math.min(20, base + extra)
     embeddingNearDupLsh(emb, idCol, vecCol, threshold,
-      nTables = nTables, planesPerTable = p, dim = dim,
-      planes = Some(graft.functions.VectorFunctions.md5SignPlanes(nTables, p, dim)))
+      graft.functions.VectorFunctions.md5SignPlanes(nTables, p, dim))
   }
 
   /** 64-bit SimHash over token hashes: bit j of the result is the sign of
@@ -1080,9 +1060,7 @@ object Dedup {
     require(nClusters > 0 && maxCluster > 0,
       s"semanticDedup: need nClusters>0, maxCluster>0; got $nClusters, $maxCluster")
     val cv = emb.select(col(idCol).as("id"), col(vecCol).cast("array<double>").as("v"))
-    val cents = cv
-      .orderBy(md5(concat(lit(seed + ":"), col("id").cast("string"))), col("id"))
-      .limit(nClusters)
+    val cents = Ann.md5Sample(cv, "id", seed, nClusters)
       .select(col("id").as("cid"), col("v").as("cvec"))
     val scored = cv.crossJoin(broadcast(cents))
       .select(col("id"), col("v"), col("cid"),

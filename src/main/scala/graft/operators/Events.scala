@@ -655,11 +655,13 @@ object Events {
     val lc2 = math.log((1.0 - p1) / (1.0 - p0))
     val hi = math.log((1.0 - beta) / alpha)
     val lo = math.log(beta / (1.0 - alpha))
-    val day = col(tsCol).cast("date")
+    // a conversion flag per (day, user), then plain per-day counts (two
+    // count_distinct would plan an Expand); null users count in neither
     val daily = events
-      .groupBy(day.as("_day"))
-      .agg(count_distinct(col(userCol)).as("_n"),
-        count_distinct(when(convCond, col(userCol))).as("_x"))
+      .groupBy(col(tsCol).cast("date").as("_day"), col(userCol).as("_u"))
+      .agg(max(when(convCond && col(userCol).isNotNull, 1L).otherwise(0L)).as("_c"))
+      .groupBy(col("_day"))
+      .agg(count(col("_u")).as("_n"), sum(col("_c")).as("_x"))
     val pathT =
       "array<struct<day:date,n:bigint,x:bigint,llr:double,decision:string>>"
     val zero = struct(lit(0.0).as("llr"), lit(false).as("stop"),

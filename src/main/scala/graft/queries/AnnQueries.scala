@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Ann, Corpus, Dedup, Retrieval}
@@ -28,29 +29,22 @@ object AnnQueries {
           planes = graft.functions.VectorFunctions.md5SignPlanes(8, 6, 64))
         .orderBy("query_id", "rank")
     }) {
-      hnswSql(k = 5, m = 16, ef = 16, hops = 3, maxBucket = 256)
+      s"""WITH ${hnswCtes(m = 16, ef = 16, hops = 3, maxBucket = 256)}
+         |SELECT query_id, node AS neighbor_id, cos, CAST(rk AS INT) AS rank
+         |FROM fin WHERE rk <= 5 ORDER BY query_id, rank""".stripMargin
     },
     // EXT hnsw recall eval: beam top-10 vs brute top-10 — completes the
     // LSH/IVF/PQ/HNSW recall-eval family (same left-join shape)
     Query("ann_recall_hnsw")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
-      val brute = Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val hnsw = Ann.hnswTopK(emb, q, "vec_id", "embedding", k = 10,
-          m = 16, ef = 16, hops = 3,
-          planes = graft.functions.VectorFunctions.md5SignPlanes(8, 6, 64))
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
-      brute.join(hnsw, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("k"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k").cast("double"), 6)
-            .as("recall"))
-        .orderBy("query_id")
+      recallVsBrute(emb, q, Ann.hnswTopK(emb, q, "vec_id", "embedding", k = 10,
+        m = 16, ef = 16, hops = 3,
+        planes = graft.functions.VectorFunctions.md5SignPlanes(8, 6, 64)))
     }) {
-      hnswRecallSql(k = 10, m = 16, ef = 16, hops = 3, maxBucket = 256)
+      s"""WITH ${hnswCtes(m = 16, ef = 16, hops = 3, maxBucket = 256)},
+         | hn AS (SELECT query_id, node AS neighbor_id FROM fin WHERE rk <= 10),
+         | ${recallSql("hn", 10)}""".stripMargin
     },
     // EXT RAG-prep chunking (Corpus.chunkDocuments): 32-token windows,
     // 8-token overlap, expression-only — the map-side row multiplier
@@ -139,7 +133,7 @@ object AnnQueries {
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("query_id", "rank")
     }) {
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $embCte,
          | sg AS (SELECT * FROM (VALUES $jlSignsSqlRows) AS t(d, s)),
          | p AS (SELECT vec_id, list(y ORDER BY d) AS pv FROM (
          |        SELECT e.vec_id, sg.d, list_sum(list_transform(range(1, 65), i -> e.v[i] * sg.s[i])) AS y
@@ -150,10 +144,8 @@ object AnnQueries {
          |   (sqrt(list_sum(list_transform(range(1, 17), i -> q.pv[i] * q.pv[i]))) *
          |    sqrt(list_sum(list_transform(range(1, 17), i -> c.pv[i] * c.pv[i])))) AS cos
          |   FROM q, p c WHERE c.vec_id <> q.vec_id),
-         | r AS (SELECT query_id, neighbor_id, cos,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-         |        FROM s)
-         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         | $cosRankCte
+         |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT cross-corpus EMBEDDING near-dup (the vector twin of
     // minhash_against): incoming = exact copies of the %9 vectors plus
@@ -171,11 +163,11 @@ object AnnQueries {
             (x, i) => when(i === 0, lit(0.0f)).otherwise(x)).as("embedding"))
       Dedup.embeddingNearDupAgainst(emb, exactIn.unionByName(nearIn),
           "vec_id", "embedding", 0.3,
-          planes = Some(graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)),
+          planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64),
           maxBucket = Some(256))
         .orderBy("id_a", "id_b")
     }) {
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $embCte,
          | ei AS (SELECT vec_id + 500000 AS vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
          |        FROM embeddings WHERE vec_id % 9 = 0
          |        UNION ALL
@@ -187,9 +179,7 @@ object AnnQueries {
          | okc AS (SELECT t, bucket FROM bkc GROUP BY t, bucket HAVING COUNT(*) <= 256),
          | bcc AS (SELECT bkc.* FROM bkc JOIN okc USING (t, bucket)),
          | cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM bcc a JOIN bki b USING (t, bucket)),
-         | s AS (SELECT id_a, id_b, ${cosSql("ea.v", "eb.v")} AS cos
-         |       FROM cand JOIN e ea ON ea.vec_id = id_a JOIN ei eb ON eb.vec_id = id_b)
-         |SELECT id_a, id_b, cos FROM s WHERE cos >= 0.3 ORDER BY id_a, id_b""".stripMargin
+         | ${cosineVerifySql(0.3, incoming = "ei")}""".stripMargin
     },
     // EXT embedding near-duplicate pairs (cosine >= 0.3): deterministic
     // sign-LSH candidates + exact-cosine verify. Planes are AUTO-SIZED
@@ -211,11 +201,7 @@ object AnnQueries {
         .orderBy("id_a", "id_b")
     }) {
       s"""WITH ${lshBucketCtesAuto(8, 128, shrinkAnchorBits = Some(11))},
-         | cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |          FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         | s AS (SELECT id_a, id_b, ${cosSql("ea.v", "eb.v")} AS cos
-         |       FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb ON eb.vec_id = id_b)
-         |SELECT id_a, id_b, cos FROM s WHERE cos >= 0.3 ORDER BY id_a, id_b""".stripMargin
+         | ${lshNearDupSql(0.3)}""".stripMargin
     },
     // EXT scale-ADAPTIVE near-dup: planesPerTable is DERIVED from the
     // corpus count (integer bit-length of ceil(n/64) — mirrored exactly
@@ -229,11 +215,7 @@ object AnnQueries {
         .orderBy("id_a", "id_b")
     }) {
       s"""WITH ${lshBucketCtesAuto(8, 64)},
-         | cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |          FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         | s AS (SELECT id_a, id_b, ${cosSql("ea.v", "eb.v")} AS cos
-         |       FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb ON eb.vec_id = id_b)
-         |SELECT id_a, id_b, cos FROM s WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin
+         | ${lshNearDupSql(0.4)}""".stripMargin
     },
     // EXT embedding near-dup, precision-lean AUTO-SIZED config (16
     // tables, targetBucket=32 — more planes per table than the headline,
@@ -246,11 +228,7 @@ object AnnQueries {
         .orderBy("id_a", "id_b")
     }) {
       s"""WITH ${lshBucketCtesAuto(16, 32)},
-         | cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-         |          FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
-         | s AS (SELECT id_a, id_b, ${cosSql("ea.v", "eb.v")} AS cos
-         |       FROM cand JOIN e ea ON ea.vec_id = id_a JOIN e eb ON eb.vec_id = id_b)
-         |SELECT id_a, id_b, cos FROM s WHERE cos >= 0.3 ORDER BY id_a, id_b""".stripMargin
+         | ${lshNearDupSql(0.3)}""".stripMargin
     },
     // EXT SemDeDup-style semantic dedup: md5-seeded centroids (the
     // oracle-portable codebook stand-in, same discipline as ann_ivf_topk),
@@ -264,7 +242,7 @@ object AnnQueries {
       // semantic dedup mirror: same md5 centroid pick, same argmax
       // (ccos DESC, cid) tie-break, same lower-id flagging; cluster cap
       // mirrored with HAVING
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $embCte,
          | cents AS (SELECT vec_id AS cid, v AS cvec FROM e ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
          | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
          | assign AS (SELECT vec_id, cid FROM (
@@ -284,18 +262,15 @@ object AnnQueries {
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("query_id", "rank")
     }) {
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $embCte,
         | q AS (SELECT * FROM e WHERE vec_id < 5),
         | s AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |   list_sum(list_transform(range(1, 65), i -> q.v[i] * c.v[i])) /
         |   (sqrt(list_sum(list_transform(range(1, 65), i -> q.v[i] * q.v[i]))) *
         |    sqrt(list_sum(list_transform(range(1, 65), i -> c.v[i] * c.v[i])))) AS cos
         |   FROM q, e c WHERE c.vec_id <> q.vec_id),
-        | r AS (SELECT query_id, neighbor_id, cos,
-        |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-        |        FROM s)
-        |SELECT query_id, neighbor_id, cos, rank FROM r
-        |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+        | $cosRankCte
+        |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT ANN recall evaluation: LSH top-10 judged against the brute
     // cosine ground truth per query — the quality gate that decides
@@ -304,43 +279,16 @@ object AnnQueries {
     Query("ann_recall_eval")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
-      val brute = Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val lsh = Ann.lshTopK(emb, q, "vec_id", "embedding", 10,
-          planes = Some(graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)))
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
-      brute.join(lsh, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("k"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k").cast("double"), 6)
-            .as("recall"))
-        .orderBy("query_id")
+      recallVsBrute(emb, q, Ann.lshTopK(emb, q, "vec_id", "embedding", 10,
+        planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)))
     }) {
       // ANN-recall mirror: the lsh bucket CTEs and the brute chain share
       // ONE e table; per-query left-join overlap count
       s"""WITH ${lshBucketCtes(8, 4)},
-         | cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-         |          FROM bk q JOIN bk c ON q.t = c.t AND q.bucket = c.bucket
-         |          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-         | sl AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | rl AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sl),
-         | lsh AS (SELECT query_id, neighbor_id FROM rl WHERE rank <= 10),
-         | sb AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |        ${cosSql("q.v", "c.v")} AS cos
-         |       FROM e q, e c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-         | rb AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sb),
-         | brute AS (SELECT query_id, neighbor_id FROM rb WHERE rank <= 10)
-         |SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS k,
-         |  CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-         |  ROUND(CAST(COUNT(l.neighbor_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-         |FROM brute b LEFT JOIN lsh l
-         |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+         | $lshCandCte,
+         | $rerankCtes,
+         | lsh AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 10),
+         | ${recallSql("lsh", 10)}""".stripMargin
     },
     // EXT IVF recall evaluation: the md5-centroid IVF (nprobe=2/8)
     // judged against brute cosine — ann_recall_eval's pattern on the
@@ -349,47 +297,17 @@ object AnnQueries {
     Query("ann_recall_ivf")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
-      val brute = Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val ivf = Ann.ivfTopK(emb, q, "vec_id", "embedding", 10,
-          nCentroids = 8, nProbe = 2)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
-      brute.join(ivf, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("k"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k").cast("double"), 6)
-            .as("recall"))
-        .orderBy("query_id")
+      recallVsBrute(emb, q, Ann.ivfTopK(emb, q, "vec_id", "embedding", 10,
+        nCentroids = 8, nProbe = 2))
     }) {
       // IVF-recall mirror: the ann_ivf_topk CTE chain at k=10 judged
       // against the brute chain over the shared e table
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | cents AS (SELECT vec_id AS cid, v AS cvec FROM e ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
-         | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
-         | assign AS (SELECT vec_id AS neighbor_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
-         | probe AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2),
-         | cand AS (SELECT DISTINCT query_id, neighbor_id FROM probe JOIN assign USING (cid) WHERE neighbor_id <> query_id),
-         | si AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | ri AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM si),
-         | ivf AS (SELECT query_id, neighbor_id FROM ri WHERE rank <= 10),
-         | sb AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         |        ${cosSql("q.v", "c.v")} AS cos
-         |       FROM e q, e c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-         | rb AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sb),
-         | brute AS (SELECT query_id, neighbor_id FROM rb WHERE rank <= 10)
-         |SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS k,
-         |  CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-         |  ROUND(CAST(COUNT(l.neighbor_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-         |FROM brute b LEFT JOIN ivf l
-         |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+      s"""WITH $embCte,
+         | ${ivfCellCtes()},
+         | $ivfCandCte,
+         | $rerankCtes,
+         | ivf AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 10),
+         | ${recallSql("ivf", 10)}""".stripMargin
     },
     // EXT PQ recall eval: ADC top-10 under the frozen PqCodebook vs
     // exact brute-force top-10 — quantifies what the 64x compression
@@ -398,43 +316,14 @@ object AnnQueries {
     Query("ann_recall_pq")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 5)
-      val brute = Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 10)
-        .select(col("query_id"), col("neighbor_id"))
-      val pq = Ann.pqAdcTopK(emb, q, "vec_id", "embedding", PqCodebook.arr, 10)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit"))
-      brute.join(pq, Seq("query_id", "neighbor_id"), "left")
-        .groupBy("query_id")
-        .agg(count(lit(1)).as("k"),
-          sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
-        .select(col("query_id"), col("k"), col("n_hits"),
-          round(col("n_hits").cast("double") / col("k").cast("double"), 6)
-            .as("recall"))
-        .orderBy("query_id")
+      recallVsBrute(emb, q,
+        Ann.pqAdcTopK(emb, q, "vec_id", "embedding", PqCodebook.arr, 10))
     }) {
       // PQ recall mirror: the frozen-codebook encode/ADC CTEs at k=10
       // against the raw-cosine brute top-10
-      import PqSqlBits._
-      s"""WITH cb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | n AS ($normCte),
-         | c AS (SELECT vec_id AS neighbor_id, $codes AS codes FROM n, cb),
-         | q AS (SELECT vec_id AS query_id, $dts FROM n, cb WHERE vec_id < 5),
-         | s AS (SELECT q.query_id, c.neighbor_id, ROUND($adist, 6) AS adist FROM q, c WHERE c.neighbor_id <> q.query_id),
-         | r AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS rank FROM s),
+      s"""WITH $pqAdcCtes,
          | pq AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 10),
-         | sb AS (SELECT q2.vec_id AS query_id, c2.vec_id AS neighbor_id,
-         |        ${cosSql("q2.v", "c2.v")} AS cos
-         |       FROM e q2, e c2 WHERE q2.vec_id < 5 AND c2.vec_id <> q2.vec_id),
-         | rb AS (SELECT query_id, neighbor_id,
-         |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sb),
-         | brute AS (SELECT query_id, neighbor_id FROM rb WHERE rank <= 10)
-         |SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS k,
-         |  CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
-         |  ROUND(CAST(COUNT(l.neighbor_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-         |FROM brute b LEFT JOIN pq l
-         |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
-         |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+         | ${recallSql("pq", 10)}""".stripMargin
     },
     // EXT IVF-ANN with a REAL KMeans codebook — the production index
     // (Ann.ivfTopKWithCentroids over the FROZEN IvfCentroids literal,
@@ -457,21 +346,14 @@ object AnnQueries {
       // tie-break), same nProbe=2 probing, same exact rerank
       val centRows = IvfCentroids.sqlLists.zipWithIndex
         .map { case (l, i) => s"($i, $l)" }.mkString(",\n   ")
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | cents AS (SELECT cid, list_transform(cvec, x -> CAST(x AS DOUBLE)) AS cvec
-         |   FROM (VALUES
-         |   $centRows) t(cid, cvec)),
-         | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
-         | assign AS (SELECT vec_id AS neighbor_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
-         | probe AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2),
-         | cand AS (SELECT DISTINCT query_id, neighbor_id FROM probe JOIN assign USING (cid) WHERE neighbor_id <> query_id),
-         | s AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | r AS (SELECT query_id, neighbor_id, cos,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank FROM s)
-         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+      val cents = s"""SELECT cid, list_transform(cvec, x -> CAST(x AS DOUBLE)) AS cvec
+                     |   FROM (VALUES
+                     |   $centRows) t(cid, cvec)""".stripMargin
+      s"""WITH $embCte,
+         | ${ivfCellCtes(cents = Some(cents))},
+         | $ivfCandCte,
+         | $rerankCtes
+         |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT IVF-ANN: deterministic md5-sampled centroids, nProbe=2 cells,
     // exact rerank (the clustering complement to sign-LSH; hash-checked)
@@ -482,19 +364,11 @@ object AnnQueries {
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("query_id", "rank")
     }) {
-      s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | cents AS (SELECT vec_id AS cid, v AS cvec FROM e ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
-         | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
-         | assign AS (SELECT vec_id AS neighbor_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
-         | probe AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2),
-         | cand AS (SELECT DISTINCT query_id, neighbor_id FROM probe JOIN assign USING (cid) WHERE neighbor_id <> query_id),
-         | s AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | r AS (SELECT query_id, neighbor_id, cos,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank FROM s)
-         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+      s"""WITH $embCte,
+         | ${ivfCellCtes()},
+         | $ivfCandCte,
+         | $rerankCtes
+         |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT multi-probe LSH ANN: queries also probe the lowest-margin
     // flipped bucket per table — recall of ~2x the tables at one corpus
@@ -502,7 +376,7 @@ object AnnQueries {
     Query("ann_lsh_multiprobe")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.lshTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3,
-          planes = Some(graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)),
+          planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64),
           multiProbe = true)
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("query_id", "rank")
@@ -518,32 +392,22 @@ object AnnQueries {
          | cand AS (SELECT DISTINCT qp.vec_id AS query_id, c.vec_id AS neighbor_id
          |          FROM qp JOIN bk c ON qp.t = c.t AND qp.bucket = c.bucket
          |          WHERE c.vec_id <> qp.vec_id),
-         | s AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | r AS (SELECT query_id, neighbor_id, cos,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-         |        FROM s)
-         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         | $rerankCtes
+         |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT LSH-bucketed approximate ANN (deterministic md5 planes —
     // hash-checked; recall vs brute force tested in specs)
     Query("ann_lsh_topk")((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Ann.lshTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3,
-          planes = Some(graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)))
+          planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64))
         .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
         .orderBy("query_id", "rank")
     }) {
       s"""WITH ${lshBucketCtes(8, 4)},
-         | cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-         |          FROM bk q JOIN bk c ON q.t = c.t AND q.bucket = c.bucket
-         |          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-         | s AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
-         |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
-         | r AS (SELECT query_id, neighbor_id, cos,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank
-         |        FROM s)
-         |SELECT query_id, neighbor_id, cos, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         | $lshCandCte,
+         | $rerankCtes
+         |${topKSelect("cos", 3)}""".stripMargin
     },
     // EXT product-quantization ADC top-k (Ann.pqAdcTopK): corpus rows
     // reduced to 4 one-byte codes against the FROZEN PqCodebook literal
@@ -566,16 +430,8 @@ object AnnQueries {
       // of Spark's `aggregate`), first-match argmin via
       // list_position(list_min), 1-based table lookups summed in the same
       // left-associative order as Spark's zip_with fold.
-      import PqSqlBits._
-      s"""WITH cb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | n AS ($normCte),
-         | c AS (SELECT vec_id AS neighbor_id, $codes AS codes FROM n, cb),
-         | q AS (SELECT vec_id AS query_id, $dts FROM n, cb WHERE vec_id < 5),
-         | s AS (SELECT q.query_id, c.neighbor_id, ROUND($adist, 6) AS adist FROM q, c WHERE c.neighbor_id <> q.query_id),
-         | r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS INT) AS rank FROM s)
-         |SELECT query_id, neighbor_id, adist, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+      s"""WITH $pqAdcCtes
+         |${topKSelect("adist", 3)}""".stripMargin
     },
     // EXT IVF-PQ composed (Ann.ivfPqTopK): md5-sampled coarse cells
     // prune candidates to nProbe cells, the frozen PqCodebook scores
@@ -595,13 +451,8 @@ object AnnQueries {
       // generated from the same frozen artifacts the Spark side uses
       import PqSqlBits._
       s"""WITH cb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         | cents AS (SELECT vec_id AS cid, v AS cvec FROM e ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
-         | ca AS (SELECT e.vec_id, c.cid, ${cosSql("e.v", "c.cvec")} AS ccos FROM e, cents c),
-         | assign AS (SELECT vec_id AS neighbor_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
-         | probe AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2),
+         | $embCte,
+         | ${ivfCellCtes()},
          | n AS ($normCte),
          | c AS (SELECT vec_id AS neighbor_id, $codes AS codes FROM n, cb),
          | q AS (SELECT vec_id AS query_id, $dts FROM n, cb WHERE vec_id < 5),
@@ -609,9 +460,8 @@ object AnnQueries {
          |          WHERE assign.neighbor_id <> probe.query_id),
          | s AS (SELECT cand.query_id, cand.neighbor_id, ROUND($adist, 6) AS adist
          |       FROM cand JOIN q ON q.query_id = cand.query_id JOIN c ON c.neighbor_id = cand.neighbor_id),
-         | r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS INT) AS rank FROM s)
-         |SELECT query_id, neighbor_id, adist, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         | $adcRankCte
+         |${topKSelect("adist", 3)}""".stripMargin
     },
     // EXT int8 scalar-quantized ANN (Ann.sqQuantize/sqTopK): the
     // index stores dim BYTES + one scale per vector (4-8x smaller),
@@ -623,7 +473,7 @@ object AnnQueries {
       Ann.sqTopK(emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding", 3)
         .orderBy("query_id", "rank")
     }) {
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      s"""WITH $embCte,
         | mz AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) AS ma FROM e),
         | qz AS (SELECT vec_id,
         |    CASE WHEN ma = 0 THEN [CAST(0 AS BIGINT) for i in range(1, 65)]
@@ -656,7 +506,7 @@ object AnnQueries {
       // on the full code tuple
       import PqSqlBits._
       s"""WITH cb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+         | $embCte,
          | n AS ($normCte),
          | c AS (SELECT vec_id, $codes AS codes FROM n, cb)
          |SELECT array_to_string(codes, '-') AS code_key,
@@ -679,7 +529,7 @@ object AnnQueries {
       // bucket cap, exact-cosine verify over the raw vectors
       import PqSqlBits._
       s"""WITH cb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+         | $embCte,
          | n AS ($normCte),
          | c AS (SELECT vec_id, $codes AS codes FROM n, cb),
          | k AS (SELECT vec_id, mi AS slot,
@@ -717,7 +567,7 @@ object AnnQueries {
       // lit(1.0) (a bare 1.0 literal would be DECIMAL here)
       s"""WITH $bm25Ctes,
          | lexr AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS INT) AS rank FROM agg),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+         | $embCte,
          | q AS (SELECT * FROM e WHERE vec_id = 0),
          | s AS (SELECT c.vec_id AS doc_id, ${cosSql("q.v", "c.v")} AS cos
          |       FROM q, e c WHERE c.vec_id <> q.vec_id),
@@ -747,7 +597,7 @@ object AnnQueries {
       // same id tie-break; (1 - 0.7) is EVALUATED, matching Scala's
       // 1.0 - lambda double (a 0.3 literal would differ by 1 ulp)
       s"""WITH RECURSIVE
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+         | $embCte,
          | q AS (SELECT * FROM e WHERE vec_id < 5),
          | s AS (SELECT q.vec_id AS qid, c.vec_id AS cid, ${cosSql("q.v", "c.v")} AS rel
          |       FROM q JOIN e c ON c.vec_id <> q.vec_id),
@@ -826,9 +676,7 @@ object AnnQueries {
       // argmax assignment (ties toward smaller centroid id), round-12
       // decimal component sums, round-9 centroid grid, empty clusters
       // keep their seed centroid via the left-join coalesce
-      kmeansReplaySql(
-        "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings",
-        k = 8)
+      kmeansReplaySql(embSql, k = 8)
     },
     // EXT end-to-end TEXT clustering (Corpus.hashedDocVectors +
     // Ann.kmeansFixed): embedding-free — documents become integer-exact
@@ -889,8 +737,7 @@ object AnnQueries {
     }) {
       // silhouette mirror: the replay's s2 already scores every (vector,
       // centroid) pair — own join + max-other groupBy + decimal mean
-      val eSql = "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
-      s"""WITH ${kmeansReplayCtes(eSql, 8)},
+      s"""WITH ${kmeansReplayCtes(embSql, 8)},
          | own AS (SELECT s2.vec_id, a2.cid, s2.cos AS oc
          |         FROM s2 JOIN a2 ON s2.vec_id = a2.vec_id AND s2.cid = a2.cid),
          | oth AS (SELECT s2.vec_id, MAX(s2.cos) AS bc
@@ -942,17 +789,12 @@ object AnnQueries {
       val normCte = PqSqlBits.normCte
       import RqSqlBits.{cbCols, codes, dts, adist}
       s"""WITH rcb AS (SELECT $cbCols),
-         | e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+         | $embCte,
          | n AS ($normCte),
-         | cents AS (SELECT vec_id AS cid, nv AS cvec FROM n ORDER BY md5('42:' || vec_id), vec_id LIMIT 8),
-         | ca AS (SELECT n.vec_id, ct.cid, ${cosSql("n.nv", "ct.cvec")} AS ccos FROM n, cents ct),
-         | assign AS (SELECT vec_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
-         | probe AS (SELECT vec_id AS query_id, cid FROM (
-         |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2),
-         | cr AS (SELECT a.vec_id AS neighbor_id, a.cid,
+         | ${ivfCellCtes(src = "n", vec = "nv")},
+         | cr AS (SELECT a.neighbor_id, a.cid,
          |         list_transform(range(1, 65), i -> n.nv[i] - ct.cvec[i]) AS rv
-         |        FROM assign a JOIN n ON n.vec_id = a.vec_id JOIN cents ct ON ct.cid = a.cid),
+         |        FROM assign a JOIN n ON n.vec_id = a.neighbor_id JOIN cents ct ON ct.cid = a.cid),
          | c AS (SELECT neighbor_id, cid, $codes AS codes FROM cr, rcb),
          | qr AS (SELECT p.query_id, p.cid,
          |         list_transform(range(1, 65), i -> n.nv[i] - ce.cvec[i]) AS rv
@@ -960,11 +802,128 @@ object AnnQueries {
          | q AS (SELECT query_id, cid, $dts FROM qr, rcb),
          | s AS (SELECT q.query_id, c.neighbor_id, ROUND($adist, 6) AS adist
          |       FROM q JOIN c USING (cid) WHERE c.neighbor_id <> q.query_id),
-         | r AS (SELECT query_id, neighbor_id, adist,
-         |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS INT) AS rank FROM s)
-         |SELECT query_id, neighbor_id, adist, rank FROM r WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
+         | $adcRankCte
+         |${topKSelect("adist", 3)}""".stripMargin
     },
   )
+
+  /** The embeddings as doubles: every vector oracle's `e(vec_id, v)`. */
+  private def embSql: String =
+    "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings"
+
+  private def embCte: String = s"e AS ($embSql)"
+
+  /** `cand`: each of the 5 queries' sign-LSH bucket peers over `bk`. */
+  private def lshCandCte: String =
+    """cand AS (SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
+      |          FROM bk q JOIN bk c ON q.t = c.t AND q.bucket = c.bucket
+      |          WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id)""".stripMargin
+
+  /** IVF cells over `src(vec_id, vec)`: `cents` (8 md5-sampled rows
+    * unless given), `ca` (cosines), `assign` (each vector's nearest cell)
+    * and `probe` (each query's 2 nearest), ties toward the smaller cid. */
+  private def ivfCellCtes(src: String = "e", vec: String = "v",
+      cents: Option[String] = None): String = {
+    val centsSql = cents.getOrElse(
+      s"SELECT vec_id AS cid, $vec AS cvec FROM $src ORDER BY md5('42:' || vec_id), vec_id LIMIT 8")
+    s"""cents AS ($centsSql),
+       | ca AS (SELECT $src.vec_id, c.cid, ${cosSql(s"$src.$vec", "c.cvec")} AS ccos FROM $src, cents c),
+       | assign AS (SELECT vec_id AS neighbor_id, cid FROM (
+       |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca) WHERE rn = 1),
+       | probe AS (SELECT vec_id AS query_id, cid FROM (
+       |    SELECT vec_id, cid, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid) AS rn FROM ca WHERE vec_id < 5) WHERE rn <= 2)""".stripMargin
+  }
+
+  /** `cand`: the corpus rows of each query's probed cells. */
+  private def ivfCandCte: String =
+    "cand AS (SELECT DISTINCT query_id, neighbor_id FROM probe JOIN assign USING (cid) WHERE neighbor_id <> query_id)"
+
+  /** The exact-cosine rerank of `cand(query_id, neighbor_id)` over the
+    * shared `e`: `s` scores each pair, `r` ranks per query (cos desc,
+    * neighbor_id asc). */
+  private def rerankCtes: String =
+    s"""s AS (SELECT query_id, neighbor_id, ${cosSql("eq.v", "ec.v")} AS cos
+       |       FROM cand JOIN e eq ON eq.vec_id = query_id JOIN e ec ON ec.vec_id = neighbor_id),
+       | $cosRankCte""".stripMargin
+
+  /** `r`: the cosine-scored `s(query_id, neighbor_id, cos)` ranked per
+    * query (cos desc, neighbor_id asc). */
+  private def cosRankCte: String =
+    """r AS (SELECT query_id, neighbor_id, cos,
+      |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS INT) AS rank
+      |        FROM s)""".stripMargin
+
+  /** `r`: the ADC-scored `s(query_id, neighbor_id, adist)` ranked per
+    * query (adist asc, neighbor_id asc). */
+  private def adcRankCte: String =
+    """r AS (SELECT query_id, neighbor_id, adist,
+      |        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY adist, neighbor_id) AS INT) AS rank FROM s)""".stripMargin
+
+  /** The frozen-PqCodebook encode/ADC chain, ending at the ranked `r`. */
+  private def pqAdcCtes: String = {
+    import PqSqlBits._
+    s"""cb AS (SELECT $cbCols),
+       | $embCte,
+       | n AS ($normCte),
+       | c AS (SELECT vec_id AS neighbor_id, $codes AS codes FROM n, cb),
+       | q AS (SELECT vec_id AS query_id, $dts FROM n, cb WHERE vec_id < 5),
+       | s AS (SELECT q.query_id, c.neighbor_id, ROUND($adist, 6) AS adist FROM q, c WHERE c.neighbor_id <> q.query_id),
+       | $adcRankCte""".stripMargin
+  }
+
+  /** The top-k select over the ranked `r(query_id, neighbor_id, score, rank)`. */
+  private def topKSelect(score: String, k: Int): String =
+    s"SELECT query_id, neighbor_id, $score, rank FROM r WHERE rank <= $k ORDER BY query_id, rank"
+
+  /** Recall@k of the approximate top-k CTE `approx(query_id,
+    * neighbor_id)` against the exact cosine top-k of the 5 queries over
+    * `e`: the brute CTEs and the per-query (k, n_hits, recall) select of
+    * every ann_recall_* oracle. */
+  private def recallSql(approx: String, k: Int): String =
+    s"""sb AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |        ${cosSql("q.v", "c.v")} AS cos
+       |       FROM e q, e c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
+       | rb AS (SELECT query_id, neighbor_id,
+       |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sb),
+       | brute AS (SELECT query_id, neighbor_id FROM rb WHERE rank <= $k)
+       |SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS k,
+       |  CAST(COUNT(l.neighbor_id) AS BIGINT) AS n_hits,
+       |  ROUND(CAST(COUNT(l.neighbor_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
+       |FROM brute b LEFT JOIN $approx l
+       |  ON l.query_id = b.query_id AND l.neighbor_id = b.neighbor_id
+       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+
+  /** Recall@k of an approximate index's rows against the brute-force
+    * top-k of the same queries: per query (k, n_hits, recall) — the
+    * readout of every ann_recall_* query. */
+  private def recallVsBrute(emb: DataFrame, q: DataFrame, approx: DataFrame,
+      k: Int = 10): DataFrame =
+    Ann.bruteForceTopK(emb, q, "vec_id", "embedding", k)
+      .select(col("query_id"), col("neighbor_id"))
+      .join(approx.select(col("query_id"), col("neighbor_id"), lit(1L).as("_hit")),
+        Seq("query_id", "neighbor_id"), "left")
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("k"),
+        sum(coalesce(col("_hit"), lit(0L))).as("n_hits"))
+      .select(col("query_id"), col("k"), col("n_hits"),
+        round(col("n_hits").cast("double") / col("k").cast("double"), 6)
+          .as("recall"))
+      .orderBy("query_id")
+
+  /** `s`: the exact cosine of each `cand(id_a, id_b)` pair (id_a's
+    * vector in `e`, id_b's in `incoming`), then the pairs at cosine >=
+    * `threshold` — the verify of every embedding near-dup oracle. */
+  private def cosineVerifySql(threshold: Double, incoming: String = "e"): String =
+    s"""s AS (SELECT id_a, id_b, ${cosSql("ea.v", "eb.v")} AS cos
+       |       FROM cand JOIN e ea ON ea.vec_id = id_a JOIN $incoming eb ON eb.vec_id = id_b)
+       |SELECT id_a, id_b, cos FROM s WHERE cos >= $threshold ORDER BY id_a, id_b""".stripMargin
+
+  /** The sign-LSH near-dup pairs over `bk`: bucket-mate candidates, then
+    * [[cosineVerifySql]]. */
+  private def lshNearDupSql(threshold: Double): String =
+    s"""cand AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+       |          FROM bk a JOIN bk b ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),
+       | ${cosineVerifySql(threshold)}""".stripMargin
 
   /** The md5 sign-plane CTE (mirrors `VectorFunctions.md5SignPlanes`):
     * ONE definition of the parity formula for every LSH oracle —
@@ -1003,7 +962,7 @@ object AnnQueries {
   private def lshBucketCtes(nTables: Int, planesPerTable: Int,
       mat: Boolean = false): String = {
     val kw = if (mat) "MATERIALIZED " else ""
-    s"""e AS $kw(SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+    s"""e AS $kw($embSql),
        | ${signPlanesCte(nTables, planesPerTable.toString)},
        | ${signBucketCtes("e", mat = mat)}""".stripMargin
   }
@@ -1025,7 +984,7 @@ object AnnQueries {
       s"""
          |     + GREATEST(0, ((CASE WHEN n <= 1 THEN 0 ELSE LENGTH(bin(n - 1)) END) - $anchor) // 2)""".stripMargin
     }
-    s"""e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+    s"""$embCte,
        | pp AS (SELECT GREATEST(1, LEAST(20,
        |     (CASE WHEN cells <= 1 THEN 1 ELSE LENGTH(bin(cells - 1)) END)$extraSql)) AS p
        |   FROM (SELECT (COUNT(*) + ${targetBucket - 1}) // $targetBucket AS cells,
@@ -1034,9 +993,11 @@ object AnnQueries {
        | ${signBucketCtes("e")}""".stripMargin
   }
 
-  /** The graph-build + unrolled-beam CTE chain (no WITH, no final
-    * select) — shared by the ann_hnsw_topk mirror and the recall eval.
-    * Ends at CTE `v<hops>` (the visited union). */
+  /** The HNSW-lite mirror (no WITH, no final select): the graph build
+    * and the unrolled beam of [[graft.operators.Ann.hnswTopK]] for the
+    * same (m, ef, hops, maxBucket) — one CTE block per hop, so the SQL IS
+    * the set-step recurrence. Ends at `fin`: the visited union (self
+    * excluded) with its per-query rank `rk`. */
   private def hnswCtes(m: Int, ef: Int, hops: Int, maxBucket: Int): String = {
     // every CTE the hop chain references repeatedly is MATERIALIZED —
     // DuckDB otherwise re-inlines the whole upstream pipeline per
@@ -1083,45 +1044,11 @@ object AnnQueries {
        | f0 AS (SELECT query_id, node FROM (SELECT query_id, node,
        |          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, node) AS rk
        |          FROM v0) WHERE rk <= $ef),
-       |$hopCtes""".stripMargin
-  }
-
-  /** Full HNSW-lite mirror (graph build + unrolled beam), generated by
-    * the same (k, m, ef, hops, maxBucket) the declared query passes to
-    * [[graft.operators.Ann.hnswTopK]] — one loop emits one CTE block
-    * per hop, so the SQL IS the set-step recurrence. Reuses the proven
-    * md5 sign-plane bucket CTEs and the ordered-fold cosine.
-    */
-  private def hnswSql(k: Int, m: Int, ef: Int, hops: Int,
-      maxBucket: Int): String =
-    s"""WITH ${hnswCtes(m, ef, hops, maxBucket)},
+       |$hopCtes,
        | fin AS (SELECT query_id, node, cos,
        |          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, node) AS rk
-       |         FROM v$hops WHERE node <> query_id)
-       |SELECT query_id, node AS neighbor_id, cos, CAST(rk AS INT) AS rank
-       |FROM fin WHERE rk <= $k ORDER BY query_id, rank""".stripMargin
-
-  /** Recall@k of the hnsw beam vs brute force — the hnsw member of the
-    * ann_recall_* family, generated from the same CTE chain. */
-  private def hnswRecallSql(k: Int, m: Int, ef: Int, hops: Int,
-      maxBucket: Int): String =
-    s"""WITH ${hnswCtes(m, ef, hops, maxBucket)},
-       | fin AS (SELECT query_id, node,
-       |          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, node) AS rk
-       |         FROM v$hops WHERE node <> query_id),
-       | hn AS (SELECT query_id, node AS neighbor_id FROM fin WHERE rk <= $k),
-       | sb AS (SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |        ${cosSql("q.v", "c.v")} AS cos
-       |       FROM e q, e c WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-       | rb AS (SELECT query_id, neighbor_id,
-       |        ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, neighbor_id) AS rank FROM sb),
-       | brute AS (SELECT query_id, neighbor_id FROM rb WHERE rank <= $k)
-       |SELECT b.query_id, CAST(COUNT(*) AS BIGINT) AS k,
-       |  CAST(COUNT(h.neighbor_id) AS BIGINT) AS n_hits,
-       |  ROUND(CAST(COUNT(h.neighbor_id) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS recall
-       |FROM brute b LEFT JOIN hn h
-       |  ON h.query_id = b.query_id AND h.neighbor_id = b.neighbor_id
-       |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin
+       |         FROM v$hops WHERE node <> query_id)""".stripMargin
+  }
 
   /** Two-sweep Lloyd replay over any `e(vec_id, v)` source SQL —
     * mirrors [[graft.operators.Ann.kmeansFixed]] (md5 seeds, argmax

@@ -201,7 +201,7 @@ class DedupAnnSpec extends SparkSpec {
   test("lshTopK multiProbe: candidate set is a superset of single-probe's") {
     val sfEmb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = sfEmb.filter(col("vec_id") < 5)
-    val planes = Some(graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64))
+    val planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)
     def resultSet(mp: Boolean) =
       Ann.lshTopK(sfEmb, q, "vec_id", "embedding", 3, planes = planes, multiProbe = mp)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -317,7 +317,7 @@ class DedupAnnSpec extends SparkSpec {
     // the graph walk must not LOSE recall vs its own seed stage (the
     // pure LSH candidates with the same planes): V_0 is a subset of V_H
     val seeds = Ann.lshTopK(sfEmb, q, "vec_id", "embedding", 5,
-        planes = Some(planes))
+        planes = planes)
       .collect().map(r0 => (r0.getLong(0), r0.getLong(1))).toSet
     assert(r >= recallOf(seeds) - 1e-9,
       s"beam lost recall vs seeds: $r vs ${recallOf(seeds)}")
@@ -330,7 +330,7 @@ class DedupAnnSpec extends SparkSpec {
   test("lshTopK probeDepth: per-query recall is monotone in probing depth") {
     val sfEmb = spark.read.parquet(s"$sf/embeddings.parquet")
     val q = sfEmb.filter(col("vec_id") < 8)
-    val planes = Some(graft.functions.VectorFunctions.md5SignPlanes(4, 8, 64))
+    val planes = graft.functions.VectorFunctions.md5SignPlanes(4, 8, 64)
     val exact = Ann.bruteForceTopK(sfEmb, q, "vec_id", "embedding", 5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val recalls = (1 to 3).map { depth =>
@@ -501,7 +501,9 @@ class DedupAnnSpec extends SparkSpec {
     val exact = Ann.bruteForceTopK(emb, queries, "vec_id", "embedding", 5)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val approx = Ann.lshTopK(emb, queries, "vec_id", "embedding", 5)
+    val planes = (0 until 8)
+      .map(t => graft.functions.VectorFunctions.hyperplanes(4, 64, 42L + t)).toArray
+    val approx = Ann.lshTopK(emb, queries, "vec_id", "embedding", 5, planes = planes)
       .select("query_id", "neighbor_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = (exact & approx).size.toDouble / exact.size
@@ -569,7 +571,7 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("embeddingNearDupAgainst: incoming matches corpus under shared planes, cap drops hot buckets") {
-    val planes = Some(graft.functions.VectorFunctions.md5SignPlanes(4, 3, 8))
+    val planes = graft.functions.VectorFunctions.md5SignPlanes(4, 3, 8)
     val mkv = (s: Double) => Array.tabulate(8)(d => (d + 1.0) * s)
     val corpus = Seq(
       (1L, mkv(1.0)), (2L, mkv(-1.0)), // opposite direction: never matches
@@ -577,13 +579,13 @@ class DedupAnnSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val incoming = Seq((10L, mkv(0.5))).toDF("vec_id", "embedding") // same dir as 1,3
     val got = Dedup.embeddingNearDupAgainst(corpus, incoming, "vec_id",
-        "embedding", 0.9, dim = 8, planes = planes)
+        "embedding", 0.9, planes = planes)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((1L, 10L), (3L, 10L)))
     // corpus docs 1 and 3 share every bucket (identical directions):
     // cap=1 drops those buckets, leaving nothing for the incoming side
     val capped = Dedup.embeddingNearDupAgainst(corpus, incoming, "vec_id",
-        "embedding", 0.9, dim = 8, planes = planes, maxBucket = Some(1))
+        "embedding", 0.9, planes = planes, maxBucket = Some(1))
       .collect()
     assert(capped.isEmpty)
   }
@@ -1109,5 +1111,53 @@ class DedupAnnSpec extends SparkSpec {
     assert(out((1L, 2L)) == ((4L, 4L, 3L, 0.75, 0.75, 0.75)))
     // disjoint pair shares no gram -> drops (inner join semantics)
     assert(!out.contains((1L, 3L)))
+  }
+
+  test("vector operators: codegen and interpreted evaluation give identical rows") {
+    // the native vector kernels (cosine, signBuckets(MultiProbe),
+    // signedProject, l2Normalize, pqCodes, pqDistTables, adcSum, intDot,
+    // arraySub) each have a doGenCode and an eval path; both must agree
+    // bit for bit on the sf0.001 embeddings
+    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    val q = emb.filter(col("vec_id") < 5)
+    val planes = graft.functions.VectorFunctions.md5SignPlanes(8, 4, 64)
+    val incoming = emb.filter(col("vec_id") % 9 === 0)
+      .select((col("vec_id") + 500000).as("vec_id"),
+        transform(col("embedding"), (x, i) => when(i === 0, lit(0.0f)).otherwise(x))
+          .as("embedding"))
+    val runs: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "bruteForceTopK" -> (() => Ann.bruteForceTopK(emb, q, "vec_id", "embedding", 5)),
+      "lshTopK" -> (() => Ann.lshTopK(emb, q, "vec_id", "embedding", 5, planes = planes)),
+      "lshTopK(multiProbe)" -> (() => Ann.lshTopK(emb, q, "vec_id", "embedding", 5,
+        planes = planes, multiProbe = true, probeDepth = 2)),
+      "ivfTopK" -> (() => Ann.ivfTopK(emb, q, "vec_id", "embedding", 5)),
+      "ivfTopKWithCentroids" -> (() => Ann.ivfTopKWithCentroids(emb, q, "vec_id",
+        "embedding", 5, IvfCentroids.arr)),
+      "pqAdcTopK" -> (() => Ann.pqAdcTopK(emb, q, "vec_id", "embedding", PqCodebook.arr, 5)),
+      "ivfPqTopK" -> (() => Ann.ivfPqTopK(emb, q, "vec_id", "embedding", PqCodebook.arr, 5)),
+      "rqTopK" -> (() => Ann.rqTopK(emb, q, "vec_id", "embedding", RqCodebook.arr, 5)),
+      "sqTopK" -> (() => Ann.sqTopK(emb, q, "vec_id", "embedding", 5)),
+      "jlTopK" -> (() => Ann.jlTopK(emb, q, "vec_id", "embedding", 5, Ann.jlSigns(16, 64))),
+      "hnswTopK" -> (() => Ann.hnswTopK(emb, q, "vec_id", "embedding", k = 5,
+        planes = graft.functions.VectorFunctions.md5SignPlanes(8, 6, 64))),
+      "pqSubcodePairs" -> (() => Ann.pqSubcodePairs(emb, "vec_id", "embedding",
+        PqCodebook.arr, threshold = -1.0)),
+      "embeddingNearDupAgainst" -> (() => Dedup.embeddingNearDupAgainst(emb, incoming,
+        "vec_id", "embedding", -1.0, planes = planes, maxBucket = Some(256))))
+    // clear the session cache before each run, so neither mode reads
+    // frames the other one pinned
+    def rows(run: () => org.apache.spark.sql.DataFrame) = {
+      spark.catalog.clearCache()
+      run().collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    }
+    runs.foreach { case (name, run) =>
+      val codegen = rows(run)
+      val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(rows(run))
+      assert(codegen.nonEmpty, name)
+      // exact equality of the doubles, not a tolerance
+      assert(interpreted == codegen, name)
+    }
+    spark.catalog.clearCache()
   }
 }

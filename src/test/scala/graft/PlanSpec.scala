@@ -519,6 +519,14 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("sprt_daily: the per-day user counts plan no Expand") {
+    // two count_distinct aggregates plan an Expand whose order flips
+    // between constructs; one (day, user) grouping needs none
+    import org.apache.spark.sql.execution.ExpandExec
+    val nodes = executedNodes(allQe("sprt_daily").executedPlan)
+    assert(!nodes.exists(_.isInstanceOf[ExpandExec]), nodes.map(_.nodeName).mkString(", "))
+  }
+
   test("a second construct of each graftbench query starts no Spark job") {
     // every table read after the first passes its remembered schema, so
     // no parquet footer job comes back on a later construct

@@ -586,7 +586,7 @@ class StreamingSpec extends SparkSpec {
     // cosine, so pair sets AND scores must agree bit-for-bit
     val batch = graft.operators.Dedup.embeddingNearDupAgainst(
         corpus, incoming.toDF("vec_id", "embedding"), "vec_id", "embedding",
-        0.9, dim = 8, planes = Some(planes))
+        0.9, planes = planes)
       .select(col("id_a").as("corpus_id"), col("id_b").as("doc_id"), col("cos"))
       .orderBy("corpus_id", "doc_id").collect().map(_.toSeq).toSeq
     assert(streamed == batch)
