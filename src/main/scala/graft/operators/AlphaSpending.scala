@@ -82,26 +82,116 @@ object AlphaSpending {
   private def phi(x: Double): Double =
     math.exp(-x * x / 2.0) / math.sqrt(2.0 * math.Pi)
 
-  /** Cumulative TWO-SIDED spend at information fraction t. */
-  private def spendAt(t: Double, alpha: Double, spending: String): Double =
+  /** Cumulative ONE-SIDED spend at information fraction t, level a —
+    * the three published shapes in their one-sided convention
+    * (Lan-DeMets OBF-like f(t) = 2 − 2Φ(Φ⁻¹(1−a/2)/√t); Pocock-like
+    * a·ln(1+(e−1)t); Hwang-Shih-DeCani a·(1−e^{−γt})/(1−e^{−γ}) at
+    * γ = −4). The two-sided spend at level α is exactly
+    * 2·spendOneSided(t, α/2): scaling by a power of two commutes with
+    * IEEE rounding. Used for the efficacy (alpha) and futility (beta)
+    * sides alike.
+    */
+  private def spendOneSided(t: Double, a: Double, spending: String): Double =
     spending match {
       case "obf" =>
-        val zc = PhiInv(1.0 - alpha / 4.0)
-        2.0 * (2.0 - 2.0 * Phi(zc / math.sqrt(t)))
+        2.0 - 2.0 * Phi(PhiInv(1.0 - a / 2.0) / math.sqrt(t))
       case "pocock" =>
-        alpha * math.log(1.0 + (math.E - 1.0) * t)
+        a * math.log(1.0 + (math.E - 1.0) * t)
       case "hsd" =>
-        // Hwang-Shih-DeCani '90 gamma family at gamma = -4: the
-        // textbook "conservative, OBF-like" member — exponential spend
-        // alpha * (1 - e^{-gamma t}) / (1 - e^{-gamma}); gamma -> 0 is
-        // linear (Pocock-like), NEGATIVE gamma back-loads the spend
-        // (t=0.2 spends 2.3% of alpha vs pocock's 44%)
-        val gamma = -4.0
-        alpha * (1.0 - math.exp(-gamma * t)) / (1.0 - math.exp(-gamma))
+        a * (1.0 - math.exp(-HsdGamma * t)) / (1.0 - math.exp(-HsdGamma))
       case other =>
         throw new IllegalArgumentException(
           s"AlphaSpending: spending must be 'obf', 'pocock' or 'hsd', got '$other'")
     }
+  // the textbook "conservative, OBF-like" member: gamma -> 0 is linear
+  // (Pocock-like), negative gamma back-loads the spend (t=0.2 spends
+  // 2.3% of a vs pocock's 44%)
+  private val HsdGamma = -4.0
+
+  /** Trapezoid rule over the sub-density `f` on the uniform grid `xs`:
+    * h · Σ term(w_i·f_i, i), end weights ½, summed in grid order.
+    */
+  private def trapezoid(xs: Array[Double], f: Array[Double])(
+      term: (Double, Int) => Double): Double = {
+    var tot = 0.0; var i = 0
+    while (i < f.length) {
+      val w = if (i == 0 || i == f.length - 1) 0.5 else 1.0
+      tot += term(w * f(i), i)
+      i += 1
+    }
+    tot * (xs(1) - xs(0))
+  }
+
+  /** `steps` halvings of [lo, hi]; `below(mid)` says the root lies
+    * above mid. Returns the final midpoint.
+    */
+  private def bisect(lo0: Double, hi0: Double, steps: Int)(
+      below: Double => Boolean): Double = {
+    var lo = lo0; var hi = hi0; var it = 0
+    while (it < steps) {
+      val mid = (lo + hi) / 2.0
+      if (below(mid)) lo = mid else hi = mid
+      it += 1
+    }
+    (lo + hi) / 2.0
+  }
+
+  /** The Armitage recursion on the S scale, increments N(mu, sig²) per
+    * look. Bound 1 is `first`; bound k ≥ 2 is `solve(k, mass)`, where
+    * mass(g) = ∫ f_{k−1}(x)·g(x) dx over the paths that continued past
+    * looks 1..k−1. The paths that continue past look k live on
+    * `region(k, bound k)`, gridded by gridN points from end to end,
+    * where f_k is f_{k−1} convolved with the increment kernel (f_1 is
+    * the kernel itself).
+    */
+  private def armitage(looks: Int, gridN: Int, mu: Double, sig: Double,
+      first: Double, region: (Int, Double) => (Double, Double))(
+      solve: (Int, (Double => Double) => Double) => Double): Array[Double] = {
+    def on(k: Int, b: Double) = {
+      val (lo, hi) = region(k, b)
+      Array.tabulate(gridN)(i => lo + (hi - lo) * i / (gridN - 1))
+    }
+    val bs = new Array[Double](looks)
+    bs(0) = first
+    var xs = on(1, first)
+    var f = xs.map(x => phi((x - mu) / sig) / sig)
+    var k = 2
+    while (k <= looks) {
+      val (x0, f0) = (xs, f)
+      bs(k - 1) = solve(k, g => trapezoid(x0, f0)((wf, i) => wf * g(x0(i))))
+      if (k < looks) {
+        xs = on(k, bs(k - 1))
+        f = xs.map(s => trapezoid(x0, f0)((wf, i) =>
+          wf * phi((s - x0(i) - mu) / sig) / sig))
+      }
+      k += 1
+    }
+    bs
+  }
+
+  /** Efficacy bounds u_1..u_K (z-scale) for K equally spaced looks,
+    * spending `alpha` on one side or `alpha`/2 on each of two, with
+    * continuation region [−a_k, a_k] or [−8√t_k, a_k] (the mass below
+    * is < 1e-15 — a fixed truncation, not a tolerance).
+    */
+  private def efficacy(looks: Int, alpha: Double, spending: String,
+      gridN: Int, twoSided: Boolean): Array[Double] = {
+    val dt = 1.0 / looks
+    val sig = math.sqrt(dt)
+    val sides = if (twoSided) 2.0 else 1.0
+    def spend(t: Double) = spendOneSided(t, alpha / sides, spending)
+    // P(a path from x crosses bound b at this look)
+    def cross(b: Double)(x: Double): Double =
+      if (twoSided) 1.0 - (Phi((b - x) / sig) - Phi((-b - x) / sig))
+      else 1.0 - Phi((b - x) / sig)
+    val as = armitage(looks, gridN, 0.0, sig, sig * PhiInv(1.0 - spend(dt)),
+        (k, a) => (if (twoSided) -a else -8.0 * math.sqrt(k * dt), a)) {
+      (k, mass) =>
+        val target = sides * (spend(k * dt) - spend((k - 1) * dt))
+        bisect(0.0, 10.0, 100)(b => mass(cross(b)) > target)
+    }
+    Array.tabulate(looks)(k => as(k) / math.sqrt((k + 1) * dt))
+  }
 
   /** Two-sided symmetric Lan-DeMets boundaries u_1..u_K (z-scale) for
     * K equally-spaced looks at overall level `alpha`. Deterministic:
@@ -114,83 +204,7 @@ object AlphaSpending {
     require(alpha > 0 && alpha < 1, s"ldBoundaries: need alpha in (0,1), got $alpha")
     require(gridN >= 51 && gridN % 2 == 1,
       s"ldBoundaries: need odd gridN>=51, got $gridN")
-    val dt = 1.0 / looks
-    val sig = math.sqrt(dt)
-    val us = new Array[Double](looks)
-
-    // look 1: S_1 ~ N(0, t_1), closed form
-    val a1 = sig * PhiInv(1.0 - spendAt(dt, alpha, spending) / 2.0)
-    us(0) = a1 / sig
-
-    // sub-density of surviving paths on a grid with endpoints at ±a
-    var a = a1
-    var xs = Array.tabulate(gridN)(i => -a + 2.0 * a * i / (gridN - 1))
-    var f = xs.map(x => phi(x / sig) / sig)
-    var h = xs(1) - xs(0)
-
-    var k = 2
-    while (k <= looks) {
-      val t = k * dt
-      val targetInc = spendAt(t, alpha, spending) -
-        spendAt((k - 1) * dt, alpha, spending)
-      // P(cross at look k | bound b) via the exchanged-order integral
-      def crossProb(b: Double): Double = {
-        var tot = 0.0
-        var i = 0
-        while (i < gridN) {
-          val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-          val surv = Phi((b - xs(i)) / sig) - Phi((-b - xs(i)) / sig)
-          tot += w * f(i) * (1.0 - surv)
-          i += 1
-        }
-        tot * h
-      }
-      var lo = 0.0; var hi = 10.0
-      var it = 0
-      while (it < 100) {
-        val mid = (lo + hi) / 2.0
-        if (crossProb(mid) > targetInc) lo = mid else hi = mid
-        it += 1
-      }
-      a = (lo + hi) / 2.0
-      us(k - 1) = a / math.sqrt(t)
-      if (k < looks) {
-        // f_k = (f_{k-1} * N(0, dt)) truncated, re-gridded onto [-a, a]
-        val nxs = Array.tabulate(gridN)(i => -a + 2.0 * a * i / (gridN - 1))
-        val nf = nxs.map { s =>
-          var tot = 0.0
-          var i = 0
-          while (i < gridN) {
-            val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-            tot += w * f(i) * phi((s - xs(i)) / sig) / sig
-            i += 1
-          }
-          tot * h
-        }
-        xs = nxs; f = nf; h = xs(1) - xs(0)
-      }
-      k += 1
-    }
-    us
-  }
-
-  /** Cumulative ONE-SIDED spend at information fraction t, level a —
-    * the same three published shapes in their one-sided convention
-    * (Lan-DeMets OBF-like f(t) = 2 − 2Φ(Φ⁻¹(1−a/2)/√t); Pocock-like
-    * a·ln(1+(e−1)t); Hwang-Shih-DeCani a·(1−e^{−γt})/(1−e^{−γ})).
-    * Used for both the alpha (efficacy) and beta (futility) sides.
-    */
-  private def spendOneSided(t: Double, a: Double, spending: String,
-      hsdGamma: Double = -4.0): Double = spending match {
-    case "obf" =>
-      2.0 - 2.0 * Phi(PhiInv(1.0 - a / 2.0) / math.sqrt(t))
-    case "pocock" =>
-      a * math.log(1.0 + (math.E - 1.0) * t)
-    case "hsd" =>
-      a * (1.0 - math.exp(-hsdGamma * t)) / (1.0 - math.exp(-hsdGamma))
-    case other =>
-      throw new IllegalArgumentException(
-        s"AlphaSpending: spending must be 'obf', 'pocock' or 'hsd', got '$other'")
+    efficacy(looks, alpha, spending, gridN, twoSided = true)
   }
 
   /** ONE-SIDED Lan-DeMets efficacy boundaries u_1..u_K (z-scale) at
@@ -209,55 +223,7 @@ object AlphaSpending {
       s"oneSidedBoundaries: need alpha in (0,0.5), got $alpha")
     require(gridN >= 51 && gridN % 2 == 1,
       s"oneSidedBoundaries: need odd gridN>=51, got $gridN")
-    val dt = 1.0 / looks
-    val sig = math.sqrt(dt)
-    val us = new Array[Double](looks)
-    val a1 = sig * PhiInv(1.0 - spendOneSided(dt, alpha, spending))
-    us(0) = a1 / sig
-    var a = a1
-    var lo = -8.0 * sig
-    var xs = Array.tabulate(gridN)(i => lo + (a - lo) * i / (gridN - 1))
-    var f = xs.map(x => phi(x / sig) / sig)
-    var h = xs(1) - xs(0)
-    var k = 2
-    while (k <= looks) {
-      val t = k * dt
-      val targetInc = spendOneSided(t, alpha, spending) -
-        spendOneSided((k - 1) * dt, alpha, spending)
-      def crossProb(b: Double): Double = {
-        var tot = 0.0; var i = 0
-        while (i < gridN) {
-          val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-          tot += w * f(i) * (1.0 - Phi((b - xs(i)) / sig))
-          i += 1
-        }
-        tot * h
-      }
-      var blo = 0.0; var bhi = 10.0; var it = 0
-      while (it < 100) {
-        val mid = (blo + bhi) / 2.0
-        if (crossProb(mid) > targetInc) blo = mid else bhi = mid
-        it += 1
-      }
-      a = (blo + bhi) / 2.0
-      us(k - 1) = a / math.sqrt(t)
-      if (k < looks) {
-        val nlo = -8.0 * math.sqrt(t)
-        val nxs = Array.tabulate(gridN)(i => nlo + (a - nlo) * i / (gridN - 1))
-        val nf = nxs.map { s =>
-          var tot = 0.0; var i = 0
-          while (i < gridN) {
-            val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-            tot += w * f(i) * phi((s - xs(i)) / sig) / sig
-            i += 1
-          }
-          tot * h
-        }
-        xs = nxs; f = nf; h = xs(1) - xs(0)
-      }
-      k += 1
-    }
-    us
+    efficacy(looks, alpha, spending, gridN, twoSided = false)
   }
 
   /** One-sided group-sequential design with NON-BINDING beta-spending
@@ -297,70 +263,29 @@ object AlphaSpending {
     val dt = 1.0 / looks
     val sig = math.sqrt(dt)
     val aS = Array.tabulate(looks)(k => us(k) * math.sqrt((k + 1) * dt))
+    def spend(t: Double) = spendOneSided(t, beta, spendingL)
 
-    // futility S-scale bounds b_1..b_K under drift `delta`; returns the
-    // array (b_K left UNCLAMPED — the outer solve matches it to a_K)
+    // futility S-scale bounds b_1..b_K under drift `delta` (b_K left
+    // UNCLAMPED — the outer solve matches it to a_K). From look 2 on,
+    // extreme outer-bisection drifts can push b above a_k; a collapsed
+    // [a_k, a_k] region keeps the recursion finite and the outer
+    // solve's monotone signal intact (b_K lands high ⇒ "drift too
+    // large" ⇒ bisect down)
     def futilityPass(delta: Double): Array[Double] = {
       val mu = delta * dt
-      val bs = new Array[Double](looks)
-      val b1 = delta * dt + sig * PhiInv(spendOneSided(dt, beta, spendingL))
-      bs(0) = b1
-      var xs = Array.tabulate(gridN)(i => b1 + (aS(0) - b1) * i / (gridN - 1))
-      var f = xs.map(x => phi((x - delta * dt) / sig) / sig)
-      var h = xs(1) - xs(0)
-      var k = 2
-      while (k <= looks) {
-        val targetInc = spendOneSided(k * dt, beta, spendingL) -
-          spendOneSided((k - 1) * dt, beta, spendingL)
-        def futProb(b: Double): Double = {
-          var tot = 0.0; var i = 0
-          while (i < gridN) {
-            val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-            tot += w * f(i) * Phi((b - xs(i) - mu) / sig)
-            i += 1
-          }
-          tot * h
-        }
-        var blo = -10.0; var bhi = aS(k - 1) + 2.0; var it = 0
-        while (it < 100) {
-          val mid = (blo + bhi) / 2.0
-          if (futProb(mid) < targetInc) blo = mid else bhi = mid
-          it += 1
-        }
-        val b = (blo + bhi) / 2.0
-        bs(k - 1) = b
-        if (k < looks) {
-          // extreme outer-bisection drifts can push b above a_k; a
-          // collapsed [a_k, a_k] region keeps the recursion finite and
-          // the outer solve's monotone signal intact (b_K lands high ⇒
-          // "drift too large" ⇒ bisect down)
-          val bG = math.min(b, aS(k - 1))
-          val nxs = Array.tabulate(gridN)(i => bG + (aS(k - 1) - bG) * i / (gridN - 1))
-          val nf = nxs.map { s =>
-            var tot = 0.0; var i = 0
-            while (i < gridN) {
-              val w = if (i == 0 || i == gridN - 1) 0.5 else 1.0
-              tot += w * f(i) * phi((s - xs(i) - mu) / sig) / sig
-              i += 1
-            }
-            tot * h
-          }
-          xs = nxs; f = nf; h = xs(1) - xs(0)
-        }
-        k += 1
+      armitage(looks, gridN, mu, sig, mu + sig * PhiInv(spend(dt)),
+          (k, b) => (if (k == 1) b else math.min(b, aS(k - 1)), aS(k - 1))) {
+        (k, mass) =>
+          val target = spend(k * dt) - spend((k - 1) * dt)
+          bisect(-10.0, aS(k - 1) + 2.0, 100)(b =>
+            mass(x => Phi((b - x - mu) / sig)) < target)
       }
-      bs
     }
 
     // outer solve: delta such that the final futility bound meets the
     // final efficacy bound (b_K(delta) is increasing in delta)
-    var dlo = 0.0; var dhi = 8.0; var it = 0
-    while (it < 60) {
-      val mid = (dlo + dhi) / 2.0
-      if (futilityPass(mid)(looks - 1) < aS(looks - 1)) dlo = mid else dhi = mid
-      it += 1
-    }
-    val delta = (dlo + dhi) / 2.0
+    val delta = bisect(0.0, 8.0, 60)(d =>
+      futilityPass(d)(looks - 1) < aS(looks - 1))
     val bs = futilityPass(delta)
     val ls = Array.tabulate(looks)(k =>
       if (k == looks - 1) us(k) else bs(k) / math.sqrt((k + 1) * dt))

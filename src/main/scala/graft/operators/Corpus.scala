@@ -523,10 +523,7 @@ object Corpus {
     val weights = docs.groupBy(groupCol).agg(count(lit(1)).as("cl"))
       .withColumn("wl", sqrt(col("cl").cast("double")))
     val tot = weights.agg(
-      aggregate(
-        transform(sort_array(collect_list(struct(col(groupCol), col("wl")))),
-          x => x.getField("wl")),
-        lit(0.0), (a, x) => a + x).as("tot"))
+      Stats.orderedSum(collect_list(struct(col(groupCol), col("wl"))), "wl").as("tot"))
     val alloc = weights.crossJoin(broadcast(tot))
       .withColumn("nl",
         floor(lit(nTarget).cast("double") * col("wl") / col("tot")).cast("long"))

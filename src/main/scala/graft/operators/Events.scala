@@ -44,20 +44,6 @@ object Events {
         round(col("n_active").cast("double") / col("_size"), 6).as("retention"))
   }
 
-  /** Ordered conversion funnel: per user, the furthest stage reached
-    * walking `stages` in order — stage i counts only from an event of
-    * that type STRICTLY after the user's earliest completion of stage
-    * i-1 (the min-chain semantics: t_1 = earliest stage-1 event,
-    * t_i = earliest stage-i event with ts > t_{i-1}). Output:
-    * (userCol, stage) for every user in the stream, stage 0 = never
-    * entered the funnel.
-    *
-    * Scale shape (100 TB): ONE hash exchange on the user key — each
-    * stage is a conditional-min window over the same user partitioning
-    * (Spark chains the N window operators on one sort/exchange), and
-    * the final per-user roll-up groups on the same key again. The
-    * N-way join-chain formulation this replaces shuffles N times.
-    */
   /** The min-chain stage timestamps (shared by [[funnelStages]] and
     * [[funnelTimes]]): every event row of a user carries `_t0.._tN` —
     * the earliest qualifying timestamp per stage, each computed as a
@@ -81,6 +67,20 @@ object Events {
     }
   }
 
+  /** Ordered conversion funnel: per user, the furthest stage reached
+    * walking `stages` in order — stage i counts only from an event of
+    * that type STRICTLY after the user's earliest completion of stage
+    * i-1 (the min-chain semantics: t_1 = earliest stage-1 event,
+    * t_i = earliest stage-i event with ts > t_{i-1}). Output:
+    * (userCol, stage) for every user in the stream, stage 0 = never
+    * entered the funnel.
+    *
+    * Scale shape (100 TB): ONE hash exchange on the user key — each
+    * stage is a conditional-min window over the same user partitioning
+    * (Spark chains the N window operators on one sort/exchange), and
+    * the final per-user roll-up groups on the same key again. The
+    * N-way join-chain formulation this replaces shuffles N times.
+    */
   def funnelStages(events: DataFrame, userCol: String, tsCol: String,
       typeCol: String, stages: Seq[String]): DataFrame = {
     val withMins = stageMins(events, userCol, tsCol, typeCol, stages)
@@ -269,22 +269,70 @@ object Events {
       .select(select(t, col("_dus").isNotNull): _*)
   }
 
-  /** The time-ordered bucket list that [[kaplanMeier]] and
-    * [[nelsonAalen]] fold: per `_t` bucket of the [[observations]],
-    * deaths `_d` and censorings `_c`, collected as the sorted list
-    * `_l` of (_t, _d, _c) next to the subject total `_n`. The list is
-    * bounded by the OBSERVATION WINDOW (time units in range — a grid,
-    * not the data).
+  /** The risk-set fold of [[kaplanMeier]] and [[nelsonAalen]]: per `_t`
+    * bucket of the [[observations]], deaths `_d` and censorings `_c`,
+    * folded in t order ([[pathFold]]) over a list bounded by the
+    * OBSERVATION WINDOW (time units in range — a grid, not the data).
+    * The at-risk count `nr` starts at the subject total and drops by
+    * each bucket's deaths and censorings; the estimate (state field
+    * `state`) starts at `init` and steps by next(estimate, d/nr).
+    * Output: the path rows `_e` (t, nr, d, `field`) with deaths.
     */
-  private def deathBuckets(events: DataFrame, userCol: String, tsCol: String,
-      deathCond: Column, unitMicros: Long): DataFrame =
+  private def riskSetPath(events: DataFrame, userCol: String, tsCol: String,
+      deathCond: Column, unitMicros: Long, state: String, field: String,
+      init: Double)(next: (Column, Column) => Column): DataFrame =
     observations(events, userCol, tsCol, deathCond, unitMicros)(
         (t, died) => Seq(t, died.cast("long").as("_death")))
       .groupBy(col("_t"))
       .agg(sum(col("_death")).as("_d"),
         sum(lit(1L) - col("_death")).as("_c"))
-      .agg(sort_array(collect_list(struct(col("_t"), col("_d"), col("_c")))).as("_l"),
+      .agg(keyList("_t", "_d", "_c"),
         (sum(col("_d")) + sum(col("_c"))).as("_n"))
+      .select(pathFold(s"array<struct<t:bigint,nr:bigint,d:bigint,$field:double>>",
+          Seq(col("_n").as("rem"), lit(init).as(state))) { (acc, x) =>
+        val nr = acc.getField("rem")
+        val v = next(acc.getField(state),
+          x.getField("_d").cast("double") / nr.cast("double"))
+        (Seq((nr - x.getField("_d") - x.getField("_c")).as("rem"), v.as(state)),
+          Seq(x.getField("_t").as("t"), nr.as("nr"), x.getField("_d").as("d"),
+            v.as(field)))
+      })
+      .select(explode(col("_p")).as("_e"))
+      .filter(col("_e.d") > 0)
+
+  /** The key-sorted list `_l` of (fields…) structs that a
+    * [[pathFold]] walks: sorted on the first field, then the rest.
+    */
+  private def keyList(fields: String*): Column =
+    sort_array(collect_list(struct(fields.map(col): _*))).as("_l")
+
+  /** The ordered path fold of every sequential recursion here that no
+    * window can express: an expression-level `aggregate` over the
+    * [[keyList]] `_l` of a bounded grid (never a row-level recursion
+    * over the stream), appending one path row per step. The state
+    * starts at `zero`; `step(acc, x)` gives the next state's fields and
+    * the path row's fields, typed `pathT`. With `stopAt` the state
+    * freezes once its `stop` field is set, so the path ends AT the
+    * first decision. Returns the path as `_p`, exploded by the caller.
+    */
+  private def pathFold(pathT: String, zero: Seq[Column], stopAt: Boolean = false)(
+      step: (Column, Column) => (Seq[Column], Seq[Column])): Column =
+    aggregate(col("_l"), struct(zero :+ array().cast(pathT).as("path"): _*),
+      (acc, x) => {
+        val (state, row) = step(acc, x)
+        val next = struct(state :+
+          concat(acc.getField("path"), array(struct(row: _*))).as("path"): _*)
+        if (stopAt) when(acc.getField("stop"), acc).otherwise(next) else next
+      }).getField("path").as("_p")
+
+  /** Per-type daily event counts (_t, _day, _cnt): the one
+    * map-side-combinable roll-up every per-type daily series here
+    * starts from.
+    */
+  private def dailyCounts(events: DataFrame, typeCol: String,
+      tsCol: String): DataFrame =
+    events.groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
+      .agg(count(lit(1)).as("_cnt"))
 
   /** Kaplan-Meier survival estimator (Kaplan & Meier 1958) for
     * time-to-event with right censoring: per subject, the clock starts
@@ -304,53 +352,19 @@ object Events {
     * survival) for death steps only, survival round(6)-quantized.
     *
     * Scale shape (100 TB): the [[observations]] pass, one
-    * map-side-combinable bucket roll-up ([[deathBuckets]]) bounded by
+    * map-side-combinable bucket roll-up ([[riskSetPath]]) bounded by
     * the OBSERVATION WINDOW (hours in range — a grid, not the data),
     * and the fold over that grid.
     */
   def kaplanMeier(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, unitMicros: Long = 3600000000L): DataFrame = {
     require(unitMicros >= 1, s"kaplanMeier: need unitMicros>=1, got $unitMicros")
-    val zero = struct(
-      lit(0L).as("rem"), // filled from the total below
-      lit(1.0).as("surv"),
-      array().cast("array<struct<t:bigint,nr:bigint,d:bigint,s:double>>").as("path"))
-    deathBuckets(events, userCol, tsCol, deathCond, unitMicros)
-      .select(aggregate(col("_l"),
-        struct(col("_n").as("rem"), lit(1.0).as("surv"),
-          zero.getField("path").as("path")),
-        (acc, x) => {
-          val nr = acc.getField("rem")
-          val s2 = acc.getField("surv") *
-            (lit(1.0) - x.getField("_d").cast("double") / nr.cast("double"))
-          struct(
-            (nr - x.getField("_d") - x.getField("_c")).as("rem"),
-            s2.as("surv"),
-            concat(acc.getField("path"),
-              array(struct(x.getField("_t").as("t"), nr.as("nr"),
-                x.getField("_d").as("d"), s2.as("s")))).as("path"))
-        }).getField("path").as("_p"))
-      .select(explode(col("_p")).as("_e"))
-      .filter(col("_e.d") > 0)
+    riskSetPath(events, userCol, tsCol, deathCond, unitMicros, "surv", "s", 1.0)(
+        (s, q) => s * (lit(1.0) - q))
       .select(col("_e.t").as("t"), col("_e.nr").as("n_risk"),
         col("_e.d").as("deaths"), round(col("_e.s"), 6).as("survival"))
   }
 
-  /** First-order Markov transition matrix over per-user event
-    * sequences: for every ordered adjacent pair of a user's events,
-    * count the (from_type, to_type) transition and normalize per
-    * from-state. The sequence order is total — (ts, idCol) — so the
-    * matrix is deterministic under duplicate timestamps. Output:
-    * (from_type, to_type, cnt, prob), prob = cnt / Σ_to cnt — a single
-    * division of two exact BIGINTs (engine-portable, no float
-    * aggregation order anywhere).
-    *
-    * Scale shape (100 TB): the lead window partitions by the USER key
-    * (bounded per-partition state — never a global ordered window), the
-    * pair roll-up is one map-side-combinable (from, to) groupBy, and
-    * the per-from normalization window runs over the |types|² aggregate
-    * — constant-size at any stream length.
-    */
   /** CUSUM change-point alarms over daily event counts (Page 1954, the
     * upper one-sided scheme): per type, S_t = max(0, S_{t−1} + x_t − k)
     * with reference k = ceil(mean daily count) and decision threshold
@@ -374,28 +388,23 @@ object Events {
   def cusumAlarms(events: DataFrame, typeCol: String, tsCol: String,
       hMult: Int = 2): DataFrame = {
     require(hMult >= 1, s"cusumAlarms: need hMult>=1, got $hMult")
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
+    val daily = dailyCounts(events, typeCol, tsCol)
     val stats = daily.groupBy(col("_t"))
       .agg(sum(col("_cnt")).as("_tot"), count(lit(1)).as("_nd"))
       .select(col("_t"),
         floor((col("_tot") + col("_nd") - 1) / col("_nd")).cast("long").as("_ref"))
       .withColumn("_h", col("_ref") * hMult)
-    val zero = struct(lit(0L).as("s"),
-      array().cast("array<struct<day:date,s:bigint>>").as("path"))
     val folded = daily.join(stats, Seq("_t"))
       .groupBy(col("_t"))
-      .agg(sort_array(collect_list(struct(col("_day"), col("_cnt")))).as("_l"),
+      .agg(keyList("_day", "_cnt"),
         max(col("_ref")).as("_ref"), max(col("_h")).as("_h"))
       .select(col("_t"), col("_h"),
-        aggregate(col("_l"), zero, (acc, x) => {
-          val s2 = greatest(lit(0L),
-            acc.getField("s") + x.getField("_cnt") - col("_ref"))
-          struct(s2.as("s"),
-            concat(acc.getField("path"),
-              array(struct(x.getField("_day").as("day"), s2.as("s")))).as("path"))
-        }).getField("path").as("_p"))
+        pathFold("array<struct<day:date,s:bigint>>", Seq(lit(0L).as("s"))) {
+          (acc, x) =>
+            val s2 = greatest(lit(0L),
+              acc.getField("s") + x.getField("_cnt") - col("_ref"))
+            (Seq(s2.as("s")), Seq(x.getField("_day").as("day"), s2.as("s")))
+        })
     folded
       .select(col("_t"), col("_h"), explode(col("_p")).as("_e"))
       .filter(col("_e.s") > col("_h"))
@@ -411,7 +420,9 @@ object Events {
     * float op the two engines could round differently; as literals
     * both parse to identical doubles and every step is the same three
     * IEEE ops in the same order, so the path replays bitwise and
-    * round(6) quantizes only at the emit.
+    * round(6) quantizes only at the emit. It runs as [[holtDaily]]
+    * with trend weights β = 0, β' = 1: the trend stays +0.0, so the
+    * level equals the EWMA bit for bit.
     *
     * Output: (typeCol, day, cnt, ewma), one row per (type, day).
     *
@@ -422,26 +433,8 @@ object Events {
       alpha: Double = 0.3, beta: Double = 0.7): DataFrame = {
     require(math.abs(alpha + beta - 1.0) < 1e-9,
       s"ewmaDaily: alpha + beta must be 1, got $alpha + $beta")
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
-    val zero = struct(lit(true).as("init"), lit(0.0).as("s"),
-      array().cast("array<struct<day:date,cnt:bigint,s:double>>").as("path"))
-    daily.groupBy(col("_t"))
-      .agg(sort_array(collect_list(struct(col("_day"), col("_cnt")))).as("_l"))
-      .select(col("_t"),
-        aggregate(col("_l"), zero, (acc, x) => {
-          val s2 = when(acc.getField("init"), x.getField("_cnt").cast("double"))
-            .otherwise(lit(alpha) * x.getField("_cnt").cast("double")
-              + lit(beta) * acc.getField("s"))
-          struct(lit(false).as("init"), s2.as("s"),
-            concat(acc.getField("path"),
-              array(struct(x.getField("_day").as("day"),
-                x.getField("_cnt").as("cnt"), s2.as("s")))).as("path"))
-        }).getField("path").as("_p"))
-      .select(col("_t").as(typeCol), explode(col("_p")).as("_e"))
-      .select(col(typeCol), col("_e.day").as("day"), col("_e.cnt").as("cnt"),
-        round(col("_e.s"), 6).as("ewma"))
+    holtDaily(events, typeCol, tsCol, alpha, beta, 0.0, 1.0)
+      .select(col(typeCol), col("day"), col("cnt"), col("level").as("ewma"))
   }
 
   /** Holt double exponential smoothing (Holt 1957) of per-type daily
@@ -470,29 +463,23 @@ object Events {
     require(math.abs(alpha + alphaC - 1.0) < 1e-9 &&
       math.abs(beta + betaC - 1.0) < 1e-9,
       s"holtDaily: complements must pair to 1, got $alpha+$alphaC $beta+$betaC")
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
-    val zero = struct(lit(true).as("init"), lit(0.0).as("s"), lit(0.0).as("b"),
-      array().cast("array<struct<day:date,cnt:bigint,s:double,b:double>>")
-        .as("path"))
-    daily.groupBy(col("_t"))
-      .agg(sort_array(collect_list(struct(col("_day"), col("_cnt")))).as("_l"))
+    dailyCounts(events, typeCol, tsCol).groupBy(col("_t"))
+      .agg(keyList("_day", "_cnt"))
       .select(col("_t"),
-        aggregate(col("_l"), zero, (acc, x) => {
-          val xd = x.getField("_cnt").cast("double")
-          val s2 = when(acc.getField("init"), xd)
-            .otherwise(lit(alpha) * xd +
-              lit(alphaC) * (acc.getField("s") + acc.getField("b")))
-          val b2 = when(acc.getField("init"), lit(0.0))
-            .otherwise(lit(beta) * (s2 - acc.getField("s")) +
-              lit(betaC) * acc.getField("b"))
-          struct(lit(false).as("init"), s2.as("s"), b2.as("b"),
-            concat(acc.getField("path"),
-              array(struct(x.getField("_day").as("day"),
-                x.getField("_cnt").as("cnt"), s2.as("s"), b2.as("b"))))
-              .as("path"))
-        }).getField("path").as("_p"))
+        pathFold("array<struct<day:date,cnt:bigint,s:double,b:double>>",
+            Seq(lit(true).as("init"), lit(0.0).as("s"), lit(0.0).as("b"))) {
+          (acc, x) =>
+            val xd = x.getField("_cnt").cast("double")
+            val s2 = when(acc.getField("init"), xd)
+              .otherwise(lit(alpha) * xd +
+                lit(alphaC) * (acc.getField("s") + acc.getField("b")))
+            val b2 = when(acc.getField("init"), lit(0.0))
+              .otherwise(lit(beta) * (s2 - acc.getField("s")) +
+                lit(betaC) * acc.getField("b"))
+            (Seq(lit(false).as("init"), s2.as("s"), b2.as("b")),
+              Seq(x.getField("_day").as("day"), x.getField("_cnt").as("cnt"),
+                s2.as("s"), b2.as("b")))
+        })
       .select(col("_t").as(typeCol), explode(col("_p")).as("_e"))
       .select(col(typeCol), col("_e.day").as("day"), col("_e.cnt").as("cnt"),
         // + 0.0 after round: β·(s₂−s)+β'·b can land on IEEE −0.0, and
@@ -531,15 +518,13 @@ object Events {
     val start = events.agg(min(eday).cast("long").as("_d0"))
     val dem = events.filter(demandCond)
       .groupBy(eday.cast("long").as("_d")).agg(count(lit(1)).as("_q"))
-    val pathT = "array<struct<d:bigint,q:bigint,tau:bigint,z:double,p:double>>"
-    val zero = struct(lit(true).as("init"), lit(0.0).as("z"),
-      lit(0.0).as("p"), lit(0L).as("last"),
-      array().cast(pathT).as("path"))
     dem.crossJoin(broadcast(start))
       .groupBy(col("_d0"))
-      .agg(sort_array(collect_list(struct(col("_d"), col("_q")))).as("_l"))
+      .agg(keyList("_d", "_q"))
       .select(col("_d0"),
-        aggregate(col("_l"), zero, (acc, x) => {
+        pathFold("array<struct<d:bigint,q:bigint,tau:bigint,z:double,p:double>>",
+            Seq(lit(true).as("init"), lit(0.0).as("z"), lit(0.0).as("p"),
+              lit(0L).as("last"))) { (acc, x) =>
           val d = x.getField("_d")
           val q = x.getField("_q").cast("double")
           val tauInit = d - col("_d0") + 1L
@@ -550,12 +535,10 @@ object Events {
           val p2 = when(acc.getField("init"), tauInit.cast("double"))
             .otherwise(lit(alpha) * tauRun.cast("double") +
               lit(alphaC) * acc.getField("p"))
-          struct(lit(false).as("init"), z2.as("z"), p2.as("p"),
-            d.as("last"),
-            concat(acc.getField("path"), array(struct(d.as("d"),
-              x.getField("_q").as("q"), tau.as("tau"), z2.as("z"),
-              p2.as("p")))).as("path"))
-        }).getField("path").as("_p"))
+          (Seq(lit(false).as("init"), z2.as("z"), p2.as("p"), d.as("last")),
+            Seq(d.as("d"), x.getField("_q").as("q"), tau.as("tau"), z2.as("z"),
+              p2.as("p")))
+        })
       .select(explode(col("_p")).as("_e"))
       .select(date_add(to_date(lit("1970-01-01")), col("_e.d").cast("int"))
           .as("day"),
@@ -657,61 +640,64 @@ object Events {
     val lo = math.log(beta / (1.0 - alpha))
     // a conversion flag per (day, user), then plain per-day counts (two
     // count_distinct would plan an Expand); null users count in neither
-    val daily = events
+    events
       .groupBy(col(tsCol).cast("date").as("_day"), col(userCol).as("_u"))
       .agg(max(when(convCond && col(userCol).isNotNull, 1L).otherwise(0L)).as("_c"))
       .groupBy(col("_day"))
       .agg(count(col("_u")).as("_n"), sum(col("_c")).as("_x"))
-    val pathT =
-      "array<struct<day:date,n:bigint,x:bigint,llr:double,decision:string>>"
-    val zero = struct(lit(0.0).as("llr"), lit(false).as("stop"),
-      array().cast(pathT).as("path"))
-    daily
-      .agg(sort_array(collect_list(struct(col("_day"), col("_n"), col("_x"))))
-        .as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
+      .agg(keyList("_day", "_n", "_x"))
+      .select(pathFold(
+          "array<struct<day:date,n:bigint,x:bigint,llr:double,decision:string>>",
+          Seq(lit(0.0).as("llr"), lit(false).as("stop")), stopAt = true) { (acc, e) =>
         val inc = e.getField("_x").cast("double") * lit(lc1) +
           (e.getField("_n") - e.getField("_x")).cast("double") * lit(lc2)
         val llr2 = acc.getField("llr") + inc
         val dec = when(llr2 >= lit(hi), lit("accept_h1"))
           .when(llr2 <= lit(lo), lit("accept_h0"))
           .otherwise(lit("continue"))
-        val appended = concat(acc.getField("path"),
-          array(struct(e.getField("_day").as("day"), e.getField("_n").as("n"),
-            e.getField("_x").as("x"), llr2.as("llr"), dec.as("decision"))))
-        when(acc.getField("stop"), acc).otherwise(
-          struct(llr2.as("llr"), (dec =!= "continue").as("stop"),
-            appended.as("path")))
-      }).getField("path").as("_p"))
+        (Seq(llr2.as("llr"), (dec =!= "continue").as("stop")),
+          Seq(e.getField("_day").as("day"), e.getField("_n").as("n"),
+            e.getField("_x").as("x"), llr2.as("llr"), dec.as("decision")))
+      })
       .select(explode(col("_p")).as("_e"))
       .select(col("_e.day").as("day"), col("_e.n").as("n"),
         col("_e.x").as("x"), (round(col("_e.llr"), 6) + lit(0.0)).as("llr"),
         col("_e.decision").as("decision"))
   }
 
-  /** The per-arm sums of one day or look (the body of every A/B
-    * monitor's grouped aggregate): control (`_b` = 0) and treatment
-    * unit counts `_nc`/`_nt` and conversions `_xc`/`_xt` of the 0/1
-    * column `_c`.
+  /** The control (`_b` = 0) and treatment sums of `v` (0 on the other
+    * arm's rows), named `c` and `t`.
     */
-  private def armCounts: Seq[Column] = Seq(
-    sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-    sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-    sum(when(col("_b") === 0L, col("_c")).otherwise(0L)).as("_xc"),
-    sum(when(col("_b") =!= 0L, col("_c")).otherwise(0L)).as("_xt"))
+  private def armSums(v: Column, zero: Column, c: String, t: String): Seq[Column] =
+    Seq(sum(when(col("_b") === 0L, v).otherwise(zero)).as(c),
+      sum(when(col("_b") =!= 0L, v).otherwise(zero)).as(t))
 
-  /** The pooled two-proportion z of treatment minus control,
-    * (p_t − p_c) / √(p̂(1−p̂)(1/n_c + 1/n_t)), in the fixed operand
-    * order the oracles replay (the [[Stats.abTestProportions]] formula);
+  /** The per-arm sums of one day or look (the body of every A/B
+    * monitor's grouped aggregate): unit counts `_nc`/`_nt` and
+    * conversions `_xc`/`_xt` of the 0/1 column `_c`.
+    */
+  private def armCounts: Seq[Column] =
+    armSums(lit(1L), lit(0L), "_nc", "_nt") ++ armSums(col("_c"), lit(0L), "_xc", "_xt")
+
+  /** Treatment minus control, p_t − p_c, and its pooled variance
+    * p̂(1−p̂)(1/n_c + 1/n_t), in the fixed operand order the oracles
+    * replay (the [[Stats.abTestProportions]] formula).
+    */
+  private def armDiff(nc: Column, nt: Column, xc: Column,
+      xt: Column): (Column, Column) = {
+    val ncD = nc.cast("double"); val ntD = nt.cast("double")
+    val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
+    (xt.cast("double") / ntD - xc.cast("double") / ncD,
+      pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
+  }
+
+  /** The pooled two-proportion z, [[armDiff]] over its standard error;
     * null while either arm is empty or the pooled rate is degenerate.
     */
   private def pooledZ(nc: Column, nt: Column, xc: Column, xt: Column): Column = {
-    val ncD = nc.cast("double"); val ntD = nt.cast("double")
-    val pc = xc.cast("double") / ncD
-    val pt = xt.cast("double") / ntD
-    val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
-    val se = sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD))
-    when(nc > 0L && nt > 0L && se > lit(0.0), (pt - pc) / se)
+    val (d, v) = armDiff(nc, nt, xc, xt)
+    val se = sqrt(v)
+    when(nc > 0L && nt > 0L && se > lit(0.0), d / se)
   }
 
   /** One mSPRT step (shared by [[msprtDaily]] and [[msprtValueDaily]]):
@@ -760,10 +746,8 @@ object Events {
     events.sparkSession.range(1, looks + 1)
       .select(col("id").cast("int").as("_k"))
       .join(perLook, Seq("_k"), "left")
-      .select(col("_k"), coalesce(col("_nc"), lit(0L)).as("_nc"),
-        coalesce(col("_nt"), lit(0L)).as("_nt"),
-        coalesce(col("_xc"), lit(0L)).as("_xc"),
-        coalesce(col("_xt"), lit(0L)).as("_xt"))
+      .select(col("_k") +: Seq("_nc", "_nt", "_xc", "_xt")
+        .map(c => coalesce(col(c), lit(0L)).as(c)): _*)
   }
 
   /** [[lookFrame]] with cumulative counts (_k, nc, nt, xc, xt) over
@@ -776,10 +760,17 @@ object Events {
     val w = Window.orderBy(col("_k"))
       .rowsBetween(Window.unboundedPreceding, 0)
     lookFrame(events, idCol, tsCol, convCond, looks, lookDays, seed)
-      .select(col("_k"),
-        sum(col("_nc")).over(w).as("nc"), sum(col("_nt")).over(w).as("nt"),
-        sum(col("_xc")).over(w).as("xc"), sum(col("_xt")).over(w).as("xt"))
+      .select(col("_k") +: Seq("nc", "nt", "xc", "xt")
+        .map(c => sum(col("_" + c)).over(w).as(c)): _*)
   }
+
+  /** The running sums acc.f + e._f of the named state fields — the
+    * exact cumulative arm counts of the monitor folds.
+    */
+  private def cumulate(acc: Column, e: Column, fields: String*): Seq[Column] =
+    fields.map(f => acc.getField(f) + e.getField("_" + f))
+  /** The zero BIGINT start of each [[cumulate]]d field. */
+  private def armZeros(fields: String*): Seq[Column] = fields.map(f => lit(0L).as(f))
 
   /** The stop-at-first-crossing fold over a [[lookFrame]]: cumulative
     * counts stay exact integers in a fold over the K-row list, z is
@@ -792,28 +783,19 @@ object Events {
   private def crossingFold(perLook: DataFrame, boundFields: String,
       judge: (Column, Column) => (Seq[Column], Column, Column),
       readout: Seq[Column]): DataFrame = {
-    val pathT = "array<struct<look:int,n_c:bigint,n_t:bigint,x_c:bigint," +
-      s"x_t:bigint,z:double,$boundFields,decision:string>>"
-    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
-      lit(0L).as("xt"), lit(false).as("stop"), array().cast(pathT).as("path"))
     perLook
-      .agg(sort_array(collect_list(struct(col("_k"), col("_nc"), col("_nt"),
-        col("_xc"), col("_xt")))).as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
-        val nc = acc.getField("nc") + e.getField("_nc")
-        val nt = acc.getField("nt") + e.getField("_nt")
-        val xc = acc.getField("xc") + e.getField("_xc")
-        val xt = acc.getField("xt") + e.getField("_xt")
+      .agg(keyList("_k", "_nc", "_nt", "_xc", "_xt"))
+      .select(pathFold("array<struct<look:int,n_c:bigint,n_t:bigint,x_c:bigint," +
+          s"x_t:bigint,z:double,$boundFields,decision:string>>",
+          armZeros("nc", "nt", "xc", "xt") :+ lit(false).as("stop"),
+          stopAt = true) { (acc, e) =>
+        val Seq(nc, nt, xc, xt) = cumulate(acc, e, "nc", "nt", "xc", "xt")
         val z = pooledZ(nc, nt, xc, xt)
         val (bounds, dec, stop) = judge(e.getField("_k"), z)
-        val appended = concat(acc.getField("path"),
-          array(struct(Seq(e.getField("_k").as("look"), nc.as("n_c"),
-            nt.as("n_t"), xc.as("x_c"), xt.as("x_t"), z.as("z")) ++ bounds :+
-            dec.as("decision"): _*)))
-        when(acc.getField("stop"), acc).otherwise(
-          struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
-            stop.as("stop"), appended.as("path")))
-      }).getField("path").as("_p"))
+        (Seq(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"), stop.as("stop")),
+          Seq(e.getField("_k").as("look"), nc.as("n_c"), nt.as("n_t"),
+            xc.as("x_c"), xt.as("x_t"), z.as("z")) ++ bounds :+ dec.as("decision"))
+      })
       .select(explode(col("_p")).as("_e"))
       .select(Seq(col("_e.look").as("look"), col("_e.n_c").as("n_c"),
         col("_e.n_t").as("n_t"), col("_e.x_c").as("x_c"),
@@ -855,36 +837,24 @@ object Events {
       alpha: Double = 0.05): DataFrame = {
     require(tau > 0, s"msprtDaily: need tau > 0, got $tau")
     require(alpha > 0 && alpha < 1, s"msprtDaily: need alpha in (0,1), got $alpha")
-    val daily = events
+    events
       .select(col(tsCol).cast("date").as("_day"),
         Stats.md5Parity(col(userCol), "ab").as("_b"), convCond.cast("long").as("_c"))
       .groupBy(col("_day"))
       .agg(armCounts.head, armCounts.tail: _*)
-    val pathT = "array<struct<day:date,n_c:bigint,n_t:bigint,x_c:bigint," +
-      "x_t:bigint,lambda:double,p_av:double,decision:string>>"
-    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"), lit(0L).as("xc"),
-      lit(0L).as("xt"), lit(1.0).as("pmin"), array().cast(pathT).as("path"))
-    daily
-      .agg(sort_array(collect_list(struct(col("_day"), col("_nc"), col("_nt"),
-        col("_xc"), col("_xt")))).as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
-        val nc = acc.getField("nc") + e.getField("_nc")
-        val nt = acc.getField("nt") + e.getField("_nt")
-        val xc = acc.getField("xc") + e.getField("_xc")
-        val xt = acc.getField("xt") + e.getField("_xt")
-        val ncD = nc.cast("double"); val ntD = nt.cast("double")
-        val delta = xt.cast("double") / ntD - xc.cast("double") / ncD
-        val pp = (xc + xt).cast("double") / (nc + nt).cast("double")
-        val v = pp * (lit(1.0) - pp) * (lit(1.0) / ncD + lit(1.0) / ntD)
+      .agg(keyList("_day", "_nc", "_nt", "_xc", "_xt"))
+      .select(pathFold("array<struct<day:date,n_c:bigint,n_t:bigint,x_c:bigint," +
+          "x_t:bigint,lambda:double,p_av:double,decision:string>>",
+          armZeros("nc", "nt", "xc", "xt") :+ lit(1.0).as("pmin")) { (acc, e) =>
+        val Seq(nc, nt, xc, xt) = cumulate(acc, e, "nc", "nt", "xc", "xt")
+        val (delta, v) = armDiff(nc, nt, xc, xt)
         val (lam, pmin, dec) = msprtStep(acc.getField("pmin"),
           nc > 0L && nt > 0L, delta, v, tau * tau, alpha)
-        val appended = concat(acc.getField("path"),
-          array(struct(e.getField("_day").as("day"), nc.as("n_c"),
-            nt.as("n_t"), xc.as("x_c"), xt.as("x_t"), lam.as("lambda"),
-            pmin.as("p_av"), dec.as("decision"))))
-        struct(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"),
-          pmin.as("pmin"), appended.as("path"))
-      }).getField("path").as("_p"))
+        (Seq(nc.as("nc"), nt.as("nt"), xc.as("xc"), xt.as("xt"), pmin.as("pmin")),
+          Seq(e.getField("_day").as("day"), nc.as("n_c"), nt.as("n_t"),
+            xc.as("x_c"), xt.as("x_t"), lam.as("lambda"), pmin.as("p_av"),
+            dec.as("decision")))
+      })
       .select(explode(col("_p")).as("_e"))
       .select(col("_e.day").as("day"), col("_e.n_c").as("n_c"),
         col("_e.n_t").as("n_t"), col("_e.x_c").as("x_c"),
@@ -918,36 +888,22 @@ object Events {
     require(tau > 0, s"msprtValueDaily: need tau > 0, got $tau")
     require(alpha > 0 && alpha < 1, s"msprtValueDaily: need alpha in (0,1), got $alpha")
     val cents = round(coalesce(valueCol, lit(0.0)) * 100).cast("long")
-    val daily = events
+    val sq = col("_v").cast("decimal(19,0)") * col("_v").cast("decimal(19,0)")
+    val sums = armSums(lit(1L), lit(0L), "_nc", "_nt") ++
+      armSums(col("_v"), lit(0L), "_sc", "_st") ++
+      armSums(sq, lit(0).cast("decimal(38,0)"), "_qc", "_qt")
+    events
       .select(col(tsCol).cast("date").as("_day"),
         Stats.md5Parity(col(userCol), "ab").as("_b"), cents.as("_v"))
       .groupBy(col("_day"))
-      .agg(sum(when(col("_b") === 0L, 1L).otherwise(0L)).as("_nc"),
-        sum(when(col("_b") =!= 0L, 1L).otherwise(0L)).as("_nt"),
-        sum(when(col("_b") === 0L, col("_v")).otherwise(0L)).as("_sc"),
-        sum(when(col("_b") =!= 0L, col("_v")).otherwise(0L)).as("_st"),
-        sum(when(col("_b") === 0L,
-          col("_v").cast("decimal(19,0)") * col("_v").cast("decimal(19,0)"))
-          .otherwise(lit(0).cast("decimal(38,0)"))).as("_qc"),
-        sum(when(col("_b") =!= 0L,
-          col("_v").cast("decimal(19,0)") * col("_v").cast("decimal(19,0)"))
-          .otherwise(lit(0).cast("decimal(38,0)"))).as("_qt"))
-    val pathT = "array<struct<day:date,n_c:bigint,n_t:bigint,mean_c:double," +
-      "mean_t:double,lambda:double,p_av:double,decision:string>>"
-    val zero = struct(lit(0L).as("nc"), lit(0L).as("nt"),
-      lit(0L).as("sc"), lit(0L).as("st"),
-      lit(0).cast("decimal(38,0)").as("qc"), lit(0).cast("decimal(38,0)").as("qt"),
-      lit(1.0).as("pmin"), array().cast(pathT).as("path"))
-    daily
-      .agg(sort_array(collect_list(struct(col("_day"), col("_nc"), col("_nt"),
-        col("_sc"), col("_st"), col("_qc"), col("_qt")))).as("_l"))
-      .select(aggregate(col("_l"), zero, (acc, e) => {
-        val nc = acc.getField("nc") + e.getField("_nc")
-        val nt = acc.getField("nt") + e.getField("_nt")
-        val sc = acc.getField("sc") + e.getField("_sc")
-        val st = acc.getField("st") + e.getField("_st")
-        val qc = (acc.getField("qc") + e.getField("_qc")).cast("decimal(38,0)")
-        val qt = (acc.getField("qt") + e.getField("_qt")).cast("decimal(38,0)")
+      .agg(sums.head, sums.tail: _*)
+      .agg(keyList("_day", "_nc", "_nt", "_sc", "_st", "_qc", "_qt"))
+      .select(pathFold("array<struct<day:date,n_c:bigint,n_t:bigint,mean_c:double," +
+          "mean_t:double,lambda:double,p_av:double,decision:string>>",
+          armZeros("nc", "nt", "sc", "st") ++ Seq("qc", "qt").map(f =>
+            lit(0).cast("decimal(38,0)").as(f)) :+ lit(1.0).as("pmin")) { (acc, e) =>
+        val Seq(nc, nt, sc, st) = cumulate(acc, e, "nc", "nt", "sc", "st")
+        val Seq(qc, qt) = cumulate(acc, e, "qc", "qt").map(_.cast("decimal(38,0)"))
         val ncD = nc.cast("double"); val ntD = nt.cast("double")
         val scD = sc.cast("double"); val stD = st.cast("double")
         val mc = scD / ncD; val mt = stD / ntD
@@ -957,14 +913,12 @@ object Events {
         val v = s2p * (lit(1.0) / ncD + lit(1.0) / ntD)
         val (lam, pmin, dec) = msprtStep(acc.getField("pmin"),
           nc > 1L && nt > 1L, mt - mc, v, tau * tau, alpha)
-        val appended = concat(acc.getField("path"),
-          array(struct(e.getField("_day").as("day"), nc.as("n_c"),
-            nt.as("n_t"),
+        (Seq(nc.as("nc"), nt.as("nt"), sc.as("sc"), st.as("st"),
+          qc.as("qc"), qt.as("qt"), pmin.as("pmin")),
+          Seq(e.getField("_day").as("day"), nc.as("n_c"), nt.as("n_t"),
             when(nc > 0L, mc).as("mean_c"), when(nt > 0L, mt).as("mean_t"),
-            lam.as("lambda"), pmin.as("p_av"), dec.as("decision"))))
-        struct(nc.as("nc"), nt.as("nt"), sc.as("sc"), st.as("st"),
-          qc.as("qc"), qt.as("qt"), pmin.as("pmin"), appended.as("path"))
-      }).getField("path").as("_p"))
+            lam.as("lambda"), pmin.as("p_av"), dec.as("decision")))
+      })
       .select(explode(col("_p")).as("_e"))
       .select(col("_e.day").as("day"), col("_e.n_c").as("n_c"),
         col("_e.n_t").as("n_t"),
@@ -1261,7 +1215,7 @@ object Events {
     * Fleming-Harrington survival estimate S̃ = exp(−H) (a better
     * small-sample estimator than KM and the standard input to hazard
     * plots). Identical scale shape and float discipline as KM: a
-    * t-ordered fold over the same [[deathBuckets]] list with exact
+    * t-ordered fold over the same [[riskSetPath]] list with exact
     * BIGINT risk counts — hazard increments
     * d/n are IEEE-exact divisions accumulated in t order, exp at the
     * round(6) readout only.
@@ -1272,24 +1226,7 @@ object Events {
   def nelsonAalen(events: DataFrame, userCol: String, tsCol: String,
       deathCond: Column, unitMicros: Long = 3600000000L): DataFrame = {
     require(unitMicros >= 1, s"nelsonAalen: need unitMicros>=1, got $unitMicros")
-    val pathT = "array<struct<t:bigint,nr:bigint,d:bigint,h:double>>"
-    deathBuckets(events, userCol, tsCol, deathCond, unitMicros)
-      .select(aggregate(col("_l"),
-        struct(col("_n").as("rem"), lit(0.0).as("h"),
-          array().cast(pathT).as("path")),
-        (acc, x) => {
-          val nr = acc.getField("rem")
-          val h2 = acc.getField("h") +
-            x.getField("_d").cast("double") / nr.cast("double")
-          struct(
-            (nr - x.getField("_d") - x.getField("_c")).as("rem"),
-            h2.as("h"),
-            concat(acc.getField("path"),
-              array(struct(x.getField("_t").as("t"), nr.as("nr"),
-                x.getField("_d").as("d"), h2.as("h")))).as("path"))
-        }).getField("path").as("_p"))
-      .select(explode(col("_p")).as("_e"))
-      .filter(col("_e.d") > 0)
+    riskSetPath(events, userCol, tsCol, deathCond, unitMicros, "h", "h", 0.0)(_ + _)
       .select(col("_e.t").as("t"), col("_e.nr").as("n_risk"),
         col("_e.d").as("deaths"), round(col("_e.h"), 6).as("cum_hazard"),
         round(exp(lit(0.0) - col("_e.h")), 6).as("survival_fh"))
@@ -1482,9 +1419,7 @@ object Events {
       sum(when(death, col("_d1"))).as("o1"),
       collect_list(when(death, struct(col("_st"), col("_t"),
         e1t.as("_e"), vt.as("_v")))).as("_l"))
-    def osum(f: String) =
-      aggregate(transform(sort_array(col("_l")), x => x.getField(f)),
-        lit(0.0), (acc, x) => acc + x)
+    def osum(f: String) = Stats.orderedSum(col("_l"), f)
     folded
       .select(col("n_strata"), col("n1"), col("n2"), col("o1"),
         round(osum("_e"), 6).as("e1"), round(osum("_v"), 6).as("v"),
@@ -1512,10 +1447,8 @@ object Events {
   def diffInDiff(events: DataFrame, typeCol: String, tsCol: String,
       treated: String, control: String, cutover: String): DataFrame = {
     require(treated != control, "diffInDiff: treated must differ from control")
-    val daily = events
-      .filter(col(typeCol).isin(treated, control))
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
+    val daily = dailyCounts(events.filter(col(typeCol).isin(treated, control)),
+        typeCol, tsCol)
       .withColumn("_post", col("_day") >= lit(cutover).cast("date"))
     def s(t: String, post: Boolean) =
       sum(when(col("_t") === t && col("_post") === post, col("_cnt"))
@@ -1643,9 +1576,6 @@ object Events {
       math.abs(beta + betaC - 1.0) < 1e-9 &&
       math.abs(gamma + gammaC - 1.0) < 1e-9,
       "holtWintersDaily: complements must pair to 1")
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
     val pathT = "array<struct<day:date,cnt:bigint,s:double,b:double," +
       "cn:double,fit:double>>"
     val zero = struct(
@@ -1653,8 +1583,10 @@ object Events {
       lit(0.0).as("s"), lit(0.0).as("b"),
       array().cast("array<double>").as("c"),
       array().cast(pathT).as("path"))
-    daily.groupBy(col("_t"))
-      .agg(sort_array(collect_list(struct(col("_day"), col("_cnt")))).as("_l"))
+    // its own fold, not pathFold: the first season buffers and emits
+    // no path row
+    dailyCounts(events, typeCol, tsCol).groupBy(col("_t"))
+      .agg(keyList("_day", "_cnt"))
       .select(col("_t"),
         aggregate(col("_l"), zero, (acc, x) => {
           val y = x.getField("_cnt").cast("double")
@@ -1844,15 +1776,13 @@ object Events {
     */
   def dowAdjustedAnomalies(events: DataFrame, typeCol: String, tsCol: String,
       madMult: Double = 3.0): DataFrame = {
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_x"))
+    val daily = dailyCounts(events, typeCol, tsCol)
       .withColumn("_dow",
         pmod(datediff(col("_day"), to_date(lit("1970-01-01"))) + 4, lit(7)))
     val stats = daily.groupBy(col("_t"), col("_dow"))
-      .agg(count(lit(1)).as("_nd"), sum(col("_x")).as("_sd"))
+      .agg(count(lit(1)).as("_nd"), sum(col("_cnt")).as("_sd"))
     val resid = daily.join(stats, Seq("_t", "_dow"))
-      .withColumn("_r", col("_nd") * col("_x") - col("_sd"))
+      .withColumn("_r", col("_nd") * col("_cnt") - col("_sd"))
     val wRank = Window.partitionBy(col("_t"), col("_dow")).orderBy(abs(col("_r")))
     val wN = Window.partitionBy(col("_t"), col("_dow"))
     val mad = resid
@@ -1863,7 +1793,7 @@ object Events {
     resid.join(mad, Seq("_t", "_dow"))
       .filter(col("_mad") > 0 &&
         abs(col("_r")).cast("double") > lit(madMult) * col("_mad").cast("double"))
-      .select(col("_t").as(typeCol), col("_day").as("day"), col("_x").as("cnt"),
+      .select(col("_t").as(typeCol), col("_day").as("day"), col("_cnt").as("cnt"),
         col("_nd").as("n_dow"), col("_r").as("resid_scaled"),
         col("_mad").as("mad_scaled"))
   }
@@ -1917,12 +1847,9 @@ object Events {
     * aggregate on top — both map-side combinable.
     */
   def fanoDaily(events: DataFrame, typeCol: String, tsCol: String): DataFrame = {
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_x"))
-    val agg0 = daily.groupBy(col("_t"))
-      .agg(count(lit(1)).as("days"), sum(col("_x")).as("_s"),
-        sum(col("_x").cast("decimal(19,0)") * col("_x")).as("_q"))
+    val agg0 = dailyCounts(events, typeCol, tsCol).groupBy(col("_t"))
+      .agg(count(lit(1)).as("days"), sum(col("_cnt")).as("_s"),
+        sum(col("_cnt").cast("decimal(19,0)") * col("_cnt")).as("_q"))
     val nD = col("days").cast("double")
     val sD = col("_s").cast("double")
     agg0.select(col("_t").as(typeCol), col("days"),
@@ -1932,6 +1859,21 @@ object Events {
         .as("fano"))
   }
 
+  /** First-order Markov transition matrix over per-user event
+    * sequences: for every ordered adjacent pair of a user's events,
+    * count the (from_type, to_type) transition and normalize per
+    * from-state. The sequence order is total — (ts, idCol) — so the
+    * matrix is deterministic under duplicate timestamps. Output:
+    * (from_type, to_type, cnt, prob), prob = cnt / Σ_to cnt — a single
+    * division of two exact BIGINTs (engine-portable, no float
+    * aggregation order anywhere).
+    *
+    * Scale shape (100 TB): the lead window partitions by the USER key
+    * (bounded per-partition state — never a global ordered window), the
+    * pair roll-up is one map-side-combinable (from, to) groupBy, and
+    * the per-from normalization window runs over the |types|² aggregate
+    * — constant-size at any stream length.
+    */
   def eventTransitions(events: DataFrame, userCol: String, tsCol: String,
       typeCol: String, idCol: String): DataFrame = {
     val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(idCol))
@@ -1982,8 +1924,7 @@ object Events {
       .groupBy(col("_from"), col("n"))
       .agg(count(lit(1)).as("k_next"), collect_list(col("_s")).as("_l"))
       .select(col("_from").as("from_type"), col("n"), col("k_next"),
-        round(aggregate(transform(sort_array(col("_l")), x => x.getField("_t")),
-          lit(0.0), (acc, x) => acc + x), 6).as("h_next"))
+        round(Stats.orderedSum(col("_l"), "_t"), 6).as("h_next"))
   }
 
   /** Backtest of the two no-parameter forecasters every real series
@@ -2005,11 +1946,8 @@ object Events {
   def forecastEval(events: DataFrame, typeCol: String, tsCol: String,
       season: Int = 7): DataFrame = {
     require(season >= 1, s"forecastEval: need season>=1, got $season")
-    val daily = events
-      .groupBy(col(typeCol).as("_t"), col(tsCol).cast("date").as("_day"))
-      .agg(count(lit(1)).as("_cnt"))
     val w = Window.partitionBy(col("_t")).orderBy(col("_day"))
-    val lagged = daily
+    val lagged = dailyCounts(events, typeCol, tsCol)
       .withColumn("_p1", lag(col("_cnt"), 1).over(w))
       .withColumn("_ps", lag(col("_cnt"), season).over(w))
       .withColumn("_rn", row_number().over(w))
@@ -2031,8 +1969,7 @@ object Events {
       when(col("_s1") > 0L,
         round(col("_ss").cast("double") / col("_s1").cast("double"), 6))
         .as("mase"),
-      round(aggregate(transform(sort_array(col("_l")), x => x.getField("_m")),
-        lit(0.0), (acc, x) => acc + x) / col("n_eval").cast("double"), 6)
+      round(Stats.orderedSum(col("_l"), "_m") / col("n_eval").cast("double"), 6)
         .as("smape_snaive"))
   }
 }

@@ -250,7 +250,7 @@ object Stats {
     * terms in the same ascending key order; a hash aggregate would sum
     * in partition order and diverge bitwise).
     */
-  private def orderedSum(structs: Column, field: String): Column =
+  private[graft] def orderedSum(structs: Column, field: String): Column =
     aggregate(transform(sort_array(structs), x => x.getField(field)),
       lit(0.0), (acc, x) => acc + x)
 
@@ -388,24 +388,6 @@ object Stats {
       .orderBy("segment")
   }
 
-  /** Contingency-table analysis of two categorical columns: mutual
-    * information, normalized MI, the chi-squared independence statistic
-    * and Cramér's V, from EXACT cell/margin counts. χ² uses the
-    * observed-cells identity Σ_all (o−e)²/e = n·Σ_obs o²/(r_a·c_b) − n,
-    * so empty cells never need materializing — no category-grid
-    * cross-join anywhere. Float sums run as ordered folds over the
-    * (a, b)-sorted cell list (engine-portable bitwise); final stats are
-    * round(6)-quantized per the suite's ln discipline. NMI is null when
-    * either marginal entropy is 0 (a single-category column).
-    *
-    * Output (one row): (n, dof, mi, nmi, chi2, cramers_v).
-    *
-    * Scale shape (100 TB): ONE corpus-sized shuffle — the (a, b) cell
-    * groupBy (map-side combinable). Margins, totals, entropies and the
-    * folds all run over the bounded cell/margin aggregates; the joins
-    * of cells against margins are AQE-decided; every crossJoin is
-    * against a broadcast 1-row aggregate.
-    */
   /** Mann-Whitney U (Wilcoxon rank-sum) between two groups, with the
     * midrank tie correction — the nonparametric two-sample test. The
     * computation is CELL-BASED: samples collapse to one row per
@@ -636,13 +618,37 @@ object Stats {
           * (col("cnt").cast("double") - col("_e")) / col("_e"), 6).as("chi_term"))
   }
 
+  /** Contingency-table analysis of two categorical columns: mutual
+    * information, normalized MI, the chi-squared independence statistic
+    * and Cramér's V, from EXACT cell/margin counts. χ² uses the
+    * observed-cells identity Σ_all (o−e)²/e = n·Σ_obs o²/(r_a·c_b) − n,
+    * so empty cells never need materializing — no category-grid
+    * cross-join anywhere. Float sums run as ordered folds over the
+    * (a, b)-sorted cell list (engine-portable bitwise); final stats are
+    * round(6)-quantized per the suite's ln discipline. NMI is null when
+    * either marginal entropy is 0 (a single-category column). A row
+    * with a null key belongs to no cell and no total, as in pandas'
+    * crosstab (in n but not in the cell terms, it would push χ² < 0).
+    *
+    * Output (one row): (n, dof, mi, nmi, chi2, cramers_v).
+    *
+    * Scale shape (100 TB): ONE corpus-sized shuffle — the (a, b) cell
+    * groupBy (map-side combinable). Margins, totals, entropies and the
+    * folds all run over the bounded cell/margin aggregates; the joins
+    * of cells against margins are AQE-decided; every crossJoin is
+    * against a broadcast 1-row aggregate.
+    */
   def contingencyAnalysis(df: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val cells = df.groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
+    val cells = df.filter(col(aCol).isNotNull && col(bCol).isNotNull)
+      .groupBy(col(aCol).as("_a"), col(bCol).as("_b"))
       .agg(count(lit(1)).as("_o"))
     val ra = cells.groupBy("_a").agg(sum("_o").as("_ra"))
     val cb = cells.groupBy("_b").agg(sum("_o").as("_cb"))
-    val tots = cells.agg(sum("_o").as("_n"),
-      countDistinct("_a").as("_ka"), countDistinct("_b").as("_kb"))
+    // the category counts come from the margins: two count_distinct
+    // aggregates would plan an Expand whose group order moves with
+    // earlier queries' expression ids
+    val tots = ra.agg(sum("_ra").as("_n"), count("_a").as("_ka"))
+      .crossJoin(cb.agg(count("_b").as("_kb")))
     val o = col("_o").cast("double")
     val n = col("_n").cast("double")
     val raD = col("_ra").cast("double")
@@ -1150,8 +1156,7 @@ object Stats {
       .agg(collect_list(col("_s")).as("_l"),
         sum(col("_ng")).as("n"), count(lit(1)).as("k"))
       .select(col("k"), col("n"),
-        aggregate(transform(sort_array(col("_l")), x => x.getField("_kt")),
-          lit(0.0), (acc, x) => acc + x).as("_rr"))
+        orderedSum(col("_l"), "_kt").as("_rr"))
     val nD = col("n").cast("double")
     val h0 = lit(12.0) / (nD * (nD + 1)) * col("_rr") - lit(3.0) * (nD + 1)
     val tieF = lit(1.0) - col("_tt").cast("double") /

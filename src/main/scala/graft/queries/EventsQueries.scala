@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Corpus, Events, Sampling, Sketches, Stats, Windows}
@@ -1238,39 +1239,9 @@ object EventsQueries {
     // every SF while un-shifted types stay quiet at bench scale. The
     // sequential walk is an expression-level fold over each type's
     // day-sorted counts (bounded by |days|), never a stream recursion.
-    Query("cusum_error_shift")((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_type"), col("ts"))
-      val shifted = ev.unionByName(ev.filter(
-        col("event_type") === "error" &&
-          col("ts").cast("date") >= lit("2024-01-20").cast("date")))
-      Events.cusumAlarms(shifted, "event_type", "ts", hMult = 2)
-        .orderBy("event_type", "day")
-    }) {
-      // recursive-CTE walk of the same integer CUSUM path (rn-chained,
-      // one step per day), alarms where s > h = 2*ref
-      """WITH RECURSIVE u AS (SELECT event_type, ts FROM events
-        |   UNION ALL
-        |   SELECT event_type, ts FROM events
-        |   WHERE event_type = 'error' AND CAST(ts AS DATE) >= DATE '2024-01-20'),
-        | dc AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |        CAST(COUNT(*) AS BIGINT) AS cnt FROM u GROUP BY 1, 2),
-        | st AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS tot,
-        |        CAST(COUNT(*) AS BIGINT) AS nd FROM dc GROUP BY 1),
-        | p AS (SELECT event_type, (tot + nd - 1) // nd AS ref,
-        |       2 * ((tot + nd - 1) // nd) AS h FROM st),
-        | r AS (SELECT dc.*, ROW_NUMBER() OVER (PARTITION BY event_type
-        |        ORDER BY day) AS rn FROM dc),
-        | c AS (SELECT r.event_type, r.day, r.rn,
-        |        GREATEST(0, r.cnt - p.ref) AS s
-        |       FROM r JOIN p USING (event_type) WHERE rn = 1
-        |       UNION ALL
-        |       SELECT r.event_type, r.day, r.rn,
-        |        GREATEST(0, c.s + r.cnt - p.ref)
-        |       FROM c JOIN r ON r.event_type = c.event_type AND r.rn = c.rn + 1
-        |            JOIN p ON p.event_type = r.event_type)
-        |SELECT c.event_type, c.day, c.s FROM c JOIN p USING (event_type)
-        |WHERE c.s > p.h ORDER BY event_type, day""".stripMargin
-    },
+    Query("cusum_error_shift")((s, dir) =>
+      Events.cusumAlarms(errorShifted(s, dir), "event_type", "ts", hMult = 2)
+        .orderBy("event_type", "day"))(cusumShiftOracleSql),
     // EXT streaming CUSUM applied to a batch frame (suite strategy):
     // daily counts stream-static-joined with FROZEN (ref, h) derived
     // once from the corpus; one long of per-key state carries the
@@ -1279,11 +1250,7 @@ object EventsQueries {
     Query("cusum_stream_shift")((s, dir) => {
       val sess = s
       import sess.implicits._
-      val ev = t(s, dir, "events").select(col("event_type"), col("ts"))
-      val shifted = ev.unionByName(ev.filter(
-        col("event_type") === "error" &&
-          col("ts").cast("date") >= lit("2024-01-20").cast("date")))
-      val daily = shifted
+      val daily = errorShifted(s, dir)
         .groupBy(col("event_type").as("key"), col("ts").cast("date").as("day"))
         .agg(count(lit(1)).as("cnt"))
       val refs = daily.groupBy(col("key"))
@@ -1297,30 +1264,7 @@ object EventsQueries {
       graft.streaming.StreamOps.cusumStream(points)
         .toDF("event_type", "day", "s")
         .orderBy("event_type", "day")
-    }) {
-      """WITH RECURSIVE u AS (SELECT event_type, ts FROM events
-        |   UNION ALL
-        |   SELECT event_type, ts FROM events
-        |   WHERE event_type = 'error' AND CAST(ts AS DATE) >= DATE '2024-01-20'),
-        | dc AS (SELECT event_type, CAST(ts AS DATE) AS day,
-        |        CAST(COUNT(*) AS BIGINT) AS cnt FROM u GROUP BY 1, 2),
-        | st AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS tot,
-        |        CAST(COUNT(*) AS BIGINT) AS nd FROM dc GROUP BY 1),
-        | p AS (SELECT event_type, (tot + nd - 1) // nd AS ref,
-        |       2 * ((tot + nd - 1) // nd) AS h FROM st),
-        | r AS (SELECT dc.*, ROW_NUMBER() OVER (PARTITION BY event_type
-        |        ORDER BY day) AS rn FROM dc),
-        | c AS (SELECT r.event_type, r.day, r.rn,
-        |        GREATEST(0, r.cnt - p.ref) AS s
-        |       FROM r JOIN p USING (event_type) WHERE rn = 1
-        |       UNION ALL
-        |       SELECT r.event_type, r.day, r.rn,
-        |        GREATEST(0, c.s + r.cnt - p.ref)
-        |       FROM c JOIN r ON r.event_type = c.event_type AND r.rn = c.rn + 1
-        |            JOIN p ON p.event_type = r.event_type)
-        |SELECT c.event_type, c.day, c.s FROM c JOIN p USING (event_type)
-        |WHERE c.s > p.h ORDER BY event_type, day""".stripMargin
-    },
+    })(cusumShiftOracleSql),
     // EXT Kaplan-Meier survival (Events.kaplanMeier, KM 1958):
     // hours-to-first-purchase per user with right censoring at end of
     // observation; ONE ordered fold over the observation-window grid
@@ -2992,6 +2936,46 @@ object EventsQueries {
         |FROM a ORDER BY event_type""".stripMargin
     },
   )
+
+  /** The CUSUM queries' events: (event_type, ts) with every error
+    * event from 2024-01-20 on doubled — a level shift injected the
+    * suite's dup-injection way. Mirrored by the `u` CTE of
+    * [[cusumShiftOracleSql]].
+    */
+  private def errorShifted(s: SparkSession, dir: String): DataFrame = {
+    val ev = t(s, dir, "events").select(col("event_type"), col("ts"))
+    ev.unionByName(ev.filter(
+      col("event_type") === "error" &&
+        col("ts").cast("date") >= lit("2024-01-20").cast("date")))
+  }
+
+  /** The oracle of both CUSUM queries: a recursive-CTE walk of the
+    * integer CUSUM path over [[errorShifted]] (rn-chained, one step per
+    * day), alarms where s > h = 2*ref.
+    */
+  private val cusumShiftOracleSql: String =
+    """WITH RECURSIVE u AS (SELECT event_type, ts FROM events
+      |   UNION ALL
+      |   SELECT event_type, ts FROM events
+      |   WHERE event_type = 'error' AND CAST(ts AS DATE) >= DATE '2024-01-20'),
+      | dc AS (SELECT event_type, CAST(ts AS DATE) AS day,
+      |        CAST(COUNT(*) AS BIGINT) AS cnt FROM u GROUP BY 1, 2),
+      | st AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS tot,
+      |        CAST(COUNT(*) AS BIGINT) AS nd FROM dc GROUP BY 1),
+      | p AS (SELECT event_type, (tot + nd - 1) // nd AS ref,
+      |       2 * ((tot + nd - 1) // nd) AS h FROM st),
+      | r AS (SELECT dc.*, ROW_NUMBER() OVER (PARTITION BY event_type
+      |        ORDER BY day) AS rn FROM dc),
+      | c AS (SELECT r.event_type, r.day, r.rn,
+      |        GREATEST(0, r.cnt - p.ref) AS s
+      |       FROM r JOIN p USING (event_type) WHERE rn = 1
+      |       UNION ALL
+      |       SELECT r.event_type, r.day, r.rn,
+      |        GREATEST(0, c.s + r.cnt - p.ref)
+      |       FROM c JOIN r ON r.event_type = c.event_type AND r.rn = c.rn + 1
+      |            JOIN p ON p.event_type = r.event_type)
+      |SELECT c.event_type, c.day, c.s FROM c JOIN p USING (event_type)
+      |WHERE c.s > p.h ORDER BY event_type, day""".stripMargin
 
   /** Literal PSI bin edges for `psi_value_drift` — ONE definition feeds
     * Stats.psi's when-chain AND the generated oracle's CASE sum, so the

@@ -759,6 +759,51 @@ class EventsSpec extends SparkSpec {
     }
   }
 
+  test("AlphaSpending: every boundary array is frozen bit for bit") {
+    import graft.operators.AlphaSpending
+    // the boundaries are literals the declared monitors and their
+    // oracles embed, so the solvers must reproduce every bit of them,
+    // not 4 decimals: doubleToLongBits of each array
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToLongBits).toSeq
+    val osObf = Seq(4617176902736897467L, 4614741737239558861L, 4613217861698033873L,
+      4612338605250534908L, 4611755862895647966L)
+    val (futHsdU, futHsdL, futHsdD) =
+      AlphaSpending.futilityBoundaries(5, 0.025, 0.1, "obf", "hsd")
+    val (futPocU, futPocL, futPocD) =
+      AlphaSpending.futilityBoundaries(5, 0.025, 0.1, "obf", "pocock")
+    val frozen: Seq[(String, Seq[Long], Seq[Long])] = Seq(
+      ("ld obf", bits(AlphaSpending.ldBoundaries(5, 0.05, "obf")),
+        Seq(4617176902736897467L, 4614741737401524414L, 4613217869007905045L,
+          4612338621674949878L, 4611755888696457804L)),
+      ("ld pocock", bits(AlphaSpending.ldBoundaries(5, 0.05, "pocock")),
+        Seq(4612672254251937402L, 4612647115700249554L, 4612609688401634945L,
+          4612579177223818390L, 4612555167991046664L)),
+      ("ld hsd", bits(AlphaSpending.ldBoundaries(5, 0.05, "hsd")),
+        Seq(4614506777096268020L, 4613906393556471200L, 4613243486827523386L,
+          4612527433522760777L, 4611743026346488596L)),
+      ("ld obf 301", bits(AlphaSpending.ldBoundaries(5, 0.05, "obf", gridN = 301)),
+        Seq(4617176902736897467L, 4614741736747565963L, 4613217857181485808L,
+          4612338603386355835L, 4611755865654818320L)),
+      ("ld pocock 301", bits(AlphaSpending.ldBoundaries(5, 0.05, "pocock", gridN = 301)),
+        Seq(4612672254251937402L, 4612647109419875306L, 4612609675084664214L,
+          4612579155494557926L, 4612555136721602786L)),
+      ("ld hsd 301", bits(AlphaSpending.ldBoundaries(5, 0.05, "hsd", gridN = 301)),
+        Seq(4614506777096268020L, 4613906384711935131L, 4613243469695723112L,
+          4612527409261761939L, 4611742996626641374L)),
+      ("os obf", bits(AlphaSpending.oneSidedBoundaries(5, 0.025, "obf")), osObf),
+      ("futility hsd upper", bits(futHsdU), osObf),
+      ("futility hsd lower", bits(futHsdL),
+        Seq(-4614617350160571369L, -4622164411900296243L, 4600976992197307679L,
+          4608056045189224070L, 4611755862895647966L)),
+      ("futility hsd delta", bits(Array(futHsdD)), Seq(4614667457222430702L)),
+      ("futility pocock upper", bits(futPocU), osObf),
+      ("futility pocock lower", bits(futPocL),
+        Seq(-4625457012190805248L, 4602700250507670459L, 4607527488708377615L,
+          4609695295826509145L, 4611755862895647966L)),
+      ("futility pocock delta", bits(Array(futPocD)), Seq(4615464417384198634L)))
+    frozen.foreach { case (name, got, want) => assert(got == want, name) }
+  }
+
   test("groupSequentialLanDeMets: LD-OBF is near-unspendable early; arm-aligned effect still rejects at look 1") {
     val ev = (0 until 600)
       .map(i => (i.toLong, ts(1 + i / 20, i % 24), i % 7 == 0))
@@ -1105,7 +1150,26 @@ class EventsSpec extends SparkSpec {
       .toDF("user_id", "ts", "event_type")
     val died = col("event_type") === "purchase"
     val grp = pmod(col("user_id"), lit(2)) === 0
+    // the time-series fixture: three types over 15 days, the error
+    // level shifting up on day 11 so CUSUM alarms
+    val series = (for {
+        d <- 1 to 15
+        (et, n) <- Seq("view" -> (5 + d % 3), "click" -> (3 + d * 7 % 4),
+          "error" -> (if (d <= 10) 2 else 12))
+        j <- 0 until n
+      } yield (d, j, et)).zipWithIndex
+      .map { case ((d, j, et), i) => (i.toLong, i.toLong % 11, ts(d, j % 24), et) }
+      .toDF("event_id", "user_id", "ts", "event_type")
     val runs: Seq[(String, () => DataFrame)] = Seq(
+      "sprtDaily" -> (() => Events.sprtDaily(daily, "user_id", "ts", col("conv"), 0.1, 0.3)),
+      "cusumAlarms" -> (() => Events.cusumAlarms(series, "event_type", "ts")),
+      "ewmaDaily" -> (() => Events.ewmaDaily(series, "event_type", "ts")),
+      "holtDaily" -> (() => Events.holtDaily(series, "event_type", "ts")),
+      "holtWintersDaily" -> (() => Events.holtWintersDaily(series, "event_type", "ts")),
+      "crostonDaily" -> (() => Events.crostonDaily(series, "ts", col("event_type") === "error")),
+      "forecastEval" -> (() => Events.forecastEval(series, "event_type", "ts")),
+      "transitionEntropy" -> (() => Events.transitionEntropy(series, "user_id", "ts",
+        "event_type", "event_id")),
       "msprtDaily" -> (() => Events.msprtDaily(daily, "user_id", "ts", col("conv"))),
       "msprtValueDaily" -> (() => Events.msprtValueDaily(daily, "user_id", "ts", col("value"))),
       "groupSequentialObf" -> (() => Events.groupSequentialObf(looks, "event_id", "ts", col("conv"))),

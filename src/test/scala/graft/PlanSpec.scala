@@ -521,10 +521,14 @@ class PlanSpec extends SparkSpec {
 
   test("sprt_daily: the per-day user counts plan no Expand") {
     // two count_distinct aggregates plan an Expand whose order flips
-    // between constructs; one (day, user) grouping needs none
+    // between constructs; one (day, user) grouping needs none, and the
+    // contingency category counts come from the margins
     import org.apache.spark.sql.execution.ExpandExec
-    val nodes = executedNodes(allQe("sprt_daily").executedPlan)
-    assert(!nodes.exists(_.isInstanceOf[ExpandExec]), nodes.map(_.nodeName).mkString(", "))
+    for (name <- Seq("sprt_daily", "contingency_events", "feature_mi_rank")) {
+      val nodes = executedNodes(allQe(name).executedPlan)
+      assert(!nodes.exists(_.isInstanceOf[ExpandExec]),
+        s"$name: ${nodes.map(_.nodeName).mkString(", ")}")
+    }
   }
 
   test("a second construct of each graftbench query starts no Spark job") {

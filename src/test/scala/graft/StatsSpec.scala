@@ -207,6 +207,41 @@ class StatsSpec extends SparkSpec {
     assert(g.getLong(1) == 0L && g.isNullAt(3) && g.isNullAt(5))
   }
 
+  test("contingencyAnalysis: a row with a null key counts in no cell and no total") {
+    // exact independence (chi2 = 0) plus null-key rows: the result is
+    // the null-free table's, bit for bit — a null-key row counted in n
+    // but not in the cell terms would push chi2 below 0 and V to NaN
+    val ind = for (i <- 0 until 10; j <- 0 until 4) yield (s"a${i % 2}", s"b${j % 2}")
+    val nulls: Seq[(String, String)] = Seq(("a0", null), (null, "b1"), (null, null))
+    val clean = Stats.contingencyAnalysis(ind.toDF("a", "b"), "a", "b").head()
+    val got = Stats.contingencyAnalysis((ind ++ nulls).toDF("a", "b"), "a", "b").head()
+    assert(got == clean)
+    assert(got.getLong(0) == 40L && got.getDouble(4) >= 0.0 && !got.getDouble(5).isNaN)
+  }
+
+  test("contingencyAnalysis and kruskalWallis: codegen and interpreted evaluation agree row for row") {
+    import org.apache.spark.sql.DataFrame
+    // skewed categories, a rare one in each key column, and tied values
+    val df = (0 until 300).map { i =>
+      (if (i % 17 == 0) "t" else Seq("p", "q", "r", "s")(i * i % 7 % 4),
+        if (i % 23 == 0) "w" else Seq("x", "y", "z")(i % 5 % 3),
+        Seq("A", "B", "C", "D")(i % 4), (i * 13 % 29 + i % 4 * 3).toDouble)
+    }.toDF("a", "b", "g", "v")
+    val runs: Seq[(String, () => DataFrame)] = Seq(
+      "contingencyAnalysis" -> (() => Stats.contingencyAnalysis(df, "a", "b")),
+      "contingencyAnalysis(g)" -> (() => Stats.contingencyAnalysis(df, "g", "b")),
+      "kruskalWallis" -> (() => Stats.kruskalWallis(df, "g", "v")))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.mkString("|")).toSeq
+    runs.foreach { case (name, run) =>
+      val codegen = rows(run())
+      val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+        "spark.sql.codegen.wholeStage" -> "false")(rows(run()))
+      assert(codegen.nonEmpty, name)
+      // exact equality of the doubles, not a tolerance
+      assert(interpreted == codegen, name)
+    }
+  }
+
   test("percentileBandsCont: SQL-standard interpolation at q*(n-1)") {
     val df = Seq(("a", 0.0), ("a", 10.0), ("a", 20.0), ("a", 30.0), ("a", 40.0),
       ("b", 7.0)).toDF("grp", "v")

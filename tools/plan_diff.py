@@ -12,6 +12,10 @@ which is read from the tree's Explain.scala. Before comparing, the parts of a
 formatted plan that differ between any two runs are masked:
 
   - expression ids (`#123`) and `plan_id=123`;
+  - the numbers of lambda variables (`lambda x_12#845` prints as
+    `lambda x_N#N`), which come from one JVM-wide counter, so a change that
+    makes an earlier query create a different number of lambdas would mark
+    every later query as changed;
   - JVM lambda class names (`$$Lambda$1234/0x...`) and object hashes
     (`[[[D@1a2b3c`);
   - the RDD ids of localCheckpoint scans (`MapPartitionsRDD[113]`), which
@@ -39,6 +43,7 @@ import sys
 MASKS = [
     (re.compile(r"#\d+"), "#N"),
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\b(lambda \w+?)_\d+"), r"\1_N"),
     (re.compile(r"Lambda\$\d+/0x[0-9a-f]+"), "Lambda"),
     (re.compile(r"@[0-9a-f]+"), "@H"),
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
