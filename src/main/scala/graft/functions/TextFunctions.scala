@@ -41,12 +41,6 @@ object TextFunctions {
     ((length(c) - length(replace(c, lit(lit0), lit("")))) /
       lit(lit0.length)).cast("int")
 
-  /** One-pass multi-pattern occurrence counter: lowercases+pads the text
-    * ONCE and counts non-overlapping occurrences of each ` word ` pattern
-    * by indexOf stepping — exactly the counts the replace-trick produces,
-    * in a single scan instead of one replace pass per word (16 passes ->
-    * 1 for langId). Composed builtins remain the SQL-oracle mirror.
-    */
   /** Static kernel: padded-lowercase multi-pattern occurrence counts. */
   def multiOccurrencesOf(v: UTF8String, pats: Array[String]): GenericArrayData = {
     val s = " " + v.toString.toLowerCase(java.util.Locale.ROOT) + " "
@@ -81,6 +75,12 @@ object TextFunctions {
     override protected def withNewChildInternal(c: Expression): MultiOccurrences = copy(child = c)
   }
 
+  /** One-pass multi-pattern occurrence counter: lowercases+pads the text
+    * ONCE and counts non-overlapping occurrences of each ` word ` pattern
+    * by indexOf stepping — exactly the counts the replace-trick produces,
+    * in a single scan instead of one replace pass per word (16 passes ->
+    * 1 for langId). Composed builtins remain the SQL-oracle mirror.
+    */
   def multiOccurrences(c: Column, words: Seq[String]): Column =
     ColumnOps.toColumn(MultiOccurrences(_, words))(c)
 
@@ -112,11 +112,6 @@ object TextFunctions {
       .otherwise(lit("fr"))
   }
 
-  /** Composite quality score in [0,1]: length, token-length, punctuation
-    * and stopword components, equally weighted. The exact formula is the
-    * contract (oracle-tested); weights follow common quality-filter
-    * practice (length + fluency signals).
-    */
   /** The four capped quality components in [0,1], as an ARRAY in fixed
     * order (length, token-length, punctuation-inverse, stopword) — the
     * feature vector [[qualityScore]] mixes with fixed weights and the
@@ -138,6 +133,11 @@ object TextFunctions {
       least(stopRatio * 5.0, lit(1.0)))
   }
 
+  /** Composite quality score in [0,1]: length, token-length, punctuation
+    * and stopword components, equally weighted. The exact formula is the
+    * contract (oracle-tested); weights follow common quality-filter
+    * practice (length + fluency signals).
+    */
   def qualityScore(c: Column): Column = {
     val f = qualityFeatures(c)
     lit(0.25) * element_at(f, 1) +
@@ -415,13 +415,6 @@ object TextFunctions {
   def docGramCounts(c: Column, n: Int): Column =
     ColumnOps.toColumn(DocGramCounts(_, n))(c)
 
-  /** Single-pass word k-shingle expression: split once, emit contiguous
-    * k-word windows joined by single spaces. The builtin-composed variant
-    * below re-evaluates the split inside the HOF lambda once PER ELEMENT
-    * (O(words^2) work per row — 3x slower on the sf0.1 bench); this
-    * expression tokenizes once. Semantics identical: trim, split on \s+,
-    * fewer than k words -> empty array.
-    */
   /** Plain-String shingling — the ONE tokenization used by both the
     * batch expression kernel below and the streaming row-local signature
     * path ([[graft.operators.Dedup.minhashBandSigs]]); a second copy of
@@ -464,6 +457,13 @@ object TextFunctions {
     override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
   }
 
+  /** Single-pass word k-shingle expression: split once, emit contiguous
+    * k-word windows joined by single spaces. The builtin-composed variant
+    * below re-evaluates the split inside the HOF lambda once PER ELEMENT
+    * (O(words^2) work per row — 3x slower on the sf0.1 bench); this
+    * expression tokenizes once. Semantics identical: trim, split on \s+,
+    * fewer than k words -> empty array.
+    */
   def wordShingles(c: Column, k: Int): Column =
     ColumnOps.toColumn(WordShingles(_, k))(c)
 

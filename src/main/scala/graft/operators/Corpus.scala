@@ -39,42 +39,6 @@ object Corpus {
     df.withColumn(as, assign)
   }
 
-  /** Pack documents into fixed-token-budget context windows (sequence
-    * packing): greedy first-fit over each partition, emitting
-    * (bin_id, pos_in_bin) per document. Docs longer than the budget get
-    * a bin of their own (truncation is the tokenizer's job, not the
-    * packer's).
-    *
-    * Scale shape: packing is inherently sequential, so the greedy scan
-    * runs PER PARTITION (mapPartitions, zero shuffle beyond the optional
-    * pre-sort) and bin ids are (partition, local-bin) pairs encoded as
-    * one long — the standard distributed compromise: within-partition
-    * packing quality, global parallelism. Sorting by descending length
-    * first (caller's choice) approximates first-fit-decreasing.
-    * Determinism: for a fixed partitioning and row order the output is a
-    * pure function of the input — pin both (e.g. `repartitionByRange` +
-    * `sortWithinPartitions`) for run-to-run stability.
-    */
-  /** Eval-set decontamination (EXT — the step a training pipeline runs
-    * before any benchmark is trusted): flag every corpus document
-    * sharing at least one word `n`-gram with the test/eval set, with the
-    * exact hit count as provenance. Output: (idCol, n_hits) for
-    * contaminated docs only — `corpus.join(result, _, "left_anti")` is
-    * the clean corpus.
-    *
-    * Scale shape — the corpus side is MAP-ONLY until proven dirty:
-    * test-set n-grams (distinct, persisted) feed a [[BloomFilter]] sized
-    * by their exact count (one index-build action); each corpus doc then
-    * short-circuits through `exists(ngrams, mightContain)` — no explode,
-    * no shuffle, no join for the overwhelmingly-clean majority. Only
-    * might-contain survivors explode their distinct n-grams into the
-    * exact join that removes bloom false positives (never false
-    * negatives, by the filter's contract — so the result equals the
-    * plain semi-join bit for bit and stays oracle-checkable while the
-    * bloom stays invisible). At 100 TB the alternative — exploding every
-    * corpus doc into a shuffle join keyed on n-grams — moves ~100x the
-    * corpus text through the network; this moves the flagged sliver.
-    */
   /** The reusable decontamination index: the test set's distinct word
     * n-grams (persisted — every corpus pass and every ingest micro-batch
     * joins it) plus a [[org.apache.spark.util.sketch.BloomFilter]] over
@@ -96,6 +60,26 @@ object Corpus {
     (testNg, testNg.stat.bloomFilter("ng", nNg, fpp))
   }
 
+  /** Eval-set decontamination (EXT — the step a training pipeline runs
+    * before any benchmark is trusted): flag every corpus document
+    * sharing at least one word `n`-gram with the test/eval set, with the
+    * exact hit count as provenance. Output: (idCol, n_hits) for
+    * contaminated docs only — `corpus.join(result, _, "left_anti")` is
+    * the clean corpus.
+    *
+    * Scale shape — the corpus side is MAP-ONLY until proven dirty:
+    * test-set n-grams (distinct, persisted) feed a [[BloomFilter]] sized
+    * by their exact count (one index-build action); each corpus doc then
+    * short-circuits through `exists(ngrams, mightContain)` — no explode,
+    * no shuffle, no join for the overwhelmingly-clean majority. Only
+    * might-contain survivors explode their distinct n-grams into the
+    * exact join that removes bloom false positives (never false
+    * negatives, by the filter's contract — so the result equals the
+    * plain semi-join bit for bit and stays oracle-checkable while the
+    * bloom stays invisible). At 100 TB the alternative — exploding every
+    * corpus doc into a shuffle join keyed on n-grams — moves ~100x the
+    * corpus text through the network; this moves the flagged sliver.
+    */
   def decontaminate(corpus: DataFrame, idCol: String, textCol: String,
       testSet: DataFrame, testTextCol: String, n: Int = 8,
       fpp: Double = 0.01): DataFrame = {
@@ -154,6 +138,22 @@ object Corpus {
           .as("chunk_text"))
   }
 
+  /** Pack documents into fixed-token-budget context windows (sequence
+    * packing): greedy first-fit over each partition, emitting
+    * (bin_id, pos_in_bin) per document. Docs longer than the budget get
+    * a bin of their own (truncation is the tokenizer's job, not the
+    * packer's).
+    *
+    * Scale shape: packing is inherently sequential, so the greedy scan
+    * runs PER PARTITION (mapPartitions, zero shuffle beyond the optional
+    * pre-sort) and bin ids are (partition, local-bin) pairs encoded as
+    * one long — the standard distributed compromise: within-partition
+    * packing quality, global parallelism. Sorting by descending length
+    * first (caller's choice) approximates first-fit-decreasing.
+    * Determinism: for a fixed partitioning and row order the output is a
+    * pure function of the input — pin both (e.g. `repartitionByRange` +
+    * `sortWithinPartitions`) for run-to-run stability.
+    */
   def packSequences(df: DataFrame, idCol: String, lengthCol: String,
       budget: Long): DataFrame = {
     require(budget > 0, "token budget must be positive")
@@ -210,33 +210,6 @@ object Corpus {
       .drop("_rn", "_n")
   }
 
-  /** DSIR importance log-weights (Xie et al. 2023, "Data Selection via
-    * Importance Resampling"): score each document by how much more
-    * likely its hashed n-gram features are under a TARGET distribution
-    * than under the RAW corpus distribution —
-    * log w(doc) = sum over features of [log p_target(b) - log p_raw(b)]
-    * with features = word unigrams + bigrams hashed into `buckets`
-    * buckets and add-one smoothing on both bucket distributions.
-    * `targetFlag` marks the target rows (e.g. lang = 'en').
-    *
-    * Output: (idCol, n_feats, dsir_logweight). Downstream, resample
-    * proportionally to the weight (see the declared Gumbel top-k query)
-    * or threshold.
-    *
-    * Scale shape (100 TB): one token/bigram explode, then every
-    * aggregate is over the FIXED bucket space — the two distribution
-    * tables are `buckets` rows regardless of corpus size, so their join
-    * back onto the feature stream is an always-legal broadcast (never
-    * data-sized, unlike a vocab join). Per-bucket log-ratios are
-    * quantized to DECIMAL(20,9) BEFORE the per-doc sum so the sum is
-    * exact integer-scaled arithmetic — order-independent, safe under any
-    * partial-aggregation schedule, and bit-identical across engines (a
-    * raw double sum would drift by ulps under Spark's two-phase agg).
-    *
-    * `buckets` must be a power of 16 up to 65536: the bucket id is the
-    * first log16(buckets) md5 hex digits of the feature — the
-    * engine-portable hash idiom shared with [[assignSplit]].
-    */
   /** Per-(doc, bucket) hashed-feature counts — the shared front half of
     * the DSIR pipeline (one token/bigram explode, one doc-sized
     * shuffle). */
@@ -299,6 +272,33 @@ object Corpus {
           .cast("decimal(20,9)").as("_lw"))
   }
 
+  /** DSIR importance log-weights (Xie et al. 2023, "Data Selection via
+    * Importance Resampling"): score each document by how much more
+    * likely its hashed n-gram features are under a TARGET distribution
+    * than under the RAW corpus distribution —
+    * log w(doc) = sum over features of [log p_target(b) - log p_raw(b)]
+    * with features = word unigrams + bigrams hashed into `buckets`
+    * buckets and add-one smoothing on both bucket distributions.
+    * `targetFlag` marks the target rows (e.g. lang = 'en').
+    *
+    * Output: (idCol, n_feats, dsir_logweight). Downstream, resample
+    * proportionally to the weight (see the declared Gumbel top-k query)
+    * or threshold.
+    *
+    * Scale shape (100 TB): one token/bigram explode, then every
+    * aggregate is over the FIXED bucket space — the two distribution
+    * tables are `buckets` rows regardless of corpus size, so their join
+    * back onto the feature stream is an always-legal broadcast (never
+    * data-sized, unlike a vocab join). Per-bucket log-ratios are
+    * quantized to DECIMAL(20,9) BEFORE the per-doc sum so the sum is
+    * exact integer-scaled arithmetic — order-independent, safe under any
+    * partial-aggregation schedule, and bit-identical across engines (a
+    * raw double sum would drift by ulps under Spark's two-phase agg).
+    *
+    * `buckets` must be a power of 16 up to 65536: the bucket id is the
+    * first log16(buckets) md5 hex digits of the feature — the
+    * engine-portable hash idiom shared with [[assignSplit]].
+    */
   def dsirLogWeights(docs: DataFrame, idCol: String, textCol: String,
       targetFlag: org.apache.spark.sql.Column,
       buckets: Int = 256): DataFrame = {
@@ -831,11 +831,17 @@ object Corpus {
     * partial combine ships at most the distinct-gram space per task.
     */
   def langProfiles(docs: DataFrame, langCol: String, textCol: String,
-      n: Int = 3, top: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    withDocGramCounts(docs.select(col(langCol).as("lang"), col(textCol)),
+      n: Int = 3, top: Int = 100): DataFrame =
+    profileTop(withDocGramCounts(docs.select(col(langCol).as("lang"), col(textCol)),
         col(textCol), n)
-      .select(col("lang"), explode(col("_pairs")).as("_p"))
+      .select(col("lang"), explode(col("_pairs")).as("_p")), top)
+
+  /** (lang, g, r): the profile aggregate over a (lang, _p) stream of
+    * per-doc (g, cnt) structs — counts summed per (lang, gram), then the
+    * `top` grams per language by (cnt desc, g asc), r 1-based. */
+  private def profileTop(langPairs: DataFrame, top: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    langPairs
       .groupBy(col("lang"), col("_p.g").as("g"))
       .agg(sum(col("_p.cnt").cast("long")).as("cnt"))
       .withColumn("r", row_number().over(
@@ -844,19 +850,6 @@ object Corpus {
       .select("lang", "g", "r")
   }
 
-  /** Classify by out-of-place distance against [[langProfiles]]: each
-    * doc's own top-`top` gram ranks are compared with every language's
-    * profile ranks — sum of |docRank - langRank| with a miss penalty of
-    * `top` — and the argmin language wins (ties to the lexically first
-    * language). ALL integer arithmetic: ranks, absolute differences and
-    * sums replay exactly in any engine, so the declared query
-    * hash-checks with no float discipline at all.
-    *
-    * Scale shape: the corpus-sized work is the doc-gram count and the
-    * per-doc rank window (both keyed by the doc id); the profile and
-    * language list ride broadcast joins, and the distance aggregate
-    * handles at most `top * |langs|` rows per doc.
-    */
   /** Train-on-self composition of [[langProfiles]] + [[langClassifyNgram]]
     * with ONE tokenization: the per-doc (gram, cnt) arrays are computed
     * once MAP-SIDE ([[docGramCounts]]) and persisted; the language
@@ -868,7 +861,6 @@ object Corpus {
     */
   def langIdSelfTrain(docs: DataFrame, idCol: String, langCol: String,
       textCol: String, n: Int = 3, top: Int = 100): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // one map-side tokenize+count per doc; persisted because it feeds
     // BOTH the profile aggregate and the doc-rank explode
     val pairs = withDocGramCounts(
@@ -883,18 +875,15 @@ object Corpus {
     // (profiled: one 1.4 s 1-task job); a proper 32-task job fills the
     // cache first and the broadcast reads it
     pairs.count()
-    val profiles = pairs
-      .select(col("_lang").as("lang"), explode(col("_pairs")).as("_p"))
-      .groupBy(col("lang"), col("_p.g").as("g"))
-      .agg(sum(col("_p.cnt").cast("long")).as("cnt"))
-      .withColumn("r", row_number().over(
-        Window.partitionBy("lang").orderBy(col("cnt").desc, col("g"))))
-      .filter(col("r") <= top)
-      .select("lang", "g", "r")
+    val profiles = profileTop(pairs
+      .select(col("_lang").as("lang"), explode(col("_pairs")).as("_p")), top)
     val docRanks = docRanksFrom(pairs, top)
     classifyRanks(docRanks, profiles, top)
       .withColumnRenamed("_id", idCol)
   }
+
+  /** The most languages a profile may hold (see [[classifyRanks]]). */
+  val MaxLangs = 64
 
   /** Distance + argmin over prepared (doc rank, profile) frames — shared
     * by [[langClassifyNgram]] and [[langIdSelfTrain]].
@@ -907,7 +896,6 @@ object Corpus {
     * and a corpus with more distinct lang labels loses the
     * lexicographically-last ones rather than OOMing an executor.
     */
-  val MaxLangs = 64
   private def classifyRanks(docRanks: DataFrame, profiles: DataFrame,
       top: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -924,6 +912,19 @@ object Corpus {
       .select(col("_id"), col("lang").as("lang_pred"), col("oop"))
   }
 
+  /** Classify by out-of-place distance against [[langProfiles]]: each
+    * doc's own top-`top` gram ranks are compared with every language's
+    * profile ranks — sum of |docRank - langRank| with a miss penalty of
+    * `top` — and the argmin language wins (ties to the lexically first
+    * language). ALL integer arithmetic: ranks, absolute differences and
+    * sums replay exactly in any engine, so the declared query
+    * hash-checks with no float discipline at all.
+    *
+    * Scale shape: the corpus-sized work is the doc-gram count and the
+    * per-doc rank window (both keyed by the doc id); the profile and
+    * language list ride broadcast joins, and the distance aggregate
+    * handles at most `top * |langs|` rows per doc.
+    */
   def langClassifyNgram(docs: DataFrame, idCol: String, textCol: String,
       profiles: DataFrame, n: Int = 3, top: Int = 100): DataFrame = {
     val docRanks = docRanksFrom(

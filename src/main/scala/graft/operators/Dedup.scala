@@ -141,138 +141,103 @@ object Dedup {
   }
 
   /** All-pairs n-gram Jaccard >= threshold, computed WITHOUT a cross
-    * product: explode distinct shingles, self-join on the shingle, count
-    * intersections per pair (only pairs sharing >=1 shingle ever
-    * materialize), then filter on the derived Jaccard.
-    *
-    * `maxShingleDf`, when set, selects the PREFIX-FILTERED path
-    * (AllPairs/PPJoin — see the inline notes): candidates come from a
-    * self-join of each document's (1-t)-fraction rarest shingles, with
-    * document frequency capped at `cap` as the skew guard; scores are
-    * exact Jaccard over the FULL shingle sets, so reported values are
-    * unchanged — only pairs whose entire prefix overlap is ultra-common
-    * (df > cap) shingles can be missed, the standard df-pruning trade.
+    * product by a PREFIX-FILTERED set-similarity join (AllPairs/PPJoin —
+    * see the inline notes): candidates come from a self-join of each
+    * document's (1-t)-fraction rarest shingles, with document frequency
+    * capped at `maxShingleDf` as the skew guard; scores are exact Jaccard
+    * over the FULL shingle sets, so reported values are exact — only
+    * pairs whose entire prefix overlap is ultra-common (df > cap)
+    * shingles can be missed, the standard df-pruning trade.
     */
   def ngramJaccardPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleK: Int = 3, threshold: Double = 0.5,
-      maxShingleDf: Option[Int] = None): DataFrame = {
-    maxShingleDf match {
-      case Some(cap) =>
-        // PREFIX-FILTERED set-similarity join (AllPairs/PPJoin,
-        // Bayardo-Ma-Srikant WWW'07): a pair with J >= t must share at
-        // least ceil(t * max(|A|,|B|)) shingles, so under ANY total order
-        // common to both documents their prefixes of length
-        // |d| - ceil(t*|d|) + 1 must intersect. Candidates therefore come
-        // from a self-join of PREFIX rows only — on a duplicate-dense
-        // corpus this cuts candidate pairs ~27x (1.27M -> 46k measured on
-        // the sf0.1 documents table) and is the property that survives a
-        // 100 TB corpus: candidate volume scales with true-duplicate
-        // density, not with Sum_sh C(df,2) random collisions. The global
-        // order is (df ASC, md5 ASC) — rarest shingles first minimizes
-        // prefix collisions, and md5 keeps the tie-break portable to the
-        // DuckDB oracle (which replays the same ranking). Prefix length
-        // uses DECIMAL ceil: floor((1-t)*sz)+1 in doubles under-counts at
-        // exact multiples (int(0.1*10) == 0 — measured losing 2 of 249
-        // true pairs at sf0.1).
-        //
-        // Prefix witnesses are further restricted to 2 <= df <= cap: df=1
-        // matches nothing, df > cap is the skew guard (one boilerplate
-        // phrase in 10^6 docs would quadratic the join on its own). A
-        // pair whose ENTIRE prefix overlap is ultra-common shingles can
-        // be missed — same recall trade, and the same bound (C(cap,2)
-        // join rows per shingle), as the previous cap-only candidates.
-        //
-        // Verification is exact over FULL shingle sets: candidates join
-        // the per-doc sorted md5-set arrays (doc-keyed joins — arrays
-        // never ride a pair key) and score size(array_intersect)/union.
-        // Arrays are bounded by document length, the intersect is pure
-        // map-side CPU, and the pair frame that reaches the sizes math is
-        // already candidate-small — the previous shape dragged every
-        // Sum C(df,2) collision pair through two joins before filtering.
-        //
-        // ONE persisted frame feeds prefixes AND verify sets; persist
-        // outlives this call by design (the returned plan reads it
-        // lazily); MEMORY_AND_DISK + LRU like every persist here — a
-        // long-lived session reclaims eagerly with
-        // spark.catalog.clearCache() (see Relational.scala convention
-        // note). _df and (_sz, _rn) are two window passes over the same
-        // distinct frame; the jid partitioning is then reused by the
-        // collect_list aggregation.
-        val shAll = docs
-          .select(col(idCol).as("jid"),
-            explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("s"))
-          .select(col("jid"), md5(col("s").cast("binary")).as("sh"))
-          .distinct()
-          .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("sh"))))
-          .withColumn("_sz", count(lit(1)).over(Window.partitionBy(col("jid"))))
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy(col("jid")).orderBy(col("_df"), col("sh"))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val prefixLen = col("_sz") -
-          ceil(col("_sz") * lit(java.math.BigDecimal.valueOf(threshold))) + lit(1)
-        val pref = shAll
-          .filter(col("_rn") <= prefixLen && col("_df") >= 2 && col("_df") <= cap)
-          .select("jid", "sh")
-        val cands = pref.as("x").join(pref.as("y"),
-            col("x.sh") === col("y.sh") && col("x.jid") < col("y.jid"))
-          .select(col("x.jid").as("id_a"), col("y.jid").as("id_b"))
-          .distinct()
-        val sets = shAll.groupBy("jid")
-          .agg(collect_list(col("sh")).as("_set"), count(lit(1)).as("sz"))
-        // The RESULT is persisted too (r13 optimization): the verified
-        // pair set is duplicate-density-bounded (249 rows at sf0.1 —
-        // thousandths of the corpus at any scale), while re-deriving it
-        // costs the cands self-join + the array_intersect verify. 14
-        // declared queries consume this exact frame (the dup-graph
-        // family), several referencing it TWICE (both directions of an
-        // undirected edge union) — profiled at 2×~1.9 s per query at
-        // sf0.1 before the persist. CacheManager plan-equality shares
-        // one verify across the whole family within a session; Verify's
-        // per-query clearCache keeps the correctness gate flat.
-        return cands
-          .join(sets.select(col("jid").as("id_a"), col("_set").as("_sa"),
-            col("sz").as("sz_a")), Seq("id_a"))
-          .join(sets.select(col("jid").as("id_b"), col("_set").as("_sb"),
-            col("sz").as("sz_b")), Seq("id_b"))
-          .withColumn("inter", size(array_intersect(col("_sa"), col("_sb"))).cast("long"))
-          .withColumn("jaccard",
-            col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-          .filter(col("jaccard") >= threshold)
-          .select("id_a", "id_b", "jaccard")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      case None => // exact single-stage path below
-    }
-    // 64-bit hashed shingles: same counts as string shingles up to a
-    // ~n^2/2^65 collision probability, at a fraction of the shuffle bytes.
-    val sh = docs
-      .select(col(idCol).as("jid"),
-        explode(transform(TextFunctions.wordShingles(col(textCol), shingleK),
-          sh => xxhash64(sh))).as("sh"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sizes = sh.groupBy("jid").agg(count(lit(1)).as("sz"))
-    // result-identical df>=2 pruning: a shingle in exactly one document
-    // matches nothing in the self-join, so it only inflates the join
-    // input. On a real heavy-tailed vocabulary most shingles are unique —
-    // dropping them BEFORE the self-join is the difference between joining
-    // the corpus and joining its repeated core. (`sizes` above still
-    // counts every shingle; only the intersection stage prunes.) The df
-    // comes from a window count — one shuffle, not groupBy+semi-join.
-    val shJoin = sh
-      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("sh"))))
-      .filter(col("_df") >= 2).drop("_df")
-    val inter = shJoin.as("x").join(shJoin.as("y"),
+      maxShingleDf: Int = 128): DataFrame = {
+    // PREFIX-FILTERED set-similarity join (AllPairs/PPJoin,
+    // Bayardo-Ma-Srikant WWW'07): a pair with J >= t must share at
+    // least ceil(t * max(|A|,|B|)) shingles, so under ANY total order
+    // common to both documents their prefixes of length
+    // |d| - ceil(t*|d|) + 1 must intersect. Candidates therefore come
+    // from a self-join of PREFIX rows only — on a duplicate-dense
+    // corpus this cuts candidate pairs ~27x (1.27M -> 46k measured on
+    // the sf0.1 documents table) and is the property that survives a
+    // 100 TB corpus: candidate volume scales with true-duplicate
+    // density, not with Sum_sh C(df,2) random collisions.
+    //
+    // Prefix witnesses are further restricted to 2 <= df <= cap: df=1
+    // matches nothing, df > cap is the skew guard (one boilerplate
+    // phrase in 10^6 docs would quadratic the join on its own). A
+    // pair whose ENTIRE prefix overlap is ultra-common shingles can
+    // be missed — same recall trade, and the same bound (C(cap,2)
+    // join rows per shingle), as the previous cap-only candidates.
+    //
+    // Verification is exact over FULL shingle sets: candidates join
+    // the per-doc sorted md5-set arrays (doc-keyed joins — arrays
+    // never ride a pair key) and score size(array_intersect)/union.
+    // Arrays are bounded by document length, the intersect is pure
+    // map-side CPU, and the pair frame that reaches the sizes math is
+    // already candidate-small — the previous shape dragged every
+    // Sum C(df,2) collision pair through two joins before filtering.
+    val shAll = rankedShingles(docs, idCol, textCol, shingleK)
+    val pref = shAll
+      .filter(col("_rn") <= prefixLen(threshold) && col("_df") >= 2 &&
+        col("_df") <= maxShingleDf)
+      .select("jid", "sh")
+    val cands = pref.as("x").join(pref.as("y"),
         col("x.sh") === col("y.sh") && col("x.jid") < col("y.jid"))
-      .groupBy(col("x.jid").as("id_a"), col("y.jid").as("id_b"))
-      .agg(count(lit(1)).as("inter"))
-    inter
-      .join(sizes.withColumnRenamed("jid", "id_a").withColumnRenamed("sz", "sz_a"), Seq("id_a"))
-      .join(sizes.withColumnRenamed("jid", "id_b").withColumnRenamed("sz", "sz_b"), Seq("id_b"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .select(col("x.jid").as("id_a"), col("y.jid").as("id_b"))
+      .distinct()
+    val sets = shAll.groupBy("jid")
+      .agg(collect_list(col("sh")).as("_set"), count(lit(1)).as("sz"))
+    // The RESULT is persisted too (r13 optimization): the verified
+    // pair set is duplicate-density-bounded (249 rows at sf0.1 —
+    // thousandths of the corpus at any scale), while re-deriving it
+    // costs the cands self-join + the array_intersect verify. 14
+    // declared queries consume this exact frame (the dup-graph
+    // family), several referencing it TWICE (both directions of an
+    // undirected edge union) — profiled at 2×~1.9 s per query at
+    // sf0.1 before the persist. CacheManager plan-equality shares
+    // one verify across the whole family within a session; Verify's
+    // per-query clearCache keeps the correctness gate flat.
+    verifyJaccardOnCandidates(cands, sets, sets, threshold)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
+
+  /** (jid, sh, [extra...], _df, _sz, _rn): each document's distinct
+    * md5 word shingles ranked by the (df ASC, md5 ASC) global order the
+    * prefix filters use — rarest shingles first minimizes prefix
+    * collisions, and md5 keeps the tie-break portable to the DuckDB
+    * oracle (which replays the same ranking) — `_sz` the
+    * document's shingle count. `extra` columns (over the shingle text
+    * `s`) ride along in the distinct.
+    *
+    * ONE persisted frame feeds prefixes AND verify sets; persist
+    * outlives the call by design (the returned plan reads it lazily);
+    * MEMORY_AND_DISK + LRU like every persist here — a long-lived
+    * session reclaims eagerly with spark.catalog.clearCache() (see
+    * Relational.scala convention note). _df and (_sz, _rn) are two
+    * window passes over the same distinct frame; the jid partitioning
+    * is then reused by the collect_list aggregation.
+    */
+  private def rankedShingles(docs: DataFrame, idCol: String, textCol: String,
+      shingleK: Int, extra: Column*): DataFrame =
+    docs
+      .select(col(idCol).as("jid"),
+        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("s"))
+      .select(Seq(col("jid"), md5(col("s").cast("binary")).as("sh")) ++ extra: _*)
+      .distinct()
+      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+      .withColumn("_sz", count(lit(1)).over(Window.partitionBy(col("jid"))))
+      .withColumn("_rn", row_number().over(
+        Window.partitionBy(col("jid")).orderBy(col("_df"), col("sh"))))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** Prefix length `_sz - ceil(t * _sz) + 1` over [[rankedShingles]]:
+    * DECIMAL ceil, because floor((1-t)*sz)+1 in doubles under-counts at
+    * exact multiples (int(0.1*10) == 0 — measured losing 2 of 249 true
+    * pairs at sf0.1).
+    */
+  private def prefixLen(threshold: Double): Column = col("_sz") -
+    ceil(col("_sz") * lit(java.math.BigDecimal.valueOf(threshold))) + lit(1)
 
   /** DIRECTED shingle-containment pairs: C(src -> dst) =
     * |S_src ∩ S_dst| / |S_src| >= `threshold` — the asymmetric cousin of
@@ -311,21 +276,11 @@ object Dedup {
     // set arrays — an asymmetric candidate set runs ~3x the symmetric
     // Jaccard path's, so 32-char digest arrays on the pair stream were
     // the measured bottleneck (intersection counts are hash-agnostic).
-    val shAll = docs
-      .select(col(idCol).as("jid"),
-        explode(TextFunctions.wordShingles(col(textCol), shingleK)).as("s"))
-      .select(col("jid"), md5(col("s").cast("binary")).as("sh"),
-        xxhash64(col("s")).as("shh"))
-      .distinct()
-      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("sh"))))
-      .withColumn("_sz", count(lit(1)).over(Window.partitionBy(col("jid"))))
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("jid")).orderBy(col("_df"), col("sh"))))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val prefixLen = col("_sz") -
-      ceil(col("_sz") * lit(java.math.BigDecimal.valueOf(threshold))) + lit(1)
+    val shAll = rankedShingles(docs, idCol, textCol, shingleK,
+      xxhash64(col("s")).as("shh"))
     val probe = shAll
-      .filter(col("_rn") <= prefixLen && col("_df") >= 2 && col("_df") <= maxShingleDf)
+      .filter(col("_rn") <= prefixLen(threshold) && col("_df") >= 2 &&
+        col("_df") <= maxShingleDf)
       .select(col("jid").as("src_id"), col("shh"))
     val target = shAll
       .filter(col("_df") >= 2 && col("_df") <= maxShingleDf)
@@ -471,16 +426,6 @@ object Dedup {
         (agree.cast("double") / lit(k.toDouble)).as("est_jaccard"))
   }
 
-  /** The REUSABLE corpus-side band index for stream-ingestion matching
-    * ([[graft.streaming.StreamOps.minhashAgainstStream]]): one
-    * (corpus_id, band, bsig, sig) row per document and band, `sig` the
-    * full k-minima array for the agreement estimate. Build once per
-    * corpus (or persist/write it out) and match every ingestion batch
-    * against it — the index build is the only corpus scan. `maxBucket`
-    * is the same skew guard as the join variants: drop buckets a
-    * mirrored-10^6-times page would flood, HERE at build time so every
-    * later batch inherits the bound.
-    */
   /** The UNCAPPED banded-signature frame — shared by the index builder
     * and the incremental updater (per-doc pure function of the text, so
     * rows for old and new docs are identical whether built together or
@@ -505,6 +450,16 @@ object Dedup {
         col("sig").as("sig", sigMeta))
   }
 
+  /** The REUSABLE corpus-side band index for stream-ingestion matching
+    * ([[graft.streaming.StreamOps.minhashAgainstStream]]): one
+    * (corpus_id, band, bsig, sig) row per document and band, `sig` the
+    * full k-minima array for the agreement estimate. Build once per
+    * corpus (or persist/write it out) and match every ingestion batch
+    * against it — the index build is the only corpus scan. `maxBucket`
+    * is the same skew guard as the join variants: drop buckets a
+    * mirrored-10^6-times page would flood, HERE at build time so every
+    * later batch inherits the bound.
+    */
   def minhashBandIndexMd5(corpus: DataFrame, idCol: String, textCol: String,
       k: Int = 12, bands: Int = 2, shingleK: Int = 3,
       maxBucket: Option[Int] = None): DataFrame =

@@ -45,18 +45,32 @@ object Retrieval {
     require(k > 0 && k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopK: need k>0, k1>0, 0<=b<=1; got k=$k k1=$k1 b=$b")
     val qterms = terms.distinct
-    // r14: the tokenized corpus is persisted — (N, avgdl) and the tf
-    // pass both read it, so the corpus tokenized TWICE per round (and a
-    // PRF query re-reads the same frame in round 2 plan-equal; §5)
+    bm25Global(docs, idCol, textCol, k, k1, b)(
+      _.filter(col("_tok").isin(qterms: _*)))
+  }
+
+  /** The BM25 scorer every variant shares: the per-(doc, term) Okapi
+    * contribution `_c` (columns `_tok`, `_id`, `_dl`, `_tf`, `_df`, `_n`,
+    * `_avgdl`, `_idf`, `_c`) for the tokens `keepTerms` lets through the
+    * exploded (`_id`, `_dl`, `_tok`) frame. `bm25TopK` passes a literal
+    * `isin` filter, the frame variants a LEFT SEMI join.
+    *
+    * r14: the tokenized corpus (`_id`, `_toks`, `_dl`) is persisted —
+    * (N, avgdl) and the tf pass both read it, so the corpus would be
+    * tokenized TWICE per round — and it is plan-equal across calls, so a
+    * PRF query's round 2 reads round 1's cache (§5).
+    */
+  private def bm25Contributions(docs: DataFrame, idCol: String,
+      textCol: String, k1: Double, b: Double)(
+      keepTerms: DataFrame => DataFrame): DataFrame = {
     val base = docs.select(col(idCol).as("_id"),
         split(trim(col(textCol)), "\\s+").as("_toks"))
       .withColumn("_dl", size(col("_toks")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // (N, avgdl) in ONE pass over the lengths; broadcast 1-row frame
     val stats = base.agg(count(lit(1)).as("_n"), avg(col("_dl")).as("_avgdl"))
-    val tf = base
-      .select(col("_id"), col("_dl"), explode(col("_toks")).as("_tok"))
-      .filter(col("_tok").isin(qterms: _*))
+    val tf = keepTerms(base
+        .select(col("_id"), col("_dl"), explode(col("_toks")).as("_tok")))
       .groupBy(col("_id"), col("_dl"), col("_tok"))
       .agg(count(lit(1)).as("_tf"))
     // per-term document frequency: tf already has one row per (doc, term).
@@ -71,14 +85,29 @@ object Retrieval {
       .withColumn("_c",
         col("_idf") * col("_tf") * lit(k1 + 1) /
           (col("_tf") + lit(k1) * (lit(1 - b) + lit(b) * col("_dl") / col("_avgdl"))))
+  }
+
+  /** The global BM25 top-k over the terms `keepTerms` keeps: the
+    * scorer's contributions summed per doc, quantized to 6 decimals.
+    */
+  private def bm25Global(docs: DataFrame, idCol: String, textCol: String,
+      k: Int, k1: Double, b: Double)(
+      keepTerms: DataFrame => DataFrame): DataFrame =
+    topK(bm25Contributions(docs, idCol, textCol, k1, b)(keepTerms)
       .groupBy(col("_id"))
-      .agg(round(sum(col("_c")), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("_id").asc)
+      .agg(round(sum(col("_c")), 6).as("bm25")), idCol, "bm25", k)
+
+  /** The global top-k tail of a scored (`_id`, `score`) frame: top `k` by
+    * (score desc, id asc) as a TakeOrderedAndProject, then `rank` by a
+    * window over the k collected rows only. Output: (idCol, score, rank).
+    */
+  private def topK(scored: DataFrame, idCol: String, score: String,
+      k: Int): DataFrame =
+    scored.orderBy(col(score).desc, col("_id").asc)
       .limit(k)
       .withColumn("rank",
-        row_number().over(Window.orderBy(col("bm25").desc, col("_id").asc)))
-      .select(col("_id").as(idCol), col("bm25"), col("rank"))
-  }
+        row_number().over(Window.orderBy(col(score).desc, col("_id").asc)))
+      .select(col("_id").as(idCol), col(score), col("rank"))
 
   /** [[bm25TopK]] against a term FRAME (one `term` column) instead of a
     * literal bag — the shape query-expansion pipelines need, where the
@@ -93,34 +122,11 @@ object Retrieval {
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0 && k1 > 0 && b >= 0 && b <= 1,
       s"bm25TopKTerms: need k>0, k1>0, 0<=b<=1; got k=$k k1=$k1 b=$b")
-    // persisted tokenized corpus — see bm25TopK (plan-equal across
-    // rounds, so a PRF round 2 reuses round 1's cache)
-    val base = docs.select(col(idCol).as("_id"),
-        split(trim(col(textCol)), "\\s+").as("_toks"))
-      .withColumn("_dl", size(col("_toks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = base.agg(count(lit(1)).as("_n"), avg(col("_dl")).as("_avgdl"))
-    val tf = base
-      .select(col("_id"), col("_dl"), explode(col("_toks")).as("_tok"))
-      .join(termsDf.select(col("term").as("_tok")).distinct(),
-        Seq("_tok"), "left_semi")
-      .groupBy(col("_id"), col("_dl"), col("_tok"))
-      .agg(count(lit(1)).as("_tf"))
-    val dfT = tf.groupBy(col("_tok")).agg(count(lit(1)).as("_df"))
-    tf.join(dfT, Seq("_tok"))
-      .crossJoin(broadcast(stats))
-      .withColumn("_idf",
-        log(lit(1.0) + (col("_n") - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_c",
-        col("_idf") * col("_tf") * lit(k1 + 1) /
-          (col("_tf") + lit(k1) * (lit(1 - b) + lit(b) * col("_dl") / col("_avgdl"))))
-      .groupBy(col("_id"))
-      .agg(round(sum(col("_c")), 6).as("bm25"))
-      .orderBy(col("bm25").desc, col("_id").asc)
-      .limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("bm25").desc, col("_id").asc)))
-      .select(col("_id").as(idCol), col("bm25"), col("rank"))
+    // the scorer's persisted corpus is plan-equal to bm25TopK's, so a
+    // PRF round 2 reuses round 1's cache
+    bm25Global(docs, idCol, textCol, k, k1, b)(
+      _.join(termsDf.select(col("term").as("_tok")).distinct(),
+        Seq("_tok"), "left_semi"))
   }
 
   /** Pseudo-relevance-feedback retrieval (RM3 shape, Lavrenko-Croft
@@ -176,14 +182,9 @@ object Retrieval {
     require(k > 0 && kRrf >= 0, s"rrfFuse: need k>0, kRrf>=0; got $k, $kRrf")
     val parts = rankings.map(_.select(col(idCol).as("_id"),
       (lit(1.0) / (lit(kRrf.toDouble) + col(rankCol))).as("_r")))
-    parts.reduce(_ unionAll _)
+    topK(parts.reduce(_ unionAll _)
       .groupBy(col("_id"))
-      .agg(round(sum(col("_r")), 6).as("rrf"))
-      .orderBy(col("rrf").desc, col("_id").asc)
-      .limit(k)
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("rrf").desc, col("_id").asc)))
-      .select(col("_id").as(idCol), col("rrf"), col("rank"))
+      .agg(round(sum(col("_r")), 6).as("rrf")), idCol, "rrf", k)
   }
 
   /** Build-once INVERTED INDEX (the artifact [[bm25TopK]] recomputes on
@@ -391,25 +392,8 @@ object Retrieval {
     require(k > 0 && k1 > 0 && b >= 0 && b <= 1,
       s"bm25PerQuery: need k>0, k1>0, 0<=b<=1; got k=$k k1=$k1 b=$b")
     val qmap = queries.select(col("query_id"), col("term").as("_tok")).distinct()
-    // persisted tokenized corpus — see bm25TopK
-    val base = docs.select(col(idCol).as("_id"),
-        split(trim(col(textCol)), "\\s+").as("_toks"))
-      .withColumn("_dl", size(col("_toks")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stats = base.agg(count(lit(1)).as("_n"), avg(col("_dl")).as("_avgdl"))
-    val tf = base
-      .select(col("_id"), col("_dl"), explode(col("_toks")).as("_tok"))
-      .join(qmap.select("_tok").distinct(), Seq("_tok"), "left_semi")
-      .groupBy(col("_id"), col("_dl"), col("_tok"))
-      .agg(count(lit(1)).as("_tf"))
-    val dfT = tf.groupBy(col("_tok")).agg(count(lit(1)).as("_df"))
-    val scored = tf.join(dfT, Seq("_tok"))
-      .crossJoin(broadcast(stats))
-      .withColumn("_idf",
-        log(lit(1.0) + (col("_n") - col("_df") + 0.5) / (col("_df") + 0.5)))
-      .withColumn("_c",
-        col("_idf") * col("_tf") * lit(k1 + 1) /
-          (col("_tf") + lit(k1) * (lit(1 - b) + lit(b) * col("_dl") / col("_avgdl"))))
+    val scored = bm25Contributions(docs, idCol, textCol, k1, b)(
+        _.join(qmap.select("_tok").distinct(), Seq("_tok"), "left_semi"))
       .join(qmap, Seq("_tok")) // fan out per query containing the term
       .groupBy(col("query_id"), col("_id"))
       .agg(round(sum(col("_c")), 6).as("bm25"))

@@ -229,7 +229,7 @@ object EventsQueries {
           100, "o_totalprice", "o_orderkey")
         .orderBy("j")
     }) {
-      """WITH w AS (SELECT o_orderkey, o_totalprice,
+      s"""WITH w AS (SELECT o_orderkey, o_totalprice,
         |       CAST(CAST(o_totalprice AS DECIMAL(30,2)) * 100 AS BIGINT) AS wc,
         |       (instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 1)) - 1) * 16
         |         + (instr('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), 2, 1)) - 1) AS b
@@ -237,7 +237,7 @@ object EventsQueries {
         | c AS (SELECT *, SUM(wc) OVER (ORDER BY b, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi FROM w),
         | tot AS (SELECT CAST(SUM(wc) AS BIGINT) AS tw FROM w),
         | d AS (SELECT j.j AS j,
-        |       CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || j.j), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT) % tw AS u
+        |       ${hex48Sql("md5('42:' || j.j)")} % tw AS u
         |     FROM (SELECT unnest(range(0, 100)) AS j) j, tot)
         |SELECT d.j, c.o_orderkey, c.o_totalprice
         |FROM d JOIN c ON d.u >= c.hi - c.wc AND d.u < c.hi ORDER BY d.j""".stripMargin
@@ -259,22 +259,9 @@ object EventsQueries {
       // stream-scoring mirror: distributions from the held-in corpus only,
       // LEFT join + the smoothed count-0 default for buckets the corpus
       // never populated
-      """WITH corpus AS (SELECT * FROM documents WHERE doc_id % 13 <> 0),
-        | w AS (SELECT doc_id, lang = 'en' AS tgt, regexp_split_to_array(trim(text), '\s+') AS ws FROM corpus),
-        | unis AS (SELECT doc_id, tgt, unnest(ws) AS ng FROM w),
-        | bis AS (SELECT doc_id, tgt, ws[j] || ' ' || ws[j + 1] AS ng
-        |         FROM w, LATERAL unnest(range(1, len(ws))) AS t(j) WHERE len(ws) >= 2),
-        | f AS (SELECT doc_id, tgt,
-        |        (instr('0123456789abcdef', substr(md5(ng), 1, 1)) - 1) * 16
-        |          + (instr('0123456789abcdef', substr(md5(ng), 2, 1)) - 1) AS b
-        |       FROM (SELECT * FROM unis UNION ALL SELECT * FROM bis)),
-        | db AS (SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS n, MAX(tgt) AS tgt FROM f GROUP BY 1, 2),
-        | dist AS (SELECT b, CAST(SUM(n) AS BIGINT) AS cr,
-        |                CAST(SUM(CASE WHEN tgt THEN n ELSE 0 END) AS BIGINT) AS ct FROM db GROUP BY 1),
-        | tot AS (SELECT CAST(SUM(cr) AS BIGINT) AS tr, CAST(SUM(ct) AS BIGINT) AS tt FROM dist),
-        | tbl AS (SELECT b, CAST(ROUND(LN(CAST(ct + 1 AS DOUBLE) / (tt + 256)) - LN(CAST(cr + 1 AS DOUBLE) / (tr + 256)), 9) AS DECIMAL(20,9)) AS lw
-        |         FROM dist, tot),
-        | iw AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws FROM documents WHERE doc_id % 13 = 0),
+      s"""WITH corpus AS (SELECT * FROM documents WHERE doc_id % 13 <> 0),
+        | ${dsirTableSql("corpus")},
+        | iw AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents WHERE doc_id % 13 = 0),
         | iu AS (SELECT doc_id, unnest(ws) AS ng FROM iw),
         | ib AS (SELECT doc_id, ws[j] || ' ' || ws[j + 1] AS ng
         |        FROM iw, LATERAL unnest(range(1, len(ws))) AS t(j) WHERE len(ws) >= 2),
@@ -1128,9 +1115,9 @@ object EventsQueries {
         .select(col("event_type"), col("rank"), col("value").as("user_id"))
         .orderBy("event_type", "rank")
     }) {
-      """WITH d AS (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS value FROM events),
+      s"""WITH d AS (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS value FROM events),
         | p AS (SELECT event_type, value,
-        |   CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || value), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+        |   ${hex48Sql("md5('42:' || value)")}
         |     / 281474976710656.0 AS u
         |  FROM d),
         | r AS (SELECT event_type, value, u,
@@ -1150,9 +1137,9 @@ object EventsQueries {
           Seq("event_type"))
         .orderBy("event_type")
     }) {
-      """WITH d AS (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS value FROM events),
+      s"""WITH d AS (SELECT DISTINCT event_type, CAST(user_id AS VARCHAR) AS value FROM events),
         | p AS (SELECT event_type, value,
-        |   CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || value), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+        |   ${hex48Sql("md5('42:' || value)")}
         |     / 281474976710656.0 AS u
         |  FROM d),
         | r AS (SELECT event_type, value, u,
@@ -1887,25 +1874,9 @@ object EventsQueries {
       Stats.olsSimple(t(s, dir, "events"),
         floor(unix_micros(col("ts").cast("timestamp")) / 3600000000L) - 473352L,
         round(col("value") * 100))) {
-      """WITH o AS (SELECT (epoch_us(ts) // 3600000000) - 473352 AS x,
+      s"""WITH o AS (SELECT (epoch_us(ts) // 3600000000) - 473352 AS x,
         |        CAST(ROUND(value * 100) AS BIGINT) AS y FROM events),
-        | a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |        CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        |        SUM(CAST(x AS HUGEINT) * y) AS sxy,
-        |        SUM(CAST(x AS HUGEINT) * x) AS sxx,
-        |        SUM(CAST(y AS HUGEINT) * y) AS syy FROM o)
-        |SELECT n,
-        |  ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS slope,
-        |  ROUND((CAST(sy AS DOUBLE)
-        |    - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-        |      * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept,
-        |  ROUND(((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS r2
-        |FROM a""".stripMargin
+        | ${olsSql("o")}""".stripMargin
     },
     // EXT Mann-Whitney U (Stats.mannWhitney): click vs error values,
     // midrank tie correction — cell-based, so every float term is an

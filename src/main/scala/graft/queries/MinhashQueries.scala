@@ -99,17 +99,7 @@ object MinhashQueries {
     // nation perturbation makes real matches MISS the block, the
     // honest ER failure mode)
     Query("fellegi_sunter_weights")((s, dir) => {
-      val a = t(s, dir, "customer").select(col("c_custkey").as("akey"),
-        col("c_nationkey").as("anation"), col("c_mktsegment").as("aseg"),
-        floor(col("c_acctbal") / 1000.0).as("abal"))
-      val b = t(s, dir, "customer").select(
-        (col("c_custkey") + 1000000L).as("bkey"),
-        when(col("c_custkey") % 5 === 0, (col("c_nationkey") + 1) % 25)
-          .otherwise(col("c_nationkey")).as("bnation"),
-        when(col("c_custkey") % 3 === 0, lit("MOVED"))
-          .otherwise(col("c_mktsegment")).as("bseg"),
-        when(col("c_custkey") % 7 === 0, floor(col("c_acctbal") / 1000.0) + 1)
-          .otherwise(floor(col("c_acctbal") / 1000.0)).as("bbal"))
+      val (a, b, cellsA, cellsB) = fsCustomerPairs(s, dir)
       // r14 (§2/§3): the FS counts are pure functions of per-block
       // attribute-CELL marginals plus the linear labeled-match join —
       // the blocked pair frame (9M rows at sf0.1; quadratic in block
@@ -120,10 +110,6 @@ object MinhashQueries {
       // algebra; the weight tail is the operator's own code
       // (fellegiSunterWeightsFromCounts), so every guard and rounding
       // is shared. Oracle-verified at 3 SFs.
-      val cellsA = a.groupBy("anation", "aseg", "abal")
-        .agg(count(lit(1)).as("_ca"))
-      val cellsB = b.groupBy("bnation", "bseg", "bbal")
-        .agg(count(lit(1)).as("_cb"))
       val cellTotals = cellsA
         .join(cellsB, col("anation") === col("bnation"))
         .select((col("_ca") * col("_cb")).as("_np"),
@@ -151,17 +137,7 @@ object MinhashQueries {
     }) {
       // Fellegi-Sunter mirror: the same perturbed copy, nation-blocked
       // pairs, ONE conditional aggregate, guarded log2 weights
-      """WITH a AS (SELECT c_custkey AS akey, c_nationkey AS anation,
-        |        c_mktsegment AS aseg, FLOOR(c_acctbal / 1000.0) AS abal FROM customer),
-        | b AS (SELECT c_custkey + 1000000 AS bkey,
-        |        CASE WHEN c_custkey % 5 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS bnation,
-        |        CASE WHEN c_custkey % 3 = 0 THEN 'MOVED' ELSE c_mktsegment END AS bseg,
-        |        CASE WHEN c_custkey % 7 = 0 THEN FLOOR(c_acctbal / 1000.0) + 1
-        |             ELSE FLOOR(c_acctbal / 1000.0) END AS bbal
-        |       FROM customer),
-        | p AS (SELECT (aseg = bseg) AS agseg, (abal = bbal) AS agbal,
-        |        (bkey = akey + 1000000) AS ismatch
-        |       FROM a JOIN b ON anation = bnation),
+      s"""WITH $fsPairCtes,
         | agg AS (SELECT
         |    CAST(SUM(CASE WHEN ismatch THEN 1 ELSE 0 END) AS BIGINT) AS nm,
         |    CAST(SUM(CASE WHEN NOT ismatch THEN 1 ELSE 0 END) AS BIGINT) AS nu,
@@ -187,17 +163,7 @@ object MinhashQueries {
     // binary fields the score domain has 4 points, so the histogram IS
     // the separability readout (matches pile at the top score)
     Query("fs_score_separation")((s, dir) => {
-      val a = t(s, dir, "customer").select(col("c_custkey").as("akey"),
-        col("c_nationkey").as("anation"), col("c_mktsegment").as("aseg"),
-        floor(col("c_acctbal") / 1000.0).as("abal"))
-      val b = t(s, dir, "customer").select(
-        (col("c_custkey") + 1000000L).as("bkey"),
-        when(col("c_custkey") % 5 === 0, (col("c_nationkey") + 1) % 25)
-          .otherwise(col("c_nationkey")).as("bnation"),
-        when(col("c_custkey") % 3 === 0, lit("MOVED"))
-          .otherwise(col("c_mktsegment")).as("bseg"),
-        when(col("c_custkey") % 7 === 0, floor(col("c_acctbal") / 1000.0) + 1)
-          .otherwise(floor(col("c_acctbal") / 1000.0)).as("bbal"))
+      val (a, b, cellsA, cellsB) = fsCustomerPairs(s, dir)
       // r14 (§2/§3, the fellegi_sunter_weights rewrite): the 8-cell
       // (agseg, agbal, ismatch) histogram is derived from per-block
       // attribute-CELL marginal products plus the linear 1:1 match
@@ -207,10 +173,6 @@ object MinhashQueries {
       // nonmatch = all − match, with 0-count rows filtered so the cell
       // set is exactly the groupBy-over-pairs one. Identical counts by
       // algebra; downstream scoring unchanged. Oracle-verified 3 SFs.
-      val cellsA = a.groupBy("anation", "aseg", "abal")
-        .agg(count(lit(1)).as("_ca"))
-      val cellsB = b.groupBy("bnation", "bseg", "bbal")
-        .agg(count(lit(1)).as("_cb"))
       val allCells = cellsA
         .join(cellsB, col("anation") === col("bnation"))
         .groupBy((col("aseg") === col("bseg")).as("agseg"),
@@ -255,17 +217,7 @@ object MinhashQueries {
     }) {
       // FS-scoring mirror: the weight aggregate CROSS-joined back onto
       // the pair frame, per-field CASE weights, 4-point score histogram
-      """WITH a AS (SELECT c_custkey AS akey, c_nationkey AS anation,
-        |        c_mktsegment AS aseg, FLOOR(c_acctbal / 1000.0) AS abal FROM customer),
-        | b AS (SELECT c_custkey + 1000000 AS bkey,
-        |        CASE WHEN c_custkey % 5 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS bnation,
-        |        CASE WHEN c_custkey % 3 = 0 THEN 'MOVED' ELSE c_mktsegment END AS bseg,
-        |        CASE WHEN c_custkey % 7 = 0 THEN FLOOR(c_acctbal / 1000.0) + 1
-        |             ELSE FLOOR(c_acctbal / 1000.0) END AS bbal
-        |       FROM customer),
-        | p AS (SELECT (aseg = bseg) AS agseg, (abal = bbal) AS agbal,
-        |        (bkey = akey + 1000000) AS ismatch
-        |       FROM a JOIN b ON anation = bnation),
+      s"""WITH $fsPairCtes,
         | w AS (SELECT
         |    CAST(SUM(CASE WHEN ismatch THEN 1 ELSE 0 END) AS BIGINT) AS nm,
         |    CAST(SUM(CASE WHEN NOT ismatch THEN 1 ELSE 0 END) AS BIGINT) AS nu,
@@ -350,9 +302,7 @@ object MinhashQueries {
     // training run actually materializes after near-dup detection.
     Query("dedup_canonical")((s, dir) => {
       val docs = injectedDocs(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9,
-        maxShingleDf = Some(128))
-      val clusters = Dedup.dedupClusters(pairs)
+      val clusters = Dedup.dedupClusters(dupPairs(docs))
       val sizes = clusters.groupBy("cluster_id").agg(count(lit(1)).as("n_members"))
       Dedup.canonicalizeClusters(docs, "doc_id", clusters)
         .filter(col("keep"))
@@ -361,8 +311,7 @@ object MinhashQueries {
         .select(col("doc_id"), col("n_members"))
         .orderBy("doc_id")
     }) {
-      s"""WITH RECURSIVE $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
+      s"""WITH RECURSIVE $dupPairCtes,
          | edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
          | reach AS (SELECT src AS id, src AS r FROM edges
          |   UNION SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id),
@@ -380,14 +329,11 @@ object MinhashQueries {
     // pipeline keeps. Oracle replays the same edges through a DuckDB
     // recursive CTE to the same min-reachable-id fixpoint.
     Query("dedup_clusters")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Dedup.dedupClusters(pairs)
+      Dedup.dedupClusters(dupPairs(s, dir))
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy("doc_id")
     }) {
-      s"""WITH RECURSIVE $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
+      s"""WITH RECURSIVE $dupPairCtes,
          | edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
          | reach AS (SELECT src AS id, src AS r FROM edges
          |   UNION SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id)
@@ -431,9 +377,7 @@ object MinhashQueries {
     // join + min-label components + the shared portable quality score
     Query("cluster_best_quality")((s, dir) => {
       val docs = injectedDocs(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9,
-        maxShingleDf = Some(128))
-      val clusters = Dedup.dedupClusters(pairs)
+      val clusters = Dedup.dedupClusters(dupPairs(docs))
       val scored = docs.withColumn("quality",
         TextFunctions.qualityScore(col("text")))
       val mem = scored.join(clusters, scored("doc_id") === clusters("id"), "left")
@@ -450,9 +394,8 @@ object MinhashQueries {
           col("quality"), col("n_members"))
         .orderBy("cluster_id")
     }) {
-      s"""WITH RECURSIVE $ngramPairCtes,
-         | pr AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | edges AS (SELECT id_a AS src, id_b AS dst FROM pr UNION SELECT id_b, id_a FROM pr),
+      s"""WITH RECURSIVE $dupPairCtes,
+         | edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
          | reach AS (SELECT src AS id, src AS r FROM edges
          |   UNION SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id),
          | cl AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
@@ -478,9 +421,7 @@ object MinhashQueries {
     // to split_assign for them
     Query("split_leakage_safe")((s, dir) => {
       val docs = injectedDocs(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9,
-        maxShingleDf = Some(128))
-      val clusters = Dedup.dedupClusters(pairs)
+      val clusters = Dedup.dedupClusters(dupPairs(docs))
       val mem = docs.select("doc_id")
         .join(clusters, docs("doc_id") === clusters("id"), "left")
         .select(col("doc_id"),
@@ -494,22 +435,60 @@ object MinhashQueries {
       val cases = bounds.init
         .map { case (n, hi) => s"WHEN uu < ${"%.17e".formatLocal(java.util.Locale.ROOT, hi)} THEN '$n'" }
         .mkString(" ")
-      s"""WITH RECURSIVE $ngramPairCtes,
-         | pr AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | edges AS (SELECT id_a AS src, id_b AS dst FROM pr UNION SELECT id_b, id_a FROM pr),
+      s"""WITH RECURSIVE $dupPairCtes,
+         | edges AS (SELECT id_a AS src, id_b AS dst FROM p UNION SELECT id_b, id_a FROM p),
          | reach AS (SELECT src AS id, src AS r FROM edges
          |   UNION SELECT e.dst AS id, reach.r FROM reach JOIN edges e ON e.src = reach.id),
          | cl AS (SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id),
          | m AS (SELECT u.doc_id, COALESCE(cl.cluster_id, u.doc_id) AS cluster_id
          |       FROM u LEFT JOIN cl ON cl.id = u.doc_id),
          | d AS (SELECT doc_id, cluster_id,
-         |  CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || cluster_id), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+         |  ${hex48Sql("md5('42:' || cluster_id)")}
          |    / 281474976710656.0 AS uu
          |  FROM m)
          |SELECT doc_id, cluster_id, CASE $cases ELSE '${bounds.last._1}' END AS split
          |FROM d ORDER BY doc_id""".stripMargin
     },
   )
+
+  /** The Fellegi-Sunter customer pairs: `a` is the customer table as
+    * (akey, anation, aseg, abal = floor(acctbal / 1000)), `b` its
+    * deterministically perturbed re-registration copy (key + 10^6; %5
+    * nation shifted, %3 segment MOVED, %7 balance bucket + 1), and
+    * `cellsA`/`cellsB` their per-(nation, segment, bucket) cell counts
+    * `_ca`/`_cb`. Mirrored by [[fsPairCtes]].
+    */
+  private def fsCustomerPairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val a = t(s, dir, "customer").select(col("c_custkey").as("akey"),
+      col("c_nationkey").as("anation"), col("c_mktsegment").as("aseg"),
+      floor(col("c_acctbal") / 1000.0).as("abal"))
+    val b = t(s, dir, "customer").select(
+      (col("c_custkey") + 1000000L).as("bkey"),
+      when(col("c_custkey") % 5 === 0, (col("c_nationkey") + 1) % 25)
+        .otherwise(col("c_nationkey")).as("bnation"),
+      when(col("c_custkey") % 3 === 0, lit("MOVED"))
+        .otherwise(col("c_mktsegment")).as("bseg"),
+      when(col("c_custkey") % 7 === 0, floor(col("c_acctbal") / 1000.0) + 1)
+        .otherwise(floor(col("c_acctbal") / 1000.0)).as("bbal"))
+    (a, b, a.groupBy("anation", "aseg", "abal").agg(count(lit(1)).as("_ca")),
+      b.groupBy("bnation", "bseg", "bbal").agg(count(lit(1)).as("_cb")))
+  }
+
+  /** DuckDB mirror of [[fsCustomerPairs]]: CTEs `a`, `b` and the
+    * nation-blocked pair frame `p`(agseg, agbal, ismatch).
+    */
+  private val fsPairCtes =
+    """a AS (SELECT c_custkey AS akey, c_nationkey AS anation,
+      |        c_mktsegment AS aseg, FLOOR(c_acctbal / 1000.0) AS abal FROM customer),
+      | b AS (SELECT c_custkey + 1000000 AS bkey,
+      |        CASE WHEN c_custkey % 5 = 0 THEN (c_nationkey + 1) % 25 ELSE c_nationkey END AS bnation,
+      |        CASE WHEN c_custkey % 3 = 0 THEN 'MOVED' ELSE c_mktsegment END AS bseg,
+      |        CASE WHEN c_custkey % 7 = 0 THEN FLOOR(c_acctbal / 1000.0) + 1
+      |             ELSE FLOOR(c_acctbal / 1000.0) END AS bbal
+      |       FROM customer),
+      | p AS (SELECT (aseg = bseg) AS agseg, (abal = bbal) AS agbal,
+      |        (bkey = akey + 1000000) AS ismatch
+      |       FROM a JOIN b ON anation = bnation)""".stripMargin
 
   /** The md5-minhash banded-LSH pair CTE chain (u → shingles → 12
     * min-hashes → 2 bands → capped buckets → candidates → exact-Jaccard
@@ -518,18 +497,11 @@ object MinhashQueries {
     * Shared by the `minhash_pairs` oracle and the `blocking_quality`
     * eval so the two can never drift.
     */
-  private def minhashPairsMd5Ctes: String = {
-    val minCols = (0 until 12)
-      .map(i => s"MIN(substr(md5('${i / 4}:' || sh), ${(i % 4) * 8 + 1}, 8)) AS h$i")
-      .mkString(", ")
-    val sig0 = (0 until 6).map(i => s"h$i").mkString(" || ")
-    val sig1 = (6 until 12).map(i => s"h$i").mkString(" || ")
-    s"""u AS (SELECT doc_id, text FROM documents
-       |      UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0),
+  private def minhashPairsMd5Ctes: String =
+    s"""u AS ($injectedDocsSql),
        | w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM u),
-       | sh AS (SELECT DISTINCT doc_id AS jid, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-       |        FROM w WHERE len(ws) >= 3),
-       | mh AS (SELECT jid, $minCols FROM sh GROUP BY jid),
+       | ${shingleCte("sh", "doc_id", "w")},
+       | mh AS (SELECT jid, ${md5MinColsSql(12)} FROM sh GROUP BY jid),
        | banded AS (SELECT jid, 0 AS band, $sig0 AS bsig FROM mh
        |            UNION ALL SELECT jid, 1 AS band, $sig1 AS bsig FROM mh),
        | ok AS (SELECT band, bsig FROM banded GROUP BY band, bsig HAVING COUNT(*) <= 64),
@@ -541,26 +513,19 @@ object MinhashQueries {
        |           JOIN sh x ON x.jid = id_a JOIN sh y ON y.jid = id_b AND x.sh = y.sh GROUP BY 1, 2),
        | j AS (SELECT id_a, id_b, CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
        |       FROM inter JOIN sizes sa ON sa.jid = id_a JOIN sizes sb ON sb.jid = id_b)""".stripMargin
-  }
 
   /** Banded-MinHash corpus-vs-incoming CTE chain, parameterized by the
     * incoming-set recipe (the declared queries reuse the same md5-slice
     * signature scheme against different injected/eval sets).
     */
   private def minhashAgainstCtesWith(incSql: String) = {
-    val minCols = (0 until 12)
-      .map(i => s"MIN(substr(md5('${i / 4}:' || sh), ${(i % 4) * 8 + 1}, 8)) AS h$i")
-      .mkString(", ")
-    val sig0 = (0 until 6).map(i => s"h$i").mkString(" || ")
-    val sig1 = (6 until 12).map(i => s"h$i").mkString(" || ")
+    val minCols = md5MinColsSql(12)
     s"""c AS (SELECT doc_id, text FROM documents),
        | inc AS ($incSql),
        | wc AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM c),
-       | shc AS (SELECT DISTINCT doc_id AS jid, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-       |         FROM wc WHERE len(ws) >= 3),
+       | ${shingleCte("shc", "doc_id", "wc")},
        | wi AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM inc),
-       | shi AS (SELECT DISTINCT doc_id AS jid, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-       |         FROM wi WHERE len(ws) >= 3),
+       | ${shingleCte("shi", "doc_id", "wi")},
        | mhc AS (SELECT jid, $minCols FROM shc GROUP BY jid),
        | mhi AS (SELECT jid, $minCols FROM shi GROUP BY jid),
        | bc AS (SELECT jid, 0 AS band, $sig0 AS bsig FROM mhc UNION ALL SELECT jid, 1, $sig1 FROM mhc),
@@ -579,6 +544,10 @@ object MinhashQueries {
     * `cand`, and a recipe change here changes both hash checks in
     * lockstep with the Scala side.
     */
+  /** The two 6-row band signatures of the k=12 minima `h0`..`h11`. */
+  private val sig0 = (0 until 6).map(i => s"h$i").mkString(" || ")
+  private val sig1 = (6 until 12).map(i => s"h$i").mkString(" || ")
+
   private val minhashAgainstCtes = minhashAgainstCtesWith(
     """SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0
       |         UNION ALL SELECT doc_id + 200000, text || ' zq' FROM documents WHERE doc_id % 11 = 0""".stripMargin)

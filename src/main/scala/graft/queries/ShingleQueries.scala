@@ -22,8 +22,7 @@ object ShingleQueries {
     // pairs are re-verified on FULL shingle sets, and the oracle mirrors
     // the same df cap before its self-join.
     Query("ngram_jaccard_pairs")((s, dir) => {
-      Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id", "text", 3, 0.9,
-          maxShingleDf = Some(128))
+      dupPairs(s, dir)
         .select(col("id_a"), col("id_b"), col("jaccard"))
         .orderBy("id_a", "id_b")
     }) {
@@ -37,22 +36,19 @@ object ShingleQueries {
     // aggregate; the pair join is candidate-bounded
     Query("rouge_overlap_pairs")((s, dir) => {
       val docs = injectedDocs(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.9,
-        maxShingleDf = Some(128))
-      Dedup.rougeOverlap(pairs, docs, "doc_id", "text", 2)
+      Dedup.rougeOverlap(dupPairs(docs), docs, "doc_id", "text", 2)
         .orderBy("id_a", "id_b")
     }) {
       // ROUGE mirror: the ngram pair CTEs for candidates, raw (non-
       // distinct) bigram counts, LEAST-overlap sum, same p/r/f floats
-      s"""WITH $ngramPairCtes,
-         | rp AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
+      s"""WITH $dupPairCtes,
          | w2 AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM u),
          | g2 AS (SELECT doc_id AS gid, unnest([array_to_string(ws[i:i+1], ' ') for i in range(1, len(ws))]) AS g
          |        FROM w2 WHERE len(ws) >= 2),
          | gc AS (SELECT gid, g, CAST(COUNT(*) AS BIGINT) AS c FROM g2 GROUP BY 1, 2),
          | nt AS (SELECT gid, CAST(SUM(c) AS BIGINT) AS nn FROM gc GROUP BY 1),
-         | ov AS (SELECT rp.id_a, rp.id_b, CAST(SUM(LEAST(x.c, y.c)) AS BIGINT) AS overlap
-         |        FROM rp JOIN gc x ON x.gid = rp.id_a JOIN gc y ON y.gid = rp.id_b AND y.g = x.g
+         | ov AS (SELECT p.id_a, p.id_b, CAST(SUM(LEAST(x.c, y.c)) AS BIGINT) AS overlap
+         |        FROM p JOIN gc x ON x.gid = p.id_a JOIN gc y ON y.gid = p.id_b AND y.g = x.g
          |        GROUP BY 1, 2),
          | f AS (SELECT id_a, id_b, overlap, na.nn AS n_a, nb.nn AS n_b,
          |        CAST(overlap AS DOUBLE) / CAST(nb.nn AS DOUBLE) AS p0,
@@ -68,20 +64,11 @@ object ShingleQueries {
     // are transitivity evidence — docs in many triangles sit in tight
     // duplicate cliques, not chains of borderline matches
     Query("dup_triangles")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.triangleCounts(pairs, "id_a", "id_b")
+      Graph.triangleCounts(dupPairs(s, dir), "id_a", "id_b")
         .orderBy("node")
     }) {
       // triangle mirror: same pair CTEs, ordered wedge join a<b<c
-      s"""WITH $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | canon AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
-         |           FROM p WHERE id_a <> id_b),
-         | degn AS (SELECT n FROM (SELECT unnest([lo, hi]) AS n FROM canon) t
-         |          GROUP BY n HAVING COUNT(*) <= 4096),
-         | e AS (SELECT lo, hi FROM canon
-         |       JOIN degn dl ON dl.n = canon.lo JOIN degn dh ON dh.n = canon.hi),
+      s"""WITH $cappedEdgeCtes,
          | tri AS (SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
          |         FROM e ab JOIN e bc ON bc.lo = ab.hi
          |         JOIN e ac ON ac.lo = ab.lo AND ac.hi = bc.hi)
@@ -94,21 +81,12 @@ object ShingleQueries {
     // matches — the per-node transitivity readout next to
     // dup_triangles' raw counts; T and d from the SAME capped edge set
     Query("dup_clustering_coef")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.clusteringCoefficient(pairs, "id_a", "id_b")
+      Graph.clusteringCoefficient(dupPairs(s, dir), "id_a", "id_b")
         .orderBy("node")
     }) {
       // lcc mirror: the dup_triangles wedge CTEs + the capped degree
       // roll-up over the SAME edge set
-      s"""WITH $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | canon AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
-         |           FROM p WHERE id_a <> id_b),
-         | degn AS (SELECT n FROM (SELECT unnest([lo, hi]) AS n FROM canon) t
-         |          GROUP BY n HAVING COUNT(*) <= 4096),
-         | e AS (SELECT lo, hi FROM canon
-         |       JOIN degn dl ON dl.n = canon.lo JOIN degn dh ON dh.n = canon.hi),
+      s"""WITH $cappedEdgeCtes,
          | deg AS (SELECT n AS node, CAST(COUNT(*) AS BIGINT) AS degree
          |         FROM (SELECT unnest([lo, hi]) AS n FROM e) t GROUP BY 1),
          | tri AS (SELECT ab.lo AS a, ab.hi AS b, bc.hi AS c
@@ -127,9 +105,7 @@ object ShingleQueries {
     // pairs and chain ends (single borderline matches) fall away;
     // oracle = the 4 sweeps unrolled as chained CTEs
     Query("kcore_dup_graph")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.kCore(pairs, "id_a", "id_b", k = 2, sweeps = 4)
+      Graph.kCore(dupPairs(s, dir), "id_a", "id_b", k = 2, sweeps = 4)
         .orderBy("node")
     }) {
       // k-core mirror: the dup pair CTEs + 4 peel sweeps unrolled
@@ -139,10 +115,8 @@ object ShingleQueries {
            | e$i AS (SELECT lo, hi FROM e${i - 1}
            |        JOIN d$i a ON a.n = e${i - 1}.lo JOIN d$i b ON b.n = e${i - 1}.hi)""".stripMargin
       }.mkString(",\n")
-      s"""WITH $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | e0 AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
-         |        FROM p WHERE id_a <> id_b),
+      s"""WITH $dupPairCtes,
+         | ${canonEdgesCte("e0")},
          |$peels
          |SELECT n AS node, CAST(COUNT(*) AS BIGINT) AS core_degree
          |FROM (SELECT unnest([lo, hi]) AS n FROM e4) t
@@ -153,9 +127,8 @@ object ShingleQueries {
     // within 3 sweeps — the contamination blast-radius readout; oracle
     // = the sweeps unrolled as min-relaxation CTEs
     Query("bfs_hops_dup_graph")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.bfsHops(pairs, "id_a", "id_b", col("node") % 50 === 0, sweeps = 3)
+      Graph.bfsHops(dupPairs(s, dir), "id_a", "id_b", col("node") % 50 === 0,
+          sweeps = 3)
         .orderBy("node")
     }) {
       // BFS mirror: the dup pair CTEs + 3 min-relaxation sweeps unrolled
@@ -166,10 +139,8 @@ object ShingleQueries {
            |        FROM d${i - 1} f JOIN e ON e.src = f.node WHERE f.dist = ${i - 1}
            |       ) GROUP BY node)""".stripMargin
       }.mkString(",\n")
-      s"""WITH $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
-         | e0 AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
-         |        FROM p WHERE id_a <> id_b),
+      s"""WITH $dupPairCtes,
+         | ${canonEdgesCte("e0")},
          | e AS (SELECT lo AS src, hi AS dst FROM e0 UNION ALL SELECT hi, lo FROM e0),
          | n0 AS (SELECT DISTINCT src AS node FROM e),
          | d0 AS (SELECT node, CAST(0 AS BIGINT) AS dist FROM n0 WHERE node % 50 = 0),
@@ -181,9 +152,7 @@ object ShingleQueries {
     // bfs_hops' metric sibling (a 0.99 edge and a 0.70 edge stop being
     // interchangeable); 3 relaxation sweeps, oracle = unrolled min CTEs
     Query("bellman_ford_dup")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.bellmanFordHops(pairs, "id_a", "id_b",
+      Graph.bellmanFordHops(dupPairs(s, dir), "id_a", "id_b",
           lit(1.0) - col("jaccard"), col("node") % 50 === 0, sweeps = 3)
         .orderBy("node")
     }) {
@@ -221,10 +190,7 @@ object ShingleQueries {
     }) {
       // span dedup mirror: same md5 window digests, same df band, same
       // gaps-and-islands fusion (NULL lag -> new island in BOTH engines)
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH docs AS ($injectedDocsSql),
         | pos AS (
         |  SELECT docs.doc_id, CAST(t.g AS INT) AS pos,
         |         md5(substr(docs.text, CAST(t.g AS INT) + 1, 30)) AS h
@@ -249,8 +215,7 @@ object ShingleQueries {
         .select("keep_id", "n_copies")
         .orderBy("keep_id")
     }) {
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |           UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0)
+      s"""WITH u AS ($injectedDocsSql)
         |SELECT MIN(doc_id) AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_copies
         |FROM u GROUP BY text ORDER BY keep_id""".stripMargin
     },
@@ -268,8 +233,7 @@ object ShingleQueries {
         .orderBy("cluster_size")
     }) {
       // dedup-savings mirror: the u dup-group CTE + size histogram
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |           UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH u AS ($injectedDocsSql),
         | g AS (SELECT CAST(COUNT(*) AS BIGINT) AS s,
         |        CAST(length(text) AS BIGINT) AS len FROM u GROUP BY text)
         |SELECT s AS cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters,
@@ -379,8 +343,7 @@ object ShingleQueries {
       Relational.topK(scored, 100, col("quality").desc, col("doc_id").asc)
         .select("doc_id", "quality")
     }) {
-      s"""WITH u AS (SELECT doc_id, text FROM documents
-         |           UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH u AS ($injectedDocsSql),
          | d AS (SELECT doc_id, text FROM (
          |         SELECT doc_id, text, ROW_NUMBER() OVER (PARTITION BY text ORDER BY doc_id) AS rn FROM u)
          |       WHERE rn = 1),
@@ -425,11 +388,10 @@ object ShingleQueries {
       // containment mirror: the jaccard CTE scaffold with truncated-copy
       // injection, the ASYMMETRIC prefix (probe prefixes vs full df-capped
       // targets), and |A∩B|/|A| in place of the union denominator
-      """WITH u AS (SELECT doc_id, text FROM documents
+      s"""WITH u AS (SELECT doc_id, text FROM documents
         |           UNION ALL SELECT doc_id + 200000, substr(text, 1, 300) FROM documents WHERE doc_id % 11 = 0),
-        | w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS ws FROM u),
-        | sh AS (SELECT DISTINCT doc_id AS jid, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-        |        FROM w WHERE len(ws) >= 3),
+        | w AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM u),
+        | ${shingleCte("sh", "doc_id", "w")},
         | sizes AS (SELECT jid, COUNT(*) AS sz FROM sh GROUP BY 1),
         | shd AS (SELECT jid, sh, COUNT(*) OVER (PARTITION BY sh) AS df,
         |                 COUNT(*) OVER (PARTITION BY jid) AS sz FROM sh),
@@ -484,10 +446,7 @@ object ShingleQueries {
           k = 8, w = 4, minShared = 16, maxDf = 64)
         .orderBy("id_a", "id_b")
     }) {
-      """WITH docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL
-        |  SELECT doc_id + 100000 AS doc_id, text FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH docs AS ($injectedDocsSql),
         | d AS (SELECT doc_id, text, length(text) AS n FROM docs WHERE length(text) >= 11),
         | g AS (SELECT doc_id, n - 7 AS ng, CAST(t.i AS INT) AS pos,
         |         md5(substr(text, CAST(t.i AS INT) + 1, 8))
@@ -590,8 +549,7 @@ object ShingleQueries {
     }) {
       // triplet mirror: the u dup-group CTE, md5-ranked pool, per-anchor
       // md5(anchor:cand) re-rank
-      """WITH u AS (SELECT doc_id, text FROM documents
-        |           UNION ALL SELECT doc_id + 100000, text FROM documents WHERE doc_id % 7 = 0),
+      s"""WITH u AS ($injectedDocsSql),
         | p AS (SELECT MIN(doc_id) AS anchor_id, MAX(doc_id) AS positive_id
         |       FROM u GROUP BY text HAVING COUNT(*) >= 2),
         | pool AS (SELECT doc_id AS cand FROM documents
@@ -745,8 +703,7 @@ object ShingleQueries {
     // (4m·intra − Σd_c²)/(4m²), one division, no per-community float
     // sum; pairs persisted so LPA and the readout share one lineage
     Query("lpa_modularity")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128)).persist()
+      val pairs = dupPairs(s, dir).persist()
       Graph.modularity(pairs, "id_a", "id_b",
         Graph.labelPropagation(pairs, "id_a", "id_b", iterations = 2),
         "node", "community")
@@ -773,14 +730,11 @@ object ShingleQueries {
     // do near-dup hubs attach to hubs — endpoint-degree Pearson over
     // both orientations, exact BIGINT moments, the OLS discipline
     Query("graph_assortativity")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.degreeAssortativity(pairs, "id_a", "id_b")
+      Graph.degreeAssortativity(dupPairs(s, dir), "id_a", "id_b")
     }) {
       // assortativity mirror: endpoint-degree Pearson over both edge
       // orientations, exact integer moments
-      s"""WITH $ngramPairCtes,
-         | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
+      s"""WITH $dupPairCtes,
          | bo AS (SELECT id_a AS u, id_b AS v FROM p UNION ALL SELECT id_b, id_a FROM p),
          | dg AS (SELECT u AS id, CAST(COUNT(*) AS BIGINT) AS d FROM bo GROUP BY 1),
          | en AS (SELECT du.d AS du, dv.d AS dv
@@ -805,9 +759,7 @@ object ShingleQueries {
     // deterministic (bare neighbor votes oscillate on isolated pairs);
     // 2 sweeps, replayed sweep-for-sweep by chained oracle CTEs
     Query("lpa_communities")((s, dir) => {
-      val pairs = Dedup.ngramJaccardPairs(injectedDocs(s, dir), "doc_id",
-        "text", 3, 0.9, maxShingleDf = Some(128))
-      Graph.labelPropagation(pairs, "id_a", "id_b", iterations = 2)
+      Graph.labelPropagation(dupPairs(s, dir), "id_a", "id_b", iterations = 2)
         .orderBy("node")
     }) {
       // LPA mirror: the same 2 sweeps unrolled — undirected+self edges,
@@ -823,26 +775,13 @@ object ShingleQueries {
     // is exactly the shape the operator removes (df>=2 over trimmed
     // line digests; blank lines immune; per-page reassembly in order)
     Query("line_dedup")((s, dir) => {
-      val pages = t(s, dir, "documents")
-        .groupBy(concat(col("source"), lit("-"),
-          (col("doc_id") % 50).cast("string")).as("gid"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("doc_id"), col("text")))),
-          x => x.getField("text")), "\n").as("text"))
-      Corpus.dedupLines(pages, "gid", "text", minDf = 2)
+      Corpus.dedupLines(pages(s, dir), "gid", "text", minDf = 2)
         .orderBy("gid")
     }) {
       // line-dedup mirror: same synthesized pages (group-concat in doc_id
       // order), same trimmed-line md5 df band, same ordered reassembly;
       // all-lines-dropped pages coalesce to '' in both engines
-      """WITH gd AS (
-        |  SELECT source || '-' || CAST(doc_id % 50 AS VARCHAR) AS gid,
-        |         string_agg(text, chr(10) ORDER BY doc_id) AS text
-        |  FROM documents GROUP BY 1),
-        | l AS (
-        |  SELECT gid, CAST(t.p AS INT) - 1 AS pos,
-        |         string_split(text, chr(10))[CAST(t.p AS INT)] AS line
-        |  FROM gd, LATERAL (SELECT unnest(range(1, len(string_split(text, chr(10))) + 1)) AS p) t),
+      s"""WITH $pageLinesCtes,
         | lh AS (SELECT gid, pos, line, md5(trim(line)) AS h FROM l),
         | hot AS (SELECT h FROM lh WHERE length(trim(line)) > 0
         |         GROUP BY h HAVING COUNT(DISTINCT gid) >= 2),
@@ -860,25 +799,13 @@ object ShingleQueries {
     // sink's batch fold, spec-asserted equal to Corpus.dedupLines).
     // Batch-symmetric here, like the other declared streaming queries.
     Query("line_dedup_stream")((s, dir) => {
-      val pages = t(s, dir, "documents")
-        .groupBy(concat(col("source"), lit("-"),
-          (col("doc_id") % 50).cast("string")).as("gid"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("doc_id"), col("text")))),
-          x => x.getField("text")), "\n").as("text"))
-      val idx = graft.streaming.StreamOps.lineIndex(pages, "gid", "text", minDf = 2)
-      graft.streaming.StreamOps.lineVerdictsStream(idx, pages, "gid", "text")
+      val pg = pages(s, dir)
+      val idx = graft.streaming.StreamOps.lineIndex(pg, "gid", "text", minDf = 2)
+      graft.streaming.StreamOps.lineVerdictsStream(idx, pg, "gid", "text")
         .orderBy("gid", "pos")
     }) {
       // line-verdict mirror: the line_dedup CTE chain minus reassembly
-      """WITH gd AS (
-        |  SELECT source || '-' || CAST(doc_id % 50 AS VARCHAR) AS gid,
-        |         string_agg(text, chr(10) ORDER BY doc_id) AS text
-        |  FROM documents GROUP BY 1),
-        | l AS (
-        |  SELECT gid, CAST(t.p AS INT) - 1 AS pos,
-        |         string_split(text, chr(10))[CAST(t.p AS INT)] AS line
-        |  FROM gd, LATERAL (SELECT unnest(range(1, len(string_split(text, chr(10))) + 1)) AS p) t),
+      s"""WITH $pageLinesCtes,
         | lh AS (SELECT gid, pos, line, md5(trim(line)) AS h FROM l),
         | hot AS (SELECT h FROM lh WHERE length(trim(line)) > 0
         |         GROUP BY h HAVING COUNT(DISTINCT gid) >= 2)
@@ -891,25 +818,12 @@ object ShingleQueries {
     // row-local array pipeline (duplicate corpus texts concatenated into
     // the same synthesized page become intra-page repeats here)
     Query("line_collapse")((s, dir) => {
-      val pages = t(s, dir, "documents")
-        .groupBy(concat(col("source"), lit("-"),
-          (col("doc_id") % 50).cast("string")).as("gid"))
-        .agg(array_join(transform(
-          array_sort(collect_list(struct(col("doc_id"), col("text")))),
-          x => x.getField("text")), "\n").as("text"))
-      Corpus.collapseRepeatedLines(pages, "gid", "text")
+      Corpus.collapseRepeatedLines(pages(s, dir), "gid", "text")
         .orderBy("gid")
     }) {
       // intra-doc collapse mirror: first-occurrence = window rank 1 over
       // (page, trimmed line) == the array first-index-equality test
-      """WITH gd AS (
-        |  SELECT source || '-' || CAST(doc_id % 50 AS VARCHAR) AS gid,
-        |         string_agg(text, chr(10) ORDER BY doc_id) AS text
-        |  FROM documents GROUP BY 1),
-        | l AS (
-        |  SELECT gid, CAST(t.p AS INT) - 1 AS pos,
-        |         string_split(text, chr(10))[CAST(t.p AS INT)] AS line
-        |  FROM gd, LATERAL (SELECT unnest(range(1, len(string_split(text, chr(10))) + 1)) AS p) t),
+      s"""WITH $pageLinesCtes,
         | f AS (SELECT gid, pos, line,
         |        length(trim(line)) = 0 OR
         |          ROW_NUMBER() OVER (PARTITION BY gid, trim(line) ORDER BY pos) = 1 AS keep
@@ -927,16 +841,12 @@ object ShingleQueries {
       Dedup.groupSimilarityMatrix(t(s, dir, "documents"), "source", "text",
           k = 16)
         .orderBy("group_a", "group_b")) {
-      val minCols = (0 until 16)
-        .map(i => s"MIN(substr(md5('${i / 4}:' || sh), ${(i % 4) * 8 + 1}, 8)) AS h$i")
-        .mkString(", ")
       val agree = (0 until 16)
         .map(i => s"(CASE WHEN a.h$i = b.h$i THEN 1 ELSE 0 END)")
         .mkString(" + ")
       s"""WITH w AS (SELECT source, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
-         | shr AS (SELECT DISTINCT source AS jid, unnest([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws) - 1)]) AS sh
-         |         FROM w WHERE len(ws) >= 3),
-         | mh AS (SELECT jid, $minCols FROM shr GROUP BY jid),
+         | ${shingleCte("shr", "source", "w")},
+         | mh AS (SELECT jid, ${md5MinColsSql(16)} FROM shr GROUP BY jid),
          | p AS (SELECT a.jid AS group_a, b.jid AS group_b, $agree AS agree
          |       FROM mh a JOIN mh b ON a.jid < b.jid)
          |SELECT group_a, group_b, CAST(agree AS DOUBLE) / 16.0 AS est_jaccard
@@ -944,14 +854,57 @@ object ShingleQueries {
     },
   )
 
+  /** The synthesized multi-line pages of the line-dedup queries: each
+    * (source, doc_id % 50) group's texts joined by newlines in doc_id
+    * order, keyed `gid`. Mirrored by [[pageLinesCtes]].
+    */
+  private def pages(s: org.apache.spark.sql.SparkSession, dir: String) =
+    t(s, dir, "documents")
+      .groupBy(concat(col("source"), lit("-"),
+        (col("doc_id") % 50).cast("string")).as("gid"))
+      .agg(array_join(transform(
+        array_sort(collect_list(struct(col("doc_id"), col("text")))),
+        x => x.getField("text")), "\n").as("text"))
+
+  /** DuckDB mirror of [[pages]] (`gd`) and its lines `l`(gid, pos, line),
+    * pos 0-based.
+    */
+  private val pageLinesCtes =
+    """gd AS (
+      |  SELECT source || '-' || CAST(doc_id % 50 AS VARCHAR) AS gid,
+      |         string_agg(text, chr(10) ORDER BY doc_id) AS text
+      |  FROM documents GROUP BY 1),
+      | l AS (
+      |  SELECT gid, CAST(t.p AS INT) - 1 AS pos,
+      |         string_split(text, chr(10))[CAST(t.p AS INT)] AS line
+      |  FROM gd, LATERAL (SELECT unnest(range(1, len(string_split(text, chr(10))) + 1)) AS p) t)""".stripMargin
+
+  /** Canonical undirected dup-graph edges `name`(lo, hi) over the pairs
+    * `p` of [[dupPairCtes]], self-pairs dropped.
+    */
+  private def canonEdgesCte(name: String) =
+    s"""$name AS (SELECT DISTINCT least(id_a, id_b) AS lo, greatest(id_a, id_b) AS hi
+       |${" " * (name.length + 6)}FROM p WHERE id_a <> id_b)""".stripMargin
+
+  /** [[dupPairCtes]] + canonical edges `canon` + the degree-capped edge
+    * set `e`(lo, hi): both endpoints of degree <= 4096 (Graph's wedge
+    * skew guard).
+    */
+  private val cappedEdgeCtes =
+    s"""$dupPairCtes,
+       | ${canonEdgesCte("canon")},
+       | degn AS (SELECT n FROM (SELECT unnest([lo, hi]) AS n FROM canon) t
+       |          GROUP BY n HAVING COUNT(*) <= 4096),
+       | e AS (SELECT lo, hi FROM canon
+       |       JOIN degn dl ON dl.n = canon.lo JOIN degn dh ON dh.n = canon.hi)""".stripMargin
+
   /** The LPA oracle scaffold: [[ngramPairCtes]] + thresholded pairs +
     * undirected-with-self edges + the two label-propagation sweeps
     * unrolled (final labels in table `l2(id, lbl)`, pairs in `p`).
     * Shared by `lpa_communities` and `lpa_modularity`.
     */
   private def lpaSweepCtes: String =
-    s"""$ngramPairCtes,
-       | p AS (SELECT id_a, id_b FROM j WHERE jaccard >= 0.9),
+    s"""$dupPairCtes,
        | ed AS (SELECT id_a AS a, id_b AS b FROM p UNION SELECT id_b, id_a FROM p
        |        UNION SELECT id_a, id_a FROM p UNION SELECT id_b, id_b FROM p),
        | l0 AS (SELECT DISTINCT a AS id, a AS lbl FROM ed),

@@ -23,10 +23,10 @@ object TableQueries {
       graft.operators.Scale.contentFingerprints(
           t(s, dir, "documents"), "doc_id", "text", 64)
         .orderBy("bucket")) {
-      """WITH h AS (SELECT md5(CAST(doc_id AS VARCHAR) || ':' || text) AS hx FROM documents),
+      s"""WITH h AS (SELECT md5(CAST(doc_id AS VARCHAR) || ':' || text) AS hx FROM documents),
         | b AS (SELECT CAST(((instr('0123456789abcdef', substr(hx, 13, 1)) - 1) * 16 +
         |                    (instr('0123456789abcdef', substr(hx, 14, 1)) - 1)) % 64 AS INT) AS bucket,
-        |        CAST(list_sum([(instr('0123456789abcdef', substr(hx, k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT) AS h
+        |        ${hex48Sql("hx")} AS h
         |       FROM h)
         |SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_rows, bit_xor(h) AS fingerprint
         |FROM b GROUP BY 1 ORDER BY 1""".stripMargin

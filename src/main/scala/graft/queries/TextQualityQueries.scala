@@ -627,23 +627,7 @@ object TextQualityQueries {
         | k AS (SELECT CAST(ROUND(LN(CAST(rank AS DOUBLE)) * 1e6) AS BIGINT) AS x,
         |        CAST(ROUND(LN(CAST(freq AS DOUBLE)) * 1e6) AS BIGINT) AS y
         |       FROM r WHERE rank <= 1000),
-        | a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-        |        CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        |        SUM(CAST(x AS HUGEINT) * y) AS sxy,
-        |        SUM(CAST(x AS HUGEINT) * x) AS sxx,
-        |        SUM(CAST(y AS HUGEINT) * y) AS syy FROM k)
-        |SELECT n,
-        |  ROUND((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS slope,
-        |  ROUND((CAST(sy AS DOUBLE)
-        |    - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |      / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)))
-        |      * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept,
-        |  ROUND(((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    * (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)))
-        |    / ((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS r2
-        |FROM a""".stripMargin
+        | ${olsSql("k")}""".stripMargin
     },
   )
 

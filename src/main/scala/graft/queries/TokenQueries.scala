@@ -88,14 +88,8 @@ object TokenQueries {
     // EXT bigram LM score (the perplexity-proxy upgrade over
     // unigram_logprob): see bigramLogprobFrame for the plan shape
     Query("bigram_logprob")((s, dir) => bigramLogprobFrame(s, dir).orderBy("doc_id")) {
-      """WITH docs AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-        | pairs AS (SELECT doc_id, w[j] AS prev, w[j + 1] AS cur
-        |           FROM docs, LATERAL unnest(range(1, len(w))) AS t(j)
-        |           WHERE len(w) >= 2),
-        | bc AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS cb FROM pairs GROUP BY 1, 2),
-        | bcp AS (SELECT *, CAST(SUM(cb) OVER (PARTITION BY prev) AS BIGINT) AS cp FROM bc)
-        |SELECT doc_id, ROUND(AVG(LN(CAST(cb AS DOUBLE) / cp)), 6) AS logprob
-        |FROM pairs JOIN bcp USING (prev, cur) GROUP BY doc_id ORDER BY doc_id""".stripMargin
+      s"""WITH $bigramLogprobCtes
+         |SELECT doc_id, logprob FROM lp ORDER BY doc_id""".stripMargin
     },
     // EXT DoReMi-lite domain reweighting (Xie et al. '23 shape): per
     // source, loss = mean bigram-LM negative logprob (exact DECIMAL sum
@@ -127,14 +121,7 @@ object TokenQueries {
     }) {
       // DoReMi mirror: the bigram-logprob CTEs, exact DECIMAL per-source
       // loss, EG weights normalized by the source-ordered exp fold
-      """WITH docs AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-        | pairs AS (SELECT doc_id, w[j] AS prev, w[j + 1] AS cur
-        |           FROM docs, LATERAL unnest(range(1, len(w))) AS t(j)
-        |           WHERE len(w) >= 2),
-        | bc AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS cb FROM pairs GROUP BY 1, 2),
-        | bcp AS (SELECT *, CAST(SUM(cb) OVER (PARTITION BY prev) AS BIGINT) AS cp FROM bc),
-        | lp AS (SELECT doc_id, ROUND(AVG(LN(CAST(cb AS DOUBLE) / cp)), 6) AS logprob
-        |        FROM pairs JOIN bcp USING (prev, cur) GROUP BY doc_id),
+      s"""WITH $bigramLogprobCtes,
         | ag AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
         |        0e0 - CAST(SUM(CAST(lp.logprob AS DECIMAL(20,6))) AS DOUBLE)
         |          / CAST(COUNT(*) AS DOUBLE) AS loss
@@ -168,7 +155,7 @@ object TokenQueries {
         | tc AS (SELECT token, CAST(COUNT(*) AS BIGINT) AS cnt FROM et GROUP BY 1),
         | g AS (SELECT token, cnt,
         |        ROUND(0.75 * LN(CAST(cnt AS DOUBLE)) - LN(-LN(
-        |          CAST(list_sum([(instr('0123456789abcdef', substr(md5('neg:' || token), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+        |          ${hex48Sql("md5('neg:' || token)")}
         |          / power(2, 48))), 6) AS gumbel_key
         |       FROM tc)
         |SELECT token, cnt, gumbel_key FROM g
@@ -204,12 +191,8 @@ object TokenQueries {
       // expanded-BPE mirror: the same generated replace fold from the
       // bpeMergeTableX literal, applied to the et view's single-word
       // tokens and summed per doc
-      val sep = "␟"
-      val fold = bpeMergeTableX.foldLeft(s"regexp_replace(token, '(?s)(.)', '\\1$sep', 'g')") {
-        case (acc, (a, b)) => s"replace($acc, '$a$sep$b', '$a$b')"
-      }
       s"""WITH $expandedTokensSql,
-         | c AS (SELECT doc_id, len(string_split($fold, '$sep')) - 1 AS c FROM et)
+         | c AS (SELECT doc_id, ${bpeCountSql(bpeMergeTableX, "token")} AS c FROM et)
          |SELECT doc_id, CAST(SUM(c) AS BIGINT) AS bpe_cnt
          |FROM c GROUP BY 1 ORDER BY doc_id""".stripMargin
     },
@@ -230,16 +213,10 @@ object TokenQueries {
       // the identical replace fold bpeCount applies, generated from the
       // SAME bpeMergeTable literal (single source — a table edit changes
       // both engines in lockstep)
-      val sep = "␟"
-      // (?s) on BOTH engines: Java dot excludes U+2028/29/NEL, RE2 dot
-      // only \n — DOTALL makes the char interspersion agree everywhere.
-      val fold = bpeMergeTable.foldLeft(s"regexp_replace(w, '(?s)(.)', '\\1$sep', 'g')") {
-        case (acc, (a, b)) => s"replace($acc, '$a$sep$b', '$a$b')"
-      }
       s"""SELECT doc_id,
          | CASE WHEN trim(text) = '' THEN 0 ELSE CAST(list_sum(list_transform(
          |   regexp_split_to_array(trim(text), '\\s+'),
-         |   w -> len(string_split($fold, '$sep')) - 1)) AS INT) END AS bpe_cnt
+         |   w -> ${bpeCountSql(bpeMergeTable, "w")})) AS INT) END AS bpe_cnt
          |FROM documents ORDER BY doc_id""".stripMargin
     },
     // EXT GPT-2-style PRE-TOKENIZED BPE: class runs (letters/digits/
@@ -256,14 +233,10 @@ object TokenQueries {
       // same single-sourced fold as bpe_tokens_learned, applied to class
       // runs (regexp_extract_all) instead of whitespace words; empty
       // match list sums to NULL in DuckDB, hence the coalesce
-      val sep = "␟"
-      val fold = bpeMergeTable.foldLeft(s"regexp_replace(w, '(?s)(.)', '\\1$sep', 'g')") {
-        case (acc, (a, b)) => s"replace($acc, '$a$sep$b', '$a$b')"
-      }
       s"""SELECT doc_id,
          | CAST(coalesce(list_sum(list_transform(
          |   regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n]+'),
-         |   w -> len(string_split($fold, '$sep')) - 1)), 0) AS INT) AS bpe_cnt
+         |   w -> ${bpeCountSql(bpeMergeTable, "w")})), 0) AS INT) AS bpe_cnt
          |FROM documents ORDER BY doc_id""".stripMargin
     },
     // EXT tokenizer-efficiency eval (the "how many chars does a token
@@ -285,14 +258,10 @@ object TokenQueries {
         .orderBy("source")) {
       // compression-eval mirror: the same generated replace fold, per-doc
       // char/token counts aggregated by source
-      val sep = "␟"
-      val fold = bpeMergeTable.foldLeft(s"regexp_replace(w, '(?s)(.)', '\\1$sep', 'g')") {
-        case (acc, (a, b)) => s"replace($acc, '$a$sep$b', '$a$b')"
-      }
       s"""WITH b AS (SELECT source, CAST(length(text) AS BIGINT) AS ch,
          |  CASE WHEN trim(text) = '' THEN 0 ELSE CAST(list_sum(list_transform(
          |    regexp_split_to_array(trim(text), '\\s+'),
-         |    w -> len(string_split($fold, '$sep')) - 1)) AS BIGINT) END AS tk
+         |    w -> ${bpeCountSql(bpeMergeTable, "w")})) AS BIGINT) END AS tk
          |  FROM documents),
          | a AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs,
          |        CAST(SUM(ch) AS BIGINT) AS n_chars,
@@ -378,22 +347,10 @@ object TokenQueries {
     },
     // #25 KL divergence between en/de corpus byte distributions (algorithm.py:47-68)
     Query("kl_en_de")((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val histAgg = udaf(new ByteFunctions.ByteHistogramAgg,
-        org.apache.spark.sql.Encoders.BINARY)
-      val hEn = docs.filter(col("lang") === "en")
-        .agg(histAgg(col("text").cast("binary")).as("h1"))
-      val hDe = docs.filter(col("lang") === "de")
-        .agg(histAgg(col("text").cast("binary")).as("h2"))
-      hEn.crossJoin(hDe)
+      enDeHistograms(s, dir)
         .select(round(ByteFunctions.kl_divergence(col("h1"), col("h2")), 6).as("kl"))
     }) {
-      """WITH b1 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
-        |            FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'en') GROUP BY 1),
-        | b2 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
-        |        FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'de') GROUP BY 1),
-        | n1 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b1),
-        | n2 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b2),
+      s"""WITH $enDeHistogramCtes,
         | terms AS (SELECT b1.code,
         |   (b1.cnt / n1.n) * log2((b1.cnt / n1.n) / (COALESCE(b2.cnt, 0) / n2.n + 1e-7)) AS term
         |   FROM b1 LEFT JOIN b2 USING (code), n1, n2)
@@ -403,26 +360,14 @@ object TokenQueries {
     // symmetric bounded [0,1]-bits complement of kl_en_de over the same
     // corpus byte histograms — no ε smoothing (M > 0 wherever P or Q is)
     Query("js_divergence_en_de")((s, dir) => {
-      val docs = t(s, dir, "documents")
-      val histAgg = udaf(new ByteFunctions.ByteHistogramAgg,
-        org.apache.spark.sql.Encoders.BINARY)
-      val hEn = docs.filter(col("lang") === "en")
-        .agg(histAgg(col("text").cast("binary")).as("h1"))
-      val hDe = docs.filter(col("lang") === "de")
-        .agg(histAgg(col("text").cast("binary")).as("h2"))
-      hEn.crossJoin(hDe)
+      enDeHistograms(s, dir)
         .select(round(ByteFunctions.js_divergence(col("h1"), col("h2")), 6)
           .as("jsd"))
     }) {
       // JSD mirror: observed-code full join (absent codes are exact +0.0
       // terms on the Spark side's 256-grid fold), ONE combined per-code
       // term, code-ordered list_sum, 0.5 factor after the fold
-      """WITH b1 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
-        |            FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'en') GROUP BY 1),
-        | b2 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
-        |        FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'de') GROUP BY 1),
-        | n1 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b1),
-        | n2 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b2),
+      s"""WITH $enDeHistogramCtes,
         | g AS (SELECT COALESCE(b1.code, b2.code) AS code,
         |        COALESCE(b1.cnt, 0) AS c1, COALESCE(b2.cnt, 0) AS c2
         |       FROM b1 FULL JOIN b2 ON b1.code = b2.code),
@@ -648,7 +593,7 @@ object TokenQueries {
         .map { case (n, hi) => s"WHEN u < ${"%.17e".formatLocal(java.util.Locale.ROOT, hi)} THEN '$n'" }
         .mkString(" ")
       s"""WITH d AS (SELECT doc_id,
-         |  CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || doc_id), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+         |  ${hex48Sql("md5('42:' || doc_id)")}
          |    / 281474976710656.0 AS u
          |  FROM documents)
          |SELECT doc_id, CASE $cases ELSE '${bounds.last._1}' END AS split
@@ -728,14 +673,7 @@ object TokenQueries {
       // rank — integer thirds over the quantized score, so bucket edges
       // replay exactly (the oracle may use a plain ROW_NUMBER; Spark's
       // two-phase range rank is execution strategy, same result)
-      """WITH docs AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
-        | pairs AS (SELECT doc_id, w[j] AS prev, w[j + 1] AS cur
-        |           FROM docs, LATERAL unnest(range(1, len(w))) AS t(j)
-        |           WHERE len(w) >= 2),
-        | bc AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS cb FROM pairs GROUP BY 1, 2),
-        | bcp AS (SELECT *, CAST(SUM(cb) OVER (PARTITION BY prev) AS BIGINT) AS cp FROM bc),
-        | lp AS (SELECT doc_id, ROUND(AVG(LN(CAST(cb AS DOUBLE) / cp)), 6) AS logprob
-        |        FROM pairs JOIN bcp USING (prev, cur) GROUP BY doc_id),
+      s"""WITH $bigramLogprobCtes,
         | r AS (SELECT doc_id, logprob,
         |        ROW_NUMBER() OVER (ORDER BY logprob, doc_id) AS rn,
         |        COUNT(*) OVER () AS n FROM lp)
@@ -758,20 +696,7 @@ object TokenQueries {
       // DSIR mirror: same md5 2-hex-digit bucket, same add-one smoothing,
       // same DECIMAL(20,9)-quantized log-ratios so the per-doc sum is
       // exact integer-scaled arithmetic in both engines
-      """WITH w AS (SELECT doc_id, lang = 'en' AS tgt, regexp_split_to_array(trim(text), '\s+') AS ws FROM documents),
-        | unis AS (SELECT doc_id, tgt, unnest(ws) AS ng FROM w),
-        | bis AS (SELECT doc_id, tgt, ws[j] || ' ' || ws[j + 1] AS ng
-        |         FROM w, LATERAL unnest(range(1, len(ws))) AS t(j) WHERE len(ws) >= 2),
-        | f AS (SELECT doc_id, tgt,
-        |        (instr('0123456789abcdef', substr(md5(ng), 1, 1)) - 1) * 16
-        |          + (instr('0123456789abcdef', substr(md5(ng), 2, 1)) - 1) AS b
-        |       FROM (SELECT * FROM unis UNION ALL SELECT * FROM bis)),
-        | db AS (SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS n, MAX(tgt) AS tgt FROM f GROUP BY 1, 2),
-        | dist AS (SELECT b, CAST(SUM(n) AS BIGINT) AS cr,
-        |                CAST(SUM(CASE WHEN tgt THEN n ELSE 0 END) AS BIGINT) AS ct FROM db GROUP BY 1),
-        | tot AS (SELECT CAST(SUM(cr) AS BIGINT) AS tr, CAST(SUM(ct) AS BIGINT) AS tt FROM dist),
-        | tbl AS (SELECT b, CAST(ROUND(LN(CAST(ct + 1 AS DOUBLE) / (tt + 256)) - LN(CAST(cr + 1 AS DOUBLE) / (tr + 256)), 9) AS DECIMAL(20,9)) AS lw
-        |         FROM dist, tot)
+      s"""WITH ${dsirTableSql("documents")}
         |SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_feats,
         |       ROUND(CAST(SUM(lw * CAST(n AS DECIMAL(10,0))) AS DOUBLE), 6) AS dsir_logweight
         |FROM db JOIN tbl USING (b) GROUP BY 1 ORDER BY doc_id""".stripMargin
@@ -792,25 +717,12 @@ object TokenQueries {
       // DSIR resample mirror: Gumbel key over the same md5_48 uniform
       // (exact 48-bit integer arithmetic in doubles), round(6) before the
       // top-k
-      """WITH w AS (SELECT doc_id, lang = 'en' AS tgt, regexp_split_to_array(trim(text), '\s+') AS ws FROM documents),
-        | unis AS (SELECT doc_id, tgt, unnest(ws) AS ng FROM w),
-        | bis AS (SELECT doc_id, tgt, ws[j] || ' ' || ws[j + 1] AS ng
-        |         FROM w, LATERAL unnest(range(1, len(ws))) AS t(j) WHERE len(ws) >= 2),
-        | f AS (SELECT doc_id, tgt,
-        |        (instr('0123456789abcdef', substr(md5(ng), 1, 1)) - 1) * 16
-        |          + (instr('0123456789abcdef', substr(md5(ng), 2, 1)) - 1) AS b
-        |       FROM (SELECT * FROM unis UNION ALL SELECT * FROM bis)),
-        | db AS (SELECT doc_id, b, CAST(COUNT(*) AS BIGINT) AS n, MAX(tgt) AS tgt FROM f GROUP BY 1, 2),
-        | dist AS (SELECT b, CAST(SUM(n) AS BIGINT) AS cr,
-        |                CAST(SUM(CASE WHEN tgt THEN n ELSE 0 END) AS BIGINT) AS ct FROM db GROUP BY 1),
-        | tot AS (SELECT CAST(SUM(cr) AS BIGINT) AS tr, CAST(SUM(ct) AS BIGINT) AS tt FROM dist),
-        | tbl AS (SELECT b, CAST(ROUND(LN(CAST(ct + 1 AS DOUBLE) / (tt + 256)) - LN(CAST(cr + 1 AS DOUBLE) / (tr + 256)), 9) AS DECIMAL(20,9)) AS lw
-        |         FROM dist, tot),
+      s"""WITH ${dsirTableSql("documents")},
         | dw AS (SELECT doc_id, ROUND(CAST(SUM(lw * CAST(n AS DECIMAL(10,0))) AS DOUBLE), 6) AS dsir_logweight
         |        FROM db JOIN tbl USING (b) GROUP BY 1),
         | g AS (SELECT doc_id, dsir_logweight,
         |        ROUND(dsir_logweight - LN(-LN(
-        |          CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || doc_id), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
+        |          ${hex48Sql("md5('42:' || doc_id)")}
         |          / power(2, 48))), 6) AS gumbel_key
         |        FROM dw)
         |SELECT doc_id, dsir_logweight, gumbel_key FROM g
@@ -827,16 +739,7 @@ object TokenQueries {
             log(col("n_chars").cast("double")).as("lw")),
           "source", "doc_id", "lw", k = 4)
         .orderBy("source", "rank")) {
-      """WITH d AS (SELECT source, doc_id, LN(CAST(n_chars AS DOUBLE)) AS lw FROM documents),
-        | g AS (SELECT source, doc_id, ROUND(lw - LN(-LN(
-        |    CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || doc_id), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
-        |    / power(2, 48))), 6) AS gumbel_key
-        |   FROM d),
-        | r AS (SELECT source, doc_id, gumbel_key,
-        |        ROW_NUMBER() OVER (PARTITION BY source
-        |          ORDER BY gumbel_key DESC, doc_id) AS rank FROM g)
-        |SELECT source, CAST(rank AS INT) AS rank, doc_id, gumbel_key
-        |FROM r WHERE rank <= 4 ORDER BY source, rank""".stripMargin
+      gumbelSourcesSql
     },
     // EXT STREAMING weighted reservoir (backlog #2): the same
     // per-source Gumbel-max draw run through StreamOps.topKStream's
@@ -861,16 +764,7 @@ object TokenQueries {
     }) {
       // stream reservoir == the batch window rank (cross-batch top-k
       // state is a monotone merge of deterministic keys)
-      """WITH d AS (SELECT source, doc_id, LN(CAST(n_chars AS DOUBLE)) AS lw FROM documents),
-        | g AS (SELECT source, doc_id, ROUND(lw - LN(-LN(
-        |    CAST(list_sum([(instr('0123456789abcdef', substr(md5('42:' || doc_id), k, 1)) - 1) * power(16, 12 - k) for k in range(1, 13)]) AS BIGINT)
-        |    / power(2, 48))), 6) AS gumbel_key
-        |   FROM d),
-        | r AS (SELECT source, doc_id, gumbel_key,
-        |        ROW_NUMBER() OVER (PARTITION BY source
-        |          ORDER BY gumbel_key DESC, doc_id) AS rank FROM g)
-        |SELECT source, CAST(rank AS INT) AS rank, doc_id, gumbel_key
-        |FROM r WHERE rank <= 4 ORDER BY source, rank""".stripMargin
+      gumbelSourcesSql
     },
     // EXT HLL set difference (Sketches.hllSetDiff, backlog #2): how
     // much of src0's vocabulary is NOT in src1's and vice versa — the
@@ -919,19 +813,8 @@ object TokenQueries {
     }) {
       // two BM25 chains over shared (dl, N, avgdl) stats; round-1 term
       // predicate is the literal list, round-2's is the terms CTE
-      def chain(p: String, pred: String) =
-        s"""${p}tf AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf
-           |        FROM toks WHERE $pred GROUP BY 1, 2, 3),
-           | ${p}dft AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM ${p}tf GROUP BY 1),
-           | ${p}sc AS (SELECT doc_id, LN(1 + (n - df + 0.5) / (df + 0.5)) * tf * (1.2 + 1)
-           |          / (tf + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) AS c
-           |        FROM ${p}tf JOIN ${p}dft USING (tok), st),
-           | ${p}agg AS (SELECT doc_id, ROUND(SUM(c), 6) AS bm25 FROM ${p}sc GROUP BY 1)""".stripMargin
-      s"""WITH bl AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
-         | dls AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl, ws FROM bl),
-         | st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, AVG(dl) AS avgdl FROM dls),
-         | toks AS (SELECT doc_id, dl, unnest(ws) AS tok FROM dls),
-         | ${chain("q1", "tok IN ('spark', 'stream')")},
+      s"""WITH $bm25CorpusCtes,
+         | ${bm25ScoreCtes("q1", "tok IN ('spark', 'stream')")},
          | fb AS (SELECT doc_id FROM (SELECT doc_id,
          |        ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS r FROM q1agg) WHERE r <= 5),
          | ex AS (SELECT tok AS term FROM toks JOIN fb USING (doc_id)
@@ -939,7 +822,7 @@ object TokenQueries {
          |        GROUP BY 1 ORDER BY COUNT(*) DESC, tok LIMIT 3),
          | terms AS (SELECT 'spark' AS term UNION ALL SELECT 'stream'
          |           UNION ALL SELECT term FROM ex),
-         | ${chain("q2", "tok IN (SELECT term FROM terms)")},
+         | ${bm25ScoreCtes("q2", "tok IN (SELECT term FROM terms)")},
          | r AS (SELECT doc_id, bm25,
          |        CAST(ROW_NUMBER() OVER (ORDER BY bm25 DESC, doc_id) AS INT) AS rank FROM q2agg)
          |SELECT doc_id, bm25, rank FROM r WHERE rank <= 10 ORDER BY rank""".stripMargin
@@ -975,18 +858,8 @@ object TokenQueries {
         .mkString(", ")
       s"""WITH qm(query_id, tok) AS (VALUES $qm),
          | disc(r, d) AS (VALUES $disc),
-         | bl AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS ws FROM documents),
-         | dls AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS dl, ws FROM bl),
-         | st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, AVG(dl) AS avgdl FROM dls),
-         | toks AS (SELECT doc_id, dl, unnest(ws) AS tok FROM dls),
-         | qtf AS (SELECT doc_id, dl, tok, CAST(COUNT(*) AS BIGINT) AS tf
-         |        FROM toks WHERE tok IN (SELECT tok FROM qm) GROUP BY 1, 2, 3),
-         | dft AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS df FROM qtf GROUP BY 1),
-         | sc AS (SELECT qm.query_id, doc_id,
-         |          LN(1 + (n - df + 0.5) / (df + 0.5)) * tf * (1.2 + 1)
-         |          / (tf + 1.2 * ((1 - 0.75) + 0.75 * dl / avgdl)) AS c
-         |        FROM qtf JOIN dft USING (tok) JOIN qm USING (tok), st),
-         | agg AS (SELECT query_id, doc_id, ROUND(SUM(c), 6) AS bm25 FROM sc GROUP BY 1, 2),
+         | $bm25CorpusCtes,
+         | ${bm25ScoreCtes("", "tok IN (SELECT tok FROM qm)", perQuery = true)},
          | run AS (SELECT query_id, doc_id,
          |          ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY bm25 DESC, doc_id) AS rank
          |        FROM agg),
@@ -1272,6 +1145,76 @@ object TokenQueries {
     "q_exec" -> Seq("spark", "window"),
     "q_storage" -> Seq("hash", "merge"),
     "q_stream" -> Seq("stream", "scan"))
+
+  /** DuckDB mirror of [[bigramLogprobFrame]]: CTEs `docs`, `pairs`,
+    * the bigram counts `bc`/`bcp` (prefix totals `cp`) and the per-doc
+    * scores `lp`(doc_id, logprob).
+    */
+  private val bigramLogprobCtes =
+    """docs AS (SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents),
+      | pairs AS (SELECT doc_id, w[j] AS prev, w[j + 1] AS cur
+      |           FROM docs, LATERAL unnest(range(1, len(w))) AS t(j)
+      |           WHERE len(w) >= 2),
+      | bc AS (SELECT prev, cur, CAST(COUNT(*) AS BIGINT) AS cb FROM pairs GROUP BY 1, 2),
+      | bcp AS (SELECT *, CAST(SUM(cb) OVER (PARTITION BY prev) AS BIGINT) AS cp FROM bc),
+      | lp AS (SELECT doc_id, ROUND(AVG(LN(CAST(cb AS DOUBLE) / cp)), 6) AS logprob
+      |        FROM pairs JOIN bcp USING (prev, cur) GROUP BY doc_id)""".stripMargin
+
+  /** The en and de corpus byte histograms `h1`/`h2` as one crossed row
+    * (ByteFunctions.ByteHistogramAgg over each language's texts).
+    */
+  private def enDeHistograms(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val histAgg = udaf(new ByteFunctions.ByteHistogramAgg,
+      org.apache.spark.sql.Encoders.BINARY)
+    val hEn = docs.filter(col("lang") === "en")
+      .agg(histAgg(col("text").cast("binary")).as("h1"))
+    val hDe = docs.filter(col("lang") === "de")
+      .agg(histAgg(col("text").cast("binary")).as("h2"))
+    hEn.crossJoin(hDe)
+  }
+
+  /** DuckDB mirror of [[enDeHistograms]]: per-code counts `b1` (en) and
+    * `b2` (de) and their totals `n1`/`n2`.
+    */
+  private val enDeHistogramCtes =
+    """b1 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
+      |            FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'en') GROUP BY 1),
+      | b2 AS (SELECT ascii(c) AS code, COUNT(*) AS cnt
+      |        FROM (SELECT unnest(string_split(text, '')) AS c FROM documents WHERE lang = 'de') GROUP BY 1),
+      | n1 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b1),
+      | n2 AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS n FROM b2)""".stripMargin
+
+  /** The per-source Gumbel top-4 oracle shared by `gumbel_sample_sources`
+    * and `gumbel_sample_stream`: key = round(ln n_chars - ln(-ln u), 6),
+    * u the md5('42:' || doc_id) 48-bit uniform.
+    */
+  private val gumbelSourcesSql =
+    s"""WITH d AS (SELECT source, doc_id, LN(CAST(n_chars AS DOUBLE)) AS lw FROM documents),
+       | g AS (SELECT source, doc_id, ROUND(lw - LN(-LN(
+       |    ${hex48Sql("md5('42:' || doc_id)")}
+       |    / power(2, 48))), 6) AS gumbel_key
+       |   FROM d),
+       | r AS (SELECT source, doc_id, gumbel_key,
+       |        ROW_NUMBER() OVER (PARTITION BY source
+       |          ORDER BY gumbel_key DESC, doc_id) AS rank FROM g)
+       |SELECT source, CAST(rank AS INT) AS rank, doc_id, gumbel_key
+       |FROM r WHERE rank <= 4 ORDER BY source, rank""".stripMargin
+
+  /** SQL token count of the word expression `w` under
+    * TextFunctions.bpeCount's replace fold, generated from `table`: the
+    * word interspersed with a separator char, each merge a `replace` in
+    * rank order, pieces counted. (?s) on BOTH engines: Java dot excludes
+    * U+2028/29/NEL, RE2 dot only \n — DOTALL makes the char
+    * interspersion agree everywhere.
+    */
+  private def bpeCountSql(table: Seq[(String, String)], w: String): String = {
+    val sep = "␟"
+    val fold = table.foldLeft(s"regexp_replace($w, '(?s)(.)', '\\1$sep', 'g')") {
+      case (acc, (a, b)) => s"replace($acc, '$a$sep$b', '$a$b')"
+    }
+    s"len(string_split($fold, '$sep')) - 1"
+  }
 
   /** Per-doc mean bigram log-probability under corpus MLE counts —
     * shared by `bigram_logprob` (raw scores) and `ccnet_buckets`

@@ -271,6 +271,9 @@ object StreamOps {
     */
   def simhashNearDupStream(docs: Dataset[DocSig], maxHamming: Int = 3,
       maxPerBucket: Int = 1024): Dataset[NearDupDecision] = {
+    require(0 <= maxHamming && maxHamming <= 3,
+      s"simhashNearDupStream: the 4 x 16-bit pigeonhole guarantees recall only " +
+        s"for 0 <= maxHamming <= 3, got $maxHamming")
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaInt)
     implicit val rowEnc = Encoders.product[(Int, Int, DocSig)]
     implicit val stateEnc = Encoders.product[BucketState]
@@ -313,8 +316,8 @@ object StreamOps {
     * State = member doc ids per (band, band-signature) bucket, bounded by
     * `maxPerBucket` (overflowing buckets keep matching, stop accreting —
     * the [[graft.operators.Dedup.selfJoinBuckets]] posture).
-    */
-  /** `stateTtl` (streaming only): unlike SimHash's fixed 4 x 65536 block
+    *
+    * `stateTtl` (streaming only): unlike SimHash's fixed 4 x 65536 block
     * space, the band-signature key space is UNBOUNDED — distinct
     * signatures accrete state forever. A TTL (ProcessingTimeTimeout)
     * evicts buckets idle longer than the given duration: dedup recall
@@ -328,6 +331,7 @@ object StreamOps {
     implicit val rowEnc = Encoders.product[(Int, String, Long)]
     implicit val stateEnc = Encoders.product[BandBucketState]
     implicit val outEnc = Encoders.product[MinhashDupDecision]
+    require(k % 4 == 0 && k % bands == 0, s"need 4 | k and bands | k (k=$k, bands=$bands)")
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
@@ -352,6 +356,31 @@ object StreamOps {
             out.iterator
           }
         })
+  }
+
+  /** Fallback shape check for an index WITHOUT builder metadata: one
+    * eager aggregate over the (static, persisted) frame — uniform sig
+    * length == k, bsig width == rows*8, and NO null sig/bsig (min/max
+    * ignore nulls, so the null audit is an explicit count; a null sig
+    * would otherwise yield a null est_jaccard the threshold filter
+    * silently drops).
+    */
+  private def validateIndexEagerly(index: DataFrame, k: Int, bands: Int,
+      rows: Int): Unit = {
+    val shape = index.agg(
+      min(size(col("sig"))), max(size(col("sig"))),
+      min(length(col("bsig"))), max(length(col("bsig"))),
+      count(when(col("sig").isNull || col("bsig").isNull, 1))).head()
+    if (!shape.isNullAt(0) || shape.getLong(4) > 0) { // all-null index must fail the null gate, not skip it
+      require(shape.getLong(4) == 0L,
+        s"corpus index has ${shape.getLong(4)} rows with null sig/bsig — rebuild the index")
+      require(shape.getInt(0) == k && shape.getInt(1) == k,
+        s"corpus index signature length ${shape.getInt(0)}..${shape.getInt(1)} " +
+          s"!= k=$k — rebuild the index with matching k")
+      require(shape.getInt(2) == rows * 8 && shape.getInt(3) == rows * 8,
+        s"corpus index band-signature width ${shape.getInt(2)}..${shape.getInt(3)} " +
+          s"!= ${rows * 8} (k=$k, bands=$bands) — rebuild the index with matching bands")
+    }
   }
 
   /** STATELESS stream-vs-corpus near-dup matching: every arriving doc is
@@ -390,31 +419,6 @@ object StreamOps {
     * (distinct in batch, dropDuplicatesWithinWatermark in streaming).
     * Works unchanged on a batch frame (the spec strategy).
     */
-  /** Fallback shape check for an index WITHOUT builder metadata: one
-    * eager aggregate over the (static, persisted) frame — uniform sig
-    * length == k, bsig width == rows*8, and NO null sig/bsig (min/max
-    * ignore nulls, so the null audit is an explicit count; a null sig
-    * would otherwise yield a null est_jaccard the threshold filter
-    * silently drops).
-    */
-  private def validateIndexEagerly(index: DataFrame, k: Int, bands: Int,
-      rows: Int): Unit = {
-    val shape = index.agg(
-      min(size(col("sig"))), max(size(col("sig"))),
-      min(length(col("bsig"))), max(length(col("bsig"))),
-      count(when(col("sig").isNull || col("bsig").isNull, 1))).head()
-    if (!shape.isNullAt(0) || shape.getLong(4) > 0) { // all-null index must fail the null gate, not skip it
-      require(shape.getLong(4) == 0L,
-        s"corpus index has ${shape.getLong(4)} rows with null sig/bsig — rebuild the index")
-      require(shape.getInt(0) == k && shape.getInt(1) == k,
-        s"corpus index signature length ${shape.getInt(0)}..${shape.getInt(1)} " +
-          s"!= k=$k — rebuild the index with matching k")
-      require(shape.getInt(2) == rows * 8 && shape.getInt(3) == rows * 8,
-        s"corpus index band-signature width ${shape.getInt(2)}..${shape.getInt(3)} " +
-          s"!= ${rows * 8} (k=$k, bands=$bands) — rebuild the index with matching bands")
-    }
-  }
-
   def minhashAgainstStream(index: DataFrame, docs: DataFrame, k: Int = 12,
       bands: Int = 2, shingleK: Int = 3, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
@@ -515,17 +519,15 @@ object StreamOps {
     val timeoutConf =
       if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout
+    require(k % 4 == 0 && k % bands == 0, s"need 4 | k and bands | k (k=$k, bands=$bands)")
     val sliceLen = 8 // md5 slice minima are fixed 8-hex-char strings
     docs
       .flatMap { d =>
-        val mins = graft.operators.Dedup.minhashSliceMins(d.text, k, shingleK)
-        if (mins.isEmpty) Iterator.empty
-        else {
-          val full = mins.mkString
-          val rows = k / bands
-          (0 until bands).iterator.map(b =>
-            (b, mins.slice(b * rows, (b + 1) * rows).mkString, d.doc_id, full))
-        }
+        // minima once per document; the full signature is the k 1-row bands
+        val mins = graft.functions.TextFunctions.md5SliceMinsOf(d.text, k, shingleK)
+        val full = graft.functions.TextFunctions.md5SliceBandsOf(mins, k).mkString
+        graft.functions.TextFunctions.md5SliceBandsOf(mins, bands)
+          .zipWithIndex.map { case (sig, b) => (b, sig, d.doc_id, full) }
       }
       .groupByKey(t => (t._1, t._2))
       .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
@@ -690,11 +692,6 @@ object StreamOps {
         round(col("_s.logw"), 6).as("dsir_logweight"))
   }
 
-  /** The build-once fingerprint index for ingest-time CDC
-    * ([[cdcClassifyStream]]): (key, md5 payload fingerprint) of the
-    * base corpus — 40 bytes per document at any corpus size, the
-    * smallest index in the family. Persist/write it once per base
-    * snapshot. */
   /** Build-once boilerplate-LINE index — the streaming half of
     * [[graft.operators.Corpus.dedupLines]]'s df histogram: the md5
     * digests of trimmed lines occurring in >= `minDf` distinct corpus
@@ -766,6 +763,11 @@ object StreamOps {
       .select(col("_fz_id").as("corpus_id"), col(idCol), col(strCol), col("dist"))
   }
 
+  /** The build-once fingerprint index for ingest-time CDC
+    * ([[cdcClassifyStream]]): (key, md5 payload fingerprint) of the
+    * base corpus — 40 bytes per document at any corpus size, the
+    * smallest index in the family. Persist/write it once per base
+    * snapshot. */
   def cdcIndex(base: DataFrame, keyCol: String,
       payloadCol: String): DataFrame =
     base.select(col(keyCol).as("_cdc_k"), md5(col(payloadCol)).as("_cdc_f"))
@@ -871,21 +873,6 @@ object StreamOps {
       .toDF("g", "rank", "id", "v")
   }
 
-  /** Streaming twin of [[graft.operators.Events.eventTransitions]]:
-    * per-user LAST-event state (one tiny row per live user) bridges
-    * micro-batch boundaries, so the pair an epoch boundary would sever
-    * is still emitted; within a batch events sort by the same total
-    * (ts, id) order as the batch operator. Emits raw transition edges
-    * in Append mode — counting/normalizing is one groupBy downstream
-    * (kept out of the stream on purpose: each edge is emitted exactly
-    * once, so a batch-side roll-up loses nothing and the stream state
-    * stays O(|users|), not O(|types|²·|users|)).
-    *
-    * Assumes per-user event-time monotone delivery ACROSS batches (the
-    * keyed-log contract); an event older than the user's carried state
-    * would pair out of order — buffer-and-watermark reordering is a
-    * different operator.
-    */
   /** Streaming twin of [[graft.operators.Events.cusumAlarms]]: the
     * reflected running sum S = max(0, S + cnt − ref) carried as ONE
     * long of per-key state across micro-batches, alarms (S > h)
@@ -1218,6 +1205,21 @@ object StreamOps {
         })
   }
 
+  /** Streaming twin of [[graft.operators.Events.eventTransitions]]:
+    * per-user LAST-event state (one tiny row per live user) bridges
+    * micro-batch boundaries, so the pair an epoch boundary would sever
+    * is still emitted; within a batch events sort by the same total
+    * (ts, id) order as the batch operator. Emits raw transition edges
+    * in Append mode — counting/normalizing is one groupBy downstream
+    * (kept out of the stream on purpose: each edge is emitted exactly
+    * once, so a batch-side roll-up loses nothing and the stream state
+    * stays O(|users|), not O(|types|²·|users|)).
+    *
+    * Assumes per-user event-time monotone delivery ACROSS batches (the
+    * keyed-log contract); an event older than the user's carried state
+    * would pair out of order — buffer-and-watermark reordering is a
+    * different operator.
+    */
   def transitionsStream(events: Dataset[TypedEvent]): DataFrame = {
     val sess = events.sparkSession
     import sess.implicits._

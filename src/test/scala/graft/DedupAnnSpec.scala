@@ -14,6 +14,39 @@ class DedupAnnSpec extends SparkSpec {
     (4L, "another unrelated sentence with its own tokens")
   ).toDF("doc_id", "text")
 
+  // Exact all-pairs n-gram Jaccard >= threshold, the reference the
+  // prefix-filtered Dedup.ngramJaccardPairs is checked against: explode
+  // distinct 64-bit hashed shingles, self-join on the shingle, count
+  // intersections per pair (only pairs sharing >= 1 shingle ever
+  // materialize), then filter on the derived Jaccard. Shingles with
+  // df == 1 match nothing, so they are dropped before the self-join
+  // (`sizes` still counts them).
+  private def exactJaccardPairs(docs: org.apache.spark.sql.DataFrame,
+      idCol: String, textCol: String, shingleK: Int,
+      threshold: Double): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val sh = docs
+      .select(col(idCol).as("jid"),
+        explode(transform(graft.functions.TextFunctions.wordShingles(
+          col(textCol), shingleK), sh => xxhash64(sh))).as("sh"))
+      .distinct()
+    val sizes = sh.groupBy("jid").agg(count(lit(1)).as("sz"))
+    val shJoin = sh
+      .withColumn("_df", count(lit(1)).over(Window.partitionBy(col("sh"))))
+      .filter(col("_df") >= 2).drop("_df")
+    val inter = shJoin.as("x").join(shJoin.as("y"),
+        col("x.sh") === col("y.sh") && col("x.jid") < col("y.jid"))
+      .groupBy(col("x.jid").as("id_a"), col("y.jid").as("id_b"))
+      .agg(count(lit(1)).as("inter"))
+    inter
+      .join(sizes.withColumnRenamed("jid", "id_a").withColumnRenamed("sz", "sz_a"), Seq("id_a"))
+      .join(sizes.withColumnRenamed("jid", "id_b").withColumnRenamed("sz", "sz_b"), Seq("id_b"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("sz_a") + col("sz_b") - col("inter")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
+
   test("exactGroups: dup group keeps min id with multiplicity") {
     val g = Dedup.exactGroups(docs, "text", "doc_id").collect()
     val dupGroup = g.find(_.getLong(1) == 2L).get
@@ -23,9 +56,13 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("ngramJaccardPairs: exact dup pair has jaccard 1.0") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
+    val pairs = exactJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
     val exact = pairs.find(r => r.getLong(0) == 0L && r.getLong(1) == 3L).get
     assert(math.abs(exact.getDouble(2) - 1.0) < 1e-12)
+    // the operator at its default df cap finds the same pairs
+    val op = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
+    assert(op.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq ==
+      pairs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
   }
 
   test("simhashMd5: identical docs get identical hashes, near docs small hamming") {
@@ -150,12 +187,12 @@ class DedupAnnSpec extends SparkSpec {
     // doc 0 and 3 are exact dups; their shingles have df >= 2, so a cap of
     // 1 would kill the pair — cap 3 keeps it and the score stays exact 1.0
     val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5,
-        maxShingleDf = Some(3)).collect()
+        maxShingleDf = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val exact = pairs.find(p => p._1 == 0L && p._2 == 3L).get
     assert(math.abs(exact._3 - 1.0) < 1e-12)
     // uncapped and capped agree on this small corpus (no df > 3 shingles)
-    val un = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
+    val un = exactJaccardPairs(docs, "doc_id", "text", 3, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     assert(pairs.sorted.toSeq == un.toSeq)
   }
@@ -174,11 +211,11 @@ class DedupAnnSpec extends SparkSpec {
       (13L, "common1 common2 ez fz")
     ).toDF("doc_id", "text")
     val capped = Dedup.ngramJaccardPairs(hotDocs, "doc_id", "text", 1, 0.5,
-        maxShingleDf = Some(2)).collect()
+        maxShingleDf = 2).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     assert(capped.toSeq == Seq((10L, 11L, 0.6)))
     // and the capped score equals the uncapped exact Jaccard
-    val un = Dedup.ngramJaccardPairs(hotDocs, "doc_id", "text", 1, 0.5).collect()
+    val un = exactJaccardPairs(hotDocs, "doc_id", "text", 1, 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted
     assert(capped.toSeq == un.toSeq)
   }
@@ -772,7 +809,7 @@ class DedupAnnSpec extends SparkSpec {
     // ...while the direction 1->2 (6/18) and symmetric Jaccard (6/18)
     // both sit far below their thresholds
     val jac = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.5,
-      maxShingleDf = Some(128))
+      maxShingleDf = 128)
     assert(jac.count() == 0)
   }
 

@@ -531,6 +531,36 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** The cached relations an executed plan reads, one per distinct cache. */
+  private def cachesRead(p: SparkPlan) = {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    executedNodes(p).collect { case m: InMemoryTableScanExec => m.relation.cacheBuilder }
+      .distinct
+  }
+
+  test("bm25_prf_topk: both BM25 rounds read ONE pinned tokenized corpus") {
+    // round 2 builds its corpus frame plan-equal to round 1's, so the
+    // cache manager hands it round 1's pin instead of a second one
+    val df = SparkEntry.queries("bm25_prf_topk")(spark, sf)
+    df.collect()
+    assert(cachesRead(df.queryExecution.executedPlan).size == 1)
+  }
+
+  test("dup-graph queries: a second query reads the pair frame the first one cached") {
+    spark.catalog.clearCache()
+    def pairPin(name: String) = {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val pins = cachesRead(df.queryExecution.executedPlan)
+        .filter(_.cachedPlan.output.map(_.name).contains("jaccard"))
+      assert(pins.size == 1, name)
+      pins.head
+    }
+    val first = pairPin("dup_triangles")
+    assert(first.isCachedColumnBuffersLoaded, "dup_triangles did not fill the pair frame")
+    assert(pairPin("dup_clustering_coef") eq first)
+  }
+
   test("a second construct of each graftbench query starts no Spark job") {
     // every table read after the first passes its remembered schema, so
     // no parquet footer job comes back on a later construct

@@ -49,6 +49,42 @@ class RetrievalSpec extends SparkSpec {
     }
   }
 
+  test("bm25TopKTerms: a term frame of bm25TopK's terms returns bm25TopK's rows") {
+    val terms = Seq("spark", "window", "hash", "merge")
+    val bag = Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 10).collect().toSeq
+    // a repeated term in the frame counts once, like a repeated literal
+    val frame = Retrieval.bm25TopKTerms(docs, "doc_id", "text",
+      (terms :+ "spark").toDF("term"), k = 10).collect().toSeq
+    assert(bag.nonEmpty)
+    assert(frame == bag)
+  }
+
+  test("codegen parity: every ranker returns the same rows interpreted") {
+    val terms = Seq("spark", "window", "hash", "merge")
+    val queries = Seq((0L, "spark"), (0L, "hash"), (1L, "window"), (1L, "merge"))
+      .toDF("query_id", "term")
+    val a = Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "rank")
+    val b = Seq((4L, 1), (2L, 2), (3L, 3)).toDF("id", "rank")
+    def runAll(): Seq[Seq[String]] = {
+      // the BM25 corpus is pinned: drop it so each mode computes its own
+      spark.catalog.clearCache()
+      Seq(
+        Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 3),
+        Retrieval.bm25TopKTerms(docs, "doc_id", "text", terms.toDF("term"), k = 3),
+        Retrieval.bm25PerQuery(docs, "doc_id", "text", queries, k = 2),
+        Retrieval.rrfFuse(Seq(a, b), "id", "rank", k = 4),
+        Retrieval.invertedIndex(docs, "doc_id", "text", maxPostings = 2),
+        Retrieval.maxSimTopK(docs, docs.filter(col("doc_id") <= 1L), "doc_id",
+          "text", k = 2)
+      ).map(_.collect().map(_.toString).toSeq.sorted)
+    }
+    val ref = runAll()
+    assert(ref.forall(_.nonEmpty))
+    val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(runAll())
+    assert(interpreted == ref)
+  }
+
   test("rrfFuse: agreement wins — an id ranked well by both lists beats a single #1") {
     val a = Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "rank")
     val b = Seq((4L, 1), (2L, 2), (3L, 3)).toDF("id", "rank")

@@ -217,6 +217,33 @@ class StreamingSpec extends SparkSpec {
     assert(!verdicts.contains(2L)) // shingle-less doc emits nothing
   }
 
+  test("stream near-dup matchers reject parameters their bucketing cannot honour at call time") {
+    import graft.streaming.{DocSig, DocText}
+    val texts = Seq(DocText(0L, "the quick brown fox jumps over the lazy dog")).toDS()
+    val sigs = Seq(DocSig(0L, 0L)).toDS()
+    // bands must divide k (16 / 3 would leave minimum 15 in no band) and
+    // 4 must divide k (4 slices per md5)
+    intercept[IllegalArgumentException] {
+      StreamOps.minhashNearDupSigStream(texts, k = 16, bands = 3)
+    }
+    intercept[IllegalArgumentException] {
+      StreamOps.minhashNearDupSigStream(texts, k = 10, bands = 2)
+    }
+    intercept[IllegalArgumentException] {
+      StreamOps.minhashNearDupStream(texts, k = 16, bands = 3)
+    }
+    intercept[IllegalArgumentException] {
+      StreamOps.minhashNearDupStream(texts, k = 10, bands = 2)
+    }
+    // the 4 x 16-bit pigeonhole only guarantees recall up to hamming 3
+    intercept[IllegalArgumentException] {
+      StreamOps.simhashNearDupStream(sigs, maxHamming = 4)
+    }
+    intercept[IllegalArgumentException] {
+      StreamOps.simhashNearDupStream(sigs, maxHamming = -1)
+    }
+  }
+
   test("minhashNearDupSigStream: NEAR-dup (not exact) pair matched across micro-batches") {
     implicit val sqlCtx = spark.sqlContext
     import graft.streaming.DocText

@@ -3,6 +3,11 @@
 in DuckDB over the sf tables and compare with the Verify parquet output,
 mimicking the driver's compare (sort columns by name, sort rows, hash values).
 Usage: check_oracle.py <sfdir> <verify_outdir>
+
+Besides the per-query lines on stdout, writes <verify_outdir>/oracle_check.json
+in the CORRECTNESS record format: {query: {rows_match, schema_match,
+hash_match, spark_rows, oracle_rows, err}}, with the same exact value
+comparison (hash_match is true only when every value matches exactly).
 """
 import sys, json, glob, os
 import duckdb
@@ -23,14 +28,21 @@ def connect():
 con = connect()
 
 oracles = json.load(open(f"{outdir}/oracle_sql.json"))
+records = {}
 fail = 0
 for name in sorted(os.listdir(outdir)):
     d = os.path.join(outdir, name)
     if not os.path.isdir(d):
         continue
+    rec = records[name] = {"rows_match": False, "schema_match": False,
+                           "hash_match": False, "spark_rows": None,
+                           "oracle_rows": None, "err": None}
     got = con.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
+    rec["spark_rows"] = len(got)
     if name not in oracles:
         print(f"[rows-only] {name}: {len(got)} rows")
+        rec["err"] = "rows-only (no oracle SQL declared)"
+        rec["rows_match"] = len(got) > 0
         continue
     try:
         exp = con.execute(oracles[name]).fetchdf()
@@ -45,13 +57,18 @@ for name in sorted(os.listdir(outdir)):
                 got = con2.execute(f"SELECT * FROM '{d}/*.parquet'").fetchdf()
             except Exception as e2:
                 print(f"[ORACLE-ERR] {name}: {e2} (after fresh-connection retry)")
+                rec["err"] = str(e2)[:300]
                 fail += 1
                 continue
         else:
             print(f"[ORACLE-ERR] {name}: {e}")
+            rec["err"] = str(e)[:300]
             fail += 1
             continue
+    rec["oracle_rows"] = len(exp)
     gc, ec = sorted(got.columns), sorted(exp.columns)
+    rec["schema_match"] = gc == ec
+    rec["rows_match"] = len(got) == len(exp)
     if gc != ec:
         print(f"[SCHEMA] {name}: spark={gc} oracle={ec}")
         fail += 1
@@ -80,10 +97,14 @@ for name in sorted(os.listdir(outdir)):
                     break
         if len(bad) > 3:
             break
+    rec["hash_match"] = not bad
     if bad:
         print(f"[VALUES] {name}: {bad[:4]}")
         fail += 1
     else:
         print(f"[OK] {name}: {len(g)} rows")
+with open(f"{outdir}/oracle_check.json", "w") as f:
+    json.dump(records, f, indent=2)
+    f.write("\n")
 print("FAILURES:", fail)
 sys.exit(1 if fail else 0)
